@@ -1,6 +1,6 @@
 package graft.quality
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Data-quality checks (reference: data_quality_checks.py:10-278).
@@ -15,6 +15,23 @@ object QualityChecks {
   final case class CheckResult(name: String, passed: Boolean,
                                details: Map[String, String])
 
+  /** A check as the aggregate columns it needs plus how it reads its
+    * results back from the aggregate row, so [[evaluate]] can answer any
+    * number of checks with ONE aggregate execution. Column names are
+    * prefixed per check and never clash. */
+  final case class Probe(aggs: Seq[Column], read: Row => Seq[CheckResult])
+
+  private val NoProbe = Probe(Nil, _ => Nil)
+
+  /** Every probe's aggregates in one execution over `df`; the results
+    * in probe order. Runs nothing when no probe needs a column. */
+  def evaluate(df: DataFrame, probes: Seq[Probe]): Seq[CheckResult] = {
+    val aggs = probes.flatMap(_.aggs)
+    if (aggs.isEmpty) return Nil
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    probes.flatMap(_.read(row))
+  }
+
   /** `sum(when(pred, 1))` with an empty-input floor: SUM over zero rows
     * (or an all-null slice) is NULL, and `Row.getAs[Long]` unboxes NULL
     * into an NPE — an empty frame must report clean counts, not throw
@@ -23,21 +40,25 @@ object QualityChecks {
     coalesce(sum(when(pred, 1L).otherwise(0L)), lit(0L))
 
   /** null % per column vs threshold (data_quality_checks.py:17-43). */
-  def checkNullPercentage(df: DataFrame, columns: Seq[String],
-                          threshold: Double = 0.5): Seq[CheckResult] = {
+  def nullPercentage(df: DataFrame, columns: Seq[String],
+                     threshold: Double = 0.5): Probe = {
     val present = columns.filter(df.columns.contains)
-    if (present.isEmpty) return Seq.empty
-    val aggs = count(lit(1)).as("_total") +:
-      present.map(c => cnt(col(c).isNull).as(s"_null_$c"))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val total = row.getAs[Long]("_total")
-    present.map { c =>
-      val nulls = row.getAs[Long](s"_null_$c")
-      val pct = if (total > 0) nulls.toDouble / total else 0.0
-      CheckResult(s"null_check_$c", pct <= threshold,
-        Map("null_count" -> nulls.toString, "null_percentage" -> pct.toString))
-    }
+    if (present.isEmpty) return NoProbe
+    Probe(count(lit(1)).as("_np_total") +:
+      present.map(c => cnt(col(c).isNull).as(s"_np_null_$c")), { row =>
+      val total = row.getAs[Long]("_np_total")
+      present.map { c =>
+        val nulls = row.getAs[Long](s"_np_null_$c")
+        val pct = if (total > 0) nulls.toDouble / total else 0.0
+        CheckResult(s"null_check_$c", pct <= threshold,
+          Map("null_count" -> nulls.toString, "null_percentage" -> pct.toString))
+      }
+    })
   }
+
+  def checkNullPercentage(df: DataFrame, columns: Seq[String],
+                          threshold: Double = 0.5): Seq[CheckResult] =
+    evaluate(df, Seq(nullPercentage(df, columns, threshold)))
 
   /** distinct-vs-total uniqueness (data_quality_checks.py:45-71). */
   def checkUniqueness(df: DataFrame, columns: Seq[String]): Seq[CheckResult] = {
@@ -106,35 +127,48 @@ object QualityChecks {
           (if (total > 0) orphans.toDouble / total else 0.0).toString))
   }
 
+  /** [[checkUniqueness]] of `column` of `df`, asked only once it holds a
+    * value: the probe itself is a non-null count, and the distinct count
+    * (an aggregate of its own) runs only when that count is positive. */
+  def uniquenessOncePopulated(df: DataFrame, column: String): Probe =
+    Probe(Seq(cnt(col(column).isNotNull).as(s"_uq_nonnull_$column")), row =>
+      if (row.getAs[Long](s"_uq_nonnull_$column") > 0) checkUniqueness(df, Seq(column))
+      else Nil)
+
   /** regex format check over non-null values (data_quality_checks.py:177-208). */
-  def checkFormat(df: DataFrame, column: String, pattern: String): CheckResult = {
-    val row = df.agg(
-      cnt(col(column).isNotNull).as("_nonnull"),
+  def format(column: String, pattern: String): Probe =
+    Probe(Seq(
+      cnt(col(column).isNotNull).as(s"_fmt_nonnull_$column"),
       cnt(!col(column).rlike(pattern) && col(column).isNotNull)
-        .as("_invalid")).head()
-    val nonNull = row.getAs[Long]("_nonnull")
-    val invalid = row.getAs[Long]("_invalid")
-    CheckResult(s"format_check_$column", invalid == 0,
-      Map("invalid_format_count" -> invalid.toString,
-        "invalid_percentage" ->
-          (if (nonNull > 0) invalid.toDouble / nonNull else 0.0).toString))
-  }
+        .as(s"_fmt_invalid_$column")), { row =>
+      val nonNull = row.getAs[Long](s"_fmt_nonnull_$column")
+      val invalid = row.getAs[Long](s"_fmt_invalid_$column")
+      Seq(CheckResult(s"format_check_$column", invalid == 0,
+        Map("invalid_format_count" -> invalid.toString,
+          "invalid_percentage" ->
+            (if (nonNull > 0) invalid.toDouble / nonNull else 0.0).toString)))
+    })
+
+  def checkFormat(df: DataFrame, column: String, pattern: String): CheckResult =
+    evaluate(df, Seq(format(column, pattern))).head
 
   /** complete-row ratio over required columns (data_quality_checks.py:210-234). */
-  def checkCompleteness(df: DataFrame, requiredColumns: Seq[String]): CheckResult = {
+  def completeness(df: DataFrame, requiredColumns: Seq[String]): Probe = {
     val present = requiredColumns.filter(df.columns.contains)
     val completePred = present.map(c => col(c).isNotNull)
       .reduceOption(_ && _).getOrElse(lit(true))
-    val row = df.agg(
-      count(lit(1)).as("_total"),
-      cnt(completePred).as("_complete")).head()
-    val total = row.getAs[Long]("_total")
-    val complete = row.getAs[Long]("_complete")
-    CheckResult("completeness_check", total - complete == 0,
-      Map("total_rows" -> total.toString, "complete_rows" -> complete.toString,
-        "completeness_percentage" ->
-          (if (total > 0) complete.toDouble / total else 0.0).toString))
+    Probe(Seq(count(lit(1)).as("_cp_total"), cnt(completePred).as("_cp_complete")), { row =>
+      val total = row.getAs[Long]("_cp_total")
+      val complete = row.getAs[Long]("_cp_complete")
+      Seq(CheckResult("completeness_check", total - complete == 0,
+        Map("total_rows" -> total.toString, "complete_rows" -> complete.toString,
+          "completeness_percentage" ->
+            (if (total > 0) complete.toDouble / total else 0.0).toString)))
+    })
   }
+
+  def checkCompleteness(df: DataFrame, requiredColumns: Seq[String]): CheckResult =
+    evaluate(df, Seq(completeness(df, requiredColumns))).head
 
   /** summary report text (data_quality_checks.py:236-266). */
   def generateReport(results: Seq[CheckResult]): String = {

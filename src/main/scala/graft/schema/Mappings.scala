@@ -65,14 +65,12 @@ object Mappings {
     Seq("chotot_api", "meeyproject_api", "onehousing_api")
 
   /** M13: apply the declared cast table to whichever of its columns are
-    * present — the production loop SilverEtl.mapSource runs on every
-    * source (null on unparseable values; ANSI off). */
+    * present, in one projection — the casts SilverEtl.mapSource applies
+    * to every source (null on unparseable values; ANSI off). */
   def applyTypeConversions(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    TypeConversions.foldLeft(df) { case (d, (f, t)) =>
-      if (d.columns.contains(f))
-        d.withColumn(f, org.apache.spark.sql.functions.col(f).cast(t))
-      else d
-    }
+    graft.transform.Transforms.assign(df, TypeConversions.collect {
+      case (f, t) if df.columns.contains(f) => f -> org.apache.spark.sql.functions.col(f).cast(t)
+    })
 
   /** field -> spark cast type (schema_config.py:241-268). */
   val TypeConversions: Seq[(String, String)] = Seq(

@@ -1,7 +1,7 @@
 package graft.schema
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Unified layer schemas (reference: schema_config.py:14-126,
@@ -14,11 +14,11 @@ object Schemas {
     * the ONE definition of "conform to the silver schema", shared by the
     * silver mapping stage and the gold reader (silver only materializes
     * columns its bronze day carried). */
-  def conformToSilver(df: DataFrame): DataFrame =
-    Silver.fields.foldLeft(df) { (d, f) =>
-      if (d.columns.contains(f.name)) d
-      else d.withColumn(f.name, lit(null).cast(f.dataType))
-    }
+  def conformToSilver(df: DataFrame): DataFrame = {
+    val missing = Silver.fields.toSeq.filterNot(f => df.columns.contains(f.name))
+    if (missing.isEmpty) df
+    else graft.transform.Transforms.assign(df, missing.map(f => f.name -> lit(null).cast(f.dataType)))
+  }
 
   val ApartmentPriceStruct: StructType = StructType(Seq(
     StructField("number_of_bedroom", IntegerType),

@@ -1,5 +1,7 @@
 package graft.transform
 
+import scala.collection.immutable.ListMap
+import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -8,51 +10,83 @@ import graft.schema.Mappings
 /** Pure DataFrame/Column combinators covering the reference's transform
   * catalog (transformation_utils.py — cited per function). Everything is
   * built-in-function based (whole-stage codegen'd); no UDFs.
+  *
+  * Each transform the silver stages use is a Column builder; its
+  * DataFrame form applies it as ONE projection. Stages compose the
+  * builders through [[Assignments]], so a stage is one projection, not
+  * a `withColumn` chain whose every link re-analyzes the growing plan.
   */
 object Transforms {
 
-  /** F2: phone → digits-only, must match Vietnamese ^0\d{9,10}$ else ""
-    * (transformation_utils.py:23-49). */
-  def standardizePhoneNumbers(df: DataFrame, phoneCol: String): DataFrame = {
-    val digits = when(col(phoneCol).isNotNull,
-      regexp_replace(col(phoneCol), "[^\\d]", "")).otherwise(lit(""))
-    df.withColumn(phoneCol, digits)
-      .withColumn(phoneCol,
-        when(col(phoneCol).rlike("^0\\d{9,10}$"), col(phoneCol)).otherwise(lit("")))
+  /** Column assignments folded into ONE projection. Reading a name yields
+    * its latest assignment (else the input column), so a sequence of
+    * `set`s means what the same `withColumn` chain means; `result` is a
+    * single `withColumns`: existing names keep their position and new
+    * names append in first-assignment order, as the chain would. */
+  final class Assignments(df: DataFrame) {
+    private val present = df.columns.toSet
+    private val assigned = mutable.LinkedHashMap[String, Column]()
+    def has(name: String): Boolean = assigned.contains(name) || present(name)
+    def apply(name: String): Column = assigned.getOrElse(name, col(name))
+    def set(name: String, value: Column): this.type = { assigned(name) = value; this }
+    def setAll(values: Seq[(String, Column)]): this.type = { values.foreach { case (n, v) => set(n, v) }; this }
+    def result: DataFrame =
+      if (assigned.isEmpty) df else df.withColumns(ListMap(assigned.toSeq: _*))
   }
 
-  /** F3: email → lower/trim, validated else "" (transformation_utils.py:52-76). */
-  def standardizeEmails(df: DataFrame, emailCol: String): DataFrame = {
-    val lowered = when(col(emailCol).isNotNull, lower(trim(col(emailCol))))
-      .otherwise(lit(""))
-    df.withColumn(emailCol, lowered)
-      .withColumn(emailCol,
-        when(col(emailCol).rlike("^[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}$"),
-          col(emailCol)).otherwise(lit("")))
+  /** `df` with every assignment applied in one projection. */
+  def assign(df: DataFrame, values: Seq[(String, Column)]): DataFrame =
+    new Assignments(df).setAll(values).result
+
+  /** `f` applied in turn to each listed column present in `df`, in one
+    * projection (a name listed twice is rewritten twice, as a chain would). */
+  private def rewrite(df: DataFrame, cols: Seq[String])(f: Column => Column): DataFrame = {
+    val a = new Assignments(df)
+    cols.foreach(c => if (a.has(c)) a.set(c, f(a(c))))
+    a.result
   }
+
+  /** F2: phone → digits-only, must match Vietnamese ^0\d{9,10}$ else ""
+    * (transformation_utils.py:23-49). */
+  def phoneNumber(c: Column): Column = {
+    val digits = when(c.isNotNull, regexp_replace(c, "[^\\d]", "")).otherwise(lit(""))
+    when(digits.rlike("^0\\d{9,10}$"), digits).otherwise(lit(""))
+  }
+
+  def standardizePhoneNumbers(df: DataFrame, phoneCol: String): DataFrame =
+    df.withColumn(phoneCol, phoneNumber(col(phoneCol)))
+
+  /** F3: email → lower/trim, validated else "" (transformation_utils.py:52-76). */
+  def email(c: Column): Column = {
+    val lowered = when(c.isNotNull, lower(trim(c))).otherwise(lit(""))
+    when(lowered.rlike("^[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}$"), lowered)
+      .otherwise(lit(""))
+  }
+
+  def standardizeEmails(df: DataFrame, emailCol: String): DataFrame =
+    df.withColumn(emailCol, email(col(emailCol)))
 
   /** F1: strip HTML tags, decode entity table in order, collapse whitespace
     * (transformation_utils.py:79-173). The entity pass is a single fold of
     * regexp_replace — same output, one projection. */
-  def cleanHtmlTags(df: DataFrame, textCols: Seq[String]): DataFrame =
-    textCols.filter(df.columns.contains).foldLeft(df) { (acc, c) =>
-      val noTags = regexp_replace(
-        regexp_replace(col(c), "<br\\s*/?>", " "), "<[^>]+>", " ")
-      val decoded = Mappings.HtmlEntities.foldLeft(noTags) {
-        case (e, (pat, rep)) => regexp_replace(e, pat, rep)
-      }
-      acc.withColumn(c,
-        when(col(c).isNotNull, trim(regexp_replace(decoded, "\\s+", " ")))
-          .otherwise(col(c)))
+  def htmlCleaned(c: Column): Column = {
+    val noTags = regexp_replace(
+      regexp_replace(c, "<br\\s*/?>", " "), "<[^>]+>", " ")
+    val decoded = Mappings.HtmlEntities.foldLeft(noTags) {
+      case (e, (pat, rep)) => regexp_replace(e, pat, rep)
     }
+    when(c.isNotNull, trim(regexp_replace(decoded, "\\s+", " "))).otherwise(c)
+  }
+
+  def cleanHtmlTags(df: DataFrame, textCols: Seq[String]): DataFrame =
+    rewrite(df, textCols)(htmlCleaned)
 
   /** F4: trim + collapse internal whitespace (transformation_utils.py:176-197). */
+  def normalizedText(c: Column): Column =
+    when(c.isNotNull, regexp_replace(trim(c), "\\s+", " ")).otherwise(c)
+
   def normalizeText(df: DataFrame, textCols: Seq[String]): DataFrame =
-    textCols.filter(df.columns.contains).foldLeft(df) { (acc, c) =>
-      acc.withColumn(c,
-        when(col(c).isNotNull, regexp_replace(trim(col(c)), "\\s+", " "))
-          .otherwise(col(c)))
-    }
+    rewrite(df, textCols)(normalizedText)
 
   /** F5: strip non-[\d.] and cast (transformation_utils.py:200-217). */
   def extractNumeric(df: DataFrame, src: String, target: String): DataFrame =
@@ -62,12 +96,13 @@ object Transforms {
   /** F6: city-name standardization when()-ladder
     * (transformation_utils.py:220-254). The reference folds otherwise()
     * chains; a lookup-join is the at-scale alternative (see GoldEtl). */
-  def standardizeCityNames(df: DataFrame, cityCol: String): DataFrame = {
-    val expr0 = Mappings.CityMappings.foldLeft(col(cityCol)) {
-      case (acc, (vn, en)) => when(trim(col(cityCol)) === vn, lit(en)).otherwise(acc)
+  def cityName(c: Column): Column =
+    Mappings.CityMappings.foldLeft(c) {
+      case (acc, (vn, en)) => when(trim(c) === vn, lit(en)).otherwise(acc)
     }
-    df.withColumn(cityCol, expr0)
-  }
+
+  def standardizeCityNames(df: DataFrame, cityCol: String): DataFrame =
+    df.withColumn(cityCol, cityName(col(cityCol)))
 
   /** F7: Vietnamese price-string parser with unit multipliers
     * (transformation_utils.py:257-288). */
@@ -152,34 +187,36 @@ object Transforms {
 
   /** F8: amenity keyword flags from description
     * (transformation_utils.py:571-602). */
+  def projectFeatures(desc: Column): Seq[(String, Column)] =
+    Mappings.AmenityPatterns.map { case (name, pat) =>
+      name -> when(desc.rlike(pat), lit(true)).otherwise(lit(false))
+    }
+
   def extractProjectFeatures(df: DataFrame,
                              descCol: String = "description"): DataFrame =
-    Mappings.AmenityPatterns.foldLeft(df) { case (acc, (name, pat)) =>
-      acc.withColumn(name,
-        when(col(descCol).rlike(pat), lit(true)).otherwise(lit(false)))
-    }
+    assign(df, projectFeatures(col(descCol)))
 
   /** N5: min/max bedroom = first/last of insight_by_bedroom
     * (transformation_utils.py:604-630). */
+  def bedroomRange(insight: Column): Seq[(String, Column)] = {
+    def bedrooms(i: Int) = when(insight.isNotNull && size(insight) > 0,
+      element_at(insight, i).getField("number_of_bedroom").cast(IntegerType))
+      .otherwise(lit(null))
+    Seq("min_bedroom" -> bedrooms(1), "max_bedroom" -> bedrooms(-1))
+  }
+
   def extractBedroomRanges(df: DataFrame): DataFrame =
     if (!df.columns.contains("insight_by_bedroom")) df
-    else df
-      .withColumn("min_bedroom",
-        when(col("insight_by_bedroom").isNotNull && size(col("insight_by_bedroom")) > 0,
-          element_at(col("insight_by_bedroom"), 1).getField("number_of_bedroom")
-            .cast(IntegerType)).otherwise(lit(null)))
-      .withColumn("max_bedroom",
-        when(col("insight_by_bedroom").isNotNull && size(col("insight_by_bedroom")) > 0,
-          element_at(col("insight_by_bedroom"), -1).getField("number_of_bedroom")
-            .cast(IntegerType)).otherwise(lit(null)))
+    else assign(df, bedroomRange(col("insight_by_bedroom")))
 
   /** N1: quality_indexes struct-array → name array
     * (transformation_utils.py:633-653). */
+  def qualityIndexNames(c: Column): Column =
+    when(c.isNotNull, transform(c, _.getField("name"))).otherwise(lit(null))
+
   def extractQualityIndexNames(df: DataFrame): DataFrame =
     if (!df.columns.contains("quality_indexes")) df
-    else df.withColumn("quality_indexes",
-      when(col("quality_indexes").isNotNull,
-        expr("transform(quality_indexes, x -> x.name)")).otherwise(lit(null)))
+    else df.withColumn("quality_indexes", qualityIndexNames(col("quality_indexes")))
 
   /** N3: flatten album images (transformation_utils.py:655-676). */
   def extractAlbumImages(df: DataFrame): DataFrame =
@@ -189,87 +226,85 @@ object Transforms {
         expr("flatten(transform(albums, x -> x.images))")).otherwise(lit(null)))
 
   /** N6: first element of int arrays (transformation_utils.py:678-700). */
+  def firstOfArray(c: Column): Column =
+    when(c.isNotNull && size(c) > 0, element_at(c, 1).cast(IntegerType))
+      .otherwise(lit(null))
+
   def extractFirstFromArray(df: DataFrame,
-                            fieldMappings: Seq[(String, String)]): DataFrame =
-    fieldMappings.foldLeft(df) { case (acc, (target, src)) =>
-      if (!acc.columns.contains(src)) acc
-      else acc.withColumn(target,
-        when(col(src).isNotNull && size(col(src)) > 0,
-          element_at(col(src), 1).cast(IntegerType)).otherwise(lit(null)))
+                            fieldMappings: Seq[(String, String)]): DataFrame = {
+    val a = new Assignments(df)
+    fieldMappings.foreach { case (target, src) =>
+      if (a.has(src)) a.set(target, firstOfArray(a(src)))
     }
+    a.result
+  }
 
   /** N8: ward/district/city ← x.translation[0].name
     * (transformation_utils.py:702-751). Only applied when the base column
     * is a complex type, like the reference. */
+  def translationName(c: Column): Column =
+    when(c.isNotNull, c.getField("translation").getItem(0).getField("name"))
+      .otherwise(lit(null))
+
   def extractNestedTranslation(df: DataFrame, fields: Seq[String]): DataFrame =
-    fields.foldLeft(df) { (acc, f) =>
-      acc.schema.find(_.name == f).map(_.dataType) match {
-        case Some(_: StructType) =>
-          acc.withColumn(f,
-            when(col(f).isNotNull,
-              col(s"$f.translation").getItem(0).getField("name"))
-              .otherwise(lit(null)))
-        case _ => acc
-      }
-    }
+    assign(df, fields.collect {
+      case f if df.schema.find(_.name == f).exists(_.dataType.isInstanceOf[StructType]) =>
+        f -> translationName(col(f))
+    })
 
   /** F9: Chotot "lat,lng" geo string → two doubles
     * (transformation_utils.py:753-780). */
+  def geoCoordinates(geo: Column): Seq[(String, Column)] = {
+    def part(i: Int) = when(geo.isNotNull && geo.contains(","),
+      split(geo, ",").getItem(i).cast(DoubleType)).otherwise(lit(null))
+    Seq("latitude" -> part(0), "longitude" -> part(1))
+  }
+
   def splitGeoCoordinates(df: DataFrame, geoCol: String = "geo"): DataFrame =
     if (!df.columns.contains(geoCol)) df
-    else df
-      .withColumn("latitude",
-        when(col(geoCol).isNotNull && col(geoCol).contains(","),
-          split(col(geoCol), ",").getItem(0).cast(DoubleType)).otherwise(lit(null)))
-      .withColumn("longitude",
-        when(col(geoCol).isNotNull && col(geoCol).contains(","),
-          split(col(geoCol), ",").getItem(1).cast(DoubleType)).otherwise(lit(null)))
+    else assign(df, geoCoordinates(col(geoCol)))
 
   /** N7: Meeyproject GeoJSON [lon, lat] → columns
     * (transformation_utils.py:782-809). */
+  def meeyLocation(location: Column): Seq[(String, Column)] = {
+    val coords = location.getField("coordinates")
+    def coord(i: Int) = when(coords.isNotNull && size(coords) >= 2,
+      element_at(coords, i).cast(DoubleType)).otherwise(lit(null))
+    Seq("longitude" -> coord(1), "latitude" -> coord(2))
+  }
+
   def extractMeeyprojectLocation(df: DataFrame): DataFrame =
     if (!df.columns.contains("location")) df
-    else df
-      .withColumn("longitude",
-        when(col("location.coordinates").isNotNull &&
-          size(col("location.coordinates")) >= 2,
-          element_at(col("location.coordinates"), 1).cast(DoubleType))
-          .otherwise(lit(null)))
-      .withColumn("latitude",
-        when(col("location.coordinates").isNotNull &&
-          size(col("location.coordinates")) >= 2,
-          element_at(col("location.coordinates"), 2).cast(DoubleType))
-          .otherwise(lit(null)))
+    else assign(df, meeyLocation(col("location")))
 
-  /** N12: coerce a column to array<string>, introspecting the live schema:
-    * struct-arrays project name > value > key > first string field;
-    * plain strings parse as JSON array when "["-prefixed else wrap
+  /** N12: coerce a column of type `dt` to array<string>: struct-arrays
+    * project name > value > key > first string field; plain strings
+    * parse as JSON array when "["-prefixed else wrap
     * (silver_etl_script.py:407-475). */
-  def coerceToStringArray(df: DataFrame, field: String): DataFrame = {
+  def stringArray(c: Column, dt: DataType): Column = {
     val target = ArrayType(StringType)
-    df.schema.find(_.name == field).map(_.dataType) match {
-      case Some(ArrayType(st: StructType, _)) =>
+    dt match {
+      case ArrayType(st: StructType, _) =>
         val names = st.fields.map(_.name)
-        val pick = Seq("name", "value", "key").find(names.contains)
-          .orElse(st.fields.find(_.dataType == StringType).map(_.name))
-        pick match {
-          case Some(f) => df.withColumn(field,
-            when(col(field).isNotNull, expr(s"transform($field, x -> x.$f)"))
-              .otherwise(lit(null).cast(target)))
-          case None => df.withColumn(field, lit(null).cast(target))
+        Seq("name", "value", "key").find(names.contains)
+          .orElse(st.fields.find(_.dataType == StringType).map(_.name)) match {
+          case Some(f) =>
+            when(c.isNotNull, transform(c, _.getField(f))).otherwise(lit(null).cast(target))
+          case None => lit(null).cast(target)
         }
-      case Some(_: ArrayType) =>
-        df.withColumn(field, col(field).cast(target))
-      case Some(StringType) =>
-        df.withColumn(field,
-          when(col(field).isNotNull && col(field) =!= "",
-            when(col(field).startsWith("["), from_json(col(field), target))
-              .otherwise(array(col(field))))
-            .otherwise(lit(null).cast(target)))
-      case Some(_) => df.withColumn(field, lit(null).cast(target))
-      case None => df
+      case _: ArrayType => c.cast(target)
+      case StringType =>
+        when(c.isNotNull && c =!= "",
+          when(c.startsWith("["), from_json(c, target)).otherwise(array(c)))
+          .otherwise(lit(null).cast(target))
+      case _ => lit(null).cast(target)
     }
   }
+
+  /** [[stringArray]] on `field` of the live schema; absent is a no-op. */
+  def coerceToStringArray(df: DataFrame, field: String): DataFrame =
+    df.schema.find(_.name == field).fold(df)(f =>
+      df.withColumn(field, stringArray(col(field), f.dataType)))
 
   /** PII redaction for training-data curation: URLs, emails, and
     * Vietnamese-style phone numbers → placeholder tokens. URL first (an

@@ -1,9 +1,21 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType}
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.fixtures.BronzeFixtures
 import graft.silver.SilverEtl
-import graft.scd.Scd2
+import graft.scd.{RegionedLayout, Scd2}
+import graft.store.PointerCommit
 
 /** Golden run of the 10-stage silver pipeline over the synthetic bronze
   * fixtures (FIXTURES.md §B), asserting the reference's observable
@@ -167,22 +179,6 @@ class SilverEtlSpec extends SparkSuite {
     assert(stats.avgCompletenessScore > 0 && stats.avgCompletenessScore <= 1)
   }
 
-  test("fused one-pass outlier filter agrees with the sequential loop on non-interacting outliers") {
-    import spark.implicits._
-    // 40 well-behaved rows + one extreme outlier per column; removing the
-    // price outlier barely moves the area stats, so both variants must
-    // drop exactly the two outliers
-    val rows = (1 to 40).map(i =>
-      (1.0e9 + i * 1.0e7, 50.0 + i)) :+ (9.9e12, 60.0) :+ (1.5e9, 4.0e9)
-    val df = rows.toDF("min_selling_price", "total_area")
-    val seqOut = SilverEtl.fillAndRemoveOutliers(df)
-    val fusedOut = SilverEtl.fillAndRemoveOutliersFused(df)
-    assert(seqOut.count() === 40)
-    assert(fusedOut.count() === 40)
-    assert(seqOut.exceptAll(fusedOut).count() === 0)
-    assert(fusedOut.exceptAll(seqOut).count() === 0)
-  }
-
   test("persisted silver schema has no internal witness columns") {
     stats // force the run
     // _has_valid_coords/_has_valid_price are run-internal quality
@@ -284,5 +280,263 @@ class SilverEtlSpec extends SparkSuite {
     // content-level equality, not just row counts
     assert(snapshot() === before)
     assert(graft.scd.Scd2.violations(spark.read.parquet(s"$dir/silver")) === 0)
+  }
+
+  // ------------------------------------------------- pinned outputs
+  // Values recorded before the silver stages became single projections
+  // over one bronze parse; any drift in mapping, column order, dedup
+  // tie-break, outlier filter or counts changes them.
+
+  /** (rows, order-insensitive content hash) of a frame, columns in frame
+    * order; top-level doubles rounded so summation order cannot show. */
+  private def digest(df: DataFrame): (Long, Long) = {
+    val cols = df.schema.fields.toSeq.map { f =>
+      f.dataType match {
+        case DoubleType | FloatType => round(col(s"`${f.name}`"), 6)
+        case _ => col(s"`${f.name}`")
+      }
+    }
+    val r = df.select(xxhash64(cols: _*).as("h"))
+      .agg(count(lit(1)), coalesce(sum(shiftright(col("h"), 16)), lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  private def schemaOf(df: DataFrame): String =
+    df.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(",")
+
+  private def writeDay(bronze: String, spider: String, date: String,
+                       lines: Seq[String]): Unit = {
+    val dir = Paths.get(bronze, spider, s"year=${date.take(4)}", s"month=${date.slice(5, 7)}")
+    Files.createDirectories(dir)
+    Files.write(dir.resolve(s"${date.replace("-", "")}_080000.jsonl"),
+      lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+  }
+
+  private def clockOf(date: String): Column = to_timestamp(lit(s"$date 12:00:00"))
+
+  /** A regioned pointer-commit lake under `root`, as the nightly job
+    * keeps it; `day` runs one bronze day into it, clocked at noon. */
+  private final case class Lake(root: String) {
+    val cfg: SilverEtl.RunConfig = SilverEtl.RunConfig(s"$root/silver",
+      s"$root/quarantine", s"$root/metadata", "pin_run", "")
+    def day(bronze: String, date: String): SilverEtl.EtlStats =
+      SilverEtl.run(spark, SilverEtl.readBronze(spark, bronze, date),
+        cfg.copy(runId = s"pin_$date", startDate = date), clockOf(date),
+        commit = PointerCommit, layout = RegionedLayout)
+    def current: DataFrame = Scd2.readRegionedCurrent(spark, cfg.silverPath, PointerCommit)
+    def closed: DataFrame = Scd2.readRegioned(spark, cfg.silverPath, PointerCommit)
+      .filter(col("is_current") === false)
+    def quarantine: DataFrame = spark.read.parquet(cfg.quarantinePath)
+    def metadata: DataFrame = spark.read.parquet(cfg.metadataPath)
+  }
+
+  /** Day two of the fixture lake: every chotot record again (ch_1
+    * renamed, one new key), onehousing with oh_2 re-addressed, and three
+    * of the meey records, all re-crawled the next morning. */
+  private def writeSecondDay(bronze: String): Unit = {
+    def nextDay(l: String) = l.replace("2025-01-15T", "2025-01-16T")
+      .replace("run_20250115", "run_20250116")
+    writeDay(bronze, "chotot_api", "2025-01-16",
+      BronzeFixtures.chototLines.map(nextDay).map(
+        _.replace("\"Chung cư Sài Gòn 1\"", "\"Chung cư Sài Gòn Một\"")) :+
+        nextDay(BronzeFixtures.chototLines(1)).replace("\"ch_2\"", "\"ch_new\""))
+    writeDay(bronze, "onehousing_api", "2025-01-16",
+      BronzeFixtures.onehousingLines.map(nextDay).map(
+        _.replace("\"99 Cầu Giấy\"", "\"101 Cầu Giấy\"")))
+    writeDay(bronze, "meeyproject_api", "2025-01-16",
+      BronzeFixtures.meeyLines.take(3).map(nextDay))
+  }
+
+  test("silver, SCD2 regions, quarantine and metadata match the recorded outputs") {
+    val dir = Files.createTempDirectory("graft_silver_pin").toString
+    val bronze = BronzeFixtures.write(dir)
+    writeSecondDay(bronze)
+    val lake = Lake(s"$dir/lake")
+    val got = Seq(lake.day(bronze, "2025-01-15"), lake.day(bronze, "2025-01-16"),
+      schemaOf(lake.current), digest(lake.current), digest(lake.closed),
+      digest(lake.quarantine), digest(lake.metadata)).map(_.toString)
+    assert(got === Seq(
+      "EtlStats(39,38,1,1,36,0.963888888888889)",
+      "EtlStats(35,34,1,1,39,0.9812500000000001)",
+      DaySchema, "(37,247627387982742)", "(2,32930178335855)",
+      "(2,-66055977358769)", "(2,-840284564423)"))
+  }
+
+  test("thin day: onehousing only") {
+    val dir = Files.createTempDirectory("graft_silver_thin_oh").toString
+    val bronze = s"$dir/bronze"
+    writeDay(bronze, "onehousing_api", "2025-02-01",
+      BronzeFixtures.onehousingLines.map(_.replace("2025-01-15T", "2025-02-01T")))
+    val lake = Lake(s"$dir/lake")
+    val got = Seq(lake.day(bronze, "2025-02-01"), schemaOf(lake.current),
+      digest(lake.current)).map(_.toString)
+    assert(got === Seq("EtlStats(3,3,0,0,3,0.9)", OnehousingOnlySchema,
+      "(3,253031087332415)"))
+  }
+
+  test("thin day: a chotot file with no geo and no price fields") {
+    val dir = Files.createTempDirectory("graft_silver_thin_ch").toString
+    val bronze = s"$dir/bronze"
+    writeDay(bronze, "chotot_api", "2025-02-02", (1 to 4).map(i =>
+      s"""{"timestamp":"2025-02-02T07:00:00","spider_name":"chotot_api","project_oid":"bare_$i","project_name":"Dự án $i","type_name":"apartment","area_name":"Quận $i","region_name":"Hà Nội","introduction":"<p>giới thiệu $i</p>"}"""))
+    val lake = Lake(s"$dir/lake")
+    val got = Seq(lake.day(bronze, "2025-02-02"), schemaOf(lake.current),
+      digest(lake.current)).map(_.toString)
+    assert(got === Seq("EtlStats(4,4,0,0,4,0.4)", BareChototSchema,
+      "(4,-74648916632460)"))
+  }
+
+  // silver table schemas (name:type, in column order) of the pinned days
+  private val DaySchema =
+    """source_id:string, project_name:string, project_type:string,
+      |status:string, description:string, address:string,
+      |full_address:string, street_name:string, ward:string,
+      |district:string, city:string, province:string, latitude:double,
+      |longitude:double, total_area:double, area_unit:string,
+      |construction_area:double, total_property:int, unit_total:string,
+      |min_prop_per_floor:int, max_prop_per_floor:int,
+      |min_selling_price:double, max_selling_price:double,
+      |min_unit_price:double, max_unit_price:double, price_unit:string,
+      |investor_id:string, investor_name:string, developer_name:string,
+      |handover_date_from:string, construction_start_date:string,
+      |facilities:array<string>, quality_indexes:array<string>,
+      |trans_grade:string, infra_grade:string, school_grade:string,
+      |images:array<string>, videos:array<string>, web_url:string,
+      |number_of_blocks:int, total_floor:int, construction_density:double,
+      |utilities_internal:array<string>, number_of_floors:int,
+      |number_of_basement:int, number_of_elevators:int,
+      |green_density:double, swimming_pool_density:string, min_bedroom:int,
+      |max_bedroom:int,
+      |apartment_prices:array<struct<number_of_bedroom:int,
+      |min_price:double, max_price:double, min_area:double,
+      |max_area:double>>, master_plan_url:string, ingested_at_utc:string,
+      |universal_id:string, segment:string, min_bathroom:int,
+      |max_bathroom:int, min_area:double, max_area:double,
+      |min_rent_price:double, max_rent_price:double, handover_date:string,
+      |construction_end_date:string, release_year:string,
+      |utilities_external:array<string>, record_key:string,
+      |data_completeness_score:double, silver_processed_at:string,
+      |silver_version:string, is_current:boolean, valid_from:string,
+      |valid_to:string, ingestion_date:date, avg_selling_price:double,
+      |avg_unit_price:double, price_range:double, area_range:double,
+      |location_quality_score:double, has_swimming_pool:boolean,
+      |has_gym:boolean, has_parking:boolean, has_garden:boolean,
+      |has_security:boolean, has_playground:boolean, spider_name:string,
+      |ingestion_year:string, ingestion_month:string""".stripMargin.replace("\n", " ").replace(" ", "")
+  private val OnehousingOnlySchema =
+    """project_type:string, status:string, description:string,
+      |address:string, ward:string, district:string, city:string,
+      |province:string, total_area:double, area_unit:string,
+      |total_property:int, min_prop_per_floor:int, max_prop_per_floor:int,
+      |min_selling_price:double, max_selling_price:double,
+      |min_unit_price:double, max_unit_price:double, price_unit:string,
+      |developer_name:string, handover_date_from:string,
+      |quality_indexes:array<string>, trans_grade:string,
+      |infra_grade:string, school_grade:string, videos:array<string>,
+      |project_name:string, source_id:string, latitude:double,
+      |longitude:double, number_of_blocks:int, number_of_floors:int,
+      |number_of_basement:int, number_of_elevators:int,
+      |green_density:double, construction_density:double,
+      |swimming_pool_density:string, min_bedroom:int, max_bedroom:int,
+      |apartment_prices:array<struct<number_of_bedroom:int,
+      |min_price:double, max_price:double, min_area:double,
+      |max_area:double>>, construction_start_date:string,
+      |images:array<string>, master_plan_url:string,
+      |ingested_at_utc:string, universal_id:string, segment:string,
+      |full_address:string, street_name:string, construction_area:double,
+      |unit_total:string, total_floor:int, min_bathroom:int,
+      |max_bathroom:int, min_area:double, max_area:double,
+      |min_rent_price:double, max_rent_price:double, investor_id:string,
+      |investor_name:string, handover_date:string,
+      |construction_end_date:string, release_year:string,
+      |facilities:array<string>, utilities_internal:array<string>,
+      |utilities_external:array<string>, web_url:string, record_key:string,
+      |data_completeness_score:double, silver_processed_at:string,
+      |silver_version:string, is_current:boolean, valid_from:string,
+      |valid_to:string, ingestion_date:date, avg_selling_price:double,
+      |avg_unit_price:double, price_range:double, area_range:double,
+      |location_quality_score:double, has_swimming_pool:boolean,
+      |has_gym:boolean, has_parking:boolean, has_garden:boolean,
+      |has_security:boolean, has_playground:boolean, spider_name:string,
+      |ingestion_year:string, ingestion_month:string""".stripMargin.replace("\n", " ").replace(" ", "")
+  private val BareChototSchema =
+    """source_id:string, project_name:string, project_type:string,
+      |status:string, description:string, address:string, district:string,
+      |city:string, area_unit:string, price_unit:string,
+      |trans_grade:string, infra_grade:string, school_grade:string,
+      |ingested_at_utc:string, universal_id:string, segment:string,
+      |full_address:string, street_name:string, ward:string,
+      |province:string, latitude:double, longitude:double,
+      |total_area:double, construction_area:double, number_of_blocks:int,
+      |total_property:int, unit_total:string, number_of_floors:int,
+      |total_floor:int, number_of_basement:int, number_of_elevators:int,
+      |green_density:double, construction_density:double,
+      |swimming_pool_density:string, min_prop_per_floor:int,
+      |max_prop_per_floor:int, min_bedroom:int, max_bedroom:int,
+      |min_bathroom:int, max_bathroom:int, min_area:double,
+      |max_area:double, min_selling_price:double, max_selling_price:double,
+      |min_unit_price:double, max_unit_price:double, min_rent_price:double,
+      |max_rent_price:double,
+      |apartment_prices:array<struct<number_of_bedroom:int,
+      |min_price:double, max_price:double, min_area:double,
+      |max_area:double>>, investor_id:string, investor_name:string,
+      |developer_name:string, handover_date_from:string,
+      |handover_date:string, construction_start_date:string,
+      |construction_end_date:string, release_year:string,
+      |facilities:array<string>, utilities_internal:array<string>,
+      |utilities_external:array<string>, quality_indexes:array<string>,
+      |images:array<string>, videos:array<string>, master_plan_url:string,
+      |web_url:string, record_key:string, data_completeness_score:double,
+      |silver_processed_at:string, silver_version:string,
+      |is_current:boolean, valid_from:string, valid_to:string,
+      |ingestion_date:date, avg_selling_price:double,
+      |avg_unit_price:double, price_range:double, area_range:double,
+      |location_quality_score:double, has_swimming_pool:boolean,
+      |has_gym:boolean, has_parking:boolean, has_garden:boolean,
+      |has_security:boolean, has_playground:boolean, spider_name:string,
+      |ingestion_year:string, ingestion_month:string""".stripMargin.replace("\n", " ").replace(" ", "")
+
+  // ------------------------------------------------- job-count guard
+  private object Plans extends AdaptiveSparkPlanHelper {
+    /** JSON file scans of an executed plan, including those inside the
+      * cached plans it reads (a cache is built by the first plan that
+      * reads it). */
+    def jsonScans(plan: SparkPlan): Seq[SparkPlan] = collectWithSubqueries(plan) {
+      case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[JsonFileFormat] => Seq(s)
+      case m: InMemoryTableScanExec => jsonScans(m.relation.cachedPlan)
+    }.flatten
+  }
+
+  test("one run parses bronze once and stays under its job ceiling") {
+    val dir = Files.createTempDirectory("graft_silver_jobs").toString
+    val bronze = SilverEtl.readBronze(spark, BronzeFixtures.write(dir), "2025-01-15")
+    val cfg = SilverEtl.RunConfig(s"$dir/silver", s"$dir/q", s"$dir/m",
+      "jobs_run", "2025-01-15")
+    val jobs = new AtomicInteger
+    // a scan instance is one parse however many plans reference it
+    val jsonScans = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        jsonScans.synchronized(Plans.jsonScans(qe.executedPlan).foreach(jsonScans.add))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try {
+      SilverEtl.run(spark, bronze, cfg, fixedClock)
+      org.apache.spark.ListenerBusDrain.drain(sc)
+    } finally {
+      sc.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
+    assert(jsonScans.size === 1, "bronze JSON must be parsed exactly once per run")
+    // measured on the fixture day; a re-added parse or count job breaks it
+    assert(jobs.get <= 19, s"${jobs.get} jobs")
   }
 }
