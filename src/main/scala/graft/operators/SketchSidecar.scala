@@ -25,9 +25,10 @@ import graft.store.GenLog
   * Trust-but-verify: cells carry no document ids, so the sidecar
   * cannot detect a replayed or churned batch by content — it leans on
   * the STORE instead. An advance verifies, via the snapshot change feed
-  * ([[graft.store.SnapshotStore.changesBetween]] on the id column
-  * only), that the diff between the sketched and current snapshots is
-  * pure inserts whose count matches the caller's batch; a replayed
+  * ([[graft.store.SnapshotStore.changesBetween]] keyed on the id
+  * column; it content-diffs the partition entries the two snapshots do
+  * not share), that the diff between the sketched and current snapshots
+  * is pure inserts whose count matches the caller's batch; a replayed
   * batch (zero feed inserts), a partial batch, or any update/delete
   * (subtraction would need the removed text) fails the net and the
   * artifact REBUILDS from the snapshot — one linear tokenize pass, the
@@ -150,8 +151,9 @@ object SketchSidecar {
           val bn = b.count()
           // the net: the store feed between sketched and current
           // snapshots must be PURE INSERTS matching the batch's count —
-          // an id-column-only scan; any churn/replay/partial-batch
-          // shape falls back to the linear rebuild
+          // a content diff of the entries the snapshots do not share;
+          // any churn/replay/partial-batch shape falls back to the
+          // linear rebuild
           val feedOk = scala.util.Try {
             val feed = graft.store.SnapshotStore.changesBetween(
                 spark, storeRoot, m.snap.get, snap, Seq("doc_id"))

@@ -1,7 +1,8 @@
 package graft.store
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 
 /** Object-store-safe table commit: versioned immutable snapshot
@@ -147,9 +148,14 @@ object SnapshotStore {
     * partitions it carried forward by reference from older versions).
     * Throws FileNotFoundException once [[vacuum]] has collected the
     * version; retention is the `keepLast` window plus anything a kept
-    * manifest still references. */
+    * manifest still references. A manifest with no entries (every
+    * partition emptied out) has no files to take a schema from, so
+    * reading it throws an IllegalStateException naming the version. */
   def readAt(spark: SparkSession, root: String, name: String): DataFrame =
     readManifest(spark, root, name) match {
+      case Some(entries) if entries.isEmpty =>
+        throw new IllegalStateException(
+          s"snapshot $name under $root has an empty manifest — no partition to read")
       case Some(entries) => readEntries(spark, root, entries)
       case None =>
         val dir = new Path(new Path(root, SnapshotsDir), name)
@@ -161,8 +167,8 @@ object SnapshotStore {
 
   /** Change data feed between two pinned versions — Delta CDF's sibling
     * to [[readAt]] time travel, recovered from plain snapshots: rows are
-    * matched by full-row content hash (an equi anti-join on a 128-bit
-    * key, never a row-by-row comparison), then classified by whether the
+    * matched by full-row content hash (an equi join on a 128-bit key,
+    * never a row-by-row comparison), then classified by whether the
     * row's KEY survives on the other side:
     *
     *   - in vTo only, key new          → `insert`
@@ -170,83 +176,152 @@ object SnapshotStore {
     *   - in vFrom only, key survives   → `update_preimage`
     *   - in vFrom only, key gone       → `delete`
     *
+    * Cost is O(unshared entries) plus key-column scans. Each version's
+    * partition entries come from its manifest, or, for a plain full
+    * snapshot, from its hive dirs at the manifest's depth. An entry with
+    * the same relative path and the same immutable version dir on both
+    * sides is the same files, so it holds the same rows and can add no
+    * change: only the from-only and to-only entries are content-diffed,
+    * and a shared entry is read for its key column alone. When nothing
+    * can be shared — two plain snapshots, a flat republish, an
+    * unpartitioned table, a plain snapshot with a data file outside its
+    * hive dirs — the unshared sets are the whole versions and this is
+    * the full diff. Key survival is decided over the WHOLE version
+    * (unshared and shared keys alike), with key-column-only scans.
+    *
     * Unchanged rows hash-match and drop out of the feed, so the feed's
-    * size scales with the churn between the versions, not the table —
-    * the property that makes downstream incremental consumers (sync
-    * jobs, aggregate maintenance) O(changes). Duplicate rows are
+    * size scales with the churn between the versions. Duplicate rows are
     * handled by COUNT, not set difference: each side aggregates its
     * per-content multiplicity first and only the count DELTA feeds the
     * feed — deleting one of N identical copies emits exactly one feed
     * row (classified by the usual key-survival rule), where a plain
     * anti-join would see the surviving copy's hash on both sides and
-    * silently drop the change entirely. Columns are aligned by
-    * name over the UNION of the two schemas — a column only one version
-    * has reads as null on the other side, so schema adds/drops surface
-    * as updates instead of being silently excluded (or throwing). The
-    * row hash uses a field separator + null sentinel so ("a","bc")
-    * never collides with ("ab","c") or null. */
+    * silently drop the change entirely. Columns are aligned by name
+    * over the UNION of the two versions' schemas — a column only one
+    * version has reads as null on the other side, so schema adds/drops
+    * surface as updates instead of being silently excluded (or
+    * throwing). The row hash uses a field separator + null sentinel so
+    * ("a","bc") never collides with ("ab","c") or null. Output columns:
+    * the key columns, the other columns by name, then `change_type`. */
   def changesBetween(spark: SparkSession, root: String,
                      vFrom: String, vTo: String,
                      keyCols: Seq[String]): DataFrame = {
-    val from = readAt(spark, root, vFrom)
-    val to = readAt(spark, root, vTo)
+    val fromM = readManifest(spark, root, vFrom)
+    val toM = readManifest(spark, root, vTo)
+    // the whole versions: their schemas type every side read below
+    def whole(name: String, m: Option[Map[String, String]]): DataFrame =
+      if (m.exists(_.isEmpty)) spark.emptyDataFrame else readAt(spark, root, name)
+    val from = whole(vFrom, fromM)
+    val to = whole(vTo, toM)
+    val split = splitEntries(spark, root, vFrom, fromM, vTo, toM)
+    def side(es: Map[String, String], typed: DataFrame): DataFrame =
+      readEntries(spark, root, es, Some(typed.schema))
+    split match {
+      case Some(s) if s.fromOnly.isEmpty && s.toOnly.isEmpty =>
+        // no entry differs: an empty feed, typed by analysis alone
+        val feed = diffFeed(side(Map.empty, from), side(Map.empty, to),
+          None, keyCols)
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), feed.schema)
+      case Some(s) =>
+        diffFeed(side(s.fromOnly, from), side(s.toOnly, to),
+          Some(side(s.shared, from)), keyCols)
+      case None => diffFeed(from, to, None, keyCols)
+    }
+  }
+
+  /** One version pair's partition entries, split by whether both sides
+    * hold the same files. */
+  private[graft] case class EntrySplit(shared: Map[String, String],
+                                      fromOnly: Map[String, String],
+                                      toOnly: Map[String, String])
+
+  /** Split two versions' entries into shared (same relative path, same
+    * version dir), from-only and to-only. None — nothing can be shared —
+    * when neither side has a manifest (two plain snapshots never share a
+    * version dir), when the manifests disagree on depth, or when a plain
+    * side has a data file outside its hive dirs at that depth. */
+  private[graft] def splitEntries(spark: SparkSession, root: String,
+                                  vFrom: String, fromM: Option[Map[String, String]],
+                                  vTo: String, toM: Option[Map[String, String]]
+                                 ): Option[EntrySplit] = {
+    val depths = (fromM.toSeq ++ toM).flatMap(_.keys).map(_.split('/').length).distinct
+    for {
+      depth <- depths match { case Seq(d) => Some(d); case _ => None }
+      fe <- fromM.orElse(hiveEntries(spark, root, vFrom, depth))
+      te <- toM.orElse(hiveEntries(spark, root, vTo, depth))
+    } yield {
+      val shared = fe.filter { case (rel, v) => te.get(rel).contains(v) }
+      EntrySplit(shared, fe -- shared.keys, te -- shared.keys)
+    }
+  }
+
+  /** A plain snapshot's hive partition dirs at `depth`, as entries — only
+    * if every visible data file sits directly in one of them (Spark's
+    * reader skips `.`-names and `_`-names without `=`), so the entries
+    * read exactly the rows the version dir does. Walks with plain
+    * `listStatus`: a recursive `listFiles` builds located statuses, which
+    * on the local filesystem load permissions one shell call per file. */
+  private def hiveEntries(spark: SparkSession, root: String, name: String,
+                          depth: Int): Option[Map[String, String]] = {
+    val base = new Path(new Path(root, SnapshotsDir), name)
+    val entries = freshEntries(spark, base.toString, depth)
+    val fs = fsOf(base, spark)
+    def covered(dir: Path, segs: Vector[String]): Boolean =
+      fs.listStatus(dir).forall { st =>
+        val n = st.getPath.getName
+        val under = segs :+ n
+        if (n.startsWith(".") || (n.startsWith("_") && !n.contains("="))) true
+        else if (st.isDirectory) under.length <= depth && covered(st.getPath, under)
+        else segs.length == depth && entries.contains(segs.mkString("/"))
+      }
+    if (covered(base, Vector.empty)) Some(entries) else None
+  }
+
+  /** The content diff and classification of [[changesBetween]] over the
+    * rows only one side may hold; `shared` contributes keys only. */
+  private def diffFeed(from: DataFrame, to: DataFrame, shared: Option[DataFrame],
+                       keyCols: Seq[String]): DataFrame = {
     val cols = (from.columns.toSet ++ to.columns.toSet).toSeq.sorted
-    def align(df: DataFrame): DataFrame = df.select(cols.map(c =>
+    def align(df: DataFrame, names: Seq[String]): DataFrame = df.select(names.map(c =>
       (if (df.columns.contains(c)) col(c) else lit(null)).as(c)): _*)
     val rowHash = md5(concat_ws("\u0001",
       cols.map(c => coalesce(col(c).cast("string"), lit("\u0000"))): _*))
     // per-content multiplicity on each side; __rh hashes every column,
     // so grouping by (cols, __rh) is grouping by full row content
     def counted(df: DataFrame, cnt: String): DataFrame =
-      align(df).withColumn("__rh", rowHash)
+      align(df, cols).withColumn("__rh", rowHash)
         .groupBy((cols :+ "__rh").map(col): _*)
         .agg(count(lit(1)).as(cnt))
-    val fc = counted(from, "__nf")
-    val tc = counted(to, "__nt")
-    val fromKeys = fc.select(keyCols.map(col): _*).distinct()
-    val toKeys = tc.select(keyCols.map(col): _*).distinct()
+    val fr = counted(from, "__nf").select((Seq(col("__rh"), col("__nf")) ++
+      cols.map(c => col(c).as(s"__f_$c"))): _*)
     // full-outer on the content hash; the data columns come from
     // whichever side has the row (when both do, content is identical by
     // construction of __rh, so either copy serves)
-    val fr = fc.select((Seq(col("__rh"), col("__nf")) ++
-      cols.map(c => col(c).as(s"__f_$c"))): _*)
-    // CHURN-SIZED lazy checkpoint (r17, guide §3.3): the four
-    // change-type branches below each referenced the full classification
-    // join — the final plan carried four copies of the two-snapshot
-    // aggregate + full-outer subtree (87 KB formatted for s13; planning
-    // alone was a visible slice of the gate's first run), and single
-    // execution of the heavy prefix rested on exchange reuse. Cutting
-    // the lineage at the CHANGED rows keeps the checkpoint O(churn) —
-    // never O(snapshot), which is why the cut is here and not at
-    // fc/tc/delta — truncates each branch's plan to a scan of the
-    // checkpointed RDD, and guarantees the join runs once. Lazy
-    // (eager = false): the operator stays a pure DataFrame transform —
-    // materialization happens under the caller's first action.
-    val delta = fr.join(tc, Seq("__rh"), "full_outer")
-      .select((Seq(col("__rh"), col("__nf"), col("__nt")) ++
+    val delta = fr.join(counted(to, "__nt"), Seq("__rh"), "full_outer")
+      .select((Seq(col("__nf"), col("__nt")) ++
         cols.map(c => coalesce(col(c), col(s"__f_$c")).as(c))): _*)
       .withColumn("__d",
         coalesce(col("__nt"), lit(0L)) - coalesce(col("__nf"), lit(0L)))
       .filter(col("__d") =!= 0L)
-      .localCheckpoint(false)
-    // replicate each changed content-row |delta| times so multi-copy
-    // churn round-trips through the feed exactly
-    def replicate(n: org.apache.spark.sql.Column): DataFrame =
-      delta.filter(n > 0)
-        .withColumn("__i", explode(sequence(lit(1L), n)))
-        .drop("__i", "__d", "__nf", "__nt")
-    val appeared = replicate(col("__d"))
-    val vanished = replicate(-col("__d"))
-    val inserts = appeared.join(fromKeys, keyCols, "left_anti")
-      .withColumn("change_type", lit("insert"))
-    val postimages = appeared.join(fromKeys, keyCols, "left_semi")
-      .withColumn("change_type", lit("update_postimage"))
-    val preimages = vanished.join(toKeys, keyCols, "left_semi")
-      .withColumn("change_type", lit("update_preimage"))
-    val deletes = vanished.join(toKeys, keyCols, "left_anti")
-      .withColumn("change_type", lit("delete"))
-    inserts.unionByName(postimages).unionByName(preimages)
-      .unionByName(deletes).drop("__rh")
+    // which side holds each key anywhere in its version: the unshared
+    // rows of each side plus the shared rows, which both sides hold
+    def present(df: DataFrame, inFrom: Boolean, inTo: Boolean): DataFrame =
+      align(df, keyCols).withColumn("__kf", lit(inFrom)).withColumn("__kt", lit(inTo))
+    val presence = (Seq(present(from, true, false), present(to, false, true)) ++
+      shared.map(present(_, true, true))).reduce(_.unionByName(_))
+      .groupBy(keyCols.map(col): _*)
+      .agg(max("__kf").as("__kf"), max("__kt").as("__kt"))
+    // one pass: classify on the flags (a null key matches nothing, so it
+    // never survives), then replicate each changed content-row |delta|
+    // times so multi-copy churn round-trips through the feed exactly
+    delta.join(presence, keyCols, "left")
+      .withColumn("change_type",
+        when(col("__d") > 0,
+          when(col("__kf"), "update_postimage").otherwise("insert"))
+          .otherwise(when(col("__kt"), "update_preimage").otherwise("delete")))
+      .withColumn("__i", explode(sequence(lit(1L), abs(col("__d")))))
+      .select((keyCols ++ cols.filterNot(keyCols.contains) :+ "change_type")
+        .map(col): _*)
   }
 
   /** Write a new snapshot via `write(dir)` then publish it by atomically
@@ -561,16 +636,8 @@ object SnapshotStore {
   def currentEntries(spark: SparkSession, root: String,
                      depth: Int): Option[Map[String, String]] =
     currentName(spark, root).map { name =>
-      readManifest(spark, root, name).getOrElse {
-        val base = new Path(new Path(root, SnapshotsDir), name)
-        val fs = fsOf(base, spark)
-        val glob = new Path(base, Seq.fill(depth)("*=*").mkString("/"))
-        val dirs = Option(fs.globStatus(glob)).getOrElse(Array.empty)
-        dirs.map { st =>
-          st.getPath.toUri.getPath.stripPrefix(base.toUri.getPath)
-            .stripPrefix("/") -> name
-        }.toMap
-      }
+      readManifest(spark, root, name).getOrElse(freshEntries(spark,
+        new Path(new Path(root, SnapshotsDir), name).toString, depth))
     }
 
   /** rel-dir → version map of the hive partition dirs a publishing
@@ -611,16 +678,23 @@ object SnapshotStore {
     * become a 100k-way union plan (Catalyst analysis goes quadratic
     * long before that), and the union width here is bounded by the
     * retention window instead. `mergeSchema` keeps per-partition schema
-    * drift readable, as the per-partition union form did. */
+    * drift readable, as the per-partition union form did. A given
+    * `schema` replaces the inference (no footer job) and types an empty
+    * entry map as an empty frame; without one, no entries is an error —
+    * there is no file to take a schema from. */
   private[graft] def readEntries(spark: SparkSession, root: String,
-                                 entries: Map[String, String]): DataFrame = {
+                                 entries: Map[String, String],
+                                 schema: Option[StructType] = None): DataFrame = {
+    if (entries.isEmpty) return schema
+      .map(spark.createDataFrame(java.util.Collections.emptyList[Row](), _))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no partition entries to read under $root"))
     val byVersion = entries.toSeq.groupBy(_._2)
     val parts = byVersion.toSeq.sortBy(_._1).map { case (ver, es) =>
       val base = new Path(new Path(root, SnapshotsDir), ver)
       val dirs = es.map { case (rel, _) => new Path(base, rel).toString }.sorted
-      spark.read
-        .option("basePath", base.toString)
-        .option("mergeSchema", "true")
+      val reader = spark.read.option("basePath", base.toString)
+      schema.fold(reader.option("mergeSchema", "true"))(reader.schema)
         .parquet(dirs: _*)
     }
     parts.reduceLeft(_.unionByName(_, allowMissingColumns = true))

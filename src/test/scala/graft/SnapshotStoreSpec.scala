@@ -1,7 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import graft.gold.GoldEtl
 import graft.store.{DirectorySwapCommit, PointerCommit, SnapshotStore}
 import graft.scd.Scd2
 
@@ -310,6 +316,7 @@ class SnapshotStoreSpec extends SparkSuite {
     val feed = SnapshotStore.changesBetween(spark, root,
       "v000000001", "v000000002", keyCols = Seq("id"))
     assert(feed.count() === 0) // churn-sized: no churn, no rows
+    assertFeedEqualsFullDiff(root, "v000000001", "v000000002", Seq("id"))
   }
 
   test("change feed: duplicate-copy churn and schema drift surface, not vanish") {
@@ -331,6 +338,7 @@ class SnapshotStoreSpec extends SparkSuite {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     // both keys survive → the copy-count changes classify as updates
     assert(byType === Map("update_preimage" -> 1L, "update_postimage" -> 1L))
+    assertFeedEqualsFullDiff(root, "v000000001", "v000000002", Seq("id"))
 
     // v3 adds a column; the feed aligns on the schema UNION instead of
     // throwing, and every surviving row reads as updated (its content
@@ -342,6 +350,7 @@ class SnapshotStoreSpec extends SparkSuite {
       "v000000002", "v000000003", keyCols = Seq("id"))
     assert(drift.filter(col("change_type") === "update_postimage").count() === 2)
     assert(drift.columns.contains("extra"))
+    assertFeedEqualsFullDiff(root, "v000000002", "v000000003", Seq("id"))
   }
 
   test("change feed: null and empty-string fields don't collide in the row hash") {
@@ -355,6 +364,7 @@ class SnapshotStoreSpec extends SparkSuite {
       .select("change_type").collect().map(_.getString(0)).sorted
     // null → "" IS a change: pre+post images, never a silent match
     assert(feed.toSeq === Seq("update_postimage", "update_preimage"))
+    assertFeedEqualsFullDiff(root, "v000000001", "v000000002", Seq("id"))
   }
 
   test("DirectorySwapCommit failed rename surfaces instead of losing the table") {
@@ -364,5 +374,216 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(DirectorySwapCommit.read(spark, root).count() === 2)
     DirectorySwapCommit.publish(Seq(1, 2, 3).toDF("id"), root, Nil)
     assert(DirectorySwapCommit.read(spark, root).count() === 3)
+  }
+
+  // ------------------------------------- change feed over partition entries
+  /** The full diff of two versions: both contents republished as plain
+    * snapshots under a fresh root, where no entry can be shared. */
+  private def fullDiff(root: String, vFrom: String, vTo: String,
+                       keys: Seq[String]): DataFrame = {
+    val plain = freshRoot()
+    PointerCommit.publish(SnapshotStore.readAt(spark, root, vFrom), plain, Nil)
+    PointerCommit.publish(SnapshotStore.readAt(spark, root, vTo), plain, Nil)
+    SnapshotStore.changesBetween(spark, plain, "v000000001", "v000000002", keys)
+  }
+
+  private def typed(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+
+  /** rows, multiplicities and change types as an order-free multiset */
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  private def assertFeedEqualsFullDiff(root: String, vFrom: String, vTo: String,
+                                       keys: Seq[String]): DataFrame = {
+    val feed = SnapshotStore.changesBetween(spark, root, vFrom, vTo, keys)
+    val full = fullDiff(root, vFrom, vTo, keys)
+    assert(typed(feed) === typed(full), s"$vFrom→$vTo column order and types")
+    assert(rowsOf(feed) === rowsOf(full), s"$vFrom→$vTo rows")
+    feed
+  }
+
+  private def splitOf(root: String, vFrom: String, vTo: String) =
+    SnapshotStore.splitEntries(spark, root,
+      vFrom, SnapshotStore.readManifest(spark, root, vFrom),
+      vTo, SnapshotStore.readManifest(spark, root, vTo))
+
+  private def changeTypes(feed: DataFrame): Map[String, Long] =
+    feed.groupBy("change_type").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  private def goldFrame(rows: Seq[(String, String, Int, Int, Double)]) = {
+    import spark.implicits._
+    rows.toDF("project_id", "quality_tier", "year", "month", "price")
+  }
+
+  /** Three incremental gold publishes (depth-3 manifests):
+    *  - v1: months 1-3;
+    *  - v2: month 1 and month 3 recomputed with a `note` column. Month 1
+    *    loses its low tier (an entry only v1 has), p1 changes price, p3's
+    *    second copy goes (its other copy is in month 2, which both
+    *    versions share) and a null-key row changes; in month 3 p5 moves
+    *    from the low to the high tier and p4 is rewritten with only the
+    *    note added;
+    *  - v3: month 4 added, nothing else (a pure-insert pair). */
+  private def goldLake(): (String, String, String, String) = {
+    val root = freshRoot()
+    GoldEtl.publishIncrementalManifest(spark, root, goldFrame(Seq(
+      ("p1", "high", 2025, 1, 10.0), ("p2", "low", 2025, 1, 20.0),
+      ("p3", "high", 2025, 1, 30.0), (null, "high", 2025, 1, 40.0),
+      ("p3", "high", 2025, 2, 31.0), ("p6", "low", 2025, 2, 60.0),
+      ("p4", "high", 2025, 3, 50.0), ("p5", "low", 2025, 3, 70.0))),
+      Array((2025, 1), (2025, 2), (2025, 3)))
+    val v1 = SnapshotStore.currentName(spark, root).get
+    GoldEtl.publishIncrementalManifest(spark, root, goldFrame(Seq(
+      ("p1", "high", 2025, 1, 11.0), (null, "high", 2025, 1, 41.0),
+      ("p4", "high", 2025, 3, 50.0), ("p5", "high", 2025, 3, 70.0)))
+      .withColumn("note", lit("recomputed")),
+      Array((2025, 1), (2025, 3)))
+    val v2 = SnapshotStore.currentName(spark, root).get
+    GoldEtl.publishIncrementalManifest(spark, root,
+      goldFrame(Seq(("p7", "high", 2025, 4, 80.0))), Array((2025, 4)))
+    (root, v1, v2, SnapshotStore.currentName(spark, root).get)
+  }
+
+  test("change feed over manifests equals the full diff: dropped tier, " +
+    "moved key, shared-partition key, null key, one-side column, pure insert") {
+    val (root, v1, v2, v3) = goldLake()
+    val s12 = splitOf(root, v1, v2).get
+    assert(s12.shared.keySet === Set("quality_tier=high/year=2025/month=2",
+      "quality_tier=low/year=2025/month=2"))
+    assert(s12.fromOnly.keySet.contains("quality_tier=low/year=2025/month=1") &&
+      !s12.toOnly.keySet.contains("quality_tier=low/year=2025/month=1"),
+      "the dropped tier entry is from-only")
+    val keys = Seq("project_id")
+    val feed = assertFeedEqualsFullDiff(root, v1, v2, keys)
+    def typesOf(id: String) = feed.filter(col("project_id") === id)
+      .select("change_type").collect().map(_.getString(0)).toSeq.sorted
+    assert(typesOf("p2") === Seq("delete"))
+    // p3's month-1 copy went; its month-2 copy, in a shared entry, survives
+    assert(typesOf("p3") === Seq("update_preimage"))
+    assert(typesOf("p5") === Seq("update_postimage", "update_preimage"))
+    // the note column exists only in v2's fresh entries: every rewritten
+    // row changed shape, so p4 reads as updated too
+    assert(typesOf("p4") === Seq("update_postimage", "update_preimage"))
+    assert(feed.filter(col("project_id").isNull).select("change_type")
+      .collect().map(_.getString(0)).toSeq.sorted === Seq("delete", "insert"))
+    assert(feed.columns.toSeq === Seq("project_id", "month", "note", "price",
+      "quality_tier", "year", "change_type"))
+    // backwards, the note column is on the from side's unshared entries
+    assertFeedEqualsFullDiff(root, v2, v1, keys)
+    // pure insert: v3 only adds an entry
+    val s23 = splitOf(root, v2, v3).get
+    assert(s23.fromOnly.isEmpty && s23.toOnly.size === 1)
+    assert(changeTypes(assertFeedEqualsFullDiff(root, v2, v3, keys)) ===
+      Map("insert" -> 1L))
+    assertFeedEqualsFullDiff(root, v1, v3, keys)
+  }
+
+  test("change feed over an SCD2 merge day and a flat republish equals the full diff") {
+    import spark.implicits._
+    def batch(rows: Seq[(String, String, String, String)], date: String) =
+      rows.map { case (id, name, spider, month) =>
+        (id, name, s"addr-$id", true, date, null: String, spider, "2025", month)
+      }.toDF("universal_id", "project_name", "address", "is_current",
+        "valid_from", "valid_to", "spider_name", "ingestion_year",
+        "ingestion_month")
+    val root = Files.createTempDirectory("graft_feed_scd").toString + "/t"
+    Scd2.mergeRegioned(spark, batch((0 until 12).map(i =>
+      (s"u$i", s"n$i", if (i % 2 == 0) "spA" else "spB", "01")), "2025-01-15"),
+      root, asOfDate = lit("2025-01-15"), commit = PointerCommit)
+    // day 2 touches spA only: u0 renames and moves to month 02, u2 renames
+    Scd2.mergeRegioned(spark, batch(Seq(("u0", "m0", "spA", "02"),
+      ("u2", "m2", "spA", "01")), "2025-01-16"),
+      root, asOfDate = lit("2025-01-16"), commit = PointerCommit)
+    val cur = Scd2.currentRoot(root)
+    val Seq(v1, v2) = SnapshotStore.versions(spark, cur)
+    // v1 is a plain full publish, split by its hive dirs at v2's depth
+    assert(SnapshotStore.readManifest(spark, cur, v1).isEmpty)
+    assert(splitOf(cur, v1, v2).get.shared.keySet ===
+      Set("spider_name=spB/ingestion_year=2025/ingestion_month=01"))
+    val feed = assertFeedEqualsFullDiff(cur, v1, v2, Seq("universal_id"))
+    assert(changeTypes(feed) ===
+      Map("update_preimage" -> 2L, "update_postimage" -> 2L))
+    // a flat sorted republish has files outside any hive dir: nothing is
+    // shared and the feed is the full diff
+    Scd2.optimizeCurrentWithStats(spark, root, sortCol = "universal_id",
+      numFiles = 2, statCols = Seq("universal_id"))
+    val v3 = SnapshotStore.currentName(spark, cur).get
+    assert(splitOf(cur, v2, v3).isEmpty)
+    assert(assertFeedEqualsFullDiff(cur, v2, v3, Seq("universal_id")).count() === 0)
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper {
+    def scans(df: DataFrame): Seq[FileSourceScanExec] =
+      collectWithSubqueries(df.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s
+      }
+  }
+
+  test("change feed reads wide columns only from unshared entries; " +
+    "identical entries give an empty typed feed with no scan") {
+    val (root, v1, v2, v3) = goldLake()
+    val split = splitOf(root, v1, v2).get
+    def dirs(es: Map[String, String]) = es.map { case (rel, ver) =>
+      new org.apache.hadoop.fs.Path(s"$root/${SnapshotStore.SnapshotsDir}/$ver/$rel")
+        .toUri.getPath }.toSet
+    val unshared = dirs(split.fromOnly) ++ dirs(split.toOnly)
+    val feed = SnapshotStore.changesBetween(spark, root, v1, v2, Seq("project_id"))
+    feed.collect()
+    val scans = Plans.scans(feed)
+    def roots(s: FileSourceScanExec) =
+      s.relation.location.rootPaths.map(_.toUri.getPath).toSet
+    // partition values come from the paths: what a scan reads from its
+    // files is its required schema
+    val (keyOnly, wide) =
+      scans.partition(_.requiredSchema.fieldNames.toSeq == Seq("project_id"))
+    assert(wide.nonEmpty && wide.flatMap(roots).toSet === unshared,
+      s"wide scans must read exactly the unshared entries: ${wide.map(roots)}")
+    // each shared entry is read once, for its key column alone
+    val sharedReads = scans.filter(s => roots(s).exists(dirs(split.shared)))
+    assert(sharedReads.size === 1 && keyOnly.contains(sharedReads.head))
+
+    // a version that carries every entry forward: nothing to diff
+    GoldEtl.publishIncrementalManifest(spark, root, goldFrame(Nil), Array.empty)
+    val v4 = SnapshotStore.currentName(spark, root).get
+    assert(SnapshotStore.readManifest(spark, root, v4) ===
+      SnapshotStore.readManifest(spark, root, v3))
+    val empty = SnapshotStore.changesBetween(spark, root, v3, v4, Seq("project_id"))
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      assert(empty.collect().isEmpty)
+      org.apache.spark.ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get === 0 && Plans.scans(empty).isEmpty)
+    assert(typed(empty) === typed(fullDiff(root, v3, v4, Seq("project_id"))))
+  }
+
+  test("empty entry maps: the feed builds an empty typed side, readAt names the version") {
+    val root = freshRoot()
+    GoldEtl.publishIncrementalManifest(spark, root, goldFrame(Seq(
+      ("p1", "high", 2025, 1, 10.0), ("p2", "low", 2025, 1, 20.0))),
+      Array((2025, 1)))
+    val v1 = SnapshotStore.currentName(spark, root).get
+    // every row of the only affected group empties out: zero entries
+    GoldEtl.publishIncrementalManifest(spark, root, goldFrame(Nil), Array((2025, 1)))
+    val v2 = SnapshotStore.currentName(spark, root).get
+    assert(SnapshotStore.readManifest(spark, root, v2).contains(Map.empty))
+    val e = intercept[IllegalStateException](SnapshotStore.readAt(spark, root, v2))
+    assert(e.getMessage.contains(v2))
+    val schema = SnapshotStore.readAt(spark, root, v1).schema
+    val none = SnapshotStore.readEntries(spark, root, Map.empty, Some(schema))
+    assert(none.schema === schema && none.count() === 0)
+    intercept[IllegalArgumentException](SnapshotStore.readEntries(spark, root, Map.empty))
+    // pure delete, then pure insert across the empty version
+    assert(changeTypes(SnapshotStore.changesBetween(spark, root, v1, v2,
+      Seq("project_id"))) === Map("delete" -> 2L))
+    assert(changeTypes(SnapshotStore.changesBetween(spark, root, v2, v1,
+      Seq("project_id"))) === Map("insert" -> 2L))
   }
 }
