@@ -2,10 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Opinionated SparkSession factory for the graft engine.
-  *
-  * Centralizes the confs every graft entrypoint needs (Verify/Bench/demo
-  * mains and tests duplicate these today by contract):
+/** The one SparkSession factory for the graft engine: every main and
+  * the test session build through [[local]], the benchmark harness
+  * through [[builder]]. It owns the confs they all need:
   *  - ANSI off: the reference's semantics rely on null-on-bad-cast;
   *  - nanosAsLong: tolerated events.parquet generations carrying INT64
   *    TIMESTAMP(NANOS); harmless on the current timestamp[us] encoding
@@ -52,8 +51,11 @@ object GraftSession {
       .config("spark.hadoop.fs.s3a.aws.credentials.provider",
         "com.amazonaws.auth.EnvironmentVariableCredentialsProvider")
 
-  /** Local session (tests / demos): local[cores] master. */
-  def local(appName: String = "graft", cores: Int = 4): SparkSession = {
+  /** Local session: a local[cores] master, with `cores` from
+    * SPARK_GRAFT_CPUS (32 when unset) unless the caller passes it. */
+  def local(appName: String = "graft",
+            cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+      : SparkSession = {
     val s = builder(appName, cores).master(s"local[$cores]").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

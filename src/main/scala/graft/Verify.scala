@@ -1,31 +1,37 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  *   sbt "runMain graft.Verify <sfDir> <outDir> [q1,q2,...]"
+  *
+  * The optional third argument dumps only the named queries: the
+  * single-query pre-flight for a just-added or just-changed query. */
 object Verify {
+  /** The registry entries to dump: all of them, or the comma-separated
+    * `names`. An unknown name is an error listing every unknown one, so a
+    * typo fails here instead of dumping nothing and reading as a clean
+    * oracle run. */
+  def selected(names: Option[String])
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = SparkEntry.queries
+    names.fold(all.toSeq) { csv =>
+      val wanted = csv.split(",").map(_.trim).filter(_.nonEmpty).distinct.toSeq
+      require(wanted.nonEmpty, s"no query name in '$csv'")
+      val unknown = wanted.filterNot(all.contains)
+      require(unknown.isEmpty,
+        s"unknown query name(s): ${unknown.mkString(", ")}")
+      wanted.map(n => n -> all(n))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query-name subset, for local
-    // pre-flight of just-added queries (the driver always passes 2 args)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = selected(args.lift(2))
+    val spark = GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -258,9 +258,10 @@ object IncrementalCurate {
     * version, and a manifest read builds ONE scan relation per
     * referenced version ([[SnapshotStore.readEntries]]) — at a year of
     * daily batches that is a 365-way union plan per read, and the
-    * many-micro-batch soak (tools.CurateStreamSoak) measured exactly
-    * that growth: per-batch wall kept rising ACROSS index-chain
-    * compactions because the store's union width never fell. */
+    * 36-micro-batch streaming-curation soak measured exactly that
+    * growth (BASELINE.md, "Streaming-curation soak (round 12)"):
+    * per-batch wall kept rising ACROSS index-chain compactions because
+    * the store's union width never fell. */
   val MaxStoreFanout = 16
 
   /** Rewrite the curated store into ONE fresh version dir (still

@@ -27,7 +27,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, St
   *     wraps, and the struct-typed `min_by` buffer forces the
   *     re-aggregation off the fast primitive HashAggregate path —
   *     measured 77× slower than this expression end-to-end at
-  *     N=200k, K=2000 (553 s vs 7.2 s, SemDedupScale mult=10).
+  *     N=200k, K=2000 (553 s vs 7.2 s; COVERAGE.md, fused
+  *     nearest-centroid row).
   *
   * Here the whole argmax is ONE expression eval: the codebook travels
   * as a [[Broadcast]] of flat primitive arrays (one torrent fetch per

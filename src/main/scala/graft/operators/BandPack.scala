@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
   * key (`LongHashedRelation` — a dense primitive-keyed map with a
   * zero-allocation probe); any multi-column key falls back to
   * `UnsafeHashedRelation`, whose per-row UnsafeRow projection + byte-wise
-  * hash/compare measured **20× slower** on the probe side (JoinMicro,
-  * BASELINE.md r15: 58M-row broadcast probe 6-9 s composite vs 0.3-1.1 s
-  * packed). Every banded candidate join in the engine streams
-  * corpus-scale rows through exactly that probe, so the packing is pure
-  * join-key plumbing with corpus-linear payoff.
+  * hash/compare measured **20× slower** on the probe side (BASELINE.md,
+  * "LSH band-key packing", round 15: 58M-row broadcast probe 6-9 s
+  * composite vs 0.3-1.1 s packed). Every banded candidate join in the
+  * engine streams corpus-scale rows through exactly that probe, so the
+  * packing is pure join-key plumbing with corpus-linear payoff.
   *
   * Packing happens at JOIN TIME on both sides — persisted index layouts
   * keep their (band, key) columns, so no format bump and no silently

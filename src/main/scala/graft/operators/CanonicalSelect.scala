@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   * stage materializes one row per (gram, docᵢ, docⱼ) — Σ_g df_g·(df_g−1)/2
   * rows. A boilerplate gram shared by 10% of a corpus (a crawl header, a
   * license line) makes that term df²-quadratic in corpus size
-  * (tools/CanonSelScale measures the blowup). [[gramJaccardPairs]]
+  * (measured: BASELINE.md, "Canonical-selection pair stage at corpus
+  * scale", round 15). [[gramJaccardPairs]]
   * therefore takes `maxDfPerGram`: grams above the cap are dropped from
   * the JOIN only — per-doc gram sizes stay full, so `common` can only
   * shrink and the threshold filter stays CONSERVATIVE (a kept pair's

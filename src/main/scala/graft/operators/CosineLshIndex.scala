@@ -40,8 +40,9 @@ object CosineLshIndex {
   val FormatVersion = 1
   val MaxChain = 16
 
-  /** GEOMETRY NOTE (EmbIndexScale EMBRECALL/EMBGEO sweeps, BASELINE.md
-    * r15): sign-RP band recall is a closed-form per-PAIR property — a
+  /** GEOMETRY NOTE (the EMBRECALL/EMBGEO sweeps in BASELINE.md,
+    * "Embedding-index geometry: the measured borderline frontier",
+    * round 15): sign-RP band recall is a closed-form per-PAIR property — a
     * pair at cosine c agrees per plane with p = 1 − arccos(c)/π, a
     * w-bit band collides with pʷ, and b bands recall 1 − (1 − pʷ)ᵇ.
     * The r14 default (8×16) held borderline recall at threshold 0.95 to
@@ -65,10 +66,10 @@ object CosineLshIndex {
     * pair AT `threshold` cosine (harder pairs don't exist above the
     * threshold; easier ones recall strictly better), at the given band
     * width. Returns (bands, rowsPerBand). The formula is exact for
-    * independent random hyperplanes — EmbIndexScale's EMBRECALL leg
-    * pins measured recall to it per cosine bin. Width stays a caller
-    * dial: each extra bit halves the chance-candidate rate
-    * (bands·2^-width per cross pair) but needs more bands to hold the
+    * independent random hyperplanes — the EMBRECALL sweep (BASELINE.md,
+    * round 15) matched measured recall to it per cosine bin. Width
+    * stays a caller dial: each extra bit halves the chance-candidate
+    * rate (bands·2^-width per cross pair) but needs more bands to hold the
     * same borderline recall; 24 bits is the measured sweet spot for
     * thresholds near 0.95 (16 bits can't reach rate ≤2e-6 at any sane
     * band count, 32 bits needs 69 bands for recall 0.9). */

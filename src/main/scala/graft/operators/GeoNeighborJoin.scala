@@ -48,9 +48,10 @@ object GeoNeighborJoin {
     * verdict weak #1): Spark's hash joins specialize on a single
     * long-typed key (`LongHashedRelation`); the previous `(cx, cy)` /
     * `(cx, cy, __b)` composites ran every corpus-scale probe through
-    * `UnsafeHashedRelation`, a measured 20× probe-side tax (JoinMicro,
-    * BASELINE.md r15). The pack is exact and bijective, so candidate
-    * membership is IDENTICAL to the composite formulation: micro-degree
+    * `UnsafeHashedRelation`, a measured 20× probe-side tax (BASELINE.md,
+    * "LSH band-key packing", round 15). The pack is exact and
+    * bijective, so candidate membership is IDENTICAL to the composite
+    * formulation: micro-degree
     * coordinates bound the cell indices (|cx| < 90e6/radius + 1, |cy| <
     * 180e6/radius + 1), offset-shifting each into a non-negative field
     * sized by those bounds — ≤ 28 + 29 = 57 bits even at radius = 1 —

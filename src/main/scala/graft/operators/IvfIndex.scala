@@ -65,7 +65,8 @@ import graft.store.GenLog
   * crossJoin(broadcast) + `min_by` argmax (no window, but still
   * materialized corpus×K physical rows into a SortAggregate — struct
   * extremum buffers aren't hash-aggregable; measured 77× slower than
-  * the fused kernel at K=2000 in SemDedupScale). The FULL corpus is
+  * the fused kernel at K=2000, 553 s vs 7.2 s: COVERAGE.md, fused
+  * nearest-centroid row). The FULL corpus is
   * touched exactly once, by the final fused cell-assignment +
   * PQ-encoding projection feeding the partitioned write — training
   * cost is corpus-size-independent, localCheckpoint'd so the iterated
@@ -76,8 +77,8 @@ import graft.store.GenLog
 object IvfIndex {
   val K = 8
   val LloydIters = 4
-  /** Default probe width for queries over this index (the v5/v7 gates
-    * and AnnOverlap). The recall/scan-fraction knob: a probe reads
+  /** Default probe width for queries over this index (the v5/v7
+    * gates). The recall/scan-fraction knob: a probe reads
     * nprobe/K of the index, and the right width is a property of the
     * CORPUS, not the engine — both regimes are gated:
     *
@@ -86,7 +87,8 @@ object IvfIndex {
     *    itself (the r12 verdict's finding: nprobe=3 of 8 gave a
     *    per-query floor of only 1/5). nprobe=6 is the measured
     *    smallest width whose sf0.001/0.01/0.1 per-query minima support
-    *    a 3/5 floor (AnnOverlap sweep, BASELINE.md r13) — v5/v7 run
+    *    a 3/5 floor (BASELINE.md, "IVF recall floors", round 13) —
+    *    v5/v7 run
     *    here, paying a 6/8 scan as the honest price of recall on
     *    structure-free data.
     *  - CLUSTERED corpus (v10/v11's planted mixture-of-8 world,

@@ -39,11 +39,13 @@ object MinHashLSH {
     * probability J, a band of r rows collides with Jʳ, and b bands
     * recall 1 − (1 − Jʳ)ᵇ — the [[CosineLshIndex.geometryFor]] map for
     * the Jaccard family (closed form exact for independent permutations;
-    * LshAdvanceScale's MHRECALL leg pins measured recall to it per
-    * Jaccard bin). The default 16×4 geometry (r = 4) holds recall ≥ 0.98
-    * at J = 0.9, the near-dup regime the dd4/dd13 gates plant; callers
-    * targeting LOWER thresholds (fuzzy dedup at J ~ 0.6-0.7) should
-    * derive geometry here instead of guessing — at J = 0.7, 4 bands of 4
+    * the MHRECALL sweep matched measured recall to it per Jaccard bin:
+    * BASELINE.md, "MHRECALL: the MinHash family's measured Jaccard
+    * frontier", round 15). The default 16×4 geometry (r = 4) holds
+    * recall ≥ 0.98 at J = 0.9, the near-dup regime the dd4/dd13 gates
+    * plant; callers targeting LOWER thresholds (fuzzy dedup at
+    * J ~ 0.6-0.7) should derive geometry here instead of guessing — at
+    * J = 0.7, 4 bands of 4
     * recall only ~0.66, while geometryFor(0.7, 0.95, 3) returns
     * Geometry(numPerms = 24, bands = 8) — 8 bands of 3 — which holds
     * it (the dd18 gate runs exactly that derived geometry end-to-end).

@@ -139,7 +139,8 @@ object ShelfPack {
     // < 2^23 (the capacity require above) and __bucket < buckets, so
     // `class · buckets + bucket` is bijective — the corpus-sized probe
     // runs through LongHashedRelation instead of a composite-key
-    // UnsafeHashedRelation (measured 20× probe tax, JoinMicro r15)
+    // UnsafeHashedRelation (measured 20× probe tax: BASELINE.md,
+    // "LSH band-key packing", round 15)
     def packed(cls: Column, bk: Column): Column =
       cls * lit(buckets.toLong) + bk
     // bin id unique across classes: class × 2^40 + bin-in-class (a

@@ -348,7 +348,9 @@ object TextIndex {
       val headPostings = postingsOf(spark, headGen.toString)
       val bIds = b.select(col(idCol).as("__id"))
       // overlap EXISTENCE first: narrow semi-join, limit-1 early-out,
-      // no distinct (the LshAdvanceScale lesson); exact count only on
+      // no distinct (BASELINE.md, "LSH band-index advance scaling",
+      // round 10: a distinct() here was an O(corpus) shuffle); exact
+      // count only on
       // the corpus-sized rewrite path
       val overlapExists = headPostings.select("__id")
         .join(bIds, Seq("__id"), "left_semi")

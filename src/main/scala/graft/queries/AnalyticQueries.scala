@@ -719,7 +719,8 @@ object AnalyticQueries {
     * probe. r18: EAGER localCheckpoint, not a lazy persist — the two
     * consumers' exchange jobs launch concurrently under AQE and both
     * raced to populate the cold cache, running the corpus explode+md5
-    * pass twice in parallel (JobDebug: two concurrent 0.95 s jobs, every
+    * pass twice in parallel (OPTIMIZATION_r18.md, gr1_pagerank section: two
+    * concurrent 0.95 s jobs, every
     * run — the per-run unpersist meant the race repeated in steady
     * state). One eager job tokenizes once; both consumers scan the RDD
     * and the edge plan truncates there. Same bytes stored as the old

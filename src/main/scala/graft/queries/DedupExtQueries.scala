@@ -176,7 +176,8 @@ object DedupExtQueries {
       // (no df cap — the 50-doc scope has no hot grams worth guarding).
       // At corpus scale feed CanonicalSelect.minhashPairs (banded —
       // pair volume tracks true duplicates, not Σ df² over stop-grams;
-      // tools/CanonSelScale measures the difference) — the selection
+      // BASELINE.md, "Canonical-selection pair stage at corpus scale",
+      // round 15, measures the difference) — the selection
       // stage is pair-source agnostic.
       val pairs = CanonicalSelect.gramJaccardPairs(docs, "doc_id", "text",
         threshold = 0.6)
@@ -388,7 +389,8 @@ object DedupExtQueries {
       // a lazy persist — under AQE the five consumers' exchange jobs
       // launch concurrently and each raced to populate the still-cold
       // cache, re-running the tokenize pass up to 6× in parallel
-      // (JobDebug: six concurrent ~2.4 s jobs, job-time 21.9 s inside
+      // (OPTIMIZATION_r18.md, "the cache-population race": six
+      // concurrent ~2.4 s jobs, job-time 21.9 s inside
       // an 8.8 s wall). One eager job materializes it once, and every
       // consumer's plan truncates to an RDD scan (the changesBetween
       // lineage cut — this was the largest formatted plan left, 40 KB).

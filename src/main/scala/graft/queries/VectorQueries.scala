@@ -85,7 +85,8 @@ object VectorQueries {
     * neighbors" is an engine-independent claim and is what this pins.
     * Floors are the measured per-query minima across all three sfs
     * with no slack (v4 multi-probe: 4/5; IVF-family: 3/5 at nprobe=6 +
-    * ADC refine 1024 — the r13 AnnOverlap sweep; r12's nprobe=3 config
+    * ADC refine 1024 — BASELINE.md, "IVF recall floors", round 13;
+    * r12's nprobe=3 config
     * only supported 1/5. QueriesSpec holds the tighter aggregate
     * floors). */
   /** The exact side of the recall gates, one localCheckpoint per
@@ -315,8 +316,9 @@ object VectorQueries {
     // an exact DuckDB oracle. The raw shortlist surface
     // ([[annLshTopK]]) stays pinned by QueriesSpec (recall@5 >= 0.95 at
     // radius 2), AnnLshStepdownSpec (planted non-copy neighbors at the
-    // radius 1 and 0 density thresholds) and tools.AnnScale (recall at
-    // 10×/100× density).
+    // radius 1 and 0 density thresholds) and the 10×/100× density runs
+    // in BASELINE.md, "ANN scaling + recall (round 8)" and its round-9
+    // re-run.
     "v4_ann_lsh" -> ((s, d) => recallGate(s, d, annLshTopK(s, d), 4)),
 
     // IVF ANN, probe-only: the k-means codebook and the cell-partitioned
@@ -333,7 +335,8 @@ object VectorQueries {
     // The one collect() pulls <= k=8 probed cell ids to the driver —
     // bounded by the codebook size, needed to turn the probe set into a
     // static partition-pruning predicate.
-    // Recall context (r13 AnnOverlap sweep): this near-uniform synthetic
+    // Recall context (BASELINE.md, "IVF recall floors", round 13): this
+    // near-uniform synthetic
     // corpus barely clusters ((16,4) codebooks measured WORSE than
     // (8,4)), so recall tracks the scan fraction — nprobe=3 of 8
     // supported only a 1/5 per-query floor; nprobe=6 supports 3/5 at

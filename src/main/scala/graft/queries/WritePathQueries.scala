@@ -190,8 +190,9 @@ object WritePathQueries {
   /** Minimal SCD-shaped silver fixture for the INCREMENTAL gold path
     * (s26): current rows spread over 12 ingestion months so the gold
     * table partitions by month and a quarter range read has something
-    * to skip. Column set mirrors tools.GoldIncScale's (the proven
-    * conformToSilverSchema-minimal shape); derived from `customer` so
+    * to skip. Column set is the conformToSilverSchema-minimal shape
+    * the incremental-gold scaling runs used (BASELINE.md, "Incremental
+    * gold scaling", round 8); derived from `customer` so
     * the oracle replays counts from the same table. */
   private def goldIncFixture(s: SparkSession, d: String): DataFrame = {
     val ck = col("c_custkey")

@@ -351,8 +351,8 @@ object StreamingOps {
                 // become vacuum-collectable), bounding the per-version
                 // union width of every store read — without this the
                 // per-batch wall grows with TOTAL batch count even
-                // while the index chain compacts (measured,
-                // tools.CurateStreamSoak)
+                // while the index chain compacts (measured: BASELINE.md,
+                // "Streaming-curation soak (round 12)")
                 IncrementalCurate.consolidateIfWide(spark, curatedRoot)
                   .foreach(_ => SnapshotStore.vacuum(spark, curatedRoot))
                 ()

@@ -46,8 +46,7 @@ object EtlRunner {
     // may disagree around midnight.
     val processingDate = java.time.LocalDate.now(java.time.ZoneOffset.UTC).toString
     val Array(bronzeBase, date, outBase) = args.take(3)
-    val spark = GraftSession.local("graft-etl",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.local("graft-etl")
 
     val cfg = SilverEtl.RunConfig(s"$outBase/silver", s"$outBase/quarantine",
       s"$outBase/metadata", runId = s"run_$date", startDate = date)

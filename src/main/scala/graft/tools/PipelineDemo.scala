@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.fixtures.BronzeFixtures
 import graft.silver.SilverEtl
@@ -18,9 +17,7 @@ object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft_pipeline_demo").toString)
-    val spark = graft.GraftSession.local("graft-pipeline-demo",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("graft-pipeline-demo")
 
     BronzeFixtures.write(base)
     val cfg = SilverEtl.RunConfig(s"$base/silver", s"$base/quarantine",

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan-quality audit: prints the physical-plan health signals for the
@@ -18,8 +17,7 @@ object PlanAudit {
         "p8_outlier_4sigma", "v2_ann_topk", "v7_ann_ivfpq",
         "a7_conditional_agg", "j7_multiway_star", "aj1_asof_join",
         "rj1_range_join", "sw1_session_window", "g1_rollup", "tx10_tfidf")
-    val spark = graft.GraftSession.local("graft-plan-audit",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = graft.GraftSession.local("graft-plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sf)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for registered queries to files — the
@@ -20,8 +19,7 @@ object PlanDump {
     val suffix = args(2)
     val names = args.drop(3).toSeq
     outDir.mkdirs()
-    val spark = graft.GraftSession.local("graft-plan-dump",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = graft.GraftSession.local("graft-plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sf)

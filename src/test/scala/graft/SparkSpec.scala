@@ -3,28 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites: one local JVM SparkSession, UTC,
-  * nanos-tolerant parquet reads (events.parquet), small shuffle
-  * parallelism to match the test scale. */
+/** Shared session for all suites: one local JVM SparkSession built by
+  * [[GraftSession.local]], with 4 cores (and so 4 shuffle partitions)
+  * to match the test scale. */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // reference semantics predate ANSI-by-default: casts return null on
-      // bad input (dual-format date probe etc.)
-      .config("spark.sql.ansi.enabled", "false")
-      // keep ingestion_year=2025 partition values as strings on read-back
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local("graft-test", 4)
   val sf: String = "/root/testdata/sf0.001"
 }
 

@@ -25,15 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the invariant doc requires lambdas (and their same-file helpers) to
   * stay within engine + own file. */
 class WorldRecipeAuditSpec extends AnyFunSuite {
-
-  private def scalaFiles(dir: File): Seq[File] = {
-    val fs = Option(dir.listFiles()).getOrElse(Array.empty)
-    fs.filter(_.isFile).filter(_.getName.endsWith(".scala")).toSeq ++
-      fs.filter(_.isDirectory).flatMap(scalaFiles)
-  }
-
-  private def readAll(f: File): String =
-    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+  import SourceTree.{readAll, scalaFiles}
 
   /** index just past the matching close delimiter for the open at `i`. */
   private def balancedEnd(s: String, i: Int, open: Char, close: Char): Int = {
