@@ -42,8 +42,8 @@ object GraftSession {
     * that avoids rename-based output commits on stores where rename is a
     * copy. Credentials deliberately come from the ENVIRONMENT provider —
     * the reference embeds access keys in code; that part is not worth
-    * reproducing. Pair with [[graft.store.PointerCommit]] for table
-    * publishes (directory renames are not atomic on object stores). */
+    * reproducing. Table publishes stay atomic there because they go
+    * through [[graft.store.PointerCommit]], which renames no directory. */
   def withS3A(b: SparkSession.Builder, endpoint: String,
               pathStyleAccess: Boolean = true): SparkSession.Builder =
     b.config("spark.hadoop.fs.s3a.endpoint", endpoint)

@@ -3,6 +3,7 @@ package graft.gold
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.schema.{Mappings, Schemas}
+import graft.store.{PointerCommit, SnapshotStore}
 
 /** Gold-layer ML-feature ETL (reference: gold_ml_etl.py:45-474): read
   * current silver rows → enhance → engineer ~60 features → quality tiers →
@@ -13,17 +14,12 @@ object GoldEtl {
   val GoldVersion = "1.0"
 
   // ------------------------------------------------------------ step 1
-  /** Current-snapshot scan. `commit` picks the table protocol for the
-    * READ side — a deployment runs one protocol across its lake, so
-    * run/runIncremental pass their own `commit` through. With the
-    * regioned silver layout this never opens the closed region at all:
-    * gold's input is O(live keys) regardless of how much history the
-    * silver table has accumulated. */
+  /** Current-snapshot scan. With the regioned silver layout this never
+    * opens the closed region at all: gold's input is O(live keys)
+    * regardless of how much history the silver table has accumulated. */
   def readSilver(spark: SparkSession, silverPath: String,
-                 commit: graft.store.TableCommit =
-                   graft.store.DirectorySwapCommit,
                  layout: graft.scd.SilverLayout = graft.scd.FlatLayout): DataFrame =
-    layout.readCurrent(spark, silverPath, commit)
+    layout.readCurrent(spark, silverPath)
 
   /** Silver only writes columns present in that day's bronze
     * (silver_etl_script.py:490-499 prunes to available columns), so a
@@ -145,16 +141,11 @@ object GoldEtl {
   }
 
   // ------------------------------------------------------------ step 6
-  /** Full-table publish through a commit protocol rather than a raw
-    * SaveMode.Overwrite: plain overwrite deletes the live table before
-    * writing, so a crash mid-write loses gold entirely. The default
-    * directory-swap materializes the replacement fully first;
-    * [[graft.store.PointerCommit]] extends the guarantee to object
-    * stores. */
-  def writeGold(df: DataFrame, goldPath: String,
-                commit: graft.store.TableCommit =
-                  graft.store.DirectorySwapCommit): Unit =
-    commit.publish(df, goldPath, Seq("quality_tier", "year", "month"))
+  /** Full-table publish as a new snapshot ([[PointerCommit]]) rather than
+    * a raw SaveMode.Overwrite: plain overwrite deletes the live table
+    * before writing, so a crash mid-write loses gold entirely. */
+  def writeGold(df: DataFrame, goldPath: String): Unit =
+    PointerCommit.publish(df, goldPath, Seq("quality_tier", "year", "month"))
 
   /** Sibling table holding [[Enhancement.imputationStats]] of the silver
     * snapshot the last FULL gold run (re-baseline) saw — the state that
@@ -176,10 +167,10 @@ object GoldEtl {
     * its OLD partition, which must be rewritten away. Tier moves stay
     * inside a (year, month) group, and every tier partition of an
     * affected group is rewritten. Durability: the replacement partitions
-    * are fully WRITTEN to a temp dir first, and only then are the stale
-    * dirs deleted and the new ones renamed in — a failed job leaves gold
-    * untouched (on object stores use a table-format commit instead of
-    * dir renames).
+    * land in a fresh snapshot version whose manifest carries every
+    * unchanged partition by reference ([[publishIncrementalManifest]]);
+    * one pointer flip publishes it, so a failed run leaves gold
+    * untouched.
     *
     * Imputation stats: the only corpus-wide state in the whole pipeline
     * (district/city price medians — everything else is row-local). When
@@ -196,19 +187,21 @@ object GoldEtl {
     * lag). Without a stats table the run falls back to full-snapshot
     * stats (exact, legacy shape) and publishes the table so the NEXT run
     * is incremental.
+    *
+    * `commit` has one value, [[PointerCommit]]; the parameter stays only
+    * because the benchmark harness's source passes it.
     */
   def runIncremental(spark: SparkSession, silverPath: String, goldPath: String,
                      runDate: String,
                      clock: Column = current_timestamp(),
-                     commit: graft.store.TableCommit =
-                       graft.store.DirectorySwapCommit,
+                     commit: PointerCommit.type = PointerCommit,
                      layout: graft.scd.SilverLayout = graft.scd.FlatLayout): DataFrame = {
-    if (!layout.exists(spark, silverPath, commit)) return spark.emptyDataFrame
+    if (!layout.exists(spark, silverPath)) return spark.emptyDataFrame
     // on-or-after, not equality: a run that crosses UTC midnight stamps
     // some versions with the previous date (ISO strings compare
     // lexicographically = chronologically). With the regioned layout the
     // closed side of this scan prunes on its valid_to partitioning.
-    val history = layout.read(spark, silverPath, commit)
+    val history = layout.read(spark, silverPath)
     val affected = history
       .filter(col("valid_from") >= runDate ||
         (col("valid_to").isNotNull && col("valid_to") >= runDate))
@@ -227,9 +220,9 @@ object GoldEtl {
     }
     val statsP = statsPath(goldPath)
     val stats =
-      if (commit.exists(spark, statsP)) Some(commit.read(spark, statsP))
+      if (PointerCommit.exists(spark, statsP)) Some(PointerCommit.read(spark, statsP))
       else None
-    val silverRaw = readSilver(spark, silverPath, commit, layout)
+    val silverRaw = readSilver(spark, silverPath, layout)
     val silverFull = conformToSilverSchema(silverRaw)
     // partition-pruned read: with persisted stats nothing downstream
     // needs unchurned rows, and (ingestion_year, ingestion_month) are
@@ -261,51 +254,17 @@ object GoldEtl {
     // so the next run prunes. Failure is non-fatal — stats are an
     // optimization, the legacy path stays correct without them.
     if (stats.isEmpty)
-      try commit.publish(
+      try PointerCommit.publish(
         Enhancement.imputationStats(silverFull), statsP, Nil)
       catch { case scala.util.control.NonFatal(_) => () }
-
-    // object-store path: write ONLY the replacement partitions into a
-    // fresh version dir, then publish a manifest that carries every
-    // unchanged partition forward by reference and flip the pointer —
-    // incremental write volume with full-snapshot atomicity.
-    if (commit == graft.store.PointerCommit) {
-      publishIncrementalManifest(spark, goldPath, selected, affectedKeys)
-      return selected
-    }
-
-    // write-then-swap: materialize the replacement partitions fully in a
-    // temp dir, then clear the stale tier dirs of each affected
-    // (year, month) and rename the new ones in. Deleting first would lose
-    // those partitions permanently if the write job failed midway.
-    // NOTE: gold FS, not silver's — paths can live on different schemes.
-    val goldRoot = new org.apache.hadoop.fs.Path(goldPath)
-    val goldFs = goldRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // sibling of the normalized target, NOT raw string concat — a
-    // trailing slash in `goldPath` would otherwise nest the tmp dir
-    // INSIDE the table and the final cleanup would delete live data.
-    val tmp = new org.apache.hadoop.fs.Path(goldRoot.getParent,
-      goldRoot.getName + "__inc_tmp")
-    goldFs.delete(tmp, true)
-    selected.write.mode(SaveMode.Overwrite)
-      .partitionBy("quality_tier", "year", "month")
-      .parquet(tmp.toString)
-    swapAffectedPartitions(goldFs, goldPath, goldRoot, tmp, affectedKeys,
-      goldFs.rename)
-    goldFs.delete(tmp, true)
+    // write ONLY the replacement partitions into a fresh version dir,
+    // then publish a manifest that carries every unchanged partition
+    // forward by reference and flip the pointer — incremental write
+    // volume with full-snapshot atomicity
+    publishIncrementalManifest(spark, goldPath, selected, affectedKeys)
     selected
   }
 
-  /** Manifest commit for incremental gold on object stores: the affected
-    * (year, month) groups' replacement partitions land in a brand-new
-    * version dir; the manifest maps every partition of the NEW snapshot
-    * to the version dir holding its data — fresh partitions to the new
-    * version, unchanged ones carried forward by reference from the
-    * previous snapshot's entries (affected groups' old entries dropped,
-    * matching the swap path's stale-delete). Written before the pointer
-    * flip, so readers see the whole new snapshot atomically; a crash at
-    * any step leaves them on the old one. Read back via
-    * `SnapshotStore.readPartitioned`. */
   /** Data columns every incremental gold publish stats in its sidecar.
     * `quarter` is a kept feature column that is CONSTANT within each
     * `month=` partition dir, so per-file [min,max] intervals are exact
@@ -315,10 +274,18 @@ object GoldEtl {
     * time-range training-data pull a gold consumer actually runs. */
   val GoldStatCols: Seq[String] = Seq("quarter")
 
+  /** Manifest commit for incremental gold: the affected
+    * (year, month) groups' replacement partitions land in a brand-new
+    * version dir; the manifest maps every partition of the NEW snapshot
+    * to the version dir holding its data — fresh partitions to the new
+    * version, unchanged ones carried forward by reference from the
+    * previous snapshot's entries (affected groups' old entries dropped).
+    * Written before the pointer flip, so readers see the whole new
+    * snapshot atomically; a crash at any step leaves them on the old
+    * one. Read back via `SnapshotStore.readPartitioned`. */
   private[graft] def publishIncrementalManifest(spark: SparkSession, goldPath: String,
                                          selected: DataFrame,
                                          affectedKeys: Array[(Int, Int)]): Unit = {
-    import graft.store.SnapshotStore
     val affected = affectedKeys.toSet
     val prevName = SnapshotStore.currentName(spark, goldPath)
     val prev = SnapshotStore.currentEntries(spark, goldPath, 3)
@@ -332,8 +299,7 @@ object GoldEtl {
       val dirPath = new org.apache.hadoop.fs.Path(dir)
       val name = dirPath.getName
       val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val fresh = graft.store.SnapshotStore.freshEntries(spark, dir,
-        depth = 3)
+      val fresh = SnapshotStore.freshEntries(spark, dir, depth = 3)
       def groupOf(rel: String): (Int, Int) = {
         val kv = rel.split('/').map { s =>
           val Array(k, v) = s.split("=", 2); k -> v
@@ -372,57 +338,26 @@ object GoldEtl {
     }
   }
 
-  /** Swap freshly-written tier partitions from `tmp` into the gold root:
-    * delete the stale dirs of each affected (year, month), then rename the
-    * replacements in. `rename` is injectable for fault testing. A failed
-    * rename MUST NOT fall through to the tmp cleanup — after the stale
-    * dirs are gone, tmp holds the only copy of the replacement partition —
-    * so the failure is surfaced with tmp left in place for recovery. */
-  private[graft] def swapAffectedPartitions(
-      goldFs: org.apache.hadoop.fs.FileSystem, goldPath: String,
-      goldRoot: org.apache.hadoop.fs.Path, tmp: org.apache.hadoop.fs.Path,
-      affectedKeys: Seq[(Int, Int)],
-      rename: (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path) => Boolean)
-      : Unit = {
-    affectedKeys.foreach { case (y, m) =>
-      val stale = goldFs.globStatus(new org.apache.hadoop.fs.Path(
-        s"$goldPath/quality_tier=*/year=$y/month=$m"))
-      if (stale != null) stale.foreach(st => goldFs.delete(st.getPath, true))
-    }
-    val fresh = goldFs.globStatus(new org.apache.hadoop.fs.Path(
-      s"${tmp.toString}/quality_tier=*/year=*/month=*"))
-    if (fresh != null) fresh.foreach { st =>
-      val rel = st.getPath.toUri.getPath
-        .stripPrefix(tmp.toUri.getPath).stripPrefix("/")
-      val dest = new org.apache.hadoop.fs.Path(goldRoot, rel)
-      goldFs.mkdirs(dest.getParent)
-      if (!rename(st.getPath, dest))
-        throw new java.io.IOException(
-          s"runIncremental: rename ${st.getPath} -> $dest failed; " +
-            s"replacement partitions preserved at $tmp")
-    }
-  }
-
-  /** Full gold pipeline (gold_ml_etl.py:536-568). */
+  /** Full gold pipeline (gold_ml_etl.py:536-568). `commit` as in
+    * [[runIncremental]]. */
   def run(spark: SparkSession, silverPath: String, goldPath: String,
           clock: Column = current_timestamp(),
-          commit: graft.store.TableCommit =
-            graft.store.DirectorySwapCommit,
+          commit: PointerCommit.type = PointerCommit,
           layout: graft.scd.SilverLayout = graft.scd.FlatLayout): DataFrame = {
-    if (!layout.exists(spark, silverPath, commit)) {
+    if (!layout.exists(spark, silverPath)) {
       // no silver table yet (e.g. first day was empty): no-op instead of
       // PATH_NOT_FOUND — gold stays absent until silver exists.
       return spark.emptyDataFrame
     }
-    val silver = conformToSilverSchema(readSilver(spark, silverPath, commit, layout))
+    val silver = conformToSilverSchema(readSilver(spark, silverPath, layout))
     val enhanced = Enhancement.enhanceSilverData(spark, silver)
     val features = engineerFeatures(spark, enhanced)
     val tiered = assignQualityTiers(features)
     val selected = selectMlFeatures(tiered, clock)
-    writeGold(selected, goldPath, commit)
+    writeGold(selected, goldPath)
     // re-baseline the imputation-stats table: every full run resets the
     // incremental drift window (runIncremental's doc) to zero
-    commit.publish(Enhancement.imputationStats(silver), statsPath(goldPath), Nil)
+    PointerCommit.publish(Enhancement.imputationStats(silver), statsPath(goldPath), Nil)
     selected
   }
 }

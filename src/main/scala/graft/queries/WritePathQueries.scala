@@ -20,7 +20,7 @@ import graft.store.{PointerCommit, SnapshotStore}
   * gold ETL — into a FRESH temp dir per invocation, and returns the
   * READ-BACK table. What's gated is therefore the storage machinery
   * end-to-end: partitioned writes, hive read-back typing (partition
-  * values come back as strings), merge semantics, commit protocols.
+  * values come back as strings), merge semantics, the commit protocol.
   *
   * Oracle-parity details: every numeric literal in the oracles is CAST
   * to DOUBLE (a bare 0.9 parses as DECIMAL in DuckDB and its decimal
@@ -144,12 +144,12 @@ object WritePathQueries {
     * oracle would fail loudly, which is the right failure mode).
     *
     * ASSUMES SEQUENTIAL GATE EXECUTION (which Verify/Bench provide: one
-    * query at a time in one JVM). s7/s7b republish the shared table via
-    * directory swap, so a runner that executed gate queries CONCURRENTLY
-    * could scan mid-swap (transient FileNotFound) and would make s2/s6
-    * physical layout (file counts, timings — never content) depend on
-    * whether an optimize ran first. A parallel runner must give s7/s7b
-    * their own copy of the cached table instead. */
+    * query at a time in one JVM). s7/s7b republish the shared table as
+    * a new snapshot, so under a runner that executed gate queries
+    * CONCURRENTLY the s2/s6 physical layout (file counts, timings —
+    * never content) would depend on whether an optimize ran first. A
+    * parallel runner must give s7/s7b their own copy of the cached table
+    * instead. */
   private val flatScenarioCache =
     scala.collection.concurrent.TrieMap.empty[String, String]
   private def runFlatScenario(s: SparkSession, d: String): String =
@@ -172,7 +172,7 @@ object WritePathQueries {
     val world = graft.fixtures.WorldCache.dir("s5_gold", d,
         WritePathQueries.getClass) { base =>
       val silverDir = s"$base/silver"
-      silverFixture(s, d).write.parquet(silverDir)
+      PointerCommit.publish(silverFixture(s, d), silverDir, Nil)
       GoldEtl.run(s, silverDir, s"$base/gold",
         clock = to_timestamp(lit("2025-01-15 12:00:00")))
     }
@@ -343,9 +343,9 @@ object WritePathQueries {
 
     // S3/S4/S6: full SCD2 merge roundtrip through the flat layout —
     // first-load partitioned publish, then close-out + append, read back
-    // as plain parquet (partition values return as strings).
+    // through the pointer (partition values return as strings).
     "s6_scd2_merge" -> ((s, d) =>
-      orderedScd(s.read.parquet(runFlatScenario(s, d)))),
+      orderedScd(PointerCommit.read(s, runFlatScenario(s, d)))),
 
     // S4 in ISOLATION: the first-load partitioned overwrite branch of
     // the merge (reference silver_etl_script.py:956-961 — no existing
@@ -356,7 +356,7 @@ object WritePathQueries {
     "s4_first_load" -> ((s, d) => {
       val root = tmp("graft_gate_scd2first")
       Scd2.merge(s, scdDay1(s, d), root, asOfDate = lit("2025-01-15"))
-      orderedScd(s.read.parquet(root))
+      orderedScd(PointerCommit.read(s, root))
     }),
 
     // P6: the ML feature-select CONTRACT (gold_ml_etl.py:391-436) as a
@@ -369,7 +369,7 @@ object WritePathQueries {
     // layout — hence their position at the list's tail.)
     "p6_feature_select" -> ((s, d) => {
       import s.implicits._
-      s.read.parquet(runGoldScenario(s, d)).schema.fieldNames.zipWithIndex
+      PointerCommit.read(s, runGoldScenario(s, d)).schema.fieldNames.zipWithIndex
         .toSeq.map { case (c, i) => (i + 1, c) }
         .toDF("pos", "col_name").orderBy("pos")
     }),
@@ -490,9 +490,9 @@ object WritePathQueries {
           WritePathQueries.getClass) { base =>
         val root = s"$base/scd"
         Scd2.mergeRegioned(s, scdDay1(s, d), root,
-          asOfDate = lit("2025-01-15"), commit = graft.store.PointerCommit)
+          asOfDate = lit("2025-01-15"))
         Scd2.mergeRegioned(s, scdDay2(s, d), root,
-          asOfDate = lit("2025-01-16"), commit = graft.store.PointerCommit)
+          asOfDate = lit("2025-01-16"))
         Scd2.optimizeCurrentWithStats(s, root, sortCol = "universal_id",
           numFiles = 8, statCols = Seq("universal_id"))
       }
@@ -593,16 +593,15 @@ object WritePathQueries {
 
     // S2: current-snapshot scan over the merged table (gold's read path).
     "s2_current_scan" -> ((s, d) =>
-      orderedScd(FlatLayout.readCurrent(s, runFlatScenario(s, d),
-        graft.store.DirectorySwapCommit))),
+      orderedScd(FlatLayout.readCurrent(s, runFlatScenario(s, d)))),
 
     // S7: OPTIMIZE-analogue clustering rewrite preserves table content
-    // exactly (range-repartition + sort + tmp-swap republish).
+    // exactly (range-repartition + sort + snapshot republish).
     "s7_optimize_roundtrip" -> ((s, d) => {
       val root = runFlatScenario(s, d)
       Scd2.optimize(s, root, clusterCols = Seq("universal_id", "spider_name"),
         numFiles = 4)
-      orderedScd(s.read.parquet(root))
+      orderedScd(PointerCommit.read(s, root))
     }),
 
     // S7 ZORDER: the Morton-curve re-clustering preserves table content
@@ -614,7 +613,7 @@ object WritePathQueries {
         zCols = Seq(col("universal_id").cast("long"),
           length(col("project_name")).cast("long")),
         numFiles = 4)
-      orderedScd(s.read.parquet(root))
+      orderedScd(PointerCommit.read(s, root))
     }),
 
     // S8 + time travel: two pointer-commit publishes, vacuum with a
@@ -905,7 +904,7 @@ object WritePathQueries {
     // the oracle from the same fixture definition.
     "s5_gold_roundtrip" -> ((s, d) => {
       val goldDir = runGoldScenario(s, d)
-      s.read.parquet(goldDir).select(
+      PointerCommit.read(s, goldDir).select(
         col("project_id"), col("source_id"), col("spider_name"),
         col("project_name"), col("snapshot_date"),
         col("target_price_per_sqm"), col("target_total_price"),

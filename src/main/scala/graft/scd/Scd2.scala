@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.store.{DirectorySwapCommit, PointerCommit, SnapshotStore, TableCommit}
+import graft.store.{PointerCommit, SnapshotStore}
 
 /** Parquet-native SCD Type 2 (reference: silver_etl_script.py:916-966,
   * Delta MERGE whenMatchedUpdate → close-out + append).
@@ -39,11 +39,12 @@ import graft.store.{DirectorySwapCommit, PointerCommit, SnapshotStore, TableComm
   * (project_name, address), documented here rather than replicating the bug.
   *
   * Scale posture: one shuffle on universal_id for the join; the snapshot
-  * rewrite is partition-wise parallel. Visibility of the rewrite is
-  * pluggable ([[graft.store.TableCommit]]): directory swap by default
-  * (atomic on HDFS/POSIX), or [[graft.store.PointerCommit]] — versioned
-  * snapshot dirs + atomic pointer replacement — on object stores where
-  * directory renames are non-atomic copies.
+  * rewrite is partition-wise parallel. Every region is a
+  * [[graft.store.SnapshotStore]] table: a rewrite lands in a fresh
+  * version dir and becomes visible with one atomic pointer flip
+  * ([[graft.store.PointerCommit]]), so readers never see a half-written
+  * region and no live file is deleted before its replacement is
+  * published.
   */
 object Scd2 {
 
@@ -113,30 +114,24 @@ object Scd2 {
   // ------------------------------------------------------------------
 
   /** Close out changed current rows and append the new batch; the whole
-    * history republishes at `path`. Returns the post-merge snapshot row
-    * count. Prefer [[mergeRegioned]] where history outgrows the live set.
-    *
-    * `commit` picks how the rewrite becomes visible: the default
-    * [[DirectorySwapCommit]] (tmp-write + dir rename, atomic on
-    * HDFS/POSIX and readable as plain parquet at `path`), or
-    * [[graft.store.PointerCommit]] for object stores, where directory
-    * renames are non-atomic copies — see [[graft.store.SnapshotStore]]. */
+    * history republishes as a new snapshot of the table at `path`
+    * ([[graft.store.PointerCommit]]). Returns the post-merge snapshot row
+    * count. Prefer [[mergeRegioned]] where history outgrows the live set. */
   def merge(spark: SparkSession, newBatch: DataFrame, path: String,
             changeColumns: Seq[String] = DefaultChangeColumns,
             asOfDate: Column = to_date(current_timestamp()).cast("string"),
-            partitionColumns: Seq[String] = DefaultPartitionColumns,
-            commit: TableCommit = DirectorySwapCommit): Long = {
-    // existence via the commit protocol (probing the TARGET's own
-    // filesystem/pointer): a wrong probe here would misread an existing
-    // table as absent and take the first-load path — destroying history.
-    if (!commit.exists(spark, path))
-      return commit.publish(newBatch, path, partitionColumns)
+            partitionColumns: Seq[String] = DefaultPartitionColumns): Long = {
+    // existence via the pointer on the TARGET's own filesystem: a wrong
+    // probe here would misread an existing table as absent and take the
+    // first-load path — destroying history.
+    if (!PointerCommit.exists(spark, path))
+      return PointerCommit.publish(newBatch, path, partitionColumns)
 
     // fence the publish on the version this merge READS: a writer that
     // publishes in between makes this merge's rewrite a lost update, and
     // publishFrom turns that into ConcurrentCommitException + retry
-    val base = commit.version(spark, path)
-    val existing = commit.read(spark, path)
+    val base = PointerCommit.version(spark, path)
+    val existing = PointerCommit.read(spark, path)
     // rows already closed (or with a null flag, which the reference's
     // merge condition never matches) pass through the rewrite untouched
     val cur = existing.filter(col("is_current") === true)
@@ -145,7 +140,7 @@ object Scd2 {
     val merged = passThrough
       .unionByName(split.newlyClosed, allowMissingColumns = true)
       .unionByName(split.newCurrent, allowMissingColumns = true)
-    try commit.publishFrom(merged, path, partitionColumns, base)
+    try PointerCommit.publishFrom(merged, path, partitionColumns, base)
     finally split.joined.unpersist()
   }
 
@@ -160,12 +155,11 @@ object Scd2 {
     * its leading column. Publishes unpartitioned: the z-layout replaces
     * hive partitioning as the pruning mechanism for these columns. */
   def optimizeZOrder(spark: SparkSession, path: String, zCols: Seq[Column],
-                     numFiles: Int = 8,
-                     commit: TableCommit = DirectorySwapCommit): Long = {
-    if (!commit.exists(spark, path)) return 0L
-    val base = commit.version(spark, path)
-    val snapshot = commit.read(spark, path)
-    commit.publishFrom(
+                     numFiles: Int = 8): Long = {
+    if (!PointerCommit.exists(spark, path)) return 0L
+    val base = PointerCommit.version(spark, path)
+    val snapshot = PointerCommit.read(spark, path)
+    PointerCommit.publishFrom(
       graft.operators.ZOrder.cluster(snapshot, zCols, numFiles), path, Nil,
       base)
   }
@@ -177,8 +171,8 @@ object Scd2 {
 
   /** OPTIMIZE the regioned table's CURRENT region into a range-clustered
     * layout WITH its file-stats sidecar — the s7 clustering maintenance
-    * composed with [[graft.store.FileStats]], for [[PointerCommit]]
-    * tables (the region root IS a SnapshotStore root): current rows are
+    * composed with [[graft.store.FileStats]] (the region root IS a
+    * SnapshotStore root): current rows are
     * republished range-sorted on `sortCol` and the per-file min/max
     * (+ optional bloom) sidecar lands inside the same commit, atomic
     * with the layout it describes. After this, [[readCurrentRange]]
@@ -244,47 +238,26 @@ object Scd2 {
     * O(history) scan), so the retry is idempotent. The opposite order
     * would LOSE close-outs on a crash: once the current region flips,
     * the changed keys no longer look changed and a re-run closes
-    * nothing. A crash mid-way through the partition swap leaves some
-    * partitions updated and some not; the re-run converges —
-    * already-swapped rows now match the batch unchanged (their
-    * partitions aren't touched again), unswapped rows re-close
-    * (deduped) and re-swap. Under [[PointerCommit]] even that window
-    * closes: the churned partitions land in a fresh version dir, the
-    * manifest carries every untouched partition forward by reference,
-    * and the pointer flip publishes the whole region atomically. */
+    * nothing. Each region itself flips atomically: the churned
+    * partitions land in a fresh version dir, the manifest carries every
+    * untouched partition forward by reference, and one pointer flip
+    * publishes the whole region. */
   def mergeRegioned(spark: SparkSession, newBatch: DataFrame, root: String,
                     changeColumns: Seq[String] = DefaultChangeColumns,
                     asOfDate: Column = to_date(current_timestamp()).cast("string"),
-                    partitionColumns: Seq[String] = DefaultPartitionColumns,
-                    commit: TableCommit = DirectorySwapCommit): Long = {
+                    partitionColumns: Seq[String] = DefaultPartitionColumns): Long = {
     val curPath = currentRoot(root)
-    if (!commit.exists(spark, curPath))
-      return commit.publish(newBatch, curPath, partitionColumns)
+    if (!PointerCommit.exists(spark, curPath))
+      return PointerCommit.publish(newBatch, curPath, partitionColumns)
 
     // fence the current-region publish on the version this merge reads
     // (see merge()); the closed-region append fences itself inside
     // appendClosed, against ITS region's version at append time
-    val curBase = commit.version(spark, curPath)
-    // merge-identity base (appendClosed's replay detection): the pointer
-    // protocol's snapshot name is content-unique, but the swap protocol's
-    // `_version` counter can go STALE across the partition-swap →
-    // bumpVersion crash window — the next merge then reads the same
-    // counter the pre-crash merge read, and an identical close payload
-    // (same-day ABA) would alias its done-marker and be dropped as a
-    // replay (the r16 ADVICE window). Mix in a fingerprint of the
-    // region's actual FILE INVENTORY: every landed swap writes fresh
-    // part-file names, so two merges separated by any landed publish
-    // always see different listings, stale counter or not — while a
-    // genuine retry of a merge whose swap did NOT land still reads the
-    // unchanged listing and maps to the same identity. (A retry of a
-    // merge whose swap DID land re-classifies against the post-swap
-    // region, finds no changes, and never reaches appendClosed.)
-    val mergeIdBase = commit match {
-      case PointerCommit => curBase.getOrElse("0")
-      case _ =>
-        s"${curBase.getOrElse("0")}.${listingFingerprint(spark, curPath)}"
-    }
-    val cur = commit.read(spark, curPath)
+    val curBase = PointerCommit.version(spark, curPath)
+    // merge-identity base (appendClosed's replay detection): snapshot
+    // names are content-unique, so the version read identifies the state
+    val mergeIdBase = curBase.getOrElse("0")
+    val cur = PointerCommit.read(spark, curPath)
     val usable = changeColumns.filter(c =>
       cur.columns.contains(c) && newBatch.columns.contains(c))
     val narrowCols = (Seq("universal_id") ++ partitionColumns ++ usable)
@@ -340,20 +313,20 @@ object Scd2 {
             val newlyClosed = closeOut(
               cur.join(closedKeys, Seq("universal_id"), "left_semi"), asOfDate)
             if (closedCount > 0) appendClosed(spark, newlyClosed,
-              closedRoot(root), commit, mergeIdBase)
-            commit.publishFrom(
+              closedRoot(root), mergeIdBase)
+            PointerCommit.publishFrom(
               cur.join(closedKeys, Seq("universal_id"), "left_anti")
                 .unionByName(fromBatch, allowMissingColumns = true),
               curPath, Nil, curBase)
           } else {
             mergeChurned(spark, cur, fromBatch, closedKeys, closedCount,
-              asOfDate, root, curPath, partitionColumns, commit,
-              churned, curBase, mergeIdBase)
+              asOfDate, root, curPath, partitionColumns, churned, curBase,
+              mergeIdBase)
           }
           total
         }
       } finally joined.unpersist()
-    val closedTotal = readClosedRegion(spark, closedRoot(root), commit)
+    val closedTotal = readClosedRegion(spark, closedRoot(root))
       .map(_.count()).getOrElse(0L)
     currentTotal + closedTotal
   }
@@ -377,7 +350,6 @@ object Scd2 {
                            fromBatch: DataFrame, closedKeys: DataFrame,
                            closedCount: Long, asOfDate: Column, root: String,
                            curPath: String, partitionColumns: Seq[String],
-                           commit: TableCommit,
                            churned: Array[Seq[String]],
                            curBase: Option[String],
                            mergeIdBase: String): Unit = {
@@ -407,8 +379,7 @@ object Scd2 {
         val newlyClosed = closeOut(
           prunedCur.join(closedKeys, Seq("universal_id"), "left_semi"),
           asOfDate)
-        appendClosed(spark, newlyClosed, closedRoot(root), commit,
-          mergeIdBase)
+        appendClosed(spark, newlyClosed, closedRoot(root), mergeIdBase)
       }
       val replacement = prunedCur
         .join(closedKeys, Seq("universal_id"), "left_anti")
@@ -422,45 +393,35 @@ object Scd2 {
       // merge must full-width republish — exactly the cost the optimize
       // scaladoc promises — which also restores the partition dirs so
       // later merges are O(churn) again.
-      val canCarry = commit match {
-        case PointerCommit => SnapshotStore
-          .currentEntries(spark, curPath, partitionColumns.length)
-          .exists(_.nonEmpty)
-        case _ => true
-      }
-      if (canCarry)
-        writeChurnedPartitions(spark, replacement, churned, curPath,
-          partitionColumns, commit, curBase)
-      else {
-        val untouched = cur.join(broadcast(dim), cond, "left_anti")
-        commit.publishFrom(
-          untouched.unionByName(replacement, allowMissingColumns = true),
-          curPath, partitionColumns, curBase)
-        ()
+      val prev = SnapshotStore
+        .currentEntries(spark, curPath, partitionColumns.length)
+        .filter(_.nonEmpty)
+      prev match {
+        case Some(entries) =>
+          writeChurnedPartitions(spark, replacement, churned, curPath,
+            partitionColumns, entries, curBase)
+        case None =>
+          val untouched = cur.join(broadcast(dim), cond, "left_anti")
+          PointerCommit.publishFrom(
+            untouched.unionByName(replacement, allowMissingColumns = true),
+            curPath, partitionColumns, curBase)
+          ()
       }
     } finally prunedCur.unpersist()
   }
 
   /** Publish `replacement` into ONLY the churned partitions of the
-    * current region.
-    *
-    *  - swap protocol: replacement partitions are fully written to a tmp
-    *    sibling first, then each churned partition dir is deleted and its
-    *    replacement renamed in (churned-but-now-empty partitions are just
-    *    deleted). A failed rename preserves the tmp dir for recovery —
-    *    the same window [[DirectorySwapCommit]] itself accepts; use the
-    *    pointer protocol where that window must not exist.
-    *  - pointer protocol: churned partitions land in a fresh immutable
-    *    version dir; the manifest carries untouched partitions forward by
-    *    reference (the [[SnapshotStore]] incremental-manifest mechanism,
-    *    shared with the gold ETL and the closed-region append) and the
-    *    pointer flip is atomic. */
+    * current region: they land in a fresh immutable version dir, the
+    * manifest carries the untouched partitions of `prev` (the live
+    * entries) forward by reference — the [[SnapshotStore]]
+    * incremental-manifest mechanism, shared with the gold ETL and the
+    * closed-region append — and the pointer flip is atomic. */
   private def writeChurnedPartitions(spark: SparkSession,
                                      replacement: DataFrame,
                                      churned: Array[Seq[String]],
                                      curPath: String,
                                      partitionColumns: Seq[String],
-                                     commit: TableCommit,
+                                     prev: Map[String, String],
                                      curBase: Option[String]): Unit = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     val churnedRel = churned.map(k =>
@@ -469,63 +430,25 @@ object Scd2 {
                  else ExternalCatalogUtils.escapePathName(v)
         s"${ExternalCatalogUtils.escapePathName(c)}=$ev"
       }.mkString("/")).toSet
-
-    commit match {
-      case PointerCommit =>
-        val prev = SnapshotStore
-          .currentEntries(spark, curPath, partitionColumns.length)
-          .getOrElse(Map.empty)
-        SnapshotStore.commitFrom(spark, curPath, curBase) { dir =>
-          replacement.write.mode(SaveMode.Overwrite)
-            .partitionBy(partitionColumns: _*).parquet(dir)
-          val name = new Path(dir).getName
-          val fresh = SnapshotStore.freshEntries(spark, dir,
-            depth = partitionColumns.length)
-          val carried = prev.filterNot { case (rel, _) => churnedRel(rel) }
-          SnapshotStore.writeManifest(spark, curPath, name, carried ++ fresh)
-        }
-        ()
-      case _ =>
-        val target = new Path(curPath)
-        val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val tmp = new Path(target.getParent, target.getName + "__cur_inc_tmp")
-        fs.delete(tmp, true)
-        replacement.write.mode(SaveMode.Overwrite)
-          .partitionBy(partitionColumns: _*).parquet(tmp.toString)
-        churnedRel.foreach(rel => fs.delete(new Path(target, rel), true))
-        val glob = new Path(tmp,
-          Seq.fill(partitionColumns.length)("*=*").mkString("/"))
-        Option(fs.globStatus(glob)).getOrElse(Array.empty).foreach { st =>
-          val rel = st.getPath.toUri.getPath
-            .stripPrefix(tmp.toUri.getPath).stripPrefix("/")
-          val dest = new Path(target, rel)
-          fs.mkdirs(dest.getParent)
-          if (!fs.rename(st.getPath, dest))
-            throw new java.io.IOException(
-              s"mergeRegioned: rename ${st.getPath} -> $dest failed; " +
-                s"replacement partitions preserved at $tmp")
-        }
-        fs.delete(tmp, true)
-        // the in-place partition swap bypassed DirectorySwapCommit.publish,
-        // so advance the version stamp here — the closed-region merge
-        // identity keys on it distinguishing successive merges
-        DirectorySwapCommit.bumpVersion(spark, curPath)
+    SnapshotStore.commitFrom(spark, curPath, curBase) { dir =>
+      replacement.write.mode(SaveMode.Overwrite)
+        .partitionBy(partitionColumns: _*).parquet(dir)
+      val name = new Path(dir).getName
+      val fresh = SnapshotStore.freshEntries(spark, dir,
+        depth = partitionColumns.length)
+      val carried = prev.filterNot { case (rel, _) => churnedRel(rel) }
+      SnapshotStore.writeManifest(spark, curPath, name, carried ++ fresh)
     }
   }
 
   /** Append the day's close-outs to the closed region, partitioned by
     * `valid_to` so history scans filtered on close date prune at the
-    * directory level.
-    *
-    *  - swap protocol: a plain SaveMode.Append — new files drop into the
-    *    day's partition dir, existing files untouched (append-only is
-    *    exactly what POSIX/HDFS/object stores all do well).
-    *  - pointer protocol: the batch lands in a fresh immutable version
-    *    dir and the new manifest carries every earlier batch forward by
-    *    reference (the [[SnapshotStore]] incremental-manifest mechanism);
-    *    the per-batch `close_batch` partition key keeps manifest entries
-    *    unique when two merges close rows on the same date. `vacuum`
-    *    keeps manifest-referenced versions, so earlier batches survive.
+    * directory level. The batch lands in a fresh immutable version dir
+    * and the new manifest carries every earlier batch forward by
+    * reference (the [[SnapshotStore]] incremental-manifest mechanism);
+    * the per-batch `close_batch` partition key keeps manifest entries
+    * unique when two merges close rows on the same date. `vacuum` keeps
+    * manifest-referenced versions, so earlier batches survive.
     *
     * Before writing, a crash-retry of the same merge is detected by a
     * MERGE-IDENTITY marker, not by payload matching alone. Why: payload
@@ -542,13 +465,8 @@ object Scd2 {
     * so a retry straddling midnight maps to the same identity). v1's and
     * v3's closes always carry DIFFERENT current-region states — the
     * intermediate merge published in between — so their identities never
-    * collide. "State" is the commit protocol's version for the pointer
-    * protocol (snapshot names are content-unique), and version PLUS a
-    * file-inventory fingerprint for the swap protocol — the `_version`
-    * counter alone goes stale across the partition-swap → bumpVersion
-    * crash window, and a stale counter would alias two distinct merges'
-    * identities (the r16 ADVICE window); the listing cannot go stale
-    * because every landed swap writes fresh part-file names.
+    * collide. "State" is the current region's snapshot name, which is
+    * content-unique.
     *
     * Marker protocol (`_merge_markers/<id>.{started,done}` beside the
     * data; underscore-prefixed, invisible to parquet readers, outside
@@ -565,37 +483,11 @@ object Scd2 {
     *    crash between the started-marker and the append job commit —
     *    accepted and documented; Scd2RegionedSpec pins every other arm
     *    (clean retry, midnight straddle, ambiguous-window retry, ABA). */
-  /** Order-independent fingerprint of a directory's file inventory —
-    * (path, length) deliberately WITHOUT mtime. Identifies the
-    * current-region state a merge read even when the `_version` counter
-    * is stale: a landed partition swap always writes fresh part-file
-    * names (Spark's per-job UUIDs), so no two states separated by a
-    * landed publish share a listing; while a byte-copy RESTORE of the
-    * same files (a crash-recovery replay of the same state) keeps its
-    * fingerprint — mtime would break exactly that retry-identity.
-    * One recursive listing of the SMALL live region per merge. */
-  private def listingFingerprint(spark: SparkSession, path: String): String = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return "0"
-    var acc = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val s = s"${st.getPath.toUri.getPath}|${st.getLen}"
-      val h = scala.util.hashing.MurmurHash3.stringHash(s)
-      val h2 = scala.util.hashing.MurmurHash3.stringHash(s, 0x9747b28c)
-      acc ^= (h.toLong << 32) ^ (h2.toLong & 0xffffffffL)
-    }
-    java.lang.Long.toHexString(acc)
-  }
-
   private def appendClosed(spark: SparkSession, newlyClosed: DataFrame,
-                           closedPath: String, commit: TableCommit,
-                           mergeIdBase: String): Unit = {
-    // the append is a read-modify-write for the pointer protocol — fence
-    // on the closed region's version here
-    val closedBase = commit.version(spark, closedPath)
+                           closedPath: String, mergeIdBase: String): Unit = {
+    // the append is a read-modify-write — fence on the closed region's
+    // version here
+    val closedBase = PointerCommit.version(spark, closedPath)
     val payloadCols = newlyClosed.columns.filter(_ != "valid_to").toSeq
     val idRow = newlyClosed.agg(
       expr(s"bit_xor(xxhash64(${payloadCols.map(c => s"`$c`").mkString(", ")}))")
@@ -613,7 +505,7 @@ object Scd2 {
     if (!ambiguous) { fs.mkdirs(markers); fs.create(startMark, true).close() }
     val existingDay =
       if (!ambiguous) None
-      else readClosedRegion(spark, closedPath, commit).map { closed =>
+      else readClosedRegion(spark, closedPath).map { closed =>
         val dates = newlyClosed.select("valid_to").distinct()
           .unionByName(newlyClosed.select(
             date_sub(col("valid_to").cast("date"), 1).cast("string")
@@ -628,22 +520,15 @@ object Scd2 {
         "left_anti")
       case None => newlyClosed
     }
-    commit match {
-      case PointerCommit =>
-        val prev = SnapshotStore.currentEntries(spark, closedPath, 2)
-          .getOrElse(Map.empty)
-        SnapshotStore.commitFrom(spark, closedPath, closedBase) { dir =>
-          val dirPath = new Path(dir)
-          val name = dirPath.getName
-          deduped.withColumn("close_batch", lit(name))
-            .write.mode(SaveMode.Overwrite)
-            .partitionBy("valid_to", "close_batch").parquet(dir)
-          val fresh = SnapshotStore.freshEntries(spark, dir, depth = 2)
-          SnapshotStore.writeManifest(spark, closedPath, name, prev ++ fresh)
-        }
-      case _ =>
-        deduped.write.mode(SaveMode.Append)
-          .partitionBy("valid_to").parquet(closedPath)
+    val prev = SnapshotStore.currentEntries(spark, closedPath, 2)
+      .getOrElse(Map.empty)
+    SnapshotStore.commitFrom(spark, closedPath, closedBase) { dir =>
+      val name = new Path(dir).getName
+      deduped.withColumn("close_batch", lit(name))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("valid_to", "close_batch").parquet(dir)
+      val fresh = SnapshotStore.freshEntries(spark, dir, depth = 2)
+      SnapshotStore.writeManifest(spark, closedPath, name, prev ++ fresh)
     }
     // AFTER the append commits: a crash before this line leaves the
     // started-marker, routing the retry through the payload-dedup arm
@@ -673,130 +558,86 @@ object Scd2 {
     * content exactly. It is an explicit MAINTENANCE operation — the only
     * writer that ever rewrites closed bytes; day-to-day merges stay
     * append-only (run compaction on a schedule, as the reference ran
-    * Delta OPTIMIZE, silver_etl_script.py:978-983).
+    * Delta OPTIMIZE, silver_etl_script.py:978-983). Every compacted
+    * date's rows land in ONE fresh version dir under a new
+    * `close_batch`; the manifest drops the old batch entries for those
+    * dates and carries untouched batches by reference — readers flip
+    * atomically, and vacuum later collects versions no retained manifest
+    * references.
     *
-    *  - swap protocol: per-partition tmp-write + dir swap (same crash
-    *    window as [[graft.store.DirectorySwapCommit]]: a failed rename
-    *    leaves the tmp dir for recovery).
-    *  - pointer protocol: every compacted date's rows land in ONE fresh
-    *    version dir under a new `close_batch`; the manifest drops the
-    *    old batch entries for those dates and carries untouched batches
-    *    by reference — readers flip atomically, and vacuum later
-    *    collects versions no retained manifest references.
+    * `commit` has one value, [[PointerCommit]]; the parameter stays only
+    * because the benchmark harness's source passes it.
     *
     * Returns the number of partitions compacted. */
   def compactClosed(spark: SparkSession, root: String,
                     maxFilesPerPartition: Int = 1,
-                    commit: TableCommit = DirectorySwapCommit): Int = {
+                    commit: PointerCommit.type = PointerCommit): Int = {
     val closedPath = closedRoot(root)
-    def parquetFiles(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Int =
+    if (!PointerCommit.exists(spark, closedPath)) return 0
+    val closedBase = SnapshotStore.currentName(spark, closedPath)
+    val entries = SnapshotStore.currentEntries(spark, closedPath, 2)
+      .getOrElse(Map.empty)
+    val snaps = new Path(closedPath, SnapshotStore.SnapshotsDir)
+    val fs = snaps.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def parquetFiles(dir: Path): Int =
       if (!fs.exists(dir)) 0
       else fs.listStatus(dir).count(f =>
         f.isFile && f.getPath.getName.endsWith(".parquet"))
-    commit match {
-      case PointerCommit =>
-        if (!PointerCommit.exists(spark, closedPath)) return 0
-        val closedBase = SnapshotStore.currentName(spark, closedPath)
-        val entries = SnapshotStore.currentEntries(spark, closedPath, 2)
-          .getOrElse(Map.empty)
-        val snaps = new Path(closedPath, SnapshotStore.SnapshotsDir)
-        val fs = snaps.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val byDate = entries.toSeq.groupBy(_._1.split('/').head)
-        // a date needs compaction when its rows are spread over several
-        // close_batch dirs, or one batch dir itself has too many files
-        val oversized = byDate.filter { case (_, es) =>
-          es.size > 1 || es.exists { case (rel, ver) =>
-            parquetFiles(fs, new Path(new Path(snaps, ver), rel)) >
-              maxFilesPerPartition
-          }
-        }
-        if (oversized.isEmpty) return 0
-        val dates = oversized.keySet.map(_.stripPrefix("valid_to="))
-        SnapshotStore.commitFrom(spark, closedPath, closedBase) { dir =>
-          val dirPath = new Path(dir)
-          val name = dirPath.getName
-          SnapshotStore.readPartitioned(spark, closedPath,
-            Seq("valid_to", "close_batch"))
-            .filter(col("valid_to").isin(dates.toSeq: _*))
-            .drop("close_batch")
-            .coalesce(maxFilesPerPartition)
-            .withColumn("close_batch", lit(name))
-            .write.mode(SaveMode.Overwrite)
-            .partitionBy("valid_to", "close_batch").parquet(dir)
-          val fresh = SnapshotStore.freshEntries(spark, dir, depth = 2)
-          val carried = entries.filterNot { case (rel, _) =>
-            oversized.contains(rel.split('/').head)
-          }
-          SnapshotStore.writeManifest(spark, closedPath, name, carried ++ fresh)
-        }
-        oversized.size
-      case _ =>
-        val rootPath = new Path(closedPath)
-        val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(rootPath)) return 0
-        var compacted = 0
-        fs.listStatus(rootPath)
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("valid_to="))
-          .foreach { st =>
-            if (parquetFiles(fs, st.getPath) > maxFilesPerPartition) {
-              val dir = st.getPath
-              // tmp lives OUTSIDE the read root: inside it, partition
-              // discovery would parse "valid_to=<date>__compact_tmp" as
-              // a real valid_to value — concurrent readers would double-
-              // count the date mid-compaction, and a crash before the
-              // delete would entrench the duplicate rows permanently
-              // (writeChurnedPartitions' swap path has always done this)
-              val tmp = new Path(rootPath.getParent,
-                s"${rootPath.getName}__compact_tmp_${dir.getName}")
-              fs.delete(tmp, true)
-              // rows carry no valid_to column inside partition dirs —
-              // the rewrite preserves exactly that layout
-              spark.read.parquet(dir.toString)
-                .coalesce(maxFilesPerPartition)
-                .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-              fs.delete(dir, true)
-              if (!fs.rename(tmp, dir))
-                throw new java.io.IOException(
-                  s"compactClosed: rename $tmp -> $dir failed; " +
-                    s"compacted partition preserved at $tmp")
-              compacted += 1
-            }
-          }
-        compacted
+    val byDate = entries.toSeq.groupBy(_._1.split('/').head)
+    // a date needs compaction when its rows are spread over several
+    // close_batch dirs, or one batch dir itself has too many files
+    val oversized = byDate.filter { case (_, es) =>
+      es.size > 1 || es.exists { case (rel, ver) =>
+        parquetFiles(new Path(new Path(snaps, ver), rel)) > maxFilesPerPartition
+      }
     }
+    if (oversized.isEmpty) return 0
+    val dates = oversized.keySet.map(_.stripPrefix("valid_to="))
+    SnapshotStore.commitFrom(spark, closedPath, closedBase) { dir =>
+      val name = new Path(dir).getName
+      SnapshotStore.readPartitioned(spark, closedPath,
+        Seq("valid_to", "close_batch"))
+        .filter(col("valid_to").isin(dates.toSeq: _*))
+        .drop("close_batch")
+        .coalesce(maxFilesPerPartition)
+        .withColumn("close_batch", lit(name))
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy("valid_to", "close_batch").parquet(dir)
+      val fresh = SnapshotStore.freshEntries(spark, dir, depth = 2)
+      val carried = entries.filterNot { case (rel, _) =>
+        oversized.contains(rel.split('/').head)
+      }
+      SnapshotStore.writeManifest(spark, closedPath, name, carried ++ fresh)
+    }
+    oversized.size
   }
 
   /** The closed region, if any close-out has ever been written.
     * `valid_to` comes back as a (string) partition column. */
-  private def readClosedRegion(spark: SparkSession, closedPath: String,
-                               commit: TableCommit): Option[DataFrame] =
-    commit match {
-      case PointerCommit =>
-        if (!PointerCommit.exists(spark, closedPath)) None
-        else Some(SnapshotStore
-          .readPartitioned(spark, closedPath, Seq("valid_to", "close_batch"))
-          .drop("close_batch"))
-      case _ =>
-        val p = new Path(closedPath)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) Some(spark.read.parquet(closedPath)) else None
-    }
+  private def readClosedRegion(spark: SparkSession,
+                               closedPath: String): Option[DataFrame] =
+    if (!PointerCommit.exists(spark, closedPath)) None
+    else Some(SnapshotStore
+      .readPartitioned(spark, closedPath, Seq("valid_to", "close_batch"))
+      .drop("close_batch"))
 
-  /** Full history of a regioned table: current ∪ closed. */
+  /** Full history of a regioned table: current ∪ closed. `commit` has
+    * one value; the parameter stays only because the benchmark harness's
+    * source passes it. */
   def readRegioned(spark: SparkSession, root: String,
-                   commit: TableCommit = DirectorySwapCommit): DataFrame = {
-    val cur = commit.read(spark, currentRoot(root))
-    readClosedRegion(spark, closedRoot(root), commit) match {
+                   commit: PointerCommit.type = PointerCommit): DataFrame = {
+    val cur = PointerCommit.read(spark, currentRoot(root))
+    readClosedRegion(spark, closedRoot(root)) match {
       case Some(closed) => cur.unionByName(closed, allowMissingColumns = true)
       case None => cur
     }
   }
 
   /** Only the live rows — a current-snapshot consumer (gold) never
-    * touches the closed region at all. */
+    * touches the closed region at all. `commit` as in [[readRegioned]]. */
   def readRegionedCurrent(spark: SparkSession, root: String,
-                          commit: TableCommit = DirectorySwapCommit): DataFrame =
-    commit.read(spark, currentRoot(root))
+                          commit: PointerCommit.type = PointerCommit): DataFrame =
+    PointerCommit.read(spark, currentRoot(root))
 
   // ------------------------------------------------------------------
 
@@ -812,7 +653,7 @@ object Scd2 {
     * the cluster keys so each output file owns a contiguous key range
     * (min/max footer stats then prune key-ranged scans, the first-order
     * benefit of Z-ordering on a dominant key), sort within partitions for
-    * row-group locality, and rewrite via the same tmp-swap as merge.
+    * row-group locality, and republish as a new snapshot like merge.
     * `numFiles` is the range-shuffle task count — each task writes into
     * every hive partition dir its key range touches, so expect up to
     * `numFiles` files per (spider, year, month) dir. True
@@ -822,11 +663,10 @@ object Scd2 {
                clusterCols: Seq[String] =
                  Seq("universal_id", "spider_name", "ingestion_date"),
                numFiles: Int = 8,
-               partitionColumns: Seq[String] = DefaultPartitionColumns,
-               commit: TableCommit = DirectorySwapCommit): Long = {
-    if (!commit.exists(spark, path)) return 0L
-    val base = commit.version(spark, path)
-    val snapshot = commit.read(spark, path)
+               partitionColumns: Seq[String] = DefaultPartitionColumns): Long = {
+    if (!PointerCommit.exists(spark, path)) return 0L
+    val base = PointerCommit.version(spark, path)
+    val snapshot = PointerCommit.read(spark, path)
     // the partition columns LEAD the within-partition sort: the dynamic
     // partitionBy write requires ordering on them and would otherwise
     // insert its own sort, silently discarding the cluster-key order.
@@ -834,7 +674,7 @@ object Scd2 {
     val clustered = snapshot
       .repartitionByRange(numFiles, clusterCols.map(col): _*)
       .sortWithinPartitions(writeOrder.map(col): _*)
-    commit.publishFrom(clustered, path, partitionColumns, base)
+    PointerCommit.publishFrom(clustered, path, partitionColumns, base)
   }
 }
 
@@ -843,44 +683,38 @@ object Scd2 {
 sealed trait SilverLayout {
   /** Run the SCD2 merge for this layout; returns post-merge total rows. */
   def merge(spark: SparkSession, newBatch: DataFrame, path: String,
-            asOfDate: Column, commit: TableCommit): Long
+            asOfDate: Column): Long
   /** Full history (current + closed versions). */
-  def read(spark: SparkSession, path: String, commit: TableCommit): DataFrame
+  def read(spark: SparkSession, path: String): DataFrame
   /** Only the live rows. */
-  def readCurrent(spark: SparkSession, path: String,
-                  commit: TableCommit): DataFrame
-  def exists(spark: SparkSession, path: String, commit: TableCommit): Boolean
+  def readCurrent(spark: SparkSession, path: String): DataFrame
+  def exists(spark: SparkSession, path: String): Boolean
 }
 
 /** Reference-parity single table: history and current rows interleave at
   * `path`; every merge rewrites all of it. */
 case object FlatLayout extends SilverLayout {
   override def merge(spark: SparkSession, newBatch: DataFrame, path: String,
-                     asOfDate: Column, commit: TableCommit): Long =
-    Scd2.merge(spark, newBatch, path, asOfDate = asOfDate, commit = commit)
-  override def read(spark: SparkSession, path: String,
-                    commit: TableCommit): DataFrame = commit.read(spark, path)
-  override def readCurrent(spark: SparkSession, path: String,
-                           commit: TableCommit): DataFrame =
-    commit.read(spark, path).filter(col("is_current") === true)
-  override def exists(spark: SparkSession, path: String,
-                      commit: TableCommit): Boolean = commit.exists(spark, path)
+                     asOfDate: Column): Long =
+    Scd2.merge(spark, newBatch, path, asOfDate = asOfDate)
+  override def read(spark: SparkSession, path: String): DataFrame =
+    PointerCommit.read(spark, path)
+  override def readCurrent(spark: SparkSession, path: String): DataFrame =
+    PointerCommit.read(spark, path).filter(col("is_current") === true)
+  override def exists(spark: SparkSession, path: String): Boolean =
+    PointerCommit.exists(spark, path)
 }
 
 /** Scale layout: `path/current` rewriteable, `path/closed` append-only —
   * per-merge write volume is O(live keys + day's churn), not O(history). */
 case object RegionedLayout extends SilverLayout {
   override def merge(spark: SparkSession, newBatch: DataFrame, path: String,
-                     asOfDate: Column, commit: TableCommit): Long =
-    Scd2.mergeRegioned(spark, newBatch, path, asOfDate = asOfDate,
-      commit = commit)
-  override def read(spark: SparkSession, path: String,
-                    commit: TableCommit): DataFrame =
-    Scd2.readRegioned(spark, path, commit)
-  override def readCurrent(spark: SparkSession, path: String,
-                           commit: TableCommit): DataFrame =
-    Scd2.readRegionedCurrent(spark, path, commit)
-  override def exists(spark: SparkSession, path: String,
-                      commit: TableCommit): Boolean =
-    commit.exists(spark, Scd2.currentRoot(path))
+                     asOfDate: Column): Long =
+    Scd2.mergeRegioned(spark, newBatch, path, asOfDate = asOfDate)
+  override def read(spark: SparkSession, path: String): DataFrame =
+    Scd2.readRegioned(spark, path)
+  override def readCurrent(spark: SparkSession, path: String): DataFrame =
+    Scd2.readRegionedCurrent(spark, path)
+  override def exists(spark: SparkSession, path: String): Boolean =
+    PointerCommit.exists(spark, Scd2.currentRoot(path))
 }

@@ -401,11 +401,12 @@ object SilverEtl {
 
   /** Full pipeline over an already-read bronze frame. Returns run stats
     * (the reference's observable per-step counts,
-    * silver_etl_script.py:1046-1055). */
+    * silver_etl_script.py:1046-1055). The SCD2 table publishes through
+    * [[graft.store.PointerCommit]]; `commit` has that one value and stays
+    * only because the benchmark harness's source passes it. */
   def run(spark: SparkSession, bronze: DataFrame, cfg: RunConfig,
           clock: Column = current_timestamp(),
-          commit: graft.store.TableCommit =
-            graft.store.DirectorySwapCommit,
+          commit: graft.store.PointerCommit.type = graft.store.PointerCommit,
           layout: graft.scd.SilverLayout = graft.scd.FlatLayout): EtlStats = {
     // Each stage's frame is materialized once, as an eager local
     // checkpoint: later plans start from its rows instead of re-analyzing
@@ -457,7 +458,7 @@ object SilverEtl {
       val avgScore = enriched.agg(avg(col("data_completeness_score"))).head
         .getAs[Any](0) match { case d: java.lang.Double => d.doubleValue; case _ => 0.0 }
       val written = layout.merge(spark, enriched, cfg.silverPath,
-        asOfDate = to_date(clock).cast("string"), commit = commit)
+        asOfDate = to_date(clock).cast("string"))
       // step 10: quarantine + run-metadata sinks (:997-1041)
       if (recordsInvalid > 0)
         writeQuarantine(split.filter(!ValidRecord), cfg.quarantinePath, clock)

@@ -1,6 +1,7 @@
 package graft.store
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import java.nio.file.{Files, StandardCopyOption}
+import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, Path, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 
 /** Generation-log primitives shared by the persisted index artifacts
@@ -22,9 +23,9 @@ import org.apache.spark.sql.SparkSession
   * `snap` = the SnapshotStore snapshot name this generation indexes
   * (None for bare-path corpora), `parent` = delta chain link.
   *
-  * Publish protocol (atomicity argument at [[publishGen]]): write the
+  * Publish protocol (atomicity argument at [[writePointer]]): write the
   * complete generation dir — invisible, nothing names it — then flip the
-  * pointer via temp-file + rename-with-overwrite. Readers that resolved
+  * pointer via temp-file + atomic replace. Readers that resolved
   * the previous generation keep a live immutable dir; [[pruneGens]]
   * retains the superseded chain for one build cycle.
   */
@@ -62,21 +63,43 @@ object GenLog {
     if (name.isEmpty) None else Some(name)
   }
 
-  /** THE pointer-write primitive: temp file + rename-with-overwrite
-    * (atomic on POSIX/HDFS; on S3 deployments substitute a direct
-    * single-object PUT, which is atomic per key). Shared by
-    * [[publishGen]] and [[SnapshotStore.publishPointer]] — one copy of
-    * the atomicity argument. */
+  /** THE pointer-write primitive, and the one rename in main code:
+    * write a temp file, then replace the pointer with it in one step.
+    * Shared by [[publishGen]] and [[SnapshotStore.publishPointer]] — one
+    * copy of the atomicity argument.
+    *
+    * On the local filesystem the replace is a single rename(2), which
+    * swaps the name over atomically; FileContext's overwrite-rename
+    * there deletes the old pointer first, so a reader could find no
+    * pointer at all, and a crash in between left the table looking
+    * never committed. The temp file is written without a checksum
+    * sibling, and a stale `.crc` of the old pointer is dropped before
+    * the flip, so the checksummed reader never pairs new bytes with an
+    * old checksum. Other filesystems keep FileContext's
+    * rename-with-overwrite (atomic on HDFS); an object-store deployment
+    * substitutes a single-object PUT, atomic per key. */
   private[store] def writePointer(spark: SparkSession, ptr: Path,
                                   name: String): Unit = {
-    val fs = ptr.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = ptr.getFileSystem(conf)
     val tmp = new Path(ptr.getParent,
       s"${ptr.getName}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(name.getBytes("UTF-8")) finally out.close()
-    val fc = FileContext.getFileContext(ptr.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, ptr, Options.Rename.OVERWRITE)
+    def writeTo(target: FileSystem): Unit = {
+      val out = target.create(tmp, true)
+      try out.write(name.getBytes("UTF-8")) finally out.close()
+    }
+    fs match {
+      case local: LocalFileSystem =>
+        val raw = local.getRawFileSystem.asInstanceOf[RawLocalFileSystem]
+        writeTo(raw)
+        raw.delete(local.getChecksumFile(ptr), false)
+        Files.move(raw.pathToFile(tmp).toPath, raw.pathToFile(ptr).toPath,
+          StandardCopyOption.ATOMIC_MOVE)
+      case _ =>
+        writeTo(fs)
+        FileContext.getFileContext(ptr.toUri, conf)
+          .rename(tmp, ptr, Options.Rename.OVERWRITE)
+    }
   }
 
   /** The live generation dir named by the pointer, if published and

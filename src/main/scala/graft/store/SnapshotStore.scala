@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 
-/** Object-store-safe table commit: versioned immutable snapshot
+/** The one table commit protocol: versioned immutable snapshot
   * directories plus an atomically-replaced single-file pointer.
   *
   * Layout:
@@ -15,21 +15,22 @@ import org.apache.spark.sql.functions._
   *   <root>/_CURRENT                 one small file naming the live dir
   * }}}
   *
-  * Why this exists: the tmp-write + directory-rename swap used by
-  * [[DirectorySwapCommit]] is atomic on HDFS and POSIX filesystems but
-  * NOT on S3-style object stores, where "rename" is a non-atomic
-  * copy-then-delete over every object — a reader racing the swap can see
-  * a half-moved table, and a crash mid-swap leaves one permanently
-  * (the reference inherited this guarantee from Delta's transaction log,
-  * silver_etl_script.py:946-961; parquet-native tables must rebuild it).
-  * Writing a brand-new immutable snapshot directory and then publishing
-  * it by replacing ONE tiny pointer object is safe on both families:
-  * single-object PUT is atomic per key on object stores, and the
-  * implementation here publishes via create-temp + POSIX/HDFS
-  * rename-with-overwrite. A writer crash before the pointer flip leaves
-  * an orphaned, invisible snapshot dir — readers keep seeing the old
-  * snapshot — and [[vacuum]] collects orphans later (the VACUUM analogue,
-  * silver_etl_script.py:985-988).
+  * Every table graft writes (silver flat or regioned, gold, the gold
+  * imputation stats) publishes here; the reference got the same
+  * guarantee from Delta's transaction log (silver_etl_script.py:922-961).
+  * A publish writes a brand-new snapshot directory that nothing names,
+  * then makes it visible by replacing ONE tiny pointer ([[GenLog]] holds
+  * the single rename). No live byte is deleted or moved before the flip,
+  * so a writer crash at any step leaves readers on the old snapshot and
+  * a racing reader sees the old or the new one, never a mix. The flip is
+  * atomic on POSIX and HDFS; an object-store deployment substitutes a
+  * single-object PUT, atomic per key.
+  * An orphaned, invisible snapshot dir from a crash is collected by
+  * [[vacuum]] (the VACUUM analogue, silver_etl_script.py:985-988).
+  *
+  * Readers go through this object (or [[PointerCommit]]): a bare
+  * `spark.read.parquet(root)` sees nothing, because `_snapshots/` is a
+  * hidden name.
   */
 /** A racing writer committed first: the version slot this commit claimed
   * was taken, or the table advanced past the snapshot this commit was
@@ -375,7 +376,10 @@ object SnapshotStore {
     *     interleave — the round-9 "one filesystem op wide" residual
     *     window is closed, not just narrowed.
     *
-    * The loser's retry re-enters with the WINNER's version as its new
+    * A throw anywhere in steps 3-5 releases the claim if it is still
+    * ours and the pointer does not name this version, so a plain retry
+    * re-claims the slot at once (CrashPointSpec fails each filesystem
+    * step in turn). The loser's retry re-enters with the WINNER's version as its new
     * base and lands on top — nothing is ever silently dropped. */
   def commitFrom(spark: SparkSession, root: String, base: Option[String],
                  claimTtlMs: Long = DefaultClaimTtlMs)
@@ -394,63 +398,66 @@ object SnapshotStore {
     val token = java.util.UUID.randomUUID().toString
     claimSlot(spark, fs, root, name, token, claimTtlMs)
     val dir = new Path(new Path(rootPath, SnapshotsDir), name)
-    // we own the slot, so anything already at its dir is debris from a
-    // crashed earlier attempt (a PUBLISHED version could not be claimed);
-    // clear it — and the crashed attempt's stats sidecar sibling, which
-    // would otherwise describe deleted files (or break a sidecar-less
-    // writer's publish) — so the callback starts clean in any save mode
-    if (fs.exists(dir)) fs.delete(dir, true)
-    fs.delete(new Path(new Path(rootPath, SnapshotsDir),
-      name + FileStats.StatsSuffix), true)
-    // a write() that THROWS releases its slot immediately (we still own
-    // the claim): the crashed attempt's data stays on disk, invisible —
-    // the established crash-isolation contract — and a retry re-claims
-    // the same slot without waiting out the TTL. Only JVM death mid-write
-    // leaves a claim that must age out.
-    try write(dir.toString)
-    catch {
-      case e: Throwable =>
-        if (claimToken(fs, claimPath(root, name)).contains(token))
-          fs.delete(claimPath(root, name), false)
-        throw e
-    }
-    // fence #2 — between our claim and this point a TTL-breaker may have
-    // taken the slot, or (if our claim was broken) the table may have
-    // moved; check ownership FIRST: once the claim is someone else's, the
-    // version dir is theirs too and we must not delete it
-    if (!claimToken(fs, claimPath(root, name)).contains(token))
-      throw new ConcurrentCommitException(
-        s"claim on $name at $root was broken (writer presumed crashed " +
-          s"after ${claimTtlMs}ms) and the slot re-used — recompute and retry")
-    if (currentName(spark, root) != base) {
-      fs.delete(dir, true)
-      // the loser's sidecar sibling goes with its data
+    // from here on, a throw anywhere before the flip releases the slot
+    // while we still own it, so a plain retry re-claims the same version
+    // without waiting out the TTL. The crashed attempt's files stay on
+    // disk, invisible. A claim whose version the pointer already names
+    // (the flip landed, then something threw) is a commit record and is
+    // never released. Only JVM death leaves a claim that must age out.
+    try {
+      // we own the slot, so anything already at its dir is debris from a
+      // crashed earlier attempt (a PUBLISHED version could not be
+      // claimed); clear it, and the crashed attempt's stats sidecar
+      // sibling, which would otherwise describe deleted files, so the
+      // callback starts clean in any save mode
+      if (fs.exists(dir)) fs.delete(dir, true)
       fs.delete(new Path(new Path(rootPath, SnapshotsDir),
         name + FileStats.StatsSuffix), true)
-      fs.delete(claimPath(root, name), false)
-      throw new ConcurrentCommitException(
-        s"table $root advanced past ${base.getOrElse("<none>")} before " +
-          s"$name could publish — recompute and retry")
-    }
-    // fence #3 — the final ownership re-check and the pointer flip run
-    // under the PUBLISH LOCK, and the TTL-breaker's delete-then-create
-    // runs under the SAME lock (see claimSlot), which closes the round-9
-    // residual window (breaker fires between this read and the rename →
-    // both publish): whichever of {writer, breaker} takes the lock first
-    // wins, and the loser observes either a foreign claim token (writer
-    // loses → conflict, nothing published) or a published version
-    // (breaker aborts its break — the claim is now a commit record). On
-    // local/POSIX roots the lock is an OS file lock, so the exclusion
-    // holds cross-process too; on object stores the flip itself is a
-    // conditional PUT and needs no lock. The lock is held for two small
-    // fs ops — never across the data write.
-    testHookBeforePublish.foreach(h => h(root, name))
-    withPublishLock(root) {
+      write(dir.toString)
+      // fence #2: between our claim and this point a TTL-breaker may
+      // have taken the slot, or (if our claim was broken) the table may
+      // have moved; check ownership FIRST: once the claim is someone
+      // else's, the version dir is theirs too and we must not delete it
       if (!claimToken(fs, claimPath(root, name)).contains(token))
         throw new ConcurrentCommitException(
-          s"claim on $name at $root was broken between fence #2 and " +
-            s"publish — recompute and retry")
-      publishPointer(spark, root, name)
+          s"claim on $name at $root was broken (writer presumed crashed " +
+            s"after ${claimTtlMs}ms) and the slot re-used — recompute and retry")
+      if (currentName(spark, root) != base) {
+        fs.delete(dir, true)
+        // the loser's sidecar sibling goes with its data
+        fs.delete(new Path(new Path(rootPath, SnapshotsDir),
+          name + FileStats.StatsSuffix), true)
+        throw new ConcurrentCommitException(
+          s"table $root advanced past ${base.getOrElse("<none>")} before " +
+            s"$name could publish — recompute and retry")
+      }
+      // fence #3: the final ownership re-check and the pointer flip run
+      // under the PUBLISH LOCK, and the TTL-breaker's delete-then-create
+      // runs under the SAME lock (see claimSlot): whichever of {writer,
+      // breaker} takes the lock first wins, and the loser observes either
+      // a foreign claim token (writer loses → conflict, nothing
+      // published) or a published version (breaker aborts its break —
+      // the claim is now a commit record). On local/POSIX roots the lock
+      // is an OS file lock, so the exclusion holds cross-process too; on
+      // object stores the flip itself is a conditional PUT and needs no
+      // lock. The lock is held for two small fs ops, never across the
+      // data write.
+      testHookBeforePublish.foreach(h => h(root, name))
+      withPublishLock(root) {
+        if (!claimToken(fs, claimPath(root, name)).contains(token))
+          throw new ConcurrentCommitException(
+            s"claim on $name at $root was broken between fence #2 and " +
+              s"publish — recompute and retry")
+        publishPointer(spark, root, name)
+      }
+    } catch {
+      case e: Throwable =>
+        scala.util.Try {
+          val published = currentName(spark, root).exists(_ >= name)
+          if (!published && claimToken(fs, claimPath(root, name)).contains(token))
+            fs.delete(claimPath(root, name), false)
+        }
+        throw e
     }
     name
   }
@@ -701,157 +708,52 @@ object SnapshotStore {
   }
 }
 
-/** Strategy for how a full-table rewrite becomes visible to readers. */
-sealed trait TableCommit {
-  /** Does the table exist (has it ever been published)? */
-  def exists(spark: SparkSession, path: String): Boolean
-  /** Read the current published snapshot. */
-  def read(spark: SparkSession, path: String): DataFrame
-  /** Publish `df` as the table's new full snapshot; returns rows written. */
-  def publish(df: DataFrame, path: String, partitionColumns: Seq[String]): Long
-  /** The version a read-modify-write cycle should fence its publish on —
-    * capture BEFORE [[read]], hand to [[publishFrom]]. None when the
-    * protocol has no version notion (directory swap) or the table has
-    * never been published. */
-  def version(spark: SparkSession, path: String): Option[String] = None
-  /** [[publish]] fenced on `base`: raises
-    * [[ConcurrentCommitException]] if another writer published since
-    * `base` was captured, instead of silently overwriting their commit.
-    * Protocols without versions degrade to last-writer-wins [[publish]]. */
-  def publishFrom(df: DataFrame, path: String, partitionColumns: Seq[String],
-                  base: Option[String]): Long =
-    publish(df, path, partitionColumns)
-}
+/** Full-table publishes and reads over [[SnapshotStore]]: readers go
+  * through the pointer, so a writer crash at ANY step leaves them on the
+  * old snapshot. */
+object PointerCommit {
+  /** Has the table ever been published? */
+  def exists(spark: SparkSession, path: String): Boolean =
+    SnapshotStore.currentName(spark, path).isDefined
 
-object TableCommit {
+  /** The current published snapshot. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    SnapshotStore.read(spark, path)
+
+  /** The version a read-modify-write cycle fences its publish on:
+    * capture BEFORE [[read]], hand to [[publishFrom]]. None when the
+    * table has never been published. */
+  def version(spark: SparkSession, path: String): Option[String] =
+    SnapshotStore.currentName(spark, path)
+
+  /** Publish `df` as the table's new full snapshot; returns rows written. */
+  def publish(df: DataFrame, path: String, partitionColumns: Seq[String]): Long =
+    publishFrom(df, path, partitionColumns,
+      SnapshotStore.currentName(df.sparkSession, path))
+
+  /** [[publish]] fenced on `base`: raises [[ConcurrentCommitException]]
+    * if another writer published since `base` was captured, instead of
+    * silently overwriting their commit. */
+  def publishFrom(df: DataFrame, path: String, partitionColumns: Seq[String],
+                  base: Option[String]): Long = {
+    var written = 0L
+    SnapshotStore.commitFrom(df.sparkSession, path, base) { dir =>
+      written = writeCounted(df, dir, partitionColumns)
+    }
+    written
+  }
+
   /** Write `df` as (optionally partitioned) parquet and return the row
     * count OBSERVED during the write job itself (`Dataset.observe` +
-    * `Observation`) — the count costs one metric accumulator, where the
-    * previous read-back (`spark.read.parquet(written).count()`) re-listed
-    * and footer-scanned everything just written, doubling publish
-    * metadata I/O on every merge/ETL commit. */
-  private[store] def writeCounted(df: DataFrame, path: String,
-                                  partitionColumns: Seq[String]): Long = {
+    * `Observation`): one metric accumulator instead of a read-back that
+    * would re-list and footer-scan everything just written. */
+  private def writeCounted(df: DataFrame, path: String,
+                           partitionColumns: Seq[String]): Long = {
     val obs = org.apache.spark.sql.Observation()
-    val counted = df.observe(obs, org.apache.spark.sql.functions
-      .count(org.apache.spark.sql.functions.lit(1)).as("rows"))
+    val counted = df.observe(obs, count(lit(1)).as("rows"))
     val w = counted.write.mode(SaveMode.Overwrite)
     (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*) else w)
       .parquet(path)
     obs.get("rows").asInstanceOf[Long]
-  }
-}
-
-/** Write-to-temp-sibling + directory rename. Atomic on HDFS/POSIX — the
-  * right default for the local/HDFS clusters this library targets — but
-  * NOT on S3-style object stores; use [[PointerCommit]] there.
-  *
-  * [[version]] reads a `_version` counter file the publish writes INTO
-  * the tmp dir BEFORE the swap — so the stamp is atomic with the data it
-  * describes (a failed rename leaves the old dir with the old stamp).
-  * Underscore-prefixed files are invisible to Spark's parquet reader, so
-  * the layout readers see is unchanged. publishFrom still degrades to
-  * last-writer-wins (documented on the trait); the stamp exists so
-  * read-modify-write callers can IDENTIFY the state they read — the
-  * Scd2 closed-region retry-dedup keys its merge identity on it. */
-object DirectorySwapCommit extends TableCommit {
-  private val VersionFile = "_version"
-
-  override def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  override def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  override def version(spark: SparkSession, path: String): Option[String] = {
-    val vf = new Path(path, VersionFile)
-    val fs = vf.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(vf)) None
-    else {
-      val in = fs.open(vf)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
-    }
-  }
-
-  private def writeVersion(fs: org.apache.hadoop.fs.FileSystem,
-                           dir: Path, v: String): Unit = {
-    val out = fs.create(new Path(dir, VersionFile), true)
-    try out.write(v.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Advance the version stamp in place — for writers that mutate the
-    * table WITHOUT a whole-dir swap (the Scd2 churned-partition
-    * publish). Call after the data mutation lands. A crash in between
-    * leaves a STALE stamp: the data is intact, but the next reader sees
-    * the pre-mutation counter over post-mutation bytes — so any
-    * identity keyed on this counter alone can alias two distinct
-    * states. Callers that key decisions on "which state did I read"
-    * must mix in something the mutation itself changes (Scd2's merge
-    * identity adds a file-inventory fingerprint for exactly this
-    * window). */
-  def bumpVersion(spark: SparkSession, path: String): Unit = {
-    val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = (version(spark, path).flatMap(v =>
-      scala.util.Try(v.toLong).toOption).getOrElse(0L) + 1L).toString
-    writeVersion(fs, target, next)
-  }
-
-  override def publish(df: DataFrame, path: String,
-                       partitionColumns: Seq[String]): Long = {
-    val spark = df.sparkSession
-    val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val next = (version(spark, path).flatMap(v =>
-      scala.util.Try(v.toLong).toOption).getOrElse(0L) + 1L).toString
-    if (!fs.exists(target)) {
-      val written = TableCommit.writeCounted(df, path, partitionColumns)
-      writeVersion(fs, target, next)
-      return written
-    }
-    // sibling of the normalized target (raw string concat would nest the
-    // tmp dir inside the target on a trailing-slash path)
-    val tmp = new Path(target.getParent, target.getName + "__tmp_swap")
-    val written = TableCommit.writeCounted(df, tmp.toString, partitionColumns)
-    writeVersion(fs, tmp, next)
-    fs.delete(target, true)
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(
-        s"publish: rename $tmp -> $target failed; table left at $tmp")
-    written
-  }
-}
-
-/** Versioned-snapshot + atomic pointer replacement via [[SnapshotStore]] —
-  * the object-store-safe protocol. Readers go through the pointer, so a
-  * writer crash at ANY step leaves them on the old snapshot. */
-object PointerCommit extends TableCommit {
-  override def exists(spark: SparkSession, path: String): Boolean =
-    SnapshotStore.currentName(spark, path).isDefined
-
-  override def read(spark: SparkSession, path: String): DataFrame =
-    SnapshotStore.read(spark, path)
-
-  override def version(spark: SparkSession, path: String): Option[String] =
-    SnapshotStore.currentName(spark, path)
-
-  override def publish(df: DataFrame, path: String,
-                       partitionColumns: Seq[String]): Long =
-    publishFrom(df, path, partitionColumns,
-      SnapshotStore.currentName(df.sparkSession, path))
-
-  override def publishFrom(df: DataFrame, path: String,
-                           partitionColumns: Seq[String],
-                           base: Option[String]): Long = {
-    val spark = df.sparkSession
-    var written = 0L
-    SnapshotStore.commitFrom(spark, path, base) { dir =>
-      written = TableCommit.writeCounted(df, dir, partitionColumns)
-    }
-    written
   }
 }

@@ -123,10 +123,12 @@ object StreamingOps {
     *
     * Exactly-once composition: foreachBatch is at-least-once (a crashed
     * epoch replays), and the merge is idempotent under replay — the
-    * close-out append dedups against the day's closed partition and the
-    * current-region publish is an atomic last-writer-wins swap — so the
-    * pair is effectively exactly-once without any sink-side epoch
-    * bookkeeping.
+    * close-out append recognizes a replay by its merge identity (or
+    * dedups against the day's closed partition after an ambiguous
+    * crash), and the current region flips atomically to a new snapshot
+    * ([[graft.store.PointerCommit]]), after which a replayed batch
+    * matches it unchanged — so the pair is effectively exactly-once
+    * without any sink-side epoch bookkeeping.
     *
     * `asOfOfBatch` maps (batch, batchId) to the merge's as-of date
     * column; the default stamps wall-clock date, tests inject fixed

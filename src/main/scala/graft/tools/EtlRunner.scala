@@ -8,7 +8,7 @@ import graft.gold.GoldEtl
 /** Production-shaped CLI for the silver + gold pipelines over arbitrary
   * bronze data (the spark-submit surface of the engine):
   *
-  *   sbt "runMain graft.tools.EtlRunner <bronzeBase> <yyyy-MM-dd> <outBase> [full|incremental] [swap|pointer] [flat|regioned]"
+  *   sbt "runMain graft.tools.EtlRunner <bronzeBase> <yyyy-MM-dd> <outBase> [full|incremental] [flat|regioned]"
   *
   * Reads bronze/{spider}/year=Y/month=M/<date>*.jsonl under bronzeBase,
   * runs the 10-stage silver ETL (SCD2 merge into outBase/silver,
@@ -16,26 +16,19 @@ import graft.gold.GoldEtl
   * outBase/gold, and prints the run stats. Gold mode `incremental`
   * (default `full`) rewrites only the partitions touched by the day's
   * silver churn — the steady-state daily mode once a full baseline
-  * exists. Protocol `pointer` (default `swap`) publishes every table
-  * through the object-store-safe versioned-snapshot pointer commit
-  * (graft.store.SnapshotStore) instead of directory renames. Layout
-  * `regioned` (default `flat`) splits silver into a rewriteable current
-  * region and an append-only closed region, so each day's merge writes
+  * exists. Every table publishes as a versioned snapshot behind an
+  * atomic pointer (graft.store.SnapshotStore). Layout `regioned`
+  * (default `flat`) splits silver into a rewriteable current region and
+  * an append-only closed region, so each day's merge writes
   * O(live keys + churn) instead of rewriting the whole history. */
 object EtlRunner {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3,
-      "usage: EtlRunner <bronzeBase> <yyyy-MM-dd> <outBase> [full|incremental]")
+      "usage: EtlRunner <bronzeBase> <yyyy-MM-dd> <outBase> [full|incremental] [flat|regioned]")
     val goldMode = args.lift(3).getOrElse("full")
     require(goldMode == "full" || goldMode == "incremental",
       s"unknown gold mode '$goldMode' (use full or incremental)")
-    val protocol: graft.store.TableCommit = args.lift(4).getOrElse("swap") match {
-      case "pointer" => graft.store.PointerCommit
-      case "swap" => graft.store.DirectorySwapCommit
-      case other => throw new IllegalArgumentException(
-        s"unknown protocol '$other' (use swap or pointer)")
-    }
-    val layout: graft.scd.SilverLayout = args.lift(5).getOrElse("flat") match {
+    val layout: graft.scd.SilverLayout = args.lift(4).getOrElse("flat") match {
       case "regioned" => graft.scd.RegionedLayout
       case "flat" => graft.scd.FlatLayout
       case other => throw new IllegalArgumentException(
@@ -52,8 +45,7 @@ object EtlRunner {
       s"$outBase/metadata", runId = s"run_$date", startDate = date)
     val t0 = System.nanoTime()
     val bronze = SilverEtl.readBronze(spark, bronzeBase, date)
-    val stats = SilverEtl.run(spark, bronze, cfg, commit = protocol,
-      layout = layout)
+    val stats = SilverEtl.run(spark, bronze, cfg, layout = layout)
     val tSilver = (System.nanoTime() - t0) / 1e9
     println(f"[etl] silver: $stats in $tSilver%.1f s")
 
@@ -65,10 +57,9 @@ object EtlRunner {
         // date, not the bronze logical date; runIncremental matches
         // on-or-after, covering a silver run that crossed UTC midnight.
         GoldEtl.runIncremental(spark, cfg.silverPath, s"$outBase/gold",
-          processingDate, commit = protocol, layout = layout)
+          processingDate, layout = layout)
       case _ =>
-        GoldEtl.run(spark, cfg.silverPath, s"$outBase/gold", commit = protocol,
-          layout = layout)
+        GoldEtl.run(spark, cfg.silverPath, s"$outBase/gold", layout = layout)
     }
     val tGold = (System.nanoTime() - t1) / 1e9
     println(f"[etl] gold ($goldMode) written in $tGold%.1f s to $outBase/gold")
@@ -76,22 +67,18 @@ object EtlRunner {
     // scheduled maintenance (the reference ran OPTIMIZE + VACUUM after
     // its merge, silver_etl_script.py:978-988): compact the regioned
     // closed region's accreted file sets, then collect superseded
-    // pointer-commit snapshots. Both are no-ops where they don't apply.
+    // snapshots of every table.
     if (sys.env.get("GRAFT_ETL_MAINTAIN").contains("1")) {
       val t2 = System.nanoTime()
       val compacted = layout match {
         case graft.scd.RegionedLayout =>
-          graft.scd.Scd2.compactClosed(spark, cfg.silverPath, commit = protocol)
+          graft.scd.Scd2.compactClosed(spark, cfg.silverPath)
         case _ => 0
       }
-      val vacuumed = protocol match {
-        case graft.store.PointerCommit =>
-          Seq(cfg.silverPath, graft.scd.Scd2.currentRoot(cfg.silverPath),
-            graft.scd.Scd2.closedRoot(cfg.silverPath), s"$outBase/gold")
-            .map(p => scala.util.Try(
-              graft.store.SnapshotStore.vacuum(spark, p)).getOrElse(0)).sum
-        case _ => 0
-      }
+      val vacuumed = Seq(cfg.silverPath, graft.scd.Scd2.currentRoot(cfg.silverPath),
+        graft.scd.Scd2.closedRoot(cfg.silverPath), s"$outBase/gold")
+        .map(p => scala.util.Try(
+          graft.store.SnapshotStore.vacuum(spark, p)).getOrElse(0)).sum
       val tM = (System.nanoTime() - t2) / 1e9
       println(f"[etl] maintenance: $compacted partitions compacted, " +
         f"$vacuumed snapshots vacuumed in $tM%.1f s")

@@ -29,7 +29,7 @@ object PipelineDemo {
 
     GoldEtl.run(spark, s"$base/silver", s"$base/gold",
       to_timestamp(lit("2025-01-15 13:00:00")))
-    val tiers = spark.read.parquet(s"$base/gold")
+    val tiers = graft.store.PointerCommit.read(spark, s"$base/gold")
       .groupBy("quality_tier").count().orderBy("quality_tier")
       .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}").mkString(", ")
     println(s"[demo] gold tiers: $tiers")

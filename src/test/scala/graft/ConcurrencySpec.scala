@@ -158,6 +158,49 @@ class ConcurrencySpec extends SparkSuite {
     assert(PointerCommit.read(spark, root).collect()(0).getString(1) === "retry")
   }
 
+  test("a failed pointer write releases the slot: the retry commits immediately") {
+    import spark.implicits._
+    CrashFs.install(spark.sparkContext.hadoopConfiguration)
+    val root = CrashFs.uri(freshRoot())
+    PointerCommit.publish(Seq((1, "v1")).toDF("id", "v"), root, Nil)
+    CrashFs.watch(root)
+    CrashFs.armWhen(root)((op, ps) => op == "rename" &&
+      ps.last.getName == SnapshotStore.PointerFile)
+    val e = try {
+      intercept[java.io.IOException] {
+        PointerCommit.publish(Seq((1, "v2")).toDF("id", "v"), root, Nil)
+      }
+    } finally CrashFs.unwatch(root)
+    assert(e.getMessage.contains("injected"))
+    assert(SnapshotStore.currentName(spark, root).contains("v000000001"))
+    // no TTL wait and no ConcurrentCommitException: the unpublished
+    // claim went with the failed write
+    PointerCommit.publish(Seq((1, "retry")).toDF("id", "v"), root, Nil)
+    assert(SnapshotStore.currentName(spark, root).contains("v000000002"))
+    assert(PointerCommit.read(spark, root).collect()(0).getString(1) === "retry")
+  }
+
+  test("the pointer flip on the local filesystem never leaves the pointer missing") {
+    val root = freshRoot()
+    SnapshotStore.publishPointer(spark, root, "v000000000")
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    var polls = 0L
+    var missing = 0L
+    val reader = new Thread(() =>
+      while (!done.get) {
+        polls += 1
+        try { if (SnapshotStore.currentName(spark, root).isEmpty) missing += 1 }
+        catch { case _: java.io.IOException => missing += 1 }
+      })
+    reader.start()
+    try (1 to 1000).foreach(i =>
+      SnapshotStore.publishPointer(spark, root, f"v$i%09d"))
+    finally { done.set(true); reader.join() }
+    assert(polls > 0)
+    assert(missing === 0L, s"pointer missing in $missing of $polls polls")
+    assert(SnapshotStore.currentName(spark, root).contains("v000001000"))
+  }
+
   test("racing Scd2.merge writers: no lost update, retry converges, history intact") {
     import spark.implicits._
     val root = freshRoot()
@@ -169,7 +212,7 @@ class ConcurrencySpec extends SparkSuite {
     // day 0: two keys
     Scd2.merge(spark, batch("k1", 100.0).unionByName(batch("k2", 200.0)),
       root, changeColumns = Seq("price"), asOfDate = lit("2025-01-01"),
-      partitionColumns = Seq("year", "month"), commit = PointerCommit)
+      partitionColumns = Seq("year", "month"))
 
     // two writers race day-1 merges of DIFFERENT keys; each merge is a
     // read-modify-write of the whole table, so a lost update would drop
@@ -180,7 +223,7 @@ class ConcurrencySpec extends SparkSuite {
       barrier.await()
       Scd2.merge(spark, batch(uid, price), root,
         changeColumns = Seq("price"), asOfDate = lit("2025-01-02"),
-        partitionColumns = Seq("year", "month"), commit = PointerCommit)
+        partitionColumns = Seq("year", "month"))
     }
     val (fa, fb) = (Future(racer("k1", 111.0)), Future(racer("k2", 222.0)))
     val ra = Await.result(fa, 5.minutes)
@@ -193,10 +236,10 @@ class ConcurrencySpec extends SparkSuite {
     // client protocol (recompute + re-commit)
     if (ra.isFailure) Scd2.merge(spark, batch("k1", 111.0), root,
       changeColumns = Seq("price"), asOfDate = lit("2025-01-02"),
-      partitionColumns = Seq("year", "month"), commit = PointerCommit)
+      partitionColumns = Seq("year", "month"))
     if (rb.isFailure) Scd2.merge(spark, batch("k2", 222.0), root,
       changeColumns = Seq("price"), asOfDate = lit("2025-01-02"),
-      partitionColumns = Seq("year", "month"), commit = PointerCommit)
+      partitionColumns = Seq("year", "month"))
 
     // NEITHER update lost, SCD2 invariant holds, history complete
     val t = PointerCommit.read(spark, root)
@@ -221,14 +264,14 @@ class ConcurrencySpec extends SparkSuite {
     Scd2.mergeRegioned(spark,
       batch("k1", 100.0).unionByName(batch("k2", 200.0)), root,
       changeColumns = Seq("price"), asOfDate = lit("2025-01-01"),
-      partitionColumns = Seq("year", "month"), commit = PointerCommit)
+      partitionColumns = Seq("year", "month"))
 
     val barrier = new CyclicBarrier(2)
     def racer(uid: String, price: Double): Try[Long] = Try {
       barrier.await()
       Scd2.mergeRegioned(spark, batch(uid, price), root,
         changeColumns = Seq("price"), asOfDate = lit("2025-01-02"),
-        partitionColumns = Seq("year", "month"), commit = PointerCommit)
+        partitionColumns = Seq("year", "month"))
     }
     val (fa, fb) = (Future(racer("k1", 111.0)), Future(racer("k2", 222.0)))
     val ra = Await.result(fa, 5.minutes)
@@ -239,10 +282,10 @@ class ConcurrencySpec extends SparkSuite {
 
     if (ra.isFailure) Scd2.mergeRegioned(spark, batch("k1", 111.0), root,
       changeColumns = Seq("price"), asOfDate = lit("2025-01-02"),
-      partitionColumns = Seq("year", "month"), commit = PointerCommit)
+      partitionColumns = Seq("year", "month"))
     if (rb.isFailure) Scd2.mergeRegioned(spark, batch("k2", 222.0), root,
       changeColumns = Seq("price"), asOfDate = lit("2025-01-02"),
-      partitionColumns = Seq("year", "month"), commit = PointerCommit)
+      partitionColumns = Seq("year", "month"))
 
     val t = Scd2.readRegioned(spark, root, PointerCommit)
     assert(Scd2.violations(t) === 0)

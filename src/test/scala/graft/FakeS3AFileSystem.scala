@@ -16,12 +16,13 @@ import org.apache.hadoop.util.Progressable
   * only shows up on a real object store. It does NOT fake S3's weaker
   * semantics (renames here stay atomic); what it pins is scheme plumbing
   * end-to-end. */
-class FakeS3AFileSystem extends FileSystem {
+class FakeS3AFileSystem(scheme: String) extends FileSystem {
+  def this() = this("s3a")
   private val inner = new RawLocalFileSystem
-  private var fsUri: URI = URI.create("s3a:///")
-  private var workDir: Path = new Path("s3a:///")
+  private var fsUri: URI = URI.create(s"$scheme:///")
+  private var workDir: Path = new Path(s"$scheme:///")
 
-  override def getScheme: String = "s3a"
+  override def getScheme: String = scheme
   override def getUri: URI = fsUri
 
   override def initialize(name: URI, conf: Configuration): Unit = {
@@ -37,12 +38,12 @@ class FakeS3AFileSystem extends FileSystem {
       makeQualified(p)).toString)
   private def toFake(p: Path): Path =
     new Path(fsUri.getScheme, fsUri.getAuthority, p.toUri.getPath)
-  /** Copy the status eagerly (permissions load while the path is still
-    * file-scheme) and re-point it at the fake scheme. */
+  /** Re-point a status at the fake scheme. Permissions and owner are
+    * left at their defaults: on the local filesystem loading them costs
+    * one shell call per file, and no caller reads them. */
   private def wrap(st: FileStatus): FileStatus =
     new FileStatus(st.getLen, st.isDirectory, st.getReplication,
-      st.getBlockSize, st.getModificationTime, st.getAccessTime,
-      st.getPermission, st.getOwner, st.getGroup, null, toFake(st.getPath))
+      st.getBlockSize, st.getModificationTime, toFake(st.getPath))
 
   override def open(f: Path, bufferSize: Int): FSDataInputStream =
     inner.open(toLocal(f), bufferSize)

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.silver.SilverEtl
 import graft.gold.{Enhancement, GoldEtl}
+import graft.store.{PointerCommit, SnapshotStore}
 
 /** Golden run of silver → gold (enhancement + feature engineering + tiers)
   * over the synthetic bronze fixtures. */
@@ -21,7 +22,7 @@ class GoldEtlSpec extends SparkSuite {
   private lazy val gold = {
     GoldEtl.run(spark, s"$base/silver", s"$base/gold",
       to_timestamp(lit("2025-01-15 13:00:00")))
-    spark.read.parquet(s"$base/gold")
+    PointerCommit.read(spark, s"$base/gold")
   }
 
   test("district-median price imputation fills unpriced record") {
@@ -122,7 +123,9 @@ class GoldEtlSpec extends SparkSuite {
   }
 
   test("gold output is partitioned by quality_tier/year/month") {
-    val dirs = new java.io.File(s"$base/gold").listFiles()
+    gold
+    val snapshot = SnapshotStore.currentPath(spark, s"$base/gold").get
+    val dirs = new java.io.File(snapshot.toUri.getPath).listFiles()
       .filter(_.isDirectory).map(_.getName)
     assert(dirs.exists(_.startsWith("quality_tier=")))
   }
@@ -137,35 +140,6 @@ class GoldEtlSpec extends SparkSuite {
     val expected = graft.schema.Schemas.GoldFeatureColumns.toSet ++
       Set("gold_processed_at", "gold_version")
     assert(gold.columns.toSet === expected)
-  }
-
-  test("a failed partition rename preserves the replacement data in tmp") {
-    import org.apache.hadoop.fs.Path
-    val root = java.nio.file.Files.createTempDirectory("graft_gold_swap").toString
-    val goldPath = s"$root/gold"
-    val goldRoot = new Path(goldPath)
-    val tmp = new Path(s"$root/gold__inc_tmp")
-    val fs = goldRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // one replacement partition in tmp, one stale partition in gold
-    val part = "quality_tier=high/year=2025/month=1"
-    fs.mkdirs(new Path(tmp, part))
-    fs.create(new Path(tmp, s"$part/part-0.parquet")).close()
-    fs.mkdirs(new Path(goldRoot, part))
-    fs.create(new Path(goldRoot, s"$part/old.parquet")).close()
-    val ex = intercept[java.io.IOException] {
-      GoldEtl.swapAffectedPartitions(fs, goldPath, goldRoot, tmp,
-        Seq((2025, 1)), (_, _) => false)
-    }
-    assert(ex.getMessage.contains("preserved"))
-    // the only remaining copy of the replacement partition must survive
-    assert(fs.exists(new Path(tmp, s"$part/part-0.parquet")))
-    // and a working rename on the same layout completes the swap
-    fs.mkdirs(new Path(goldRoot, part))
-    fs.create(new Path(goldRoot, s"$part/old.parquet")).close()
-    GoldEtl.swapAffectedPartitions(fs, goldPath, goldRoot, tmp,
-      Seq((2025, 1)), fs.rename)
-    assert(fs.exists(new Path(goldRoot, s"$part/part-0.parquet")))
-    assert(!fs.exists(new Path(goldRoot, s"$part/old.parquet")))
   }
 
   test("incremental gold with persisted stats: pruned scan, baseline medians, re-baseline") {
@@ -187,25 +161,26 @@ class GoldEtlSpec extends SparkSuite {
         case (df, (c, _)) => df.withColumn(c, lit(false))
       }
     }
+    val parts = Seq("ingestion_year", "ingestion_month")
+    // each day republishes the silver snapshot with its new rows
+    def append(day: org.apache.spark.sql.DataFrame): Unit = PointerCommit.publish(
+      PointerCommit.read(spark, silverPath).unionByName(day), silverPath, parts)
     // day 1: two ingestion months; CG priced medians: (90,110,100) → 100;
     // u3 unpriced → imputed at the district median
-    rows(("u1", Some(90.0), "2025-01-10", "2025", "1"),
+    PointerCommit.publish(rows(("u1", Some(90.0), "2025-01-10", "2025", "1"),
       ("u2", Some(110.0), "2025-01-10", "2025", "1"),
       ("u3", None, "2025-01-10", "2025", "1"),
-      ("u4", Some(100.0), "2025-01-10", "2025", "2"))
-      .write.partitionBy("ingestion_year", "ingestion_month").parquet(silverPath)
+      ("u4", Some(100.0), "2025-01-10", "2025", "2")), silverPath, parts)
     val clock = to_timestamp(lit("2025-01-20 12:00:00"))
     GoldEtl.run(spark, silverPath, goldPath, clock)
-    val stats0 = spark.read.parquet(GoldEtl.statsPath(goldPath))
+    val stats0 = PointerCommit.read(spark, GoldEtl.statsPath(goldPath))
     assert(stats0.filter(col("level") === "district").head
       .getAs[Double]("median_unit_price") === 100.0)
 
     // day 2: stats-NEUTRAL churn in month 1 (new row at the median).
     // The incremental run must (a) prune the silver scan to month 1,
     // (b) produce byte-identical output to a full run for that group.
-    rows(("u5", Some(100.0), "2025-01-21", "2025", "1"))
-      .write.mode("append")
-      .partitionBy("ingestion_year", "ingestion_month").parquet(silverPath)
+    append(rows(("u5", Some(100.0), "2025-01-21", "2025", "1")))
     val clock2 = to_timestamp(lit("2025-01-21 12:00:00"))
     val inc = GoldEtl.runIncremental(spark, silverPath, goldPath,
       "2025-01-21", clock2)
@@ -223,7 +198,7 @@ class GoldEtlSpec extends SparkSuite {
       s"silver scan must prune to the churned ingestion partitions, read: $scanned")
     val goldFull = s"$dir/gold_full"
     GoldEtl.run(spark, silverPath, goldFull, clock2)
-    def monthOne(path: String) = spark.read.parquet(path)
+    def monthOne(path: String) = PointerCommit.read(spark, path)
       .filter(col("month") === "1").orderBy("project_id")
       .collect().map(_.toString).toSeq
     assert(monthOne(goldPath) === monthOne(goldFull),
@@ -232,13 +207,11 @@ class GoldEtlSpec extends SparkSuite {
     // day 3: stats-MOVING churn (two high prices shift the live median to
     // 105). The incremental keeps the BASELINE median (documented drift
     // window): u3 stays imputed at 100, not 105.
-    rows(("u6", Some(500.0), "2025-01-22", "2025", "1"),
-      ("u7", Some(600.0), "2025-01-22", "2025", "1"))
-      .write.mode("append")
-      .partitionBy("ingestion_year", "ingestion_month").parquet(silverPath)
+    append(rows(("u6", Some(500.0), "2025-01-22", "2025", "1"),
+      ("u7", Some(600.0), "2025-01-22", "2025", "1")))
     GoldEtl.runIncremental(spark, silverPath, goldPath, "2025-01-22",
       to_timestamp(lit("2025-01-22 12:00:00")))
-    def u3Price(path: String) = spark.read.parquet(path)
+    def u3Price(path: String) = PointerCommit.read(spark, path)
       .filter(col("project_id") === "u3").head.getAs[Double]("target_price_per_sqm")
     assert(u3Price(goldPath) === 100.0, "incremental keeps baseline stats (drift window)")
 
@@ -246,7 +219,7 @@ class GoldEtlSpec extends SparkSuite {
     GoldEtl.run(spark, silverPath, goldPath,
       to_timestamp(lit("2025-01-23 12:00:00")))
     assert(u3Price(goldPath) === 105.0, "re-baseline closes the drift window")
-    val stats1 = spark.read.parquet(GoldEtl.statsPath(goldPath))
+    val stats1 = PointerCommit.read(spark, GoldEtl.statsPath(goldPath))
     assert(stats1.filter(col("level") === "district").head
       .getAs[Double]("median_unit_price") === 105.0)
   }
@@ -258,8 +231,8 @@ class GoldEtlSpec extends SparkSuite {
     val inc = GoldEtl.runIncremental(spark, s"$base/silver", s"$incBase/gold",
       "2025-01-15", to_timestamp(lit("2025-01-15 13:00:00")))
     assert(inc.count() > 0)
-    val full = spark.read.parquet(s"$base/gold")
-    val incRead = spark.read.parquet(s"$incBase/gold")
+    val full = PointerCommit.read(spark, s"$base/gold")
+    val incRead = PointerCommit.read(spark, s"$incBase/gold")
     assert(incRead.count() === full.count())
     // identical content (project_id is the stable key)
     val fullIds = full.select("project_id").collect().map(_.getString(0)).sorted
@@ -270,23 +243,7 @@ class GoldEtlSpec extends SparkSuite {
     val noop = GoldEtl.runIncremental(spark, s"$base/silver", s"$incBase/gold",
       "2099-01-01", to_timestamp(lit("2025-01-16 13:00:00")))
     assert(noop.isEmpty)
-    assert(spark.read.parquet(s"$incBase/gold").count() === before)
-    // same run through the object-store manifest protocol end to end
-    // (pointer silver + manifest-incremental gold): identical gold
-    val pBase = java.nio.file.Files.createTempDirectory("graft_gold_ptr").toString
-    graft.fixtures.BronzeFixtures.write(pBase)
-    val pCfg = SilverEtl.RunConfig(s"$pBase/silver", s"$pBase/quarantine",
-      s"$pBase/metadata", "ptr_inc_run", "2025-01-15")
-    SilverEtl.run(spark, SilverEtl.readBronze(spark, s"$pBase/bronze", "2025-01-15"),
-      pCfg, to_timestamp(lit("2025-01-15 12:00:00")), graft.store.PointerCommit)
-    GoldEtl.runIncremental(spark, s"$pBase/silver", s"$pBase/gold",
-      "2025-01-15", to_timestamp(lit("2025-01-15 13:00:00")),
-      commit = graft.store.PointerCommit)
-    val ptrRead = graft.store.SnapshotStore.readPartitioned(spark,
-      s"$pBase/gold", Seq("quality_tier", "year", "month"))
-    assert(ptrRead.count() === full.count())
-    val ptrIds = ptrRead.select("project_id").collect().map(_.getString(0)).sorted
-    assert(ptrIds.toSeq === fullIds.toSeq)
+    assert(PointerCommit.read(spark, s"$incBase/gold").count() === before)
   }
 
   test("incremental gold maintains the stats sidecar O(churn): carried " +
@@ -318,12 +275,12 @@ class GoldEtlSpec extends SparkSuite {
     val b = silverRows("base", 12, "2025-01-10")
     PointerCommit.publish(b, s"$base/silver", parts)
     GoldEtl.run(spark, s"$base/silver", s"$base/gold",
-      to_timestamp(lit("2025-01-20 12:00:00")), PointerCommit)
+      to_timestamp(lit("2025-01-20 12:00:00")))
     // day 2: bootstrap sidecar (prev snapshot predates stats)
     PointerCommit.publish(b.unionByName(silverRows("n1", 1, "2025-01-21")),
       s"$base/silver", parts)
     GoldEtl.runIncremental(spark, s"$base/silver", s"$base/gold",
-      "2025-01-21", to_timestamp(lit("2025-01-21 12:00:00")), PointerCommit)
+      "2025-01-21", to_timestamp(lit("2025-01-21 12:00:00")))
     val snaps = new org.apache.hadoop.fs.Path(
       s"$base/gold", SnapshotStore.SnapshotsDir)
     def sidecarOf(name: String) = spark.read.parquet(
@@ -336,7 +293,7 @@ class GoldEtlSpec extends SparkSuite {
         .unionByName(silverRows("n2", 1, "2025-01-22")),
       s"$base/silver", parts)
     GoldEtl.runIncremental(spark, s"$base/silver", s"$base/gold",
-      "2025-01-22", to_timestamp(lit("2025-01-22 12:00:00")), PointerCommit)
+      "2025-01-22", to_timestamp(lit("2025-01-22 12:00:00")))
     val v3 = SnapshotStore.currentName(spark, s"$base/gold").get
     assert(v3 !== v2)
     val s2 = sidecarOf(v2).collect().map(r => r.getString(0) -> r).toMap

@@ -32,7 +32,7 @@ class Scd2MergeSpec extends SparkSuite {
       asOfDate = lit("2025-01-16"))
     // 50 closed-out versions + 5,000 current versions
     assert(n2 === 5050)
-    val snap = spark.read.parquet(root)
+    val snap = graft.store.PointerCommit.read(spark, root)
     assert(Scd2.violations(snap) === 0)
     assert(snap.filter(col("is_current") === true).count() === 5000)
     val closed = snap.filter(col("is_current") === false)

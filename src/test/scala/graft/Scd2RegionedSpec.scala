@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.scd.{FlatLayout, RegionedLayout, Scd2}
-import graft.store.PointerCommit
+import graft.store.{PointerCommit, SnapshotStore}
 
 /** The round-3 verdict's one scale-killer: the flat SCD2 merge rewrites
   * the full history snapshot every run. The regioned layout must (a)
@@ -71,15 +71,14 @@ class Scd2RegionedSpec extends SparkSuite {
     val d3 = runDay(mkBatch(day3upd, "v3", "2025-01-17"), "2025-01-17")
     assert(d3._1 === d3._2 && d3._1 === 2600 + 400)
 
-    val flatSnap = spark.read.parquet(flat)
+    val flatSnap = PointerCommit.read(spark, flat)
     val regSnap = Scd2.readRegioned(spark, reg)
     assert(canon(flatSnap) === canon(regSnap))
     assert(Scd2.violations(regSnap) === 0)
     // the cheap consumer path: current region only, no history union
     assert(Scd2.readRegionedCurrent(spark, reg).count() === 2200)
-    assert(RegionedLayout.readCurrent(spark, reg,
-      graft.store.DirectorySwapCommit).filter(col("is_current") === false)
-      .count() === 0)
+    assert(RegionedLayout.readCurrent(spark, reg)
+      .filter(col("is_current") === false).count() === 0)
   }
 
   test("closed region is append-only and write volume tracks churn, not history") {
@@ -134,12 +133,12 @@ class Scd2RegionedSpec extends SparkSuite {
     assert(closedAfterD3.exists(_._1.contains("valid_to=2025-01-17")))
   }
 
-  /** Faithful crash simulation: snapshot the current-region dir (data
-    * AND the `_version` stamp together — exactly what a failed
-    * tmp-dir rename leaves behind) so a "retry" re-reads the identical
-    * pre-publish state, version included. Re-publishing stale DATA
-    * (the old simulation) would legitimately bump the version and
-    * describe a different history, not a crash. */
+  /** Faithful crash simulation: snapshot the whole current-region root
+    * (pointer, snapshot dirs and claims together — exactly what a crash
+    * before its pointer flip leaves behind) so a "retry" re-reads the
+    * identical pre-publish state, version included. Re-publishing stale
+    * DATA would legitimately advance the version and describe a
+    * different history, not a crash. */
   private def copyDir(src: String, dst: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val s = new Path(src); val d = new Path(dst)
@@ -225,46 +224,7 @@ class Scd2RegionedSpec extends SparkSuite {
     for (v <- Seq("A", "B", "A", "B"))
       Scd2.merge(spark, mkBatch(0 until 20, v, "2025-01-15"), flatPath,
         asOfDate = lit("2025-01-15"))
-    assert(canon(spark.read.parquet(flatPath)) === canon(snap))
-  }
-
-  test("stale _version across crashed bumpVersions cannot alias two merges (r16 ADVICE crash+ABA)") {
-    // swap protocol: bumpVersion runs AFTER the in-place partition swap,
-    // so a crash in between leaves the counter stale while the data
-    // moved. If every intermediate merge hits that window, two merges
-    // with identical close payloads read the SAME counter — the
-    // counter-keyed identity aliased them and the later close was
-    // dropped as a replay. The file-inventory fingerprint in the merge
-    // identity keeps them distinct: each landed swap wrote fresh part
-    // files. Simulate the crash by rewinding _version after each merge.
-    val root = Files.createTempDirectory("graft_scd2_reg_stale").toString + "/t"
-    Scd2.mergeRegioned(spark, mkBatch(0 until 20, "A", "2025-01-15"), root,
-      asOfDate = lit("2025-01-15"))
-    // go through the Hadoop fs so the local checksum sidecar stays valid
-    val vf = new Path(Scd2.currentRoot(root), "_version")
-    val fs = vf.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vStale = {
-      val in = fs.open(vf)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-    for (v <- Seq("B", "A")) {
-      Scd2.mergeRegioned(spark, mkBatch(0 until 20, v, "2025-01-15"), root,
-        asOfDate = lit("2025-01-15"))
-      // crash before bumpVersion: the swap landed, the counter did not
-      val out = fs.create(vf, true)
-      try out.write(vStale.getBytes("UTF-8")) finally out.close()
-    }
-    // this merge closes payload-A rows byte-identical to the first
-    // B-merge's closes, AND reads the same stale counter it read
-    Scd2.mergeRegioned(spark, mkBatch(0 until 20, "B", "2025-01-15"), root,
-      asOfDate = lit("2025-01-15"))
-    val snap = Scd2.readRegioned(spark, root)
-    assert(snap.filter(col("is_current") === false).count() === 60,
-      "a close aliased a stale-counter predecessor's done-marker")
-    assert(snap.filter(!col("is_current") &&
-      col("project_name") === "A-0").count() === 2)
-    assert(Scd2.violations(snap) === 0)
+    assert(canon(PointerCommit.read(spark, flatPath)) === canon(snap))
   }
 
   test("intra-day multi-merge keeps every close; midnight-straddle replay still swallowed") {
@@ -308,8 +268,7 @@ class Scd2RegionedSpec extends SparkSuite {
   test("regioned merge under the pointer protocol: parity + vacuum keeps referenced batches") {
     val root = Files.createTempDirectory("graft_scd2_reg_ptr").toString + "/t"
     def day(batch: DataFrame, date: String): Long =
-      Scd2.mergeRegioned(spark, batch, root, asOfDate = lit(date),
-        commit = PointerCommit)
+      Scd2.mergeRegioned(spark, batch, root, asOfDate = lit(date))
     day(mkBatch(day1, "v1", "2025-01-15"), "2025-01-15")
     day(mkBatch(day2upd, "v2", "2025-01-16")
       .unionByName(mkBatch(day2new, "v1", "2025-01-16")), "2025-01-16")
@@ -321,16 +280,16 @@ class Scd2RegionedSpec extends SparkSuite {
     // batch dir because the current manifest still references it
     val closed = Scd2.closedRoot(root)
     graft.store.SnapshotStore.vacuum(spark, closed, keepLast = 1)
-    val snap = Scd2.readRegioned(spark, root, PointerCommit)
+    val snap = Scd2.readRegioned(spark, root)
     assert(snap.count() === 3000)
     assert(snap.filter(col("is_current") === false).count() === 800)
     assert(snap.filter(col("valid_to") === "2025-01-16").count() === 400)
     assert(Scd2.violations(snap) === 0)
 
     // layout seam: RegionedLayout routes read/readCurrent/exists
-    assert(RegionedLayout.exists(spark, root, PointerCommit))
-    assert(RegionedLayout.readCurrent(spark, root, PointerCommit).count() === 2200)
-    assert(canon(RegionedLayout.read(spark, root, PointerCommit)) === canon(snap))
+    assert(RegionedLayout.exists(spark, root))
+    assert(RegionedLayout.readCurrent(spark, root).count() === 2200)
+    assert(canon(RegionedLayout.read(spark, root)) === canon(snap))
   }
 
   // keys spread over 4 spider partitions; the batch's ingestion_month is
@@ -399,11 +358,11 @@ class Scd2RegionedSpec extends SparkSuite {
     val root = Files.createTempDirectory("graft_scd2_reg_ptr_inc").toString + "/t"
     val allKeys = 0 until 400
     Scd2.mergeRegioned(spark, mkSpiderBatch(allKeys, "v1", "2025-01-15"), root,
-      asOfDate = lit("2025-01-15"), commit = PointerCommit)
+      asOfDate = lit("2025-01-15"))
     val sp3Keys = allKeys.filter(_ % 4 == 3).take(40)
     val n = Scd2.mergeRegioned(spark,
       mkSpiderBatch(sp3Keys, "v2", "2025-01-16", month = "02"), root,
-      asOfDate = lit("2025-01-16"), commit = PointerCommit)
+      asOfDate = lit("2025-01-16"))
     assert(n === 440)
 
     // the incremental version dir holds ONLY the churned spider's
@@ -415,10 +374,10 @@ class Scd2RegionedSpec extends SparkSuite {
     assert(v2files.forall(_._1.contains("spider_name=sp3")),
       s"v2 wrote non-churned partitions: ${v2files.filterNot(_._1.contains("spider_name=sp3"))}")
 
-    val cur = Scd2.readRegionedCurrent(spark, root, PointerCommit)
+    val cur = Scd2.readRegionedCurrent(spark, root)
     assert(cur.count() === 400)
     assert(cur.filter(col("ingestion_month") === "02").count() === 40)
-    assert(Scd2.violations(Scd2.readRegioned(spark, root, PointerCommit)) === 0)
+    assert(Scd2.violations(Scd2.readRegioned(spark, root)) === 0)
 
     // time travel to the pre-merge snapshot still works...
     assert(graft.store.SnapshotStore
@@ -426,7 +385,7 @@ class Scd2RegionedSpec extends SparkSuite {
     // ...and vacuum keeps v1 alive even at keepLast=1, because v2's
     // manifest carries its untouched partitions by reference
     graft.store.SnapshotStore.vacuum(spark, curRoot, keepLast = 1)
-    assert(Scd2.readRegionedCurrent(spark, root, PointerCommit).count() === 400)
+    assert(Scd2.readRegionedCurrent(spark, root).count() === 400)
   }
 
   test("closed-region compaction merges small files and preserves content exactly") {
@@ -439,14 +398,20 @@ class Scd2RegionedSpec extends SparkSuite {
       asOfDate = lit("2025-01-16"))
     Scd2.mergeRegioned(spark, mkBatch(50 until 100, "v3", "2025-01-16"), root,
       asOfDate = lit("2025-01-16"))
-    val closedDir = s"${Scd2.closedRoot(root)}/valid_to=2025-01-16"
-    def files(dir: String): Int =
-      inventory(dir).count(_._1.endsWith(".parquet"))
-    assert(files(closedDir) >= 2, "fixture should have accreted file sets")
+    // data files the live closed snapshot holds for one valid_to date,
+    // across every close_batch entry its manifest names
+    val closed = Scd2.closedRoot(root)
+    def files(date: String): Int =
+      SnapshotStore.currentEntries(spark, closed, 2).get.toSeq
+        .filter(_._1.startsWith(s"valid_to=$date/"))
+        .map { case (rel, ver) =>
+          inventory(s"$closed/${SnapshotStore.SnapshotsDir}/$ver/$rel").size }
+        .sum
+    assert(files("2025-01-16") >= 2, "fixture should have accreted file sets")
     val before = canon(Scd2.readRegioned(spark, root))
 
     assert(Scd2.compactClosed(spark, root, maxFilesPerPartition = 1) === 1)
-    assert(files(closedDir) === 1)
+    assert(files("2025-01-16") === 1)
     assert(canon(Scd2.readRegioned(spark, root)) === before)
     // append-only resumes cleanly after compaction
     Scd2.mergeRegioned(spark, mkBatch(100 until 120, "v4", "2025-01-17"), root,
@@ -459,32 +424,30 @@ class Scd2RegionedSpec extends SparkSuite {
   test("closed-region compaction under the pointer protocol: atomic manifest flip") {
     val root = Files.createTempDirectory("graft_scd2_compact_ptr").toString + "/t"
     def day(batch: DataFrame, date: String): Unit = {
-      Scd2.mergeRegioned(spark, batch, root, asOfDate = lit(date),
-        commit = PointerCommit); ()
+      Scd2.mergeRegioned(spark, batch, root, asOfDate = lit(date)); ()
     }
     day(mkBatch(0 until 500, "v1", "2025-01-15"), "2025-01-15")
     day(mkBatch(0 until 50, "v2", "2025-01-16"), "2025-01-16")
     day(mkBatch(50 until 100, "v3", "2025-01-16"), "2025-01-16")
-    val before = canon(Scd2.readRegioned(spark, root, PointerCommit))
+    val before = canon(Scd2.readRegioned(spark, root))
 
-    assert(Scd2.compactClosed(spark, root, maxFilesPerPartition = 1,
-      commit = PointerCommit) === 1)
-    assert(canon(Scd2.readRegioned(spark, root, PointerCommit)) === before)
+    assert(Scd2.compactClosed(spark, root, maxFilesPerPartition = 1) === 1)
+    assert(canon(Scd2.readRegioned(spark, root)) === before)
     // the compacted snapshot survives a tight vacuum (manifest-referenced)
     graft.store.SnapshotStore.vacuum(spark, Scd2.closedRoot(root), keepLast = 1)
-    assert(canon(Scd2.readRegioned(spark, root, PointerCommit)) === before)
+    assert(canon(Scd2.readRegioned(spark, root)) === before)
   }
 
   test("optimizeCurrentWithStats: content identical, range reads skip a " +
     "strict file subset, and the next merge still converges") {
     val root = Files.createTempDirectory("graft_scd2_stats").toString + "/t"
     Scd2.mergeRegioned(spark, mkBatch(day1, "v1", "2025-01-15"), root,
-      asOfDate = lit("2025-01-15"), commit = PointerCommit)
-    val before = canon(Scd2.readRegionedCurrent(spark, root, PointerCommit))
+      asOfDate = lit("2025-01-15"))
+    val before = canon(Scd2.readRegionedCurrent(spark, root))
     Scd2.optimizeCurrentWithStats(spark, root, sortCol = "universal_id",
       numFiles = 8, statCols = Seq("universal_id"))
     // content identity through the clustering republish
-    assert(canon(Scd2.readRegionedCurrent(spark, root, PointerCommit))
+    assert(canon(Scd2.readRegionedCurrent(spark, root))
       === before)
     // the sidecar-pruned range read: strict subset of files, exact rows
     val (sel, all) = graft.store.FileStats.pruneFiles(
@@ -502,8 +465,8 @@ class Scd2RegionedSpec extends SparkSuite {
     // snapshot carries no stale sidecar: the pruned read fails loudly
     // instead of serving yesterday's file list
     Scd2.mergeRegioned(spark, mkBatch(day2upd, "v2", "2025-01-16"), root,
-      asOfDate = lit("2025-01-16"), commit = PointerCommit)
-    val cur = Scd2.readRegionedCurrent(spark, root, PointerCommit)
+      asOfDate = lit("2025-01-16"))
+    val cur = Scd2.readRegionedCurrent(spark, root)
     assert(cur.count() === day1.size)
     assert(cur.filter(col("project_name").startsWith("v2")).count()
       === day2upd.size)
@@ -531,14 +494,14 @@ class Scd2RegionedSpec extends SparkSuite {
       .unionByName(spiderBatch(0 until 300, "v1", "spB", "2025-01-15"))
       .unionByName(spiderBatch(0 until 300, "v1", "spC", "2025-01-15"))
     Scd2.mergeRegioned(spark, day1, root,
-      asOfDate = lit("2025-01-15"), commit = PointerCommit)
+      asOfDate = lit("2025-01-15"))
     Scd2.optimizeCurrentWithStats(spark, root, sortCol = "universal_id",
       numFiles = 4, statCols = Seq("universal_id"))
     // churn ONLY spA; spB/spC exist solely as rows inside the flat files
     Scd2.mergeRegioned(spark,
       spiderBatch(0 until 100, "v2", "spA", "2025-01-16"), root,
-      asOfDate = lit("2025-01-16"), commit = PointerCommit)
-    val cur = Scd2.readRegionedCurrent(spark, root, PointerCommit)
+      asOfDate = lit("2025-01-16"))
+    val cur = Scd2.readRegionedCurrent(spark, root)
     assert(cur.count() === 900,
       "untouched partitions' rows must survive the post-optimize merge")
     assert(cur.filter(col("spider_name") === "spB").count() === 300)
@@ -548,8 +511,8 @@ class Scd2RegionedSpec extends SparkSuite {
     // merge carries untouched partitions by reference again
     Scd2.mergeRegioned(spark,
       spiderBatch(100 until 200, "v3", "spB", "2025-01-17"), root,
-      asOfDate = lit("2025-01-17"), commit = PointerCommit)
-    val cur2 = Scd2.readRegionedCurrent(spark, root, PointerCommit)
+      asOfDate = lit("2025-01-17"))
+    val cur2 = Scd2.readRegionedCurrent(spark, root)
     assert(cur2.count() === 900)
     assert(cur2.filter(col("project_name").startsWith("v3")).count() === 100)
     assert(cur2.filter(col("spider_name") === "spC").count() === 300)
@@ -558,12 +521,15 @@ class Scd2RegionedSpec extends SparkSuite {
   test("FlatLayout keeps the reference-parity single-table behavior") {
     val root = Files.createTempDirectory("graft_scd2_flat_seam").toString + "/t"
     FlatLayout.merge(spark, mkBatch(0 until 50, "v1", "2025-01-15"), root,
-      lit("2025-01-15"), graft.store.DirectorySwapCommit)
+      lit("2025-01-15"))
     FlatLayout.merge(spark, mkBatch(0 until 50, "v2", "2025-01-16"), root,
-      lit("2025-01-16"), graft.store.DirectorySwapCommit)
-    val snap = spark.read.parquet(root)
+      lit("2025-01-16"))
+    // one table at `root`: history and current rows in each snapshot
+    assert(FlatLayout.exists(spark, root))
+    assert(SnapshotStore.versions(spark, root) === Seq("v000000001", "v000000002"))
+    val snap = FlatLayout.read(spark, root)
     assert(snap.count() === 100)
-    assert(FlatLayout.readCurrent(spark, root,
-      graft.store.DirectorySwapCommit).count() === 50)
+    assert(snap.filter(col("is_current") === false).count() === 50)
+    assert(FlatLayout.readCurrent(spark, root).count() === 50)
   }
 }

@@ -38,7 +38,7 @@ class SilverEtlSpec extends SparkSuite {
     val bronze = SilverEtl.readBronze(spark, s"$base/bronze", "2025-01-15")
     SilverEtl.run(spark, bronze, cfg, fixedClock)
   }
-  private lazy val silver = spark.read.parquet(cfg.silverPath)
+  private lazy val silver = PointerCommit.read(spark, cfg.silverPath)
 
   test("per-step counts match the fixture design") {
     assert(stats.recordsRead === graft.fixtures.BronzeFixtures.TotalRecords)
@@ -213,12 +213,12 @@ class SilverEtlSpec extends SparkSuite {
 
   test("SCD2 second run closes out changed rows, keeps invariant") {
     stats // ensure first run completed
-    val silverBefore = spark.read.parquet(cfg.silverPath)
+    val silverBefore = PointerCommit.read(spark, cfg.silverPath)
     val changed = silverBefore.filter(col("source_id") === "ch_1")
       .withColumn("project_name", lit("Renamed Project"))
     val day2 = to_date(to_timestamp(lit("2025-01-16 12:00:00"))).cast("string")
     Scd2.merge(spark, changed, cfg.silverPath, asOfDate = day2)
-    val after = spark.read.parquet(cfg.silverPath)
+    val after = PointerCommit.read(spark, cfg.silverPath)
     val versions = after.filter(col("source_id") === "ch_1")
       .orderBy(col("is_current")).collect()
     assert(versions.length === 2)
@@ -229,11 +229,11 @@ class SilverEtlSpec extends SparkSuite {
     assert(current.getAs[String]("project_name") === "Renamed Project")
     assert(Scd2.violations(after) === 0)
     // re-merging identical data must not duplicate current rows.
-    // (re-read: the swap invalidated the pre-merge frame's file listing)
-    val changed2 = spark.read.parquet(cfg.silverPath)
+    // (re-read: the merge published a new snapshot)
+    val changed2 = PointerCommit.read(spark, cfg.silverPath)
       .filter(col("source_id") === "ch_1" && col("is_current") === true)
     Scd2.merge(spark, changed2, cfg.silverPath, asOfDate = day2)
-    assert(Scd2.violations(spark.read.parquet(cfg.silverPath)) === 0)
+    assert(Scd2.violations(PointerCommit.read(spark, cfg.silverPath)) === 0)
   }
 
   test("empty day no-ops: missing spider dirs dropped, zero-record day returns zero stats") {
@@ -270,7 +270,7 @@ class SilverEtlSpec extends SparkSuite {
     val bronze = SilverEtl.readBronze(spark, s"$dir/bronze", "2025-01-15")
     SilverEtl.run(spark, bronze, cfg, to_timestamp(lit("2025-01-15 12:00:00")))
     def snapshot() = {
-      val df = spark.read.parquet(s"$dir/silver")
+      val df = PointerCommit.read(spark, s"$dir/silver")
       df.select(df.columns.sorted.map(col): _*)
         .orderBy("universal_id").collect().map(_.toString).toSeq
     }
@@ -279,7 +279,7 @@ class SilverEtlSpec extends SparkSuite {
     assert(written === before.length)
     // content-level equality, not just row counts
     assert(snapshot() === before)
-    assert(graft.scd.Scd2.violations(spark.read.parquet(s"$dir/silver")) === 0)
+    assert(graft.scd.Scd2.violations(PointerCommit.read(spark, s"$dir/silver")) === 0)
   }
 
   // ------------------------------------------------- pinned outputs
@@ -321,10 +321,9 @@ class SilverEtlSpec extends SparkSuite {
       s"$root/quarantine", s"$root/metadata", "pin_run", "")
     def day(bronze: String, date: String): SilverEtl.EtlStats =
       SilverEtl.run(spark, SilverEtl.readBronze(spark, bronze, date),
-        cfg.copy(runId = s"pin_$date", startDate = date), clockOf(date),
-        commit = PointerCommit, layout = RegionedLayout)
-    def current: DataFrame = Scd2.readRegionedCurrent(spark, cfg.silverPath, PointerCommit)
-    def closed: DataFrame = Scd2.readRegioned(spark, cfg.silverPath, PointerCommit)
+        cfg.copy(runId = s"pin_$date", startDate = date), clockOf(date), layout = RegionedLayout)
+    def current: DataFrame = Scd2.readRegionedCurrent(spark, cfg.silverPath)
+    def closed: DataFrame = Scd2.readRegioned(spark, cfg.silverPath)
       .filter(col("is_current") === false)
     def quarantine: DataFrame = spark.read.parquet(cfg.quarantinePath)
     def metadata: DataFrame = spark.read.parquet(cfg.metadataPath)

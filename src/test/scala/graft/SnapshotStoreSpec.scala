@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.gold.GoldEtl
-import graft.store.{DirectorySwapCommit, PointerCommit, SnapshotStore}
+import graft.store.{PointerCommit, SnapshotStore}
 import graft.scd.Scd2
 
 /** Object-store-safe commit protocol: versioned snapshots + atomic
@@ -87,11 +87,11 @@ class SnapshotStoreSpec extends SparkSuite {
           "ingestion_month")
     // first load
     val n1 = Scd2.merge(spark, batch("P1", "2025-01-15"), root,
-      asOfDate = lit("2025-01-15"), commit = PointerCommit)
+      asOfDate = lit("2025-01-15"))
     assert(n1 === 2)
     // change u1 → close-out + append; table readable ONLY via pointer
     val n2 = Scd2.merge(spark, batch("P1-renamed", "2025-01-16"), root,
-      asOfDate = lit("2025-01-16"), commit = PointerCommit)
+      asOfDate = lit("2025-01-16"))
     val snap = PointerCommit.read(spark, root)
     assert(n2 === snap.count())
     assert(Scd2.violations(snap) === 0)
@@ -105,7 +105,7 @@ class SnapshotStoreSpec extends SparkSuite {
     assert(snap.filter(col("universal_id") === "u2").count() === 1)
     // optimize over the pointer protocol preserves content
     val n3 = Scd2.optimize(spark, root,
-      clusterCols = Seq("universal_id", "spider_name"), commit = PointerCommit)
+      clusterCols = Seq("universal_id", "spider_name"))
     assert(n3 === n2)
     assert(PointerCommit.read(spark, root).count() === n2)
   }
@@ -115,7 +115,7 @@ class SnapshotStoreSpec extends SparkSuite {
     val root = freshRoot()
     val df = Seq(("p1", "high", 2025, 1), ("p2", "low", 2025, 2))
       .toDF("project_id", "quality_tier", "year", "month")
-    graft.gold.GoldEtl.writeGold(df, root, PointerCommit)
+    graft.gold.GoldEtl.writeGold(df, root)
     val back = SnapshotStore.read(spark, root)
     assert(back.count() === 2)
     // partition layout preserved inside the versioned snapshot dir
@@ -167,31 +167,29 @@ class SnapshotStoreSpec extends SparkSuite {
   test("full silver+gold pipeline over PointerCommit matches the directory-swap run") {
     import graft.silver.SilverEtl
     import graft.gold.GoldEtl
-    def pipeline(commit: graft.store.TableCommit): (String, Long) = {
-      val dir = Files.createTempDirectory("graft_e2e_ptr").toString
-      graft.fixtures.BronzeFixtures.write(dir)
-      val cfg = SilverEtl.RunConfig(s"$dir/silver", s"$dir/quarantine",
-        s"$dir/metadata", "ptr_run", "2025-01-15")
-      val bronze = SilverEtl.readBronze(spark, s"$dir/bronze", "2025-01-15")
-      val stats = SilverEtl.run(spark, bronze, cfg,
-        to_timestamp(lit("2025-01-15 12:00:00")), commit)
-      GoldEtl.run(spark, s"$dir/silver", s"$dir/gold",
-        to_timestamp(lit("2025-01-15 13:00:00")), commit)
-      (dir, stats.recordsWritten)
-    }
-    val (swapDir, swapWritten) = pipeline(DirectorySwapCommit)
-    val (ptrDir, ptrWritten) = pipeline(PointerCommit)
-    assert(ptrWritten === swapWritten)
-    // silver invariants hold through the pointer protocol
-    val ptrSilver = PointerCommit.read(spark, s"$ptrDir/silver")
-    assert(graft.scd.Scd2.violations(ptrSilver) === 0)
-    assert(ptrSilver.count() === spark.read.parquet(s"$swapDir/silver").count())
-    // gold parity: same project rows either way
-    val swapIds = spark.read.parquet(s"$swapDir/gold")
+    val dir = Files.createTempDirectory("graft_e2e_ptr").toString
+    graft.fixtures.BronzeFixtures.write(dir)
+    val cfg = SilverEtl.RunConfig(s"$dir/silver", s"$dir/quarantine",
+      s"$dir/metadata", "ptr_run", "2025-01-15")
+    val bronze = SilverEtl.readBronze(spark, s"$dir/bronze", "2025-01-15")
+    val stats = SilverEtl.run(spark, bronze, cfg,
+      to_timestamp(lit("2025-01-15 12:00:00")))
+    GoldEtl.run(spark, s"$dir/silver", s"$dir/gold",
+      to_timestamp(lit("2025-01-15 13:00:00")))
+    // the directory-swap run of the same fixture, recorded before that
+    // protocol was removed: 36 silver rows, and the MD5 of its gold
+    // project_id set (sorted, newline-joined)
+    assert(stats.recordsWritten === 36)
+    val silver = PointerCommit.read(spark, s"$dir/silver")
+    assert(graft.scd.Scd2.violations(silver) === 0)
+    assert(silver.count() === 36)
+    val ids = PointerCommit.read(spark, s"$dir/gold")
       .select("project_id").collect().map(_.getString(0)).sorted
-    val ptrIds = PointerCommit.read(spark, s"$ptrDir/gold")
-      .select("project_id").collect().map(_.getString(0)).sorted
-    assert(ptrIds.toSeq === swapIds.toSeq)
+    assert(ids.length === 36)
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(ids.mkString("\n").getBytes("UTF-8"))
+      .map(b => f"${b & 0xff}%02x").mkString
+    assert(md5 === "57a296a9118b2daba0e69234c4fde1ae")
   }
 
   test("readAt pins a version: old snapshots stay readable after new commits") {
@@ -297,9 +295,9 @@ class SnapshotStoreSpec extends SparkSuite {
     }
     val scdRoot = s"s3a://test-bucket$local/silver"
     Scd2.mergeRegioned(spark, batch(0 until 40, "v1", "2025-01-15"), scdRoot,
-      asOfDate = lit("2025-01-15"), commit = PointerCommit)
+      asOfDate = lit("2025-01-15"))
     val n = Scd2.mergeRegioned(spark, batch(0 until 10, "v2", "2025-01-16"),
-      scdRoot, asOfDate = lit("2025-01-16"), commit = PointerCommit)
+      scdRoot, asOfDate = lit("2025-01-16"))
     assert(n === 50)
     val snap = Scd2.readRegioned(spark, scdRoot, PointerCommit)
     assert(snap.filter(col("is_current") === false).count() === 10)
@@ -365,15 +363,6 @@ class SnapshotStoreSpec extends SparkSuite {
     // null → "" IS a change: pre+post images, never a silent match
     assert(feed.toSeq === Seq("update_postimage", "update_preimage"))
     assertFeedEqualsFullDiff(root, "v000000001", "v000000002", Seq("id"))
-  }
-
-  test("DirectorySwapCommit failed rename surfaces instead of losing the table") {
-    import spark.implicits._
-    val root = freshRoot()
-    DirectorySwapCommit.publish(Seq(1, 2).toDF("id"), root, Nil)
-    assert(DirectorySwapCommit.read(spark, root).count() === 2)
-    DirectorySwapCommit.publish(Seq(1, 2, 3).toDF("id"), root, Nil)
-    assert(DirectorySwapCommit.read(spark, root).count() === 3)
   }
 
   // ------------------------------------- change feed over partition entries
@@ -490,11 +479,11 @@ class SnapshotStoreSpec extends SparkSuite {
     val root = Files.createTempDirectory("graft_feed_scd").toString + "/t"
     Scd2.mergeRegioned(spark, batch((0 until 12).map(i =>
       (s"u$i", s"n$i", if (i % 2 == 0) "spA" else "spB", "01")), "2025-01-15"),
-      root, asOfDate = lit("2025-01-15"), commit = PointerCommit)
+      root, asOfDate = lit("2025-01-15"))
     // day 2 touches spA only: u0 renames and moves to month 02, u2 renames
     Scd2.mergeRegioned(spark, batch(Seq(("u0", "m0", "spA", "02"),
       ("u2", "m2", "spA", "01")), "2025-01-16"),
-      root, asOfDate = lit("2025-01-16"), commit = PointerCommit)
+      root, asOfDate = lit("2025-01-16"))
     val cur = Scd2.currentRoot(root)
     val Seq(v1, v2) = SnapshotStore.versions(spark, cur)
     // v1 is a plain full publish, split by its hive dirs at v2's depth

@@ -51,7 +51,7 @@ class StreamingSpec extends SparkSuite {
     val cols = Seq("universal_id", "project_name", "address", "is_current",
       "valid_from", "valid_to")
     def snap(root: String) =
-      graft.scd.Scd2.readRegioned(spark, root, graft.store.DirectorySwapCommit)
+      graft.scd.Scd2.readRegioned(spark, root)
         .select(cols.head, cols.tail: _*)
         .orderBy("universal_id", "valid_from").collect().toSeq
     val streamed = snap(streamRoot)
