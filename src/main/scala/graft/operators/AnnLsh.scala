@@ -47,8 +47,6 @@ object AnnLsh {
     * (qid, rnk, nid, cos_sim) ordered by (qid, rnk) — the v4 contract. */
   def topK(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
            radius: Int, k: Int = 5): DataFrame = {
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.SignRpKeys.register(spark)
     val sig = s"graft_sign_rp_keys(emb, $Bands, $PlanesPerBand)"
     // packed long join key (BandPack: the corpus side probes the
     // broadcast relation per row — composite keys measured 20× slower)

@@ -45,8 +45,6 @@ object BloomDedup {
     * history's distinct-key count. */
   def newRows(batch: DataFrame, history: DataFrame, keyCol: String,
               expectedItems: Long, fpp: Double = 0.03): DataFrame = {
-    val spark = batch.sparkSession
-    BloomContains.register(spark)
     // xxhash64 hashes BY TYPE: a batch key column of a different type
     // than history's hashes differently for equal values, so every
     // duplicate would probe "definitely new" and bypass the exact

@@ -52,7 +52,6 @@ object CosineLsh {
     */
   def bucketize(e: DataFrame, idCol: String, embCol: String,
                 dim: Int, bands: Int = 8, rowsPerBand: Int = 16): DataFrame = {
-    graft.functions.SignRpKeys.register(e.sparkSession)
     e.select(col(idCol).as("id"),
       posexplode(expr(s"graft_sign_rp_keys($embCol, $bands, $rowsPerBand)"))
         .as(Seq("band", "key")))

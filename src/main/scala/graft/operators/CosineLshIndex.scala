@@ -1,10 +1,10 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.store.GenLog
+import graft.store.{GenLog, IndexKind, IndexLifecycle}
 
 /** Persisted SIGN-RANDOM-PROJECTION key index — [[CosineLsh]]'s band
   * table as a managed artifact, so a daily embedding-ingest probes
@@ -31,10 +31,9 @@ import graft.store.GenLog
   * Exact cosine on the fetched candidates settles the decision, so LSH
   * fpp costs reads, never correctness.
   *
-  * Lifecycle mirrors [[LshBandIndex]] (generation log, atomic pointer
-  * flip, O(batch) delta advance, overlap REPLACEMENT on re-crawled ids,
-  * LSM compaction at [[MaxChain]]): cite LshBandIndex for the protocol
-  * arguments; this artifact reuses [[graft.store.GenLog]] wholesale.
+  * Lifecycle: the shared [[graft.store.IndexLifecycle]] (generation
+  * log, atomic pointer flip, O(batch) delta advance, overlap
+  * REPLACEMENT on re-crawled ids, LSM compaction at [[MaxChain]]).
   */
 object CosineLshIndex {
   val FormatVersion = 1
@@ -104,9 +103,6 @@ object CosineLshIndex {
     FormatVersion * 1000000 + bands * 1000 + rowsPerBand
   }
 
-  private def geomTag(bands: Int, rowsPerBand: Int): String =
-    s"@${bands}x$rowsPerBand"
-
   def indexRoot: String = sys.env.getOrElse(
     "GRAFT_COSLSH_INDEX_DIR",
     new java.io.File(sys.props("java.io.tmpdir"), "graft_coslsh_index").toString)
@@ -124,7 +120,7 @@ object CosineLshIndex {
     * key simply stopped being ensured — e.g. a geometry-default change
     * re-keys nothing but rebuilds in place, while a KEY change strands
     * the old root forever). Generation-level pruning inside a live root
-    * stays [[GenLog.pruneGens]]'s job. The `_CURRENT` stamp refreshes on
+    * stays [[GenLog.publish]]'s job. The `_CURRENT` stamp refreshes on
     * PUBLISH, not on read — pick `olderThanMs` beyond the slowest
     * republish cadence (the Delta-VACUUM retention discipline), or a
     * read-only-but-live index gets rebuilt on its next ensure (never a
@@ -135,7 +131,7 @@ object CosineLshIndex {
   def vacuumOrphanRoots(spark: SparkSession,
                         olderThanMs: Long = 7L * 24 * 3600 * 1000,
                         root: String = indexRoot): Seq[String] =
-    buildLock.synchronized {
+    life.synchronized {
       val rootPath = new Path(root)
       val fs = rootPath
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -155,30 +151,38 @@ object CosineLshIndex {
       // URI-qualified — a per-entry remove could miss and later serve a
       // deleted generation. Cheap to drop the whole memo instead:
       // revalidation is a pointer + meta read.
-      if (deleted.nonEmpty) validated.clear()
+      if (deleted.nonEmpty) life.resetValidationMemo()
       deleted
     }
 
-  private val buildLock = new Object
-  private val validated =
-    scala.collection.mutable.Map.empty[String, (String, String)]
-  private[graft] def resetValidationMemo(): Unit =
-    buildLock.synchronized(validated.clear())
+  private val life = new IndexLifecycle(maxChain)
+  private[graft] def resetValidationMemo(): Unit = life.resetValidationMemo()
+  /** Count of full-corpus fingerprint scans this JVM has run. */
+  private[graft] def fingerprintScans = life.fingerprintScans
 
-  /** Count of full-corpus fingerprint scans this JVM has run — the test
-    * seam proving snapshot-keyed revalidation never scans the corpus
-    * (the [[LshBandIndex.fingerprintScans]] pattern). */
-  private[graft] val fingerprintScans =
-    new java.util.concurrent.atomic.AtomicLong(0L)
+  private def storeRootOf(storeRoot: String): String =
+    indexPath(s"store:$storeRoot")
 
-  /** Order-insensitive content fingerprint over (id, emb) — xxhash64
-    * hashes array columns elementwise, and xor composes for disjoint
-    * deltas exactly as [[LshBandIndex]]'s text fingerprint does. */
-  private def fingerprint(e: DataFrame, idCol: String,
-                          embCol: String): Long = {
-    fingerprintScans.incrementAndGet()
-    e.agg(coalesce(expr(s"bit_xor(xxhash64(`$idCol`, `$embCol`))"), lit(0L)))
-      .head().getLong(0)
+  /** Vector rows `(__id, emb)` in `vecs/`, and the narrow key rows
+    * derived from the written parquet via [[CosineLsh.bucketize]] in
+    * `keys/`: the projection runs once over bytes on disk, so the two
+    * dirs can never disagree. */
+  private def kind(bands: Int, rowsPerBand: Int): IndexKind = new IndexKind {
+    val fmt = fmtFor(bands, rowsPerBand)
+    val geom = s"@${bands}x$rowsPerBand"
+    val label = s"cosine-LSH index at geometry ${bands}x$rowsPerBand"
+    val dataDir = "vecs"
+    override def payload(c: Column): Column = c.cast("array<double>")
+    def rows(b: DataFrame): DataFrame =
+      b.select(col("__id"), col("__p").as("emb"))
+    def write(spark: SparkSession, gen: Path, rows: DataFrame): Unit = {
+      val vecs = new Path(gen, "vecs").toString
+      rows.write.parquet(vecs)
+      CosineLsh.bucketize(spark.read.parquet(vecs),
+          "__id", "emb", dim = 0, bands = bands, rowsPerBand = rowsPerBand)
+        .select(col("id").as("__id"), col("band"), col("key"))
+        .write.parquet(new Path(gen, "keys").toString)
+    }
   }
 
   /** Ensure a fresh key index for the bare embedding frame `e` under
@@ -189,301 +193,73 @@ object CosineLshIndex {
   def ensure(spark: SparkSession, e: DataFrame, key: String,
              idCol: String = "vec_id", embCol: String = "emb",
              bands: Int = DefaultBands, rowsPerBand: Int = DefaultRowsPerBand): String =
-    buildLock.synchronized {
-      val fmt = fmtFor(bands, rowsPerBand)
-      val geom = geomTag(bands, rowsPerBand)
-      val root = indexPath(key)
-      val fs = new Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      validated.get(root) match {
-        case Some((t, gen)) if t.startsWith("fp:") && t.endsWith(geom) =>
-          return gen
-        case _ => ()
-      }
-      val vecs = e.select(col(idCol).cast("long").as("__id"),
-        col(embCol).cast("array<double>").as("emb"))
-      lazy val n = vecs.count()
-      lazy val fp = fingerprint(vecs, "__id", "emb")
-      GenLog.currentGen(fs, root)
-        .flatMap(g => GenLog.readMeta(spark, g, fmt).map(g -> _)) match {
-        case Some((gen, m)) if m.snap.isEmpty && m.n == n && m.fp == fp =>
-          validated(root) = (s"fp:$n:$fp$geom", gen.toString)
-          gen.toString
-        case _ =>
-          require(n > 0,
-            s"CosineLshIndex.ensure: refusing to index an empty corpus ($root)")
-          val gen = publishFromVecs(spark, root, vecs, bands, rowsPerBand,
-            GenLog.Meta(n, fmt, fp, None, None))
-          validated(root) = (s"fp:$n:$fp$geom", gen)
-          gen
-      }
-    }
+    life.ensure(spark, e, indexPath(key), idCol, embCol,
+      kind(bands, rowsPerBand))
 
   /** [[ensure]] for a corpus published through
     * [[graft.store.SnapshotStore]]: validity keyed on the current
     * snapshot NAME — revalidation is a pointer read plus the meta row,
-    * no corpus scan (the [[LshBandIndex.ensureForSnapshot]] contract;
-    * pinned via [[fingerprintScans]]). */
+    * no corpus scan (pinned via [[fingerprintScans]]). */
   def ensureForSnapshot(spark: SparkSession, storeRoot: String,
                         idCol: String = "vec_id", embCol: String = "emb",
                         bands: Int = DefaultBands, rowsPerBand: Int = DefaultRowsPerBand): String =
-    buildLock.synchronized {
-      val fmt = fmtFor(bands, rowsPerBand)
-      val geom = geomTag(bands, rowsPerBand)
-      val snap = graft.store.SnapshotStore.currentName(spark, storeRoot)
-        .getOrElse(throw new java.io.FileNotFoundException(
-          s"no snapshot published under $storeRoot — commit the corpus first"))
-      val root = indexPath(s"store:$storeRoot")
-      validated.get(root) match {
-        case Some((t, gen)) if t == s"snap:$snap$geom" => return gen
-        case _ => ()
-      }
-      val fs = new Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      GenLog.currentGen(fs, root)
-        .flatMap(g => GenLog.readMeta(spark, g, fmt).map(g -> _)) match {
-        case Some((gen, m)) if m.snap.contains(snap) =>
-          validated(root) = (s"snap:$snap$geom", gen.toString)
-          gen.toString
-        case _ =>
-          val vecs = graft.store.SnapshotStore.read(spark, storeRoot)
-            .select(col(idCol).cast("long").as("__id"),
-              col(embCol).cast("array<double>").as("emb"))
-          val n = vecs.count()
-          require(n > 0, s"CosineLshIndex.ensureForSnapshot: empty corpus " +
-            s"under $storeRoot")
-          val gen = publishFromVecs(spark, root, vecs, bands, rowsPerBand,
-            GenLog.Meta(n, fmt, 0L, Some(snap), None))
-          validated(root) = (s"snap:$snap$geom", gen)
-          gen
-      }
-    }
+    life.ensureForSnapshot(spark, storeRoot, storeRootOf(storeRoot), idCol,
+      embCol, kind(bands, rowsPerBand))
 
-  /** [[advanceWithBatch]] for a snapshot-keyed index, with the
-    * [[LshBandIndex.advanceForSnapshotWithBatch]] trust-but-verify nets:
-    * the caller asserts `batch` is exactly what grew the store, checked
-    * by the row-count identity (count(current snapshot) = indexed n +
-    * count(batch)) and the id-disjointness probe; a failed net falls
-    * back to a full rebuild against the current snapshot rather than
-    * recording a wrong chain under the new snapshot's key. An index
-    * already keyed to the CURRENT snapshot (a retried pipeline step in
-    * a fresh JVM) is returned as-is — a pointer read, no rebuild. */
+  /** [[advanceWithBatch]] for a snapshot-keyed index: the caller asserts
+    * `batch` is exactly what grew the store, checked by the row-count
+    * identity and the id-disjointness probe; a failed net falls back to
+    * the store's change feed (a delta when it is pure inserts, else a
+    * rebuild). An index already keyed to the CURRENT snapshot (a
+    * retried pipeline step in a fresh JVM) is returned as-is. */
   def advanceForSnapshotWithBatch(spark: SparkSession, storeRoot: String,
                                   batch: DataFrame,
                                   idCol: String = "vec_id",
                                   embCol: String = "emb",
                                   bands: Int = DefaultBands,
                                   rowsPerBand: Int = DefaultRowsPerBand): String =
-    buildLock.synchronized {
-      val fmt = fmtFor(bands, rowsPerBand)
-      val geom = geomTag(bands, rowsPerBand)
-      val snap = graft.store.SnapshotStore.currentName(spark, storeRoot)
-        .getOrElse(throw new java.io.FileNotFoundException(
-          s"no snapshot published under $storeRoot — commit the corpus first"))
-      val root = indexPath(s"store:$storeRoot")
-      validated.get(root) match {
-        case Some((t, gen)) if t == s"snap:$snap$geom" => return gen
-        case _ => ()
-      }
-      val fs = new Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val onDisk = GenLog.currentGen(fs, root)
-        .flatMap(g => GenLog.readMeta(spark, g, fmt).map(g -> _))
-      onDisk match {
-        // the advance already happened (crash after publish, retry in a
-        // fresh JVM): the live generation IS the current snapshot's —
-        // return it instead of churning a redundant full rebuild
-        case Some((g, m)) if m.snap.contains(snap) =>
-          validated(root) = (s"snap:$snap$geom", g.toString)
-          return g.toString
-        case _ => ()
-      }
-      val b = batch.select(col(idCol).cast("long").as("__id"),
-        col(embCol).cast("array<double>").as("emb")).localCheckpoint(true)
-      val viaBatch = onDisk match {
-        case Some((g, m)) =>
-          val countsOk =
-            graft.store.SnapshotStore.read(spark, storeRoot).count() ==
-              m.n + b.count()
-          lazy val overlaps = vecsOf(spark, g.toString, bands, rowsPerBand)
-            .select("__id")
-            .join(b.select("__id"), Seq("__id"), "left_semi")
-            .limit(1).count() > 0
-          countsOk && !overlaps
-        case _ => false
-      }
-      if (viaBatch)
-        advanceWithBatch(spark, s"store:$storeRoot", b, "__id", "emb",
-          bands, rowsPerBand, snap = Some(snap))
-      else {
-        val vecs = graft.store.SnapshotStore.read(spark, storeRoot)
-          .select(col(idCol).cast("long").as("__id"),
-            col(embCol).cast("array<double>").as("emb"))
-        val n = vecs.count()
-        require(n > 0, s"CosineLshIndex.advanceForSnapshotWithBatch: " +
-          s"empty corpus under $storeRoot")
-        val gen = publishFromVecs(spark, root, vecs, bands, rowsPerBand,
-          GenLog.Meta(n, fmt, 0L, Some(snap), None))
-        validated(root) = (s"snap:$snap$geom", gen)
-        gen
-      }
-    }
+    life.advanceForSnapshotWithBatch(spark, storeRoot, storeRootOf(storeRoot),
+      batch, idCol, embCol, kind(bands, rowsPerBand))
 
   /** O(batch) delta advance; overlapped ids are REPLACED (batch wins) by
-    * a rewrite over the chain's one-row-per-vector `vecs`, and a chain
-    * at [[maxChain]] compacts — both without touching any upstream
-    * corpus table ([[LshBandIndex.advanceWithBatch]]'s contract). An
-    * overlap voids the xor fingerprint (fp=0 in meta → next cross-JVM
-    * ensure rebuilds; safe, just uncached). `snap`, when given, re-keys
-    * validity to the new snapshot name. A ZERO-row batch (an
-    * identical-content republish) publishes a META-ONLY re-key
-    * generation — nothing recomputed, no empty data dirs grown into the
-    * chain ([[LshBandIndex.advanceWithBatch]]'s nb==0 arm); the
-    * compaction valve still applies so daily no-op republishes cannot
-    * grow the chain without bound. */
+    * a rewrite over the chain's one-row-per-vector `vecs`, a chain at
+    * [[maxChain]] compacts, and a zero-row batch publishes a meta-only
+    * re-key — all without touching any upstream corpus table. `snap`,
+    * when given, re-keys validity to the new snapshot name. */
   def advanceWithBatch(spark: SparkSession, key: String, batch: DataFrame,
                        idCol: String = "vec_id", embCol: String = "emb",
                        bands: Int = DefaultBands, rowsPerBand: Int = DefaultRowsPerBand,
                        snap: Option[String] = None): String =
-    buildLock.synchronized {
-      val fmt = fmtFor(bands, rowsPerBand)
-      val geom = geomTag(bands, rowsPerBand)
-      val root = indexPath(key)
-      val fs = new Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val (headGen, m) = GenLog.currentGen(fs, root)
-        .flatMap(g => GenLog.readMeta(spark, g, fmt).map(g -> _))
-        .getOrElse(throw new java.io.FileNotFoundException(
-          s"no live cosine-LSH index at geometry ${bands}x$rowsPerBand " +
-            s"under $root — ensure() a base first (a geometry change " +
-            "requires a rebuild, not an advance)"))
-      val b = batch.select(col(idCol).cast("long").as("__id"),
-        col(embCol).cast("array<double>").as("emb")).localCheckpoint(true)
-      val nb = b.count()
-      val compact =
-        GenLog.chain(spark, headGen, fmt).length >= maxChain
-      if (nb == 0) {
-        val tok0 = snap.map(s => s"snap:$s$geom")
-          .getOrElse(s"fp:${m.n}:${m.fp}$geom")
-        val gen0 =
-          if (compact)
-            publishFromVecs(spark, root,
-              vecsOf(spark, headGen.toString, bands, rowsPerBand),
-              bands, rowsPerBand,
-              GenLog.Meta(m.n, fmt, m.fp, snap, None))
-          else publishMetaOnly(spark, root,
-            GenLog.Meta(m.n, fmt, m.fp, snap, Some(headGen.getName)))
-        validated(root) = (tok0, gen0)
-        return gen0
-      }
-      val headIds = vecsOf(spark, headGen.toString, bands, rowsPerBand)
-        .select("__id")
-      val bIds = b.select("__id")
-      val overlapExists = headIds.join(bIds, Seq("__id"), "left_semi")
-        .limit(1).count() > 0
-      val nOverlap =
-        if (!overlapExists) 0L
-        else headIds.join(bIds, Seq("__id"), "left_semi").count()
-      val nNew = m.n + nb - nOverlap
-      val fpNew =
-        if (snap.isDefined || nOverlap > 0) 0L
-        else m.fp ^ fingerprint(b, "__id", "emb")
-      val tok = snap.map(s => s"snap:$s$geom").getOrElse(s"fp:$nNew:$fpNew$geom")
-      val gen =
-        if (nOverlap > 0 || compact) {
-          val hist0 = vecsOf(spark, headGen.toString, bands, rowsPerBand)
-          val hist =
-            if (nOverlap == 0) hist0
-            else hist0.join(bIds, Seq("__id"), "left_anti")
-          publishFromVecs(spark, root, hist.unionByName(b),
-            bands, rowsPerBand,
-            GenLog.Meta(nNew, fmt, fpNew, snap, None))
-        } else
-          publishFromVecs(spark, root, b, bands, rowsPerBand,
-            GenLog.Meta(nNew, fmt, fpNew, snap,
-              Some(headGen.getName)))
-      validated(root) = (tok, gen)
-      gen
-    }
+    life.advanceWithBatch(spark, indexPath(key), batch, idCol, embCol,
+      kind(bands, rowsPerBand), snap)
 
-  /** RTBF companion — the [[LshBandIndex.purgeForStore]] contract for
-    * the embedding index: DELETING store writers must call this in the
-    * same operation as the row deletes, because every chain generation
-    * persists the RAW embeddings (`vecs/`) of the rows it indexed — a
-    * forgotten vector would otherwise linger on disk and still match
-    * probes until some later advance happened to notice the churn. If
-    * an index exists for `storeRoot`, rebuild it against the store's
-    * CURRENT snapshot and prune every superseded generation; delete the
-    * index outright if the store emptied. No-op when the store has no
-    * index. O(history) rebuild — the price of a hard purge, paid only
-    * on deletes. */
+  /** RTBF companion — DELETING store writers must call this in the same
+    * operation as the row deletes, because every chain generation
+    * persists the RAW embeddings (`vecs/`) of the rows it indexed: see
+    * [[graft.store.IndexLifecycle.purgeForStore]]. */
   def purgeForStore(spark: SparkSession, storeRoot: String,
                     idCol: String = "vec_id", embCol: String = "emb",
                     bands: Int = DefaultBands, rowsPerBand: Int = DefaultRowsPerBand): Unit =
-    buildLock.synchronized {
-      val fmt = fmtFor(bands, rowsPerBand)
-      val geom = geomTag(bands, rowsPerBand)
-      val root = indexPath(s"store:$storeRoot")
-      val rootPath = new Path(root)
-      val fs = rootPath
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (GenLog.currentGen(fs, root).isDefined) {
-        validated.remove(root)
-        if (graft.store.SnapshotStore.read(spark, storeRoot)
-            .limit(1).count() == 0L) {
-          fs.delete(rootPath, true)
-        } else {
-          val snap = graft.store.SnapshotStore
-            .currentName(spark, storeRoot).get
-          val vecs = graft.store.SnapshotStore.read(spark, storeRoot)
-            .select(col(idCol).cast("long").as("__id"),
-              col(embCol).cast("array<double>").as("emb"))
-          val gen = publishFromVecs(spark, root, vecs, bands, rowsPerBand,
-            GenLog.Meta(vecs.count(), fmt, 0L, Some(snap), None))
-          // publish keeps the previous chain for in-flight readers — a
-          // purge must NOT: re-prune keeping only the fresh generation
-          GenLog.pruneGens(spark, fs, rootPath,
-            new Path(gen).getName, None, fmt,
-            spareYoungPublished = false)
-          validated(root) = (s"snap:$snap$geom", gen)
-        }
-      }
-    }
+    life.purgeForStore(spark, storeRoot, storeRootOf(storeRoot), idCol, embCol,
+      kind(bands, rowsPerBand))
 
   /** The live generation path under `key` at the given geometry, if
     * any (a generation built at another geometry reads as absent). */
   def currentGenPath(spark: SparkSession, key: String,
-                     bands: Int = DefaultBands, rowsPerBand: Int = DefaultRowsPerBand): Option[String] = {
-    val root = indexPath(key)
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    GenLog.currentGen(fs, root)
-      .filter(g => GenLog.readMeta(spark, g,
-        fmtFor(bands, rowsPerBand)).isDefined)
-      .map(_.toString)
-  }
-
-  private def chainDirOf(spark: SparkSession, genPath: String,
-                         sub: String, fmt: Int): DataFrame = {
-    val hadoop = spark.sparkContext.hadoopConfiguration
-    GenLog.chain(spark, new Path(genPath), fmt)
-      .map(g => new Path(g, sub))
-      .filter(p => p.getFileSystem(hadoop).exists(p))
-      .map(p => spark.read.parquet(p.toString))
-      .reduce(_ unionByName _)
-  }
+                     bands: Int = DefaultBands, rowsPerBand: Int = DefaultRowsPerBand): Option[String] =
+    life.currentGenPath(spark, indexPath(key), kind(bands, rowsPerBand))
 
   /** NARROW key rows `(__id, band, key)` of the chain — the only stream
     * a probe scans whole. */
   def narrowKeysOf(spark: SparkSession, genPath: String,
                    bands: Int = DefaultBands, rowsPerBand: Int = DefaultRowsPerBand): DataFrame =
-    chainDirOf(spark, genPath, "keys", fmtFor(bands, rowsPerBand))
+    GenLog.readChain(spark, new Path(genPath), fmtFor(bands, rowsPerBand), "keys")
 
   /** Vector rows `(__id, emb)` of the chain, one per vector — the
     * candidate-only fetch surface. */
   def vecsOf(spark: SparkSession, genPath: String,
              bands: Int = DefaultBands, rowsPerBand: Int = DefaultRowsPerBand): DataFrame =
-    chainDirOf(spark, genPath, "vecs", fmtFor(bands, rowsPerBand))
+    GenLog.readChain(spark, new Path(genPath), fmtFor(bands, rowsPerBand), "vecs")
 
   /** Cosine near-dup pairs TOUCHING the batch, probed against the
     * persisted index: `(src, dst, cs)` with src < dst and exact cosine
@@ -503,7 +279,6 @@ object CosineLshIndex {
   def incrementalPairs(batch: DataFrame, idCol: String, embCol: String,
                        historyKeys: DataFrame, historyVecs: DataFrame,
                        bands: Int = DefaultBands, rowsPerBand: Int = DefaultRowsPerBand): DataFrame = {
-    graft.functions.CosineSimilarity.register(batch.sparkSession)
     // eager checkpoint: the batch frame is referenced SIX times below
     // (key bucketize, vector sides of both pair joins, batch-internal
     // candidate pairs) plus the broadcast-sizing count — without the cut
@@ -568,45 +343,5 @@ object CosineLshIndex {
       .join(b.select(col("__id").as("dst"), col("emb").as("eb")), Seq("dst"))
       .select(col("src"), col("dst"), expr("graft_cosine(ea, eb)").as("cs"))
     histPairs.unionByName(batchPairs).dropDuplicates("src", "dst")
-  }
-
-  /** Meta-only re-key generation: no data dirs at all ([[chainDirOf]]
-    * skips them) — the nb==0 advance arm's publish. */
-  private def publishMetaOnly(spark: SparkSession, root: String,
-                              meta: GenLog.Meta): String = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prevGen = GenLog.currentGen(fs, root).map(_.getName)
-    val genName = GenLog.newGenName()
-    val gen = new Path(rootPath, genName)
-    GenLog.writeMeta(spark, gen, meta)
-    GenLog.publishGen(spark, root, genName)
-    GenLog.pruneGens(spark, fs, rootPath, genName, prevGen, meta.fmt)
-    gen.toString
-  }
-
-  /** Write `vecs` as a fresh generation's one-row-per-vector dir,
-    * re-read the written parquet and derive the narrow `keys` from it —
-    * the projection runs once over bytes on disk, so the two dirs can
-    * never disagree ([[LshBandIndex]]'s publishFromSigs discipline). */
-  private def publishFromVecs(spark: SparkSession, root: String,
-                              vecs: DataFrame, bands: Int,
-                              rowsPerBand: Int,
-                              meta: GenLog.Meta): String = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prevGen = GenLog.currentGen(fs, root).map(_.getName)
-    val genName = GenLog.newGenName()
-    val gen = new Path(rootPath, genName)
-    val vecsDir = new Path(gen, "vecs")
-    vecs.write.parquet(vecsDir.toString)
-    CosineLsh.bucketize(spark.read.parquet(vecsDir.toString),
-        "__id", "emb", dim = 0, bands = bands, rowsPerBand = rowsPerBand)
-      .select(col("id").as("__id"), col("band"), col("key"))
-      .write.parquet(new Path(gen, "keys").toString)
-    GenLog.writeMeta(spark, gen, meta)
-    GenLog.publishGen(spark, root, genName)
-    GenLog.pruneGens(spark, fs, rootPath, genName, prevGen, meta.fmt)
-    gen.toString
   }
 }

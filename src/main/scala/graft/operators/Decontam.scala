@@ -62,7 +62,6 @@ object Decontam {
     val ev = bands.filter(col("__split") === "eval")
       .select(col("__id").as(idCol), col("sig").as("sig_e"),
         BandPack.hashed(col("band_id"), col("band_hash")).as("bk"))
-    graft.functions.SignatureAgreement.register(docs.sparkSession)
     val hits = ev.join(train, Seq("bk"))
       .select(col(idCol), col("train_id"),
         expr("graft_sig_agreement(sig_e, sig_t)").as("est"))

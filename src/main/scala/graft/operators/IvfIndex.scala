@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -182,26 +182,6 @@ object IvfIndex {
       .head().getLong(0)
   }
 
-  // ---------------------------------------------- generation resolution
-  // The pointer/meta/chain/prune machinery is the shared
-  // [[graft.store.GenLog]]; these wrappers pin this index's meta shape
-  // (tuple (n, fp, snap, parent)) and format version at the call sites.
-
-  private def currentGen(fs: FileSystem, root: String): Option[Path] =
-    GenLog.currentGen(fs, root)
-
-  private def publishGen(spark: SparkSession, root: String,
-                         genName: String): Unit =
-    GenLog.publishGen(spark, root, genName)
-
-  private def readMeta(spark: SparkSession, gen: Path)
-      : Option[(Long, Long, Option[String], Option[String])] =
-    GenLog.readMeta(spark, gen, FormatVersion)
-      .map(m => (m.n, m.fp, m.snap, m.parent))
-
-  private def chain(spark: SparkSession, gen: Path): Seq[Path] =
-    GenLog.chain(spark, gen, FormatVersion)
-
   // ------------------------------------------------------------- ensure
 
   private val buildLock = new Object
@@ -233,11 +213,9 @@ object IvfIndex {
       case Some(gen) => return gen
       case None => ()
     }
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val e0 = corpus(spark, sfDir)
-    currentGen(fs, root).flatMap(g => readMeta(spark, g).map(g -> _)) match {
-      case Some((gen, (n, fp, _, _)))
-          if n == e0.count() && fp == fingerprint(e0) =>
+    GenLog.head(spark, root, FormatVersion) match {
+      case Some((gen, m)) if m.n == e0.count() && m.fp == fingerprint(e0) =>
         validated(root) = gen.toString
         gen.toString
       case _ =>
@@ -267,9 +245,8 @@ object IvfIndex {
         case Some((s0, gen)) if s0 == snap => return gen
         case _ => ()
       }
-      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      currentGen(fs, root).flatMap(g => readMeta(spark, g).map(g -> _)) match {
-        case Some((gen, (_, _, Some(s0), _))) if s0 == snap =>
+      GenLog.head(spark, root, FormatVersion) match {
+        case Some((gen, m)) if m.snap.contains(snap) =>
           validatedSnap(root) = (snap, gen.toString)
           gen.toString
         case _ =>
@@ -307,18 +284,15 @@ object IvfIndex {
         case Some((s0, gen)) if s0 == snap => return gen
         case _ => ()
       }
-      val fs = new Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       def retrain(): String = {
         val e0 = graft.store.SnapshotStore.read(spark, storeRoot)
           .select(col(idCol).as("vec_id"),
             col(embCol).cast("array<double>").as("emb"))
         build(spark, e0, root, snap = Some(snap))
       }
-      val gen = currentGen(fs, root)
-        .flatMap(g => readMeta(spark, g).map(g -> _)) match {
-        case Some((g, (_, _, Some(s0), _))) if s0 == snap => g.toString
-        case Some((g, (_, _, Some(s0), _))) =>
+      val gen = GenLog.head(spark, root, FormatVersion) match {
+        case Some((g, m)) if m.snap.contains(snap) => g.toString
+        case Some((g, m)) if m.snap.isDefined =>
           // pure-insert delta from the indexed snapshot? The Try wraps
           // ONLY the change-feed computation: the indexed version may
           // have been vacuumed, and THAT legitimately degrades to a
@@ -330,7 +304,7 @@ object IvfIndex {
           // already-live delta.
           val feedOk = scala.util.Try {
             val feed = graft.store.SnapshotStore.changesBetween(
-                spark, storeRoot, s0, snap, Seq(idCol))
+                spark, storeRoot, m.snap.get, snap, Seq(idCol))
               .localCheckpoint(true)
             val churn = feed.filter(col("change_type") =!= "insert")
               .limit(1).count()
@@ -345,7 +319,8 @@ object IvfIndex {
             // retrain. Churn — or a chain at the compaction cap —
             // falls to retrain (which collapses the chain).
             case Some((churn, batch))
-                if churn == 0 && chain(spark, g).length < maxChain =>
+                if churn == 0 &&
+                  GenLog.chain(spark, g, FormatVersion).length < maxChain =>
               appendGen(spark, root, g, batch, Some(snap))
             case _ => retrain()
           }
@@ -388,19 +363,16 @@ object IvfIndex {
         case Some((s0, gen)) if s0 == snap => return gen
         case _ => ()
       }
-      val fs = new Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       // one batch-sized materialization: the count guard, the overlap
       // probe, and the encode+write below all read THIS frame — a
       // non-deterministic input can't desynchronize meta.n from the
       // written rows
       val b = batch.select(col(idCol).as("vec_id"),
         col(embCol).cast("array<double>").as("emb")).localCheckpoint(true)
-      val viaBatch = currentGen(fs, root)
-        .flatMap(g => readMeta(spark, g).map(g -> _)) match {
-        case Some((g, (n0, _, Some(s0), _))) if s0 != snap =>
+      val viaBatch = GenLog.head(spark, root, FormatVersion) match {
+        case Some((g, m)) if m.snap.exists(_ != snap) =>
           val nNow = graft.store.SnapshotStore.read(spark, storeRoot).count()
-          val countsOk = nNow == n0 + b.count()
+          val countsOk = nNow == m.n + b.count()
           // no forced broadcast: the batch is localCheckpoint'd, so
           // AQE auto-broadcasts it under the threshold; an over-limit
           // batch degrades to a shuffle instead of the
@@ -408,10 +380,12 @@ object IvfIndex {
           lazy val overlaps = cells(spark, g.toString).select("vec_id")
             .join(b.select("vec_id"), Seq("vec_id"), "left_semi")
             .limit(1).count() > 0
-          if (countsOk && chain(spark, g).length < maxChain && !overlaps)
+          if (countsOk &&
+              GenLog.chain(spark, g, FormatVersion).length < maxChain &&
+              !overlaps)
             Some(appendGen(spark, root, g, b, Some(snap)))
           else None
-        case Some((g, (_, _, Some(s0), _))) if s0 == snap => Some(g.toString)
+        case Some((g, m)) if m.snap.contains(snap) => Some(g.toString)
         case _ => None
       }
       viaBatch match {
@@ -431,10 +405,10 @@ object IvfIndex {
     * chains). */
   private def appendGen(spark: SparkSession, root: String, head: Path,
                         batch: DataFrame, snap: Option[String]): String = {
-    val (n0, fp0, _, _) = readMeta(spark, head).getOrElse(
+    val m = GenLog.readMeta(spark, head, FormatVersion).getOrElse(
       throw new IllegalStateException(s"append: unreadable head meta at $head"))
     val nb = batch.count()
-    if (nb == 0) return rekeyGen(spark, root, head, n0, fp0, snap)
+    if (nb == 0) return rekeyGen(spark, root, head, m, snap)
     val cents = codebook(spark, head.toString)
       .select(col("cell").cast("long"), col("cvec").cast("array<double>"))
       .collect()
@@ -447,30 +421,26 @@ object IvfIndex {
     val best = graft.functions.NearestCentroid.assignColumn(
       spark, col("emb"), cents)
     val enc = graft.functions.PqEncode.encodeColumn(spark, col("emb"), pqEntries)
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prevGen = currentGen(fs, root).map(_.getName)
-    val genName = GenLog.newGenName()
-    val gen = new Path(rootPath, genName)
-    batch
-      .withColumn("graft_best", best)
-      .withColumn("graft_enc", enc)
-      .select(col("vec_id"), col("emb"),
-        col("graft_best.cid").cast("int").as("cell"),
-        col("graft_enc.code").as("code"), col("graft_enc.rnorm").as("rnorm"))
-      .repartition(col("cell"))
-      .write.partitionBy("cell").parquet(new Path(gen, "cells").toString)
-    spark.read.parquet(new Path(head, "codebook").toString)
-      .repartition(1).write.parquet(new Path(gen, "codebook").toString)
-    spark.read.parquet(new Path(head, "pq").toString)
-      .repartition(1).write.parquet(new Path(gen, "pq").toString)
     val fpB = if (snap.isDefined) 0L else fingerprint(batch)
-    GenLog.writeMeta(spark, gen,
-      GenLog.Meta(n0 + nb, FormatVersion, fp0 ^ fpB, snap, Some(head.getName)))
-    publishGen(spark, root, genName)
-    pruneGens(spark, fs, rootPath, genName, prevGen)
-    gen.toString
+    GenLog.publish(spark, root, GenLog.Meta(m.n + nb, FormatVersion,
+        m.fp ^ fpB, snap, Some(head.getName))) { gen =>
+      batch
+        .withColumn("graft_best", best)
+        .withColumn("graft_enc", enc)
+        .select(col("vec_id"), col("emb"),
+          col("graft_best.cid").cast("int").as("cell"),
+          col("graft_enc.code").as("code"), col("graft_enc.rnorm").as("rnorm"))
+        .repartition(col("cell"))
+        .write.partitionBy("cell").parquet(new Path(gen, "cells").toString)
+      copyCodebooks(spark, head, gen)
+    }
   }
+
+  /** Copy the tiny codebook and pq dirs, so every generation stays
+    * self-contained for codebook readers. */
+  private def copyCodebooks(spark: SparkSession, from: Path, to: Path): Unit =
+    Seq("codebook", "pq").foreach(d => spark.read.parquet(new Path(from, d).toString)
+      .repartition(1).write.parquet(new Path(to, d).toString))
 
   /** A META-ONLY generation: the corpus republished with identical
     * content under a new snapshot name (compaction, no-op commit) —
@@ -478,22 +448,10 @@ object IvfIndex {
     * retraining. Chained like a delta; has no cells dir (chain readers
     * skip it). */
   private def rekeyGen(spark: SparkSession, root: String, head: Path,
-                       n0: Long, fp0: Long, snap: Option[String]): String = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prevGen = currentGen(fs, root).map(_.getName)
-    val genName = GenLog.newGenName()
-    val gen = new Path(rootPath, genName)
-    spark.read.parquet(new Path(head, "codebook").toString)
-      .repartition(1).write.parquet(new Path(gen, "codebook").toString)
-    spark.read.parquet(new Path(head, "pq").toString)
-      .repartition(1).write.parquet(new Path(gen, "pq").toString)
-    GenLog.writeMeta(spark, gen,
-      GenLog.Meta(n0, FormatVersion, fp0, snap, Some(head.getName)))
-    publishGen(spark, root, genName)
-    pruneGens(spark, fs, rootPath, genName, prevGen)
-    gen.toString
-  }
+                       m: GenLog.Meta, snap: Option[String]): String =
+    GenLog.publish(spark, root,
+      m.copy(snap = snap, parent = Some(head.getName)))(
+      copyCodebooks(spark, head, _))
 
   /** Train the codebook and write codebook + PQ + cell-partitioned corpus
     * + meta into a fresh generation dir, publish it via the atomic
@@ -501,7 +459,6 @@ object IvfIndex {
     * superseded. Returns the new generation path. */
   private[graft] def build(spark: SparkSession, e0: DataFrame, root: String,
                            snap: Option[String]): String = {
-    graft.functions.CosineSimilarity.register(spark)
     val n = e0.count()
     require(n > 0,
       s"IvfIndex.build: cannot train an index over an empty corpus ($root)")
@@ -639,49 +596,36 @@ object IvfIndex {
     for (_ <- 1 to PqIters)
       pqCb = recenterPq(assignPq(pqCb)).localCheckpoint(true)
 
-    // ---- publish: write the complete generation dir (invisible to
-    // readers — nothing names it yet), then flip the pointer atomically.
-    // A reader that resolved the PREVIOUS generation keeps a live
-    // immutable dir; pruning below retains it for one build cycle.
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prevGen = currentGen(fs, root).map(_.getName)
-    val genName = GenLog.newGenName()
-    val gen = new Path(rootPath, genName)
-    codebook.repartition(1).write.parquet(new Path(gen, "codebook").toString)
-    pqCb.repartition(1).write.parquet(new Path(gen, "pq").toString)
-    // one directory per cell; a probe reads only its nprobe directories,
-    // and a compressed-domain probe reads only (vec_id, code, rnorm) of
-    // them (parquet column pruning — emb stays on disk for reranks).
-    // Cell assignment AND PQ coding fuse into ONE projection over the
-    // corpus (NearestCentroid + PqEncode side by side) — the only
-    // full-corpus pass of the build, no self-join of two derived frames
-    val pqEntries = pqCb
-      .select(col("sub").cast("int"), col("cid").cast("int"),
-        col("cvec").cast("array<double>"))
-      .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toSeq)).toSeq
-    val enc = graft.functions.PqEncode.encodeColumn(spark, col("emb"), pqEntries)
-    assignCells(e0, codebook)
-      .withColumn("graft_enc", enc)
-      .select(col("vec_id"), col("emb"), col("cell"),
-        col("graft_enc.code").as("code"), col("graft_enc.rnorm").as("rnorm"))
-      .repartition(col("cell"))
-      .write.partitionBy("cell").parquet(new Path(gen, "cells").toString)
+    // ---- publish (GenLog.publish: the complete generation dir, then
+    // meta, the pointer flip and the prune)
     // fingerprint only for bare-path corpora: for store corpora the
     // snapshot name IS the staleness key and a full-corpus scan here
     // would defeat the point of snapshot-keyed validation
     val fp = if (snap.isDefined) 0L else fingerprint(e0)
-    GenLog.writeMeta(spark, gen,
-      GenLog.Meta(n, FormatVersion, fp, snap, None))
-    publishGen(spark, root, genName)
-    pruneGens(spark, fs, rootPath, genName, prevGen)
-    gen.toString
+    GenLog.publish(spark, root,
+        GenLog.Meta(n, FormatVersion, fp, snap, None)) { gen =>
+      codebook.repartition(1).write.parquet(new Path(gen, "codebook").toString)
+      pqCb.repartition(1).write.parquet(new Path(gen, "pq").toString)
+      // one directory per cell; a probe reads only its nprobe directories,
+      // and a compressed-domain probe reads only (vec_id, code, rnorm) of
+      // them (parquet column pruning — emb stays on disk for reranks).
+      // Cell assignment AND PQ coding fuse into ONE projection over the
+      // corpus (NearestCentroid + PqEncode side by side) — the only
+      // full-corpus pass of the build, no self-join of two derived frames
+      val pqEntries = pqCb
+        .select(col("sub").cast("int"), col("cid").cast("int"),
+          col("cvec").cast("array<double>"))
+        .collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toSeq)).toSeq
+      val enc = graft.functions.PqEncode.encodeColumn(spark, col("emb"), pqEntries)
+      assignCells(e0, codebook)
+        .withColumn("graft_enc", enc)
+        .select(col("vec_id"), col("emb"), col("cell"),
+          col("graft_enc.code").as("code"), col("graft_enc.rnorm").as("rnorm"))
+        .repartition(col("cell"))
+        .write.partitionBy("cell").parquet(new Path(gen, "cells").toString)
+    }
   }
-
-  private def pruneGens(spark: SparkSession, fs: FileSystem, rootPath: Path,
-                        genName: String, prevGen: Option[String]): Unit =
-    GenLog.pruneGens(spark, fs, rootPath, genName, prevGen, FormatVersion)
 
   /** Per-vector nearest-cell assignment `(vec_id, emb, cell)` — the
     * Lloyd-iteration inner step and the final cell materialization. The
@@ -729,14 +673,8 @@ object IvfIndex {
     * through the union into every per-generation scan). Meta-only
     * re-key generations have no cells dir and are skipped; the base
     * always has one (builds require a non-empty corpus). */
-  private def rawCells(spark: SparkSession, path: String): DataFrame = {
-    val hadoop = spark.sparkContext.hadoopConfiguration
-    chain(spark, new Path(path))
-      .map(g => new Path(g, "cells"))
-      .filter(c => c.getFileSystem(hadoop).exists(c))
-      .map(c => spark.read.parquet(c.toString))
-      .reduce(_ unionByName _)
-  }
+  private def rawCells(spark: SparkSession, path: String): DataFrame =
+    GenLog.readChain(spark, new Path(path), FormatVersion, "cells")
 
   /** The full cell-partitioned corpus with `cell` normalized to int —
     * for whole-index consumers (compaction, re-training, audits). Probe

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.store.GenLog
+import graft.store.{GenLog, IndexKind, IndexLifecycle}
 
 /** Persisted MinHash BAND index — the signature half of
   * [[MinHashLSH.candidatePairs]] stored as a managed artifact, so an
@@ -32,24 +32,13 @@ import graft.store.GenLog
   * cheaper: they rewrite `sigs` (one row/doc) and re-derive bands, no
   * wide table round-trips.
   *
-  * Layout under the index root: the [[graft.store.GenLog]] generation
-  * log ([[IvfIndex]]'s pattern) — immutable `gen-<uuid8>/{sigs,bands}`
-  * parquet dirs, one `_CURRENT` pointer, atomic flip, delta chains:
-  *
-  *  - [[ensure]] (bare corpus frame): reuses the live generation only
-  *    when recorded row count AND content fingerprint match the
-  *    live frame; otherwise rebuilds. The fingerprint is one narrow scan
-  *    of (doc_id, text) — the documented bare-path fallback.
-  *  - [[ensureForSnapshot]] (corpus published via
-  *    [[graft.store.SnapshotStore]]): validity keyed on the snapshot
-  *    NAME — a pointer read plus the meta row, no corpus scan at all
-  *    (the 100 TB answer, mirroring [[IvfIndex.ensureForSnapshot]]).
-  *  - [[advanceWithBatch]]: append-only growth. MinHash signatures need
-  *    NO retraining (the hash family is fixed), so an advance is one
-  *    signature pass over the batch plus a batch-sized write chained as
-  *    a delta generation — index maintenance cost is O(batch), never
-  *    O(corpus), and the xor fingerprint extends exactly:
-  *    fp(parent) ^ fp(batch) = fp(union).
+  * Lifecycle: the shared [[graft.store.IndexLifecycle]] over the
+  * [[graft.store.GenLog]] generation log — immutable
+  * `gen-<uuid8>/{sigs,bands}` dirs, one `_CURRENT` pointer, delta
+  * chains. MinHash signatures need NO retraining (the hash family is
+  * fixed), so an advance is one signature pass over the batch plus a
+  * batch-sized delta write: index maintenance is O(batch), never
+  * O(corpus).
   *
   * A probe ([[MinHashLSH.incrementalPairs]] against [[narrowBandsOf]] +
   * [[sigsOf]]) streams only the 24 B narrow band rows of the chain and
@@ -81,13 +70,16 @@ object LshBandIndex {
     FormatVersion * 1000000 + numPerms * 1000 + bands
   }
 
-  private def geomTag(numPerms: Int, bands: Int): String =
-    s"@${numPerms}p$bands"
   /** Compaction valve: at this chain depth the next advance rewrites the
     * chain into one base generation instead of chaining deeper. */
   val MaxChain = 16
   /** Test seam (the [[IvfIndex.maxChain]] pattern). */
   private[graft] var maxChain: Int = MaxChain
+
+  private val life = new IndexLifecycle(maxChain)
+  /** Count of full-corpus fingerprint scans this JVM has run. */
+  private[graft] def fingerprintScans = life.fingerprintScans
+  private[graft] def resetValidationMemo(): Unit = life.resetValidationMemo()
 
   def indexRoot: String = sys.env.getOrElse(
     "GRAFT_LSH_INDEX_DIR",
@@ -108,79 +100,44 @@ object LshBandIndex {
     s"$indexRoot/${base}_${GenLog.pathKey(key)}"
   }
 
-  private val buildLock = new Object
-  /** key root -> (validity token, generation path). The token is
-    * "fp:<n>:<fingerprint>" for bare corpora, "snap:<name>" for
-    * store-published ones. */
-  private val validated =
-    scala.collection.mutable.Map.empty[String, (String, String)]
-  /** Test seam: forget per-JVM validation so a spec can exercise the
-    * on-disk revalidation path. */
-  private[graft] def resetValidationMemo(): Unit =
-    buildLock.synchronized(validated.clear())
+  private def rootOf(key: String, portable: Boolean): String =
+    indexPath(familyKey(key, portable))
 
-  /** Count of full-corpus fingerprint scans this JVM has run — the test
-    * seam proving snapshot-keyed revalidation never scans the corpus. */
-  private[graft] val fingerprintScans =
-    new java.util.concurrent.atomic.AtomicLong(0L)
+  private def storeRootOf(storeRoot: String, portable: Boolean): String =
+    rootOf(s"store:$storeRoot", portable)
 
-  /** Order-insensitive content fingerprint over (id, text) — one narrow
-    * scan; 0 on an empty frame (the aggregate over zero rows is NULL).
-    * XOR of per-row hashes, not SUM: a hash sum wraps Long, which ANSI
-    * mode (Spark 4's default) rejects as overflow — xor is
-    * overflow-free, and it composes for disjoint delta chains the same
-    * way (fp(parent ∪ batch) = fp(parent) ^ fp(batch); rows are
-    * pairwise distinct because the id participates in the hash). */
-  private def fingerprint(docs: DataFrame, idCol: String,
-                          textCol: String): Long = {
-    fingerprintScans.incrementAndGet()
-    docs.agg(coalesce(expr(s"bit_xor(xxhash64(`$idCol`, `$textCol`))"), lit(0L)))
-      .head().getLong(0)
-  }
+  /** Signature rows `(__id, sig)` in `sigs/`, and the narrow band rows
+    * re-derived from the written parquet ([[MinHashLSH.narrowBandsFromSigs]])
+    * in `bands/`: the signature expression tree (the expensive text
+    * pass) runs exactly once, and bands are a pure function of the
+    * bytes on disk. */
+  private def kind(numPerms: Int, bands: Int, portable: Boolean): IndexKind =
+    new IndexKind {
+      val fmt = fmtFor(numPerms, bands)
+      val geom = s"@${numPerms}p$bands"
+      val label = s"band index at geometry ${numPerms}x$bands"
+      val dataDir = "sigs"
+      def rows(b: DataFrame): DataFrame =
+        MinHashLSH.sigRows(b, "__id", "__p", numPerms, portable)
+      def write(spark: SparkSession, gen: Path, rows: DataFrame): Unit = {
+        val sigs = new Path(gen, "sigs").toString
+        rows.write.parquet(sigs)
+        MinHashLSH.narrowBandsFromSigs(spark.read.parquet(sigs),
+            numPerms, bands, portable)
+          .write.parquet(new Path(gen, "bands").toString)
+      }
+    }
 
   /** Ensure a fresh band index for the bare corpus frame `docs` under
-    * the index named `key`; returns the resolved generation path.
-    *
-    * CONTRACT: a bare `key` names an IMMUTABLE corpus (the testdata
-    * shape). After first validation in a JVM the memo short-circuits
-    * without recomputing count/fingerprint, so a caller that rebinds
-    * the same key to DIFFERENT corpus contents within one JVM is served
-    * the stale index — use a new key per corpus version, or go through
-    * [[ensureForSnapshot]]/[[advanceWithBatch]], which re-key the memo
-    * on every mutation they make. */
+    * the index named `key`; returns the resolved generation path. A
+    * bare `key` names an IMMUTABLE corpus (see
+    * [[graft.store.IndexLifecycle]]). */
   def ensure(spark: SparkSession, docs: DataFrame, key: String,
              idCol: String = "doc_id", textCol: String = "text",
              numPerms: Int = 16, bands: Int = 4,
              portable: Boolean = false): String =
-    buildLock.synchronized {
-      val root = indexPath(familyKey(key, portable))
-      val fs = new Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val geom = geomTag(numPerms, bands)
-      def token(n: Long, fp: Long) = s"fp:$n:$fp$geom"
-      validated.get(root) match {
-        case Some((t, gen)) if t.startsWith("fp:") && t.endsWith(geom) =>
-          // bare corpora are read-only by the testdata contract: once
-          // validated in this JVM the answer cannot change
-          return gen
-        case _ => ()
-      }
-      lazy val n = docs.count()
-      lazy val fp = fingerprint(docs, idCol, textCol)
-      GenLog.currentGen(fs, root)
-        .flatMap(g => GenLog.readMeta(spark, g,
-          fmtFor(numPerms, bands)).map(g -> _)) match {
-        case Some((gen, m)) if m.snap.isEmpty && m.n == n && m.fp == fp =>
-          validated(root) = (token(n, fp), gen.toString)
-          gen.toString
-        case _ =>
-          val gen = build(spark, docs, root, idCol, textCol, numPerms, bands,
-            snap = None, nOverride = Some(n), fpOverride = Some(fp),
-            portable = portable)
-          validated(root) = (token(n, fp), gen)
-          gen
-      }
-    }
+    life.ensure(spark, docs, rootOf(key, portable), idCol, textCol,
+      kind(numPerms, bands, portable))
 
   /** [[ensure]] for a corpus published through
     * [[graft.store.SnapshotStore]]: validity keyed on the current
@@ -189,114 +146,22 @@ object LshBandIndex {
                         idCol: String = "doc_id", textCol: String = "text",
                         numPerms: Int = 16, bands: Int = 4,
                         portable: Boolean = false): String =
-    buildLock.synchronized {
-      val snap = graft.store.SnapshotStore.currentName(spark, storeRoot)
-        .getOrElse(throw new java.io.FileNotFoundException(
-          s"no snapshot published under $storeRoot — commit the corpus first"))
-      val root = indexPath(familyKey(s"store:$storeRoot", portable))
-      val geom = geomTag(numPerms, bands)
-      validated.get(root) match {
-        case Some((t, gen)) if t == s"snap:$snap$geom" => return gen
-        case _ => ()
-      }
-      val fs = new Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      GenLog.currentGen(fs, root)
-        .flatMap(g => GenLog.readMeta(spark, g,
-          fmtFor(numPerms, bands)).map(g -> _)) match {
-        case Some((gen, m)) if m.snap.contains(snap) =>
-          validated(root) = (s"snap:$snap$geom", gen.toString)
-          gen.toString
-        case _ =>
-          val docs = graft.store.SnapshotStore.read(spark, storeRoot)
-          val gen = build(spark, docs, root, idCol, textCol, numPerms, bands,
-            snap = Some(snap), nOverride = None, fpOverride = None,
-            portable = portable)
-          validated(root) = (s"snap:$snap$geom", gen)
-          gen
-      }
-    }
+    life.ensureForSnapshot(spark, storeRoot, storeRootOf(storeRoot, portable),
+      idCol, textCol, kind(numPerms, bands, portable))
 
-  /** [[ensureForSnapshot]] that prefers an INCREMENTAL advance — the
-    * [[IvfIndex.advanceForSnapshot]] pattern for the band index: when
-    * the index is valid for an earlier snapshot and the store's change
-    * feed between the indexed and current snapshots is pure inserts,
-    * the new rows are signature-encoded and chained as a delta
-    * generation — no caller-supplied batch, advance cost is the feed
-    * diff plus batch-sized work. Updates/deletes in the feed, a
-    * vacuumed indexed version, or a missing/stale index fall back to a
-    * full rebuild. An empty feed (identical republish) re-keys via the
-    * overlap-free zero-row delta. */
+  /** [[ensureForSnapshot]] that prefers an INCREMENTAL advance: a
+    * pure-insert change feed since the indexed snapshot is
+    * signature-encoded and chained as a delta; churn rebuilds. */
   def advanceForSnapshot(spark: SparkSession, storeRoot: String,
                          idCol: String = "doc_id",
                          textCol: String = "text",
                          numPerms: Int = 16, bands: Int = 4,
                          portable: Boolean = false): String =
-    buildLock.synchronized {
-      val snap = graft.store.SnapshotStore.currentName(spark, storeRoot)
-        .getOrElse(throw new java.io.FileNotFoundException(
-          s"no snapshot published under $storeRoot — commit the corpus first"))
-      val root = indexPath(familyKey(s"store:$storeRoot", portable))
-      val geom = geomTag(numPerms, bands)
-      validated.get(root) match {
-        case Some((t, gen)) if t == s"snap:$snap$geom" => return gen
-        case _ => ()
-      }
-      val fs = new Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def rebuild(): String = {
-        val docs = graft.store.SnapshotStore.read(spark, storeRoot)
-        build(spark, docs, root, idCol, textCol, numPerms, bands,
-          snap = Some(snap), nOverride = None, fpOverride = None,
-          portable = portable)
-      }
-      val gen = GenLog.currentGen(fs, root)
-        .flatMap(g => GenLog.readMeta(spark, g,
-          fmtFor(numPerms, bands)).map(g -> _)) match {
-        case Some((g, m)) if m.snap.contains(snap) => g.toString
-        case Some((g, m)) if m.snap.isDefined =>
-          // the Try wraps ONLY the change-feed computation — a vacuumed
-          // indexed version legitimately degrades to a rebuild. The
-          // advance itself stays OUTSIDE it: swallowing an advance
-          // failure would silently convert every daily advance into an
-          // O(corpus) re-signature (masking the real error), and a
-          // failure after the advance's pointer flip would publish a
-          // redundant full generation on top of the live delta.
-          val feedOk = scala.util.Try {
-            val feed = graft.store.SnapshotStore.changesBetween(
-                spark, storeRoot, m.snap.get, snap, Seq(idCol))
-              .localCheckpoint(true)
-            val churn = feed.filter(col("change_type") =!= "insert")
-              .limit(1).count()
-            val batch = feed.filter(col("change_type") === "insert")
-              .select(col(idCol), col(textCol))
-            (churn, batch)
-          }.toOption
-          feedOk match {
-            case Some((churn, batch)) if churn == 0 =>
-              // reentrant: buildLock is a JVM monitor
-              advanceWithBatch(spark, s"store:$storeRoot", batch,
-                idCol, textCol, numPerms, bands, snap = Some(snap),
-                portable = portable)
-            case _ => rebuild()
-          }
-        case _ => rebuild()
-      }
-      validated(root) = (s"snap:$snap$geom", gen)
-      gen
-    }
+    life.advanceForSnapshot(spark, storeRoot, storeRootOf(storeRoot, portable),
+      idCol, textCol, kind(numPerms, bands, portable))
 
-  /** [[advanceForSnapshot]] with a CALLER-ASSERTED delta — the
-    * [[IvfIndex.advanceWithBatch]] pattern: the writer that just
-    * appended `batch` to the store hands the same frame here, skipping
-    * the change-feed content diff. Trust-but-verify nets (each cheap,
-    * each falling back to the content-diff path rather than recording a
-    * wrong index): the row-count identity `count(current snapshot) ==
-    * indexed n + count(batch)` (a column-less scan), and the id-overlap
-    * probe inside [[advanceWithBatch]]. Without the count net, a
-    * partial batch would chain an incomplete delta and the
-    * snapshot-keyed memo would serve it forever — the fingerprint is
-    * never consulted on the snapshot path. */
+  /** [[advanceForSnapshot]] with a CALLER-ASSERTED delta, checked by the
+    * row-count and id-overlap nets before it is trusted. */
   def advanceForSnapshotWithBatch(spark: SparkSession, storeRoot: String,
                                   batch: DataFrame,
                                   idCol: String = "doc_id",
@@ -304,176 +169,31 @@ object LshBandIndex {
                                   numPerms: Int = 16,
                                   bands: Int = 4,
                                   portable: Boolean = false): String =
-    buildLock.synchronized {
-      val snap = graft.store.SnapshotStore.currentName(spark, storeRoot)
-        .getOrElse(throw new java.io.FileNotFoundException(
-          s"no snapshot published under $storeRoot — commit the corpus first"))
-      val root = indexPath(familyKey(s"store:$storeRoot", portable))
-      val geom = geomTag(numPerms, bands)
-      validated.get(root) match {
-        case Some((t, gen)) if t == s"snap:$snap$geom" => return gen
-        case _ => ()
-      }
-      val fs = new Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val b = batch.select(col(idCol).cast("long").as(idCol),
-        col(textCol).as(textCol)).localCheckpoint(true)
-      // counts AND id-disjointness verified here, not delegated: an
-      // overlapping batch on the SNAPSHOT path must fall back to the
-      // content diff (advanceWithBatch's overlap REPLACEMENT would
-      // index history∖batch ∪ batch, which need not equal the snapshot
-      // the result gets keyed to)
-      val viaBatch = GenLog.currentGen(fs, root)
-        .flatMap(g => GenLog.readMeta(spark, g,
-          fmtFor(numPerms, bands)).map(g -> _)) match {
-        case Some((g, m)) if !m.snap.contains(snap) =>
-          val countsOk =
-            graft.store.SnapshotStore.read(spark, storeRoot).count() ==
-              m.n + b.count()
-          lazy val overlaps =
-            sigsOf(spark, g.toString, numPerms, bands).select("__id")
-            .join(b.select(col(idCol).as("__id")), Seq("__id"), "left_semi")
-            .limit(1).count() > 0
-          countsOk && !overlaps
-        case _ => false
-      }
-      if (viaBatch)
-        advanceWithBatch(spark, s"store:$storeRoot", b, idCol, textCol,
-          numPerms, bands, snap = Some(snap), portable = portable)
-      else
-        advanceForSnapshot(spark, storeRoot, idCol, textCol, numPerms,
-          bands, portable = portable)
-    }
+    life.advanceForSnapshotWithBatch(spark, storeRoot,
+      storeRootOf(storeRoot, portable), batch, idCol, textCol,
+      kind(numPerms, bands, portable))
 
-  /** Advance the index with an ingest batch. The fast path — disjoint
-    * batch ids, chain under the compaction cap — signature-encodes the
-    * batch and chains it as a delta generation: O(batch) work, the
-    * indexed corpus untouched. Two guarded slow paths rewrite the band
-    * rows into a fresh base (still never re-reading history TEXT —
-    * signatures are final): a chain at [[maxChain]] collapses
-    * (LSM compaction), and a batch that OVERLAPS indexed ids (a
-    * re-crawl) replaces the overlapped documents' bands — the batch
-    * wins, no id is ever banded twice. An overlap on a bare-keyed index
-    * voids the additive fingerprint (the replaced rows' contribution is
-    * unknowable without their text), so meta records fp=0 and the next
-    * cross-JVM [[ensure]] rebuilds — safe, just uncached; snapshot-keyed
-    * indexes are unaffected (the name is the key). `snap`, when given,
-    * re-keys validity to the new snapshot name (the caller has committed
-    * history ∪ batch to the store). */
+  /** Advance the index with an ingest batch: an O(batch) delta, with
+    * overlap REPLACEMENT and compaction at [[maxChain]] rewriting stored
+    * signatures (never history text). `snap`, when given, re-keys
+    * validity to the new snapshot name. */
   def advanceWithBatch(spark: SparkSession, key: String, batch: DataFrame,
                        idCol: String = "doc_id", textCol: String = "text",
                        numPerms: Int = 16, bands: Int = 4,
                        snap: Option[String] = None,
                        portable: Boolean = false): String =
-    buildLock.synchronized {
-      val root = indexPath(familyKey(key, portable))
-      val fmt = fmtFor(numPerms, bands)
-      val geom = geomTag(numPerms, bands)
-      val fs = new Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val head = GenLog.currentGen(fs, root)
-        .flatMap(g => GenLog.readMeta(spark, g, fmt).map(g -> _))
-        .getOrElse(throw new java.io.FileNotFoundException(
-          s"no live band index at geometry ${numPerms}x$bands under " +
-            s"$root — ensure() a base first (a geometry change requires " +
-            "a rebuild, not an advance)"))
-      val (headGen, m) = head
-      // one batch-sized materialization feeds the overlap probe, the
-      // fingerprint, and the band write — a non-deterministic input
-      // can't desynchronize meta from the written rows
-      val b = batch.select(col(idCol).cast("long").as(idCol),
-        col(textCol).as(textCol)).localCheckpoint(true)
-      val headIds = sigsOf(spark, headGen.toString, numPerms, bands)
-        .select("__id")
-      val bIds = b.select(col(idCol).as("__id"))
-      // overlap EXISTENCE first: one scan of the index's one-row-per-doc
-      // sigs id column semi-joined with the batch ids, limit-1 early-out.
-      // No forced broadcast: the batch is localCheckpoint'd so AQE has
-      // exact sizes and auto-broadcasts under the threshold; a batch
-      // too big to broadcast degrades to a shuffle instead of the
-      // BroadcastExchange hard limit killing the advance. The exact
-      // overlap count is only needed on the rebuild path, which is
-      // corpus-sized anyway — and needs no distinct: sigs hold one row
-      // per id by construction.
-      val overlapExists = headIds
-        .join(bIds, Seq("__id"), "left_semi")
-        .limit(1).count() > 0
-      val nOverlap =
-        if (!overlapExists) 0L
-        else headIds.join(bIds, Seq("__id"), "left_semi").count()
-      val nb = b.count()
-      val fpB = if (snap.isDefined) 0L else fingerprint(b, idCol, textCol)
-      val nNew = m.n + nb - nOverlap
-      val fpNew = if (nOverlap > 0) 0L else m.fp ^ fpB
-      val tok = snap.map(s => s"snap:$s$geom")
-        .getOrElse(s"fp:$nNew:$fpNew$geom")
-      val compact =
-        GenLog.chain(spark, headGen, fmt).length >= maxChain
-      // zero-row batch (identical-content republish routed through
-      // advanceForSnapshot): a META-ONLY re-key generation — no bands
-      // dir at all (bandsOf skips it), nothing recomputed. The
-      // compaction valve applies here too (a daily no-new-data
-      // republish must not grow the chain without bound): at the cap,
-      // the re-key rewrites the chain's bands into one base instead.
-      if (nb == 0) {
-        val gen0 =
-          if (compact)
-            publishFromSigs(spark, root,
-              sigsOf(spark, headGen.toString, numPerms, bands),
-              numPerms, bands, portable,
-              GenLog.Meta(m.n, fmt, m.fp, snap, None))
-          else publishMetaOnly(spark, root,
-            GenLog.Meta(m.n, fmt, m.fp, snap, Some(headGen.getName)))
-        validated(root) = (tok, gen0)
-        return gen0
-      }
-      val batchSigs = MinHashLSH.sigRows(b, idCol, textCol, numPerms,
-        portable)
-      val gen =
-        if (nOverlap > 0 || compact) {
-          // rewrite path: history participates as its one-row-per-doc
-          // SIGS (never the wide band table, never text); bands are
-          // re-derived from the merged sigs at publish
-          val histSigs0 = sigsOf(spark, headGen.toString, numPerms, bands)
-          val histSigs =
-            if (nOverlap == 0) histSigs0
-            else histSigs0.join(bIds, Seq("__id"), "left_anti")
-          publishFromSigs(spark, root, histSigs.unionByName(batchSigs),
-            numPerms, bands, portable,
-            GenLog.Meta(nNew, fmt, fpNew, snap, None))
-        } else
-          publishFromSigs(spark, root, batchSigs, numPerms, bands, portable,
-            GenLog.Meta(nNew, fmt, fpNew, snap,
-              Some(headGen.getName)))
-      validated(root) = (tok, gen)
-      gen
-    }
+    life.advanceWithBatch(spark, rootOf(key, portable), batch, idCol, textCol,
+      kind(numPerms, bands, portable), snap)
 
   /** The live generation path under `key`, if any — resolved from disk
     * (pointer + meta), no staleness check: callers that OWN all writes
     * to the index (a streaming ingest advancing it per micro-batch) use
     * this to probe the exact state they last published. */
-  def currentGenPath(spark: org.apache.spark.sql.SparkSession,
-                     key: String, portable: Boolean = false,
-                     numPerms: Int = 16, bands: Int = 4): Option[String] = {
-    val root = indexPath(familyKey(key, portable))
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    GenLog.currentGen(fs, root)
-      .filter(g => GenLog.readMeta(spark, g,
-        fmtFor(numPerms, bands)).isDefined)
-      .map(_.toString)
-  }
-
-  private def chainDirOf(spark: SparkSession, genPath: String,
-                         sub: String, fmt: Int): DataFrame = {
-    val hadoop = spark.sparkContext.hadoopConfiguration
-    GenLog.chain(spark, new Path(genPath), fmt)
-      .map(g => new Path(g, sub))
-      .filter(p => p.getFileSystem(hadoop).exists(p))
-      .map(p => spark.read.parquet(p.toString))
-      .reduce(_ unionByName _)
-  }
+  def currentGenPath(spark: SparkSession, key: String,
+                     portable: Boolean = false,
+                     numPerms: Int = 16, bands: Int = 4): Option[String] =
+    life.currentGenPath(spark, rootOf(key, portable),
+      kind(numPerms, bands, portable))
 
   /** NARROW band rows `(__id, band_id, band_hash)` of the generation
     * CHAIN rooted at `genPath` — phase 1 of a split probe
@@ -482,7 +202,7 @@ object LshBandIndex {
     * signature column never enters this stream. */
   def narrowBandsOf(spark: SparkSession, genPath: String,
                     numPerms: Int = 16, bands: Int = 4): DataFrame =
-    chainDirOf(spark, genPath, "bands", fmtFor(numPerms, bands))
+    GenLog.readChain(spark, new Path(genPath), fmtFor(numPerms, bands), "bands")
 
   /** Signature rows `(__id, sig)` of the chain, one per document —
     * phase 2 of a split probe (candidate-id signature fetch), and the
@@ -490,7 +210,7 @@ object LshBandIndex {
     * count this, not band rows). */
   def sigsOf(spark: SparkSession, genPath: String,
              numPerms: Int = 16, bands: Int = 4): DataFrame =
-    chainDirOf(spark, genPath, "sigs", fmtFor(numPerms, bands))
+    GenLog.readChain(spark, new Path(genPath), fmtFor(numPerms, bands), "sigs")
 
   /** WIDE band rows `(__id, sig, band_id, band_hash)` of the chain —
     * the format-1 shape, reconstructed as narrow-bands ⋈ sigs for
@@ -507,111 +227,13 @@ object LshBandIndex {
 
   /** RTBF companion — called by DELETING store writers (e.g.
     * `IncrementalCurate.forget`) in the same operation as the row
-    * deletes: if an index exists for `storeRoot` (either hash family),
-    * rebuild it against the store's CURRENT snapshot and prune EVERY
-    * superseded generation, so derived content (MinHash signatures) of
-    * the deleted documents leaves disk with the documents. Without
-    * this, the old generations linger until a later advance happens to
-    * detect the delete churn, and a probe against the stale chain can
-    * still match a forgotten document. No-op when the store has no
-    * index; deletes the index outright if the store emptied (an empty
-    * corpus cannot be indexed). O(history) signature rebuild — the
-    * price of a hard purge, paid only on deletes. Single-writer fenced
-    * like `SnapshotStore.vacuum`: in-flight readers of the pruned
-    * generations must be quiesced by the caller. */
+    * deletes, for both hash families: see
+    * [[graft.store.IndexLifecycle.purgeForStore]]. Without it, a probe
+    * against a stale chain could still match a forgotten document. */
   def purgeForStore(spark: SparkSession, storeRoot: String,
                     idCol: String = "doc_id", textCol: String = "text",
                     numPerms: Int = 16, bands: Int = 4): Unit =
-    buildLock.synchronized {
-      Seq(false, true).foreach { portable =>
-        val root = indexPath(familyKey(s"store:$storeRoot", portable))
-        val rootPath = new Path(root)
-        val fs = rootPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        if (GenLog.currentGen(fs, root).isDefined) {
-          validated.remove(root)
-          if (graft.store.SnapshotStore.read(spark, storeRoot)
-              .limit(1).count() == 0L) {
-            fs.delete(rootPath, true)
-          } else {
-            val snap = graft.store.SnapshotStore
-              .currentName(spark, storeRoot).get
-            val gen = build(spark,
-              graft.store.SnapshotStore.read(spark, storeRoot), root,
-              idCol, textCol, numPerms, bands, snap = Some(snap),
-              nOverride = None, fpOverride = None, portable = portable)
-            // publishBands keeps the previous chain for in-flight
-            // readers — a purge must NOT: re-prune keeping only the
-            // fresh generation
-            GenLog.pruneGens(spark, fs, rootPath,
-              new Path(gen).getName, None, fmtFor(numPerms, bands),
-              spareYoungPublished = false)
-            validated(root) = (s"snap:$snap${geomTag(numPerms, bands)}", gen)
-          }
-        }
-      }
-    }
-
-  private def build(spark: SparkSession, docs: DataFrame, root: String,
-                    idCol: String, textCol: String,
-                    numPerms: Int, bandCount: Int, snap: Option[String],
-                    nOverride: Option[Long],
-                    fpOverride: Option[Long],
-                    portable: Boolean = false): String = {
-    val n = nOverride.getOrElse(docs.count())
-    require(n > 0,
-      s"LshBandIndex.build: refusing to index an empty corpus ($root)")
-    val fp =
-      if (snap.isDefined) 0L
-      else fpOverride.getOrElse(fingerprint(docs, idCol, textCol))
-    publishFromSigs(spark, root,
-      MinHashLSH.sigRows(docs, idCol, textCol, numPerms, portable),
-      numPerms, bandCount, portable,
-      GenLog.Meta(n, fmtFor(numPerms, bandCount), fp, snap, None))
-  }
-
-  /** A META-ONLY generation (no bands dir): the re-key for an
-    * identical-content republish, chained so readers resolve the
-    * parent's bands. */
-  private def publishMetaOnly(spark: SparkSession, root: String,
-                              meta: GenLog.Meta): String = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prevGen = GenLog.currentGen(fs, root).map(_.getName)
-    val genName = GenLog.newGenName()
-    val gen = new Path(rootPath, genName)
-    GenLog.writeMeta(spark, gen, meta)
-    GenLog.publishGen(spark, root, genName)
-    GenLog.pruneGens(spark, fs, rootPath, genName, prevGen, meta.fmt)
-    gen.toString
-  }
-
-  /** Write `sigs` as a fresh generation's one-row-per-doc `sigs` dir,
-    * RE-READ the written parquet and derive the narrow `bands` dir from
-    * it ([[MinHashLSH.narrowBandsFromSigs]]), then publish via the
-    * atomic pointer flip and prune superseded generations. The
-    * write-then-derive order means the signature expression tree (the
-    * expensive text pass on build/advance paths) executes exactly once
-    * — the band derivation is arithmetic over the persisted columns,
-    * and the two dirs can never disagree (bands are a pure function of
-    * the bytes on disk). */
-  private def publishFromSigs(spark: SparkSession, root: String,
-                              sigs: DataFrame, numPerms: Int,
-                              bands: Int, portable: Boolean,
-                              meta: GenLog.Meta): String = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prevGen = GenLog.currentGen(fs, root).map(_.getName)
-    val genName = GenLog.newGenName()
-    val gen = new Path(rootPath, genName)
-    val sigsDir = new Path(gen, "sigs")
-    sigs.write.parquet(sigsDir.toString)
-    MinHashLSH.narrowBandsFromSigs(spark.read.parquet(sigsDir.toString),
-        numPerms, bands, portable)
-      .write.parquet(new Path(gen, "bands").toString)
-    GenLog.writeMeta(spark, gen, meta)
-    GenLog.publishGen(spark, root, genName)
-    GenLog.pruneGens(spark, fs, rootPath, genName, prevGen, meta.fmt)
-    gen.toString
-  }
+    Seq(false, true).foreach(portable =>
+      life.purgeForStore(spark, storeRoot, storeRootOf(storeRoot, portable),
+        idCol, textCol, kind(numPerms, bands, portable)))
 }

@@ -82,7 +82,6 @@ object MinHashLSH {
     * and candidate pairs downstream. */
   def signatures(docs: DataFrame, idCol: String, textCol: String,
                  numPerms: Int): DataFrame = {
-    graft.functions.MinHashSig.register(docs.sparkSession)
     docs
       .select(col(idCol).as("__id"),
         split(lower(trim(regexp_replace(col(textCol), "\\s+", " "))), " ").as("toks"))
@@ -130,7 +129,6 @@ object MinHashLSH {
     // native codegen expression for the per-candidate agreement fraction —
     // the zip_with/aggregate HOF equivalent evaluates interpreted, and
     // this runs once per candidate pair (millions at corpus scale).
-    graft.functions.SignatureAgreement.register(docs.sparkSession)
     val pairs = a.join(b, Seq("bk"))
       .filter(col("src") < col("dst"))
       .select(col("src"), col("dst"),
@@ -249,7 +247,6 @@ object MinHashLSH {
     * wide batch frame. */
   def incrementalPairs(batchBands: DataFrame, historyNarrow: DataFrame,
                        historySigs: DataFrame): DataFrame = {
-    graft.functions.SignatureAgreement.register(batchBands.sparkSession)
     // phase 1: narrow candidate discovery — distinct (src, dst) id
     // pairs before any signature is touched. Packed long join key
     // (BandPack) so the corpus-scale narrow stream probes the
@@ -419,7 +416,6 @@ object MinHashLSH {
           .as("band"))
       .select(col("__id"), col("sig"),
         col("band.band_id"), col("band.band_key"))
-    graft.functions.SignatureAgreement.register(docs.sparkSession)
     // packed long join key (BandPack; band_key is 60-bit so hash-packed)
     val a = banded.select(col("__id").as("src"), col("sig").as("sig_a"),
       BandPack.hashed(col("band_id"), col("band_key")).as("bk"))

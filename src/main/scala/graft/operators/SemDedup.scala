@@ -65,7 +65,6 @@ object SemDedup {
   def assign(corpus: DataFrame, idCol: String, embCol: String,
              centroids: Seq[(Long, Seq[Double])]): DataFrame = {
     require(centroids.nonEmpty, "semdedup: empty centroid set")
-    graft.functions.CosineSimilarity.register(corpus.sparkSession)
     val sorted = centroids.sortBy(_._1)
     val cvecs = typedLit(sorted.map(_._2))
     val cids = typedLit(sorted.map(_._1))

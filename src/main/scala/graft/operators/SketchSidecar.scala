@@ -74,19 +74,10 @@ object SketchSidecar {
   /** Write one generation holding `cells` and publish it. */
   private def writeGen(spark: SparkSession, root: String, cells: DataFrame,
                        n: Long, snap: Option[String],
-                       parent: Option[String]): String = {
-    val fs = new Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prev = GenLog.currentGen(fs, root).map(_.getName)
-    val genName = GenLog.newGenName()
-    val gen = new Path(root, genName)
-    cells.repartition(1).write.parquet(new Path(gen, "cells").toString)
-    GenLog.writeMeta(spark, gen,
-      GenLog.Meta(n, FormatVersion, geometryFp, snap, parent))
-    GenLog.publishGen(spark, root, genName)
-    GenLog.pruneGens(spark, fs, new Path(root), genName, prev, FormatVersion)
-    gen.toString
-  }
+                       parent: Option[String]): String =
+    GenLog.publish(spark, root,
+      GenLog.Meta(n, FormatVersion, geometryFp, snap, parent))(gen =>
+      cells.repartition(1).write.parquet(new Path(gen, "cells").toString))
 
   private def buildFromStore(spark: SparkSession, storeRoot: String,
                              root: String, snap: String,
@@ -111,10 +102,7 @@ object SketchSidecar {
         case Some((t, gen)) if t == s"snap:$snap" => return gen
         case _ => ()
       }
-      val fs = new Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val gen = GenLog.currentGen(fs, root)
-        .flatMap(g => GenLog.readMeta(spark, g, FormatVersion).map(g -> _)) match {
+      val gen = GenLog.head(spark, root, FormatVersion) match {
         case Some((g, m)) if m.snap.contains(snap) && m.fp == geometryFp =>
           g.toString
         case _ => buildFromStore(spark, storeRoot, root, snap, textCol)
@@ -140,10 +128,7 @@ object SketchSidecar {
         case Some((t, gen)) if t == s"snap:$snap" => return gen
         case _ => ()
       }
-      val fs = new Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val gen = GenLog.currentGen(fs, root)
-        .flatMap(g => GenLog.readMeta(spark, g, FormatVersion).map(g -> _)) match {
+      val gen = GenLog.head(spark, root, FormatVersion) match {
         case Some((g, m)) if m.snap.contains(snap) && m.fp == geometryFp =>
           g.toString
         case Some((g, m)) if m.snap.isDefined && m.fp == geometryFp =>
@@ -183,12 +168,9 @@ object SketchSidecar {
 
   /** The merged cell grid of a generation chain: union of ≤ chain·d·w
     * rows summed per cell — the linearity that makes probes chain-blind. */
-  def cells(spark: SparkSession, gen: String): DataFrame = {
-    val frames = GenLog.chain(spark, new Path(gen), FormatVersion)
-      .map(g => spark.read.parquet(new Path(g, "cells").toString))
-    frames.reduce(_.unionByName(_))
+  def cells(spark: SparkSession, gen: String): DataFrame =
+    GenLog.readChain(spark, new Path(gen), FormatVersion, "cells")
       .groupBy("row", "bucket").agg(sum("cnt").as("cnt"))
-  }
 
   /** Point-frequency estimates for `probes(column)` against the chain. */
   def estimates(spark: SparkSession, gen: String, probes: DataFrame,

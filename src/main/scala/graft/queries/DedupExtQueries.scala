@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
-import graft.functions.CosineSimilarity
 
 /** Remaining training-data dedup/text primitives: embedding-cosine
   * near-duplicate detection, BPE-style regex tokenization, and
@@ -48,7 +47,6 @@ object DedupExtQueries {
 
   /** Exact-cosine near-dup pairs over LSH candidates: (keep, dup, cos). */
   private[queries] def neardupPairs(s: SparkSession, d: String): DataFrame = {
-    CosineSimilarity.register(s)
     val corpus = plantedCorpus(s, d)
     val cand = graft.operators.CosineLsh
       .candidatePairs(corpus, "vec_id", "emb", dim = 64)
@@ -140,7 +138,6 @@ object DedupExtQueries {
     // scan, so an LSH recall miss is a row diff, not silence.
     "dd16_incremental_embed_neardup" -> ((s, d) => {
       import graft.operators.CosineLshIndex
-      CosineSimilarity.register(s)
       val corpus = plantedCorpus(s, d)
       val hist = corpus.filter(col("vec_id") < CopyIdOffset)
       val batch = corpus.filter(col("vec_id") >= CopyIdOffset)

@@ -295,7 +295,6 @@ object TextQueries {
     // of two exact IEEE quotients rounded to 9 dp — identical in every
     // engine.
     "tx17_hybrid_rrf" -> ((s, d) => {
-      graft.functions.CosineSimilarity.register(s)
       val w50 = org.apache.spark.sql.expressions.Window
         .orderBy(col("score").desc, col("doc_id"))
       val lex = bm25Scored(s, d, Seq("spark", "vector", "merge"))

@@ -59,7 +59,6 @@ object VectorQueries {
     }
 
   private[graft] def exactTopK(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
     val e = embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
     val q = e.filter(col("vec_id") < 10)
@@ -131,7 +130,6 @@ object VectorQueries {
   private[graft] def annIvfTopK(s: SparkSession, d: String,
       nprobe: Int = graft.operators.IvfIndex.NProbe): DataFrame = {
     import s.implicits._
-    graft.functions.CosineSimilarity.register(s)
     val idx = graft.operators.IvfIndex.ensure(s, d)
     val cb = graft.operators.IvfIndex.codebook(s, idx)
     val q = embeddings(s, d)
@@ -243,7 +241,6 @@ object VectorQueries {
     // only read of the raw vectors, and only over nprobe/k of the
     // index; on a cluster with a point-lookup side index even that
     // scan collapses to id fetches)
-    graft.functions.CosineSimilarity.register(s)
     val qdf = qs.toSeq.toDF("qid", "ea")
     val emb64 = graft.operators.IvfIndex.cellsPruned(s, idx, probedCells)
       .select(col("vec_id").as("nid"), col("emb").as("eb"))
@@ -260,7 +257,6 @@ object VectorQueries {
   val queries: Map[String, Q] = Map(
     // pairwise cosine between consecutive vec_ids (exact, oracle-checked).
     "v1_cosine_pairs" -> ((s, d) => {
-      graft.functions.CosineSimilarity.register(s)
       val e = embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val a = e.select(col("vec_id").as("qid"), col("emb").as("ea"))
@@ -404,7 +400,6 @@ object VectorQueries {
     // bound |x - q/scale| <= 0.5/scale and ANN recall on the
     // dequantized corpus.
     "v6_int8_quant" -> ((s, d) => {
-      graft.functions.CosineSimilarity.register(s)
       val e = embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       e.withColumn("scale",
@@ -488,7 +483,6 @@ object VectorQueries {
     // partition (never a corpus-sized window sort); rerank joins the
     // ≤ 500 candidates back to full vectors by id.
     "v10_binary_hamming" -> ((s, d) => {
-      graft.functions.CosineSimilarity.register(s)
       val e = embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       def pack(lo: Int): String =
@@ -533,7 +527,6 @@ object VectorQueries {
     // k-bounded TopKScored, no window. At index scale the same mining
     // runs against the IVF/LSH candidate stream.
     "v11_hard_negatives" -> ((s, d) => {
-      graft.functions.CosineSimilarity.register(s)
       val e = embeddings(s, d).select(col("vec_id"),
         col("embedding").cast("array<double>").as("emb"), col("label"))
       val q = e.filter(col("vec_id") < 10)

@@ -961,7 +961,6 @@ object WritePathQueries {
     // from-scratch index would.
     "s27_emb_index_advance" -> ((s, d) => {
       import graft.operators.CosineLshIndex
-      graft.functions.CosineSimilarity.register(s)
       val corpus = DedupExtQueries.plantedCorpus(s, d)
       val gen = runEmbIndexScenario(s, d)
       val batch = corpus.filter(col("vec_id") >= DedupExtQueries.CopyIdOffset)

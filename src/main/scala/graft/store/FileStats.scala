@@ -453,7 +453,6 @@ object FileStats {
       s"sidecar has no bloom for '$c' — publish with bloomCols = Seq(\"$c\")")
     // null bloom (all-null file column) → must-read: bloom stats track
     // non-null keys, so absence of a bloom can't prove absence of a row
-    graft.functions.BloomBytesContain.register(spark)
     val keep = col(s"bloom_$c").isNull ||
       expr(s"graft_bloom_probe(bloom_$c, ${hash}L)")
     stats.select(col("file"), keep.as("keep"))

@@ -2,19 +2,19 @@ package graft.store
 
 import java.nio.file.{Files, StandardCopyOption}
 import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Options, Path, RawLocalFileSystem}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Generation-log primitives shared by the persisted index artifacts
-  * ([[graft.operators.IvfIndex]], [[graft.operators.LshBandIndex]]):
-  * a root directory holds immutable `gen-<uuid8>/` generation dirs and
-  * ONE tiny `_CURRENT` pointer file naming the live generation —
-  * [[SnapshotStore]]'s pointer-publish pattern applied to derived
-  * artifacts that live beside a corpus rather than to tables.
+/** The one lifecycle and the one publish for persisted index artifacts
+  * ([[graft.operators.IvfIndex]], [[graft.operators.LshBandIndex]],
+  * [[graft.operators.CosineLshIndex]], [[graft.operators.TextIndex]],
+  * [[graft.operators.SketchSidecar]]). A root directory holds immutable
+  * `gen-<uuid8>/` generation dirs and ONE tiny `_CURRENT` pointer file
+  * naming the live generation: [[SnapshotStore]]'s pointer-publish
+  * pattern applied to derived artifacts that live beside a corpus.
   *
   * Generations may chain: a DELTA generation records its `parent` in
-  * meta and readers union the chain (LSM-style append without rewriting
-  * the base — the FAISS add-after-train shape for indexes). Every
-  * generation carries one meta row:
+  * meta and readers union the chain ([[readChain]]; LSM-style append
+  * without rewriting the base). Every generation carries one meta row:
   * {{{ (n, fmt, fp, snap, parent) }}}
   * `n` = logical row count covered by the chain up to this generation,
   * `fmt` = the owner's on-disk format version (an older build's layout
@@ -23,11 +23,15 @@ import org.apache.spark.sql.SparkSession
   * `snap` = the SnapshotStore snapshot name this generation indexes
   * (None for bare-path corpora), `parent` = delta chain link.
   *
-  * Publish protocol (atomicity argument at [[writePointer]]): write the
-  * complete generation dir — invisible, nothing names it — then flip the
-  * pointer via temp-file + atomic replace. Readers that resolved
-  * the previous generation keep a live immutable dir; [[pruneGens]]
-  * retains the superseded chain for one build cycle.
+  * Every generation goes live through [[publish]]: write the complete
+  * generation dir under a fresh name (invisible, nothing names it),
+  * then its meta row (last, so a meta-less dir is in-flight or crashed
+  * work), then flip the pointer (temp file + atomic replace, argued at
+  * [[writePointer]]), then prune. Readers that resolved the previous
+  * generation keep a live immutable dir; [[pruneGens]] retains the
+  * superseded chain for one build cycle. [[head]] is the one lookup of
+  * the live generation and its meta. The id-keyed indexes share one
+  * validation and advance path on top of this, [[IndexLifecycle]].
   */
 object GenLog {
   val PointerFile = "_CURRENT"
@@ -37,7 +41,7 @@ object GenLog {
 
   def pointerPath(root: String): Path = new Path(root, PointerFile)
 
-  def newGenName(): String =
+  private[store] def newGenName(): String =
     s"gen-${java.util.UUID.randomUUID().toString.take(8)}"
 
   /** Collision-resistant on-disk key for a corpus path/name: 16 hex
@@ -110,8 +114,43 @@ object GenLog {
       if (fs.exists(new Path(gen, "meta"))) Some(gen) else None
     }
 
+  private def fsOf(spark: SparkSession, root: String): FileSystem =
+    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The live generation under `root` with its meta row, when one is
+    * published in format `fmt` (another format reads as absent). */
+  def head(spark: SparkSession, root: String, fmt: Int): Option[(Path, Meta)] =
+    currentGen(fsOf(spark, root), root)
+      .flatMap(g => readMeta(spark, g, fmt).map(g -> _))
+
+  /** THE generation publish: a fresh generation name, `writeData` fills
+    * its dir, then the meta row, the pointer flip, and the prune of what
+    * the new head supersedes. Returns the published generation path. */
+  def publish(spark: SparkSession, root: String, meta: Meta)
+             (writeData: Path => Unit): String = {
+    val fs = fsOf(spark, root)
+    val prev = currentGen(fs, root).map(_.getName)
+    val name = newGenName()
+    val gen = new Path(root, name)
+    writeData(gen)
+    writeMeta(spark, gen, meta)
+    publishGen(spark, root, name)
+    pruneGens(spark, fs, new Path(root), name, prev, meta.fmt)
+    gen.toString
+  }
+
+  /** Drop every generation the live head's chain does not name, however
+    * young: the purge that makes deleted rows' derived bytes leave disk
+    * now. Readers of the dropped generations must be quiesced. */
+  def purge(spark: SparkSession, root: String, fmt: Int): Unit = {
+    val fs = fsOf(spark, root)
+    currentGen(fs, root).foreach(g => pruneGens(spark, fs, new Path(root),
+      g.getName, None, fmt, spareYoungPublished = false))
+  }
+
   /** Atomically point `_CURRENT` at `genName`. */
-  def publishGen(spark: SparkSession, root: String, genName: String): Unit = {
+  private[store] def publishGen(spark: SparkSession, root: String,
+                                genName: String): Unit = {
     val ptr = pointerPath(root)
     val fs = ptr.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new Path(root))
@@ -135,7 +174,8 @@ object GenLog {
   }
 
   /** Write the single meta row of a generation. */
-  def writeMeta(spark: SparkSession, gen: Path, meta: Meta): Unit = {
+  private[store] def writeMeta(spark: SparkSession, gen: Path,
+                               meta: Meta): Unit = {
     import spark.implicits._
     Seq((meta.n, meta.fmt, meta.fp, meta.snap.orNull, meta.parent.orNull))
       .toDF("n", "fmt", "fp", "snap", "parent")
@@ -160,11 +200,17 @@ object GenLog {
       s"GenLog: generation chain under ${gen.getParent} too long or cyclic")
   }
 
-  /** Collect generations the just-published head supersedes: keep the
-    * new head's full parent CHAIN (delta generations read their
-    * ancestors' data) plus the previous pointer target's chain (readers
-    * in flight across the flip), drop the rest — including any legacy
-    * flat layout's stray dirs, which are never named by a pointer. */
+  /** The `sub` dir of every generation in the chain from `gen`, unioned;
+    * generations without one (meta-only re-keys) are skipped. Filters
+    * push through the union into every per-generation scan. */
+  def readChain(spark: SparkSession, gen: Path, fmt: Int,
+                sub: String): DataFrame = {
+    val fs = gen.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    chain(spark, gen, fmt).map(g => new Path(g, sub)).filter(fs.exists)
+      .map(p => spark.read.parquet(p.toString))
+      .reduce(_ unionByName _)
+  }
+
   /** A dir younger than this is spared by [[pruneGens]] (r16
     * adversarial review widened this from meta-less dirs to ALL young
     * dirs on the normal-publish path):
@@ -185,15 +231,20 @@ object GenLog {
     *    grand-predecessor on disk up to this window before a later
     *    publish collects it.
     *
-    * RTBF purge paths pass `spareYoungPublished = false`: a purge's
-    * whole point is that superseded generations' bytes disappear NOW,
+    * [[purge]] passes `spareYoungPublished = false`: a purge's whole
+    * point is that superseded generations' bytes disappear NOW,
     * regardless of age. Test seam. */
   private[graft] var pruneGraceMs: Long = 60L * 60 * 1000
 
-  def pruneGens(spark: SparkSession, fs: FileSystem, rootPath: Path,
-                genName: String, prevGen: Option[String],
-                expectFmt: Int,
-                spareYoungPublished: Boolean = true): Unit = {
+  /** Collect generations the just-published head supersedes: keep the
+    * new head's full parent CHAIN (delta generations read their
+    * ancestors' data) plus the previous pointer target's chain (readers
+    * in flight across the flip), drop the rest — including any legacy
+    * flat layout's stray dirs, which are never named by a pointer. */
+  private[store] def pruneGens(spark: SparkSession, fs: FileSystem,
+                               rootPath: Path, genName: String,
+                               prevGen: Option[String], expectFmt: Int,
+                               spareYoungPublished: Boolean = true): Unit = {
     val keep = scala.collection.mutable.Set.empty[String]
     def keepChain(name: String): Unit = {
       val p = new Path(rootPath, name)

@@ -572,26 +572,30 @@ object SnapshotStore {
       fs.delete(new Path(snaps, n + FileStats.StatsSuffix), true)
       fs.delete(claimPath(root, n), false)
     }
-    // claim files are the commit records of their version dirs; once the
-    // dir is gone (vacuumed above, or a writer crashed between claim and
-    // write) a claim only blocks slot reuse — collect it when its version
-    // is already superseded or its writer is past the break TTL
-    fs.listStatus(snaps).filter(f =>
-      f.isFile && f.getPath.getName.endsWith(".claim")).foreach { f =>
-      val ver = f.getPath.getName.stripSuffix(".claim")
-      val dirGone = !fs.exists(new Path(snaps, ver))
-      val superseded = current.exists(_ >= ver)
-      val stale = claimContent(fs, f.getPath).forall { case (_, ts) =>
-        System.currentTimeMillis() - ts > DefaultClaimTtlMs }
-      if (dirGone && (superseded || stale)) fs.delete(f.getPath, false)
-    }
-    // orphan stats sidecars: a sidecar whose version dir is gone (JVM
-    // death between sidecar write and publish, then slot never reused)
-    // describes deleted files — collect it like the claim records
-    fs.listStatus(snaps).filter(st => st.isDirectory &&
-      st.getPath.getName.endsWith(FileStats.StatsSuffix)).foreach { st =>
-      val ver = st.getPath.getName.stripSuffix(FileStats.StatsSuffix)
-      if (!fs.exists(new Path(snaps, ver))) fs.delete(st.getPath, true)
+    // one sweep over the records whose version dir is gone (vacuumed
+    // above, or a writer or a vacuum that died part-way):
+    //  - a claim only blocks slot reuse — collect it when its version is
+    //    already superseded or its writer is past the break TTL;
+    //  - a manifest of a version that is not retained (a failure between
+    //    a victim's dir and manifest deletes) is named by nothing;
+    //  - a stats sidecar (JVM death between sidecar write and publish,
+    //    then slot never reused) describes deleted files.
+    fs.listStatus(snaps).foreach { st =>
+      val name = st.getPath.getName
+      def dirGone(suffix: String) =
+        !fs.exists(new Path(snaps, name.stripSuffix(suffix)))
+      if (st.isFile && name.endsWith(".claim") && dirGone(".claim")) {
+        val ver = name.stripSuffix(".claim")
+        val superseded = current.exists(_ >= ver)
+        val stale = claimContent(fs, st.getPath).forall { case (_, ts) =>
+          System.currentTimeMillis() - ts > DefaultClaimTtlMs }
+        if (superseded || stale) fs.delete(st.getPath, false)
+      } else if (st.isFile && name.endsWith(".manifest") &&
+          !keep(name.stripSuffix(".manifest")) && dirGone(".manifest"))
+        fs.delete(st.getPath, false)
+      else if (st.isDirectory && name.endsWith(FileStats.StatsSuffix) &&
+          dirGone(FileStats.StatsSuffix))
+        fs.delete(st.getPath, true)
     }
     victims.length
   }

@@ -541,7 +541,6 @@ object StreamingOps {
     // appending, which is only well-formed for a cap of at least one
     require(maxBucket >= 1, s"maxBucket=$maxBucket must be >= 1")
     val rowsPerBand = numPerms / bands
-    graft.functions.MinHashSig.register(spark)
     docs
       .select(col("doc_id"),
         split(lower(trim(regexp_replace(col("text"), "\\s+", " "))), " ").as("toks"))

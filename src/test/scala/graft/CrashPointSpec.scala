@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.gold.GoldEtl
 import graft.scd.Scd2
-import graft.store.{PointerCommit, SnapshotStore}
+import graft.store.{GenLog, PointerCommit, SnapshotStore}
 
 /** Every filesystem step of every table publish path, failed one at a
   * time. For each path the crash-free run is counted first on the
@@ -22,7 +22,13 @@ import graft.store.{PointerCommit, SnapshotStore}
   *     as after the crash-free run (never a mix, never missing);
   *  2. a plain retry of the path converges to the crash-free rows;
   *  3. vacuum then deletes nothing a live snapshot references: the rows
-  *     are unchanged and every version a kept manifest names is on disk.
+  *     are unchanged and every version a kept manifest names is on disk;
+  *     and it leaves no manifest whose version dir is gone.
+  *
+  * Index generations ([[GenLog.publish]]) get the same treatment:
+  * the pointer names the old or the new head and its whole chain
+  * reads, a plain retry converges, and a later publish's prune keeps
+  * every generation the pointer's chain names.
   *
   * Fixtures stay at 100 rows or fewer. The k count and the calls per
   * type of each path are printed. */
@@ -72,6 +78,28 @@ class CrashPointSpec extends SparkSuite {
       assert(fs.exists(new Path(snaps, v)), s"$ctx: vacuum deleted referenced $v"))
   }
 
+  /** No `.manifest` under `_snapshots/` outlives its version dir. */
+  private def assertNoOrphanManifests(root: String, ctx: String): Unit = {
+    val snaps = new Path(root, SnapshotStore.SnapshotsDir)
+    val fs = snaps.getFileSystem(conf)
+    val orphans = fs.listStatus(snaps).map(_.getPath.getName)
+      .filter(_.endsWith(".manifest"))
+      .filterNot(m => fs.exists(new Path(snaps, m.stripSuffix(".manifest"))))
+    assert(orphans.isEmpty,
+      s"$ctx: manifests without a version dir: ${orphans.sorted.mkString(", ")}")
+  }
+
+  /** Run `check` for every k in 1..n, a few crash points at a time
+    * (they are independent copies). */
+  private def forEachCrashPoint(n: Int)(check: Int => Unit): Unit = {
+    val pool = Executors.newFixedThreadPool(Parallel)
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      Await.result(Future.traverse((1 to n).toList)(k => Future(check(k))),
+        10.minutes)
+    } finally pool.shutdown()
+  }
+
   private def enumerate(p: PublishPath): Unit = {
     val t0 = System.nanoTime()
     val pristine = Files.createTempDirectory(s"graft_crash_${p.name}").toString
@@ -109,14 +137,9 @@ class CrashPointSpec extends SparkSuite {
       p.tables(base).foreach(SnapshotStore.vacuum(spark, _, keepLast = 1))
       assert(states(p, base) == after, s"$ctx: retry + vacuum did not converge")
       p.tables(base).foreach(assertReferencesKept(_, ctx))
+      p.tables(base).foreach(assertNoOrphanManifests(_, ctx))
     }
-    // crash points are independent copies: check a few at a time
-    val pool = Executors.newFixedThreadPool(Parallel)
-    try {
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      Await.result(Future.traverse((1 to n).toList)(k => Future(check(k))),
-        10.minutes)
-    } finally pool.shutdown()
+    forEachCrashPoint(n)(check)
     println(f"[crash-points] ${p.name}: $n crash points checked in ${(System.nanoTime() - t0) / 1e9}%.1f s")
   }
 
@@ -239,5 +262,102 @@ class CrashPointSpec extends SparkSuite {
       },
       base => SnapshotStore.vacuum(spark, s"$base/g", keepLast = 1),
       base => Seq(s"$base/g")))
+  }
+
+  // ------------------------------------------------ index generations
+
+  private val GenFmt = 1
+
+  /** (meta `n` of the live head, sorted data rows of its whole chain);
+    * None with no head. Reading the chain fails if any member is gone. */
+  private def genState(root: String): Option[(Long, Seq[Long])] =
+    GenLog.head(spark, root, GenFmt).map { case (g, m) =>
+      (m.n, GenLog.readChain(spark, g, GenFmt, "data").collect()
+        .map(_.getLong(0)).sorted.toSeq)
+    }
+
+  private def headName(root: String): Option[String] =
+    GenLog.head(spark, root, GenFmt).map(_._1.getName)
+
+  /** Publish `ids` as the generation of snapshot `snap`, chained to the
+    * live head when `delta`. A head already at `snap` means an earlier
+    * attempt published, so the call is a no-op: the index modules'
+    * snapshot key makes their retries idempotent the same way. */
+  private def publishIds(root: String, snap: String, ids: Range,
+                         delta: Boolean): Unit = {
+    val head = GenLog.head(spark, root, GenFmt)
+    val parent = head.filter(_ => delta)
+    if (!head.exists(_._2.snap.contains(snap)))
+      GenLog.publish(spark, root, GenLog.Meta(
+          parent.map(_._2.n).getOrElse(0L) + ids.size, GenFmt, 0L, Some(snap),
+          parent.map(_._1.getName))) { gen =>
+        spark.range(ids.start, ids.end).write
+          .parquet(new Path(gen, "data").toString)
+      }
+  }
+
+  /** Every crash point of one [[GenLog.publish]] on `<base>/idx`. The
+    * prune grace is 0 throughout, so a later publish's prune would
+    * delete any crash debris it does not keep, and the check that it
+    * keeps the live chain is not vacuous. */
+  private def enumerateGen(name: String, setup: String => Unit,
+                           op: String => Unit): Unit = {
+    val t0 = System.nanoTime()
+    val grace = GenLog.pruneGraceMs
+    GenLog.pruneGraceMs = 0L
+    try {
+      val pristine = Files.createTempDirectory(s"graft_crash_$name").toString
+      val local = s"$pristine/start"
+      assert(new java.io.File(local).mkdirs())
+      CrashFs.install(conf)
+      setup(s"${CrashFs.uri(local)}/idx")
+      def fresh(tag: String): String = {
+        val dir = s"$pristine/$tag"
+        copy(local, dir)
+        CrashFs.uri(dir)
+      }
+      val clean = fresh("clean")
+      val (before, oldHead) = (genState(s"$clean/idx"), headName(s"$clean/idx"))
+      CrashFs.watch(clean)
+      op(s"$clean/idx")
+      val (n, calls) = (CrashFs.total(clean), CrashFs.calls(clean))
+      CrashFs.unwatch(clean)
+      val after = genState(s"$clean/idx")
+      println(s"[crash-points] $name: k = 1..$n, calls " +
+        calls.toSeq.sorted.map { case (op, c) => s"$op=$c" }.mkString(" "))
+      assert(n > 0 && after != before, s"$name: the crash-free run published nothing")
+      forEachCrashPoint(n) { k =>
+        val ctx = s"$name k=$k"
+        val base = fresh(s"k$k")
+        val root = s"$base/idx"
+        CrashFs.watch(base)
+        CrashFs.armAt(base, k)
+        val attempt = try Try(op(root)) finally CrashFs.unwatch(base)
+        val seen = genState(root)
+        assert((seen == before && headName(root) == oldHead) || seen == after,
+          s"$ctx: the pointer names neither the old nor the new head " +
+            s"(${attempt.failed.map(_.getMessage).getOrElse("no error")})")
+        op(root)
+        assert(genState(root) == after, s"$ctx: retry did not converge")
+        val live = GenLog.chain(spark, GenLog.head(spark, root, GenFmt).get._1,
+          GenFmt)
+        publishIds(root, "later", 1000 until 1005, delta = true)
+        val fs = new Path(root).getFileSystem(conf)
+        live.foreach(g => assert(fs.exists(new Path(g, "meta")),
+          s"$ctx: a later prune deleted ${g.getName}, which the chain names"))
+        assert(genState(root) == after.map { case (m, rows) =>
+          (m + 5, rows ++ (1000L until 1005L)) },
+          s"$ctx: the later head's chain does not read")
+      }
+    } finally GenLog.pruneGraceMs = grace
+    println(f"[crash-points] $name: checked in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+  }
+
+  test("GenLog.publish, base and delta: every crash point leaves the old or new head, retry converges") {
+    enumerateGen("gen_base", _ => (),
+      root => publishIds(root, "s1", 0 until 10, delta = false))
+    enumerateGen("gen_delta",
+      root => publishIds(root, "s1", 0 until 10, delta = false),
+      root => publishIds(root, "s2", 10 until 15, delta = true))
   }
 }

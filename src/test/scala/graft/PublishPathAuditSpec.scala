@@ -7,7 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * visible by one pointer replacement ([[graft.store.SnapshotStore]]),
   * whose single rename lives in `store/GenLog.scala`. A rename anywhere
   * else in main code moves live data into place in steps a reader or a
-  * crash can land between, which is what the pointer protocol replaced. */
+  * crash can land between, which is what the pointer protocol replaced.
+  * Index artifacts likewise have one generation publish,
+  * [[graft.store.GenLog.publish]]; a hand-copied sequence of its steps
+  * outside `graft/store/` is how the copies came to drift. */
 class PublishPathAuditSpec extends AnyFunSuite {
   test("the only rename in main code is the pointer flip in store/GenLog.scala") {
     val root = new File("src/main/scala")
@@ -25,6 +28,23 @@ class PublishPathAuditSpec extends AnyFunSuite {
     }.sorted
     assert(offenders.isEmpty,
       s"publish tables through graft.store (no rename, no $swap) in:\n" +
+        offenders.mkString("\n"))
+  }
+
+  test("index generations are published only through GenLog.publish") {
+    val root = new File("src/main/scala")
+    assert(root.isDirectory, "audit must run from the repo root")
+    val store = new File(root, "graft/store")
+    assert(new File(store, "GenLog.scala").isFile,
+      "the generation log moved: update this audit")
+    val storeDir = store.getCanonicalPath + File.separator
+    val step = """\b(newGenName|publishGen|pruneGens|writeMeta)\(""".r
+    val offenders = SourceTree.scalaFiles(root)
+      .filterNot(_.getCanonicalPath.startsWith(storeDir))
+      .filter(f => step.findFirstIn(SourceTree.readAll(f)).isDefined)
+      .map(_.getPath).sorted
+    assert(offenders.isEmpty,
+      "publish index generations through GenLog.publish, not its steps, in:\n" +
         offenders.mkString("\n"))
   }
 }
