@@ -185,7 +185,7 @@ object IncrementalCurate {
     * ONLY its batch's rows, as one fresh `batch_id=<version>` partition
     * dir inside the new version dir, and carries every previous batch's
     * partition forward BY REFERENCE in the version's manifest
-    * ([[SnapshotStore.writeManifest]] — the gold-table incremental
+    * ([[SnapshotStore.publish]] — the gold-table incremental
     * layout). Carried files keep their byte-identical paths and are
     * never rewritten, so daily write volume is O(accepted batch)
     * however large the corpus; the flat `readAt(prev) ∪ accepted`
@@ -200,35 +200,17 @@ object IncrementalCurate {
     * re-attaches `batch_id` from the partition dir names. */
   def publishDelta(spark: SparkSession, curatedRoot: String,
                    accepted: DataFrame, base: Option[String]): String =
-    SnapshotStore.commitFrom(spark, curatedRoot, base) { dir =>
-      val dirPath = new org.apache.hadoop.fs.Path(dir)
-      val name = dirPath.getName
-      accepted.withColumn("batch_id", lit(name))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("batch_id").parquet(dir)
-      val fresh = SnapshotStore.freshEntries(spark, dir, depth = 1)
-      // the pointer still names `base` until commitFrom flips it, so
-      // currentEntries here reads exactly the carried-forward set
-      val carried =
-        if (base.isEmpty) Map.empty[String, String]
-        else SnapshotStore.currentEntries(spark, curatedRoot, 1)
-          .getOrElse(Map.empty)
-      require(base.isEmpty || carried.nonEmpty,
-        s"publishDelta: prior snapshot of $curatedRoot has no batch_id=* " +
-          "partitions and no manifest — the curated store must be " +
-          "delta-published from its first commit")
-      SnapshotStore.writeManifest(spark, curatedRoot, name, carried ++ fresh)
-      // O(churn) stats+bloom sidecar: only the fresh batch is scanned,
-      // carried batches copy their immutable sidecar rows. doc_id blooms
-      // let [[forget]] locate a target's batch partition (RTBF rewrites
-      // bounded by affected batches) and back [[curateBatch]]'s
-      // redelivery guard; content_hash blooms back its exact-dedup
-      // probe — together they make the daily batch's history questions
-      // sidecar-answerable, never corpus scans
-      graft.store.FileStats.writeSidecarIncremental(spark, curatedRoot,
-        name, base, statCols = SidecarCols, bloomCols = SidecarCols,
-        bloomFpp = SidecarFpp)
-    }
+    // O(churn) stats+bloom sidecar: only the fresh batch is scanned,
+    // carried batches copy their immutable sidecar rows. doc_id blooms
+    // let [[forget]] locate a target's batch partition (RTBF rewrites
+    // bounded by affected batches) and back [[curateBatch]]'s
+    // redelivery guard; content_hash blooms back its exact-dedup
+    // probe — together they make the daily batch's history questions
+    // sidecar-answerable, never corpus scans
+    SnapshotStore.publish(
+      accepted.withColumn("batch_id", lit(SnapshotStore.nextVersion(base))),
+      curatedRoot, Seq("batch_id"), base, replaces = Some(_ => false),
+      stats = Some(SidecarStats))._1
 
   /** The sidecar columns every curated-store publish maintains (stats +
     * blooms): `doc_id` (RTBF targeting + redelivery guard) and
@@ -251,6 +233,9 @@ object IncrementalCurate {
     * collectStats' per-file max sizing. */
   val SidecarFpp: Double = 1e-4
 
+  private val SidecarStats =
+    graft.store.FileStats.StatCols(SidecarCols, SidecarCols, bloomFpp = SidecarFpp)
+
   /** LSM compaction valve for the curated store — the [[publishDelta]]
     * counterpart of [[graft.operators.LshBandIndex.MaxChain]]: past this
     * many manifest entries, [[consolidate]] collapses the store into one
@@ -270,25 +255,13 @@ object IncrementalCurate {
     * write, amortized LSM-style over the `MaxStoreFanout` batches that
     * grew the manifest; superseded versions become vacuum-collectable
     * (nothing references them). Fenced on the current snapshot. */
-  def consolidate(spark: SparkSession, curatedRoot: String): String = {
-    val base = SnapshotStore.currentName(spark, curatedRoot)
-    SnapshotStore.commitFrom(spark, curatedRoot, base) { dir =>
-      val dirPath = new org.apache.hadoop.fs.Path(dir)
-      val name = dirPath.getName
-      // one file per batch_id partition (the small-files rule: cluster
-      // by the partition column before partitionBy)
-      SnapshotStore.read(spark, curatedRoot)
-        .repartition(col("batch_id"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("batch_id").parquet(dir)
-      val fresh = SnapshotStore.freshEntries(spark, dir, depth = 1)
-      SnapshotStore.writeManifest(spark, curatedRoot, name, fresh)
-      // every partition is fresh in a consolidation: full sidecar
-      graft.store.FileStats.writeSidecarIncremental(spark, curatedRoot,
-        name, None, statCols = SidecarCols, bloomCols = SidecarCols,
-        bloomFpp = SidecarFpp)
-    }
-  }
+  def consolidate(spark: SparkSession, curatedRoot: String): String =
+    // one file per batch_id partition (the small-files rule: cluster by
+    // the partition column before partitionBy); every partition is fresh
+    SnapshotStore.publish(
+      SnapshotStore.read(spark, curatedRoot).repartition(col("batch_id")),
+      curatedRoot, Seq("batch_id"), SnapshotStore.currentName(spark, curatedRoot),
+      stats = Some(SidecarStats))._1
 
   /** RIGHT-TO-BE-FORGOTTEN on the curated corpus: remove `docIds`
     * rewriting ONLY the batch partitions whose bloom sidecar says a
@@ -327,7 +300,7 @@ object IncrementalCurate {
     * index. */
   def consolidateIfWide(spark: SparkSession, curatedRoot: String,
                         maxFanout: Int = MaxStoreFanout): Option[String] = {
-    val fanout = SnapshotStore.currentEntries(spark, curatedRoot, 1)
+    val fanout = SnapshotStore.currentEntries(spark, curatedRoot)
       .map(_.values.toSet.size).getOrElse(0)
     if (fanout > maxFanout) Some(consolidate(spark, curatedRoot)) else None
   }
@@ -357,10 +330,8 @@ object IncrementalCurate {
       val docs = graft.Tables.documents(spark, sfDir)
       val hist = docs.filter(col("doc_id") < 400)
       val rawRoot = s"$base/raw"
-      val snap1 = SnapshotStore.commit(spark, rawRoot)(dir =>
-        hist.write.parquet(dir))
-      val snap2 = SnapshotStore.commit(spark, rawRoot)(dir =>
-        docs.write.parquet(dir))
+      val snap1 = SnapshotStore.publish(hist, rawRoot, Nil, None)._1
+      val snap2 = SnapshotStore.publish(docs, rawRoot, Nil, Some(snap1))._1
       // day-1 history curation (full, portable family end-to-end);
       // published as batch 1 of the delta layout
       val curatedHist = curateHistory(spark, hist)

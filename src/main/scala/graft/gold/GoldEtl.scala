@@ -274,68 +274,28 @@ object GoldEtl {
     * time-range training-data pull a gold consumer actually runs. */
   val GoldStatCols: Seq[String] = Seq("quarter")
 
-  /** Manifest commit for incremental gold: the affected
-    * (year, month) groups' replacement partitions land in a brand-new
-    * version dir; the manifest maps every partition of the NEW snapshot
-    * to the version dir holding its data — fresh partitions to the new
-    * version, unchanged ones carried forward by reference from the
-    * previous snapshot's entries (affected groups' old entries dropped).
-    * Written before the pointer flip, so readers see the whole new
-    * snapshot atomically; a crash at any step leaves them on the old
-    * one. Read back via `SnapshotStore.readPartitioned`. */
+  /** Incremental gold publish: the affected (year, month) groups'
+    * replacement partitions land in a brand-new version dir, and its
+    * manifest carries every other partition forward by reference from
+    * the previous snapshot, fenced on that snapshot. The stats sidecar
+    * is O(churn) like the manifest: fresh partitions are scanned (narrow
+    * — GoldStatCols only), carried ones copy their immutable sidecar
+    * rows; the first incremental after a full run, which wrote no
+    * sidecar, scans the whole table once. Gold range reads go through
+    * FileStats.pruneFiles like silver's (s24). */
   private[graft] def publishIncrementalManifest(spark: SparkSession, goldPath: String,
                                          selected: DataFrame,
                                          affectedKeys: Array[(Int, Int)]): Unit = {
     val affected = affectedKeys.toSet
-    val prevName = SnapshotStore.currentName(spark, goldPath)
-    val prev = SnapshotStore.currentEntries(spark, goldPath, 3)
-      .getOrElse(Map.empty)
-    // fence on prevName — the version `prev`'s carried entries were read
-    // from (the commitFrom RMW discipline): a racing publish would
-    // otherwise be silently pointed back at stale partition dirs
-    SnapshotStore.commitFrom(spark, goldPath, prevName) { dir =>
-      selected.write.mode(SaveMode.Overwrite)
-        .partitionBy("quality_tier", "year", "month").parquet(dir)
-      val dirPath = new org.apache.hadoop.fs.Path(dir)
-      val name = dirPath.getName
-      val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val fresh = SnapshotStore.freshEntries(spark, dir, depth = 3)
-      def groupOf(rel: String): (Int, Int) = {
-        val kv = rel.split('/').map { s =>
-          val Array(k, v) = s.split("=", 2); k -> v
-        }.toMap
-        (kv("year").toInt, kv("month").toInt)
-      }
-      val carried = prev.filterNot { case (rel, _) => affected(groupOf(rel)) }
-      SnapshotStore.writeManifest(spark, goldPath, name, carried ++ fresh)
-      // stats sidecar, O(churn) like the manifest itself: fresh
-      // partitions are scanned (narrow — GoldStatCols only), carried
-      // partitions copy their immutable sidecar rows verbatim. A
-      // previous snapshot WITHOUT a sidecar (a full-run publish, or any
-      // pre-stats table) bootstraps with one full narrow scan; every
-      // publish after that is incremental. This closes the last
-      // production table without O(churn) stats maintenance (r12
-      // verdict #3) — gold range reads go through FileStats.pruneFiles
-      // like silver's (s24) do.
-      // only the stat columns this frame actually carries — callers
-      // outside the full gold pipeline (protocol tests, partial
-      // publishes) may hand narrower frames, and a missing feature
-      // column must degrade to "no stats", never an analysis error
-      val statCols = GoldStatCols.filter(selected.columns.contains)
-      if (statCols.nonEmpty) {
-        val snaps = new org.apache.hadoop.fs.Path(
-          goldPath, SnapshotStore.SnapshotsDir)
-        val prevSidecar = prevName.exists(p => fs.exists(
-          new org.apache.hadoop.fs.Path(snaps,
-            p + graft.store.FileStats.StatsSuffix)))
-        if (prevSidecar)
-          graft.store.FileStats.writeSidecarIncremental(spark, goldPath,
-            name, prevName, statCols)
-        else
-          graft.store.FileStats.writeSidecarFull(spark, goldPath, name,
-            statCols)
-      }
-    }
+    // only the stat columns this frame actually carries — callers
+    // outside the full gold pipeline (protocol tests, partial
+    // publishes) may hand narrower frames, and a missing feature
+    // column must degrade to "no stats", never an analysis error
+    val statCols = GoldStatCols.filter(selected.columns.contains)
+    SnapshotStore.publish(selected, goldPath, Seq("quality_tier", "year", "month"),
+      SnapshotStore.currentName(spark, goldPath),
+      replaces = Some(vals => affected((vals("year").toInt, vals("month").toInt))),
+      stats = Some(statCols).filter(_.nonEmpty).map(graft.store.FileStats.StatCols(_)))
   }
 
   /** Full gold pipeline (gold_ml_etl.py:536-568). `commit` as in

@@ -16,7 +16,7 @@ import graft.store.{PointerCommit, SnapshotStore}
   * (so DuckDB can recompute the expected result from the same parquet),
   * runs the production write path — SCD2 merge (flat and regioned),
   * optimize, pointer-commit time travel + vacuum, dynamic partition
-  * overwrite, append+mergeSchema, quarantine/metadata sinks, the full
+  * overwrite, append with schema evolution, quarantine/metadata sinks, the full
   * gold ETL — into a FRESH temp dir per invocation, and returns the
   * READ-BACK table. What's gated is therefore the storage machinery
   * end-to-end: partitioned writes, hive read-back typing (partition
@@ -834,8 +834,9 @@ object WritePathQueries {
         .orderBy(col("universal_id").cast("long"))
     }),
 
-    // S3: append + mergeSchema — the second write carries a column the
-    // first never had; merged read pads day-1 rows with typed nulls.
+    // S3: append with schema evolution — the second write carries a
+    // column the first never had; the read names the evolved schema (as
+    // a table's stored schema does) and pads day-1 rows with typed nulls.
     "s3_append_mergeschema" -> ((s, d) => {
       val dir = tmp("graft_gate_append")
       val ck = col("c_custkey")
@@ -843,12 +844,12 @@ object WritePathQueries {
         .select(ck.cast("string").as("universal_id"),
           col("c_name").as("project_name"))
         .write.parquet(dir)
-      customer(s, d).filter(ck % 13 === 0)
+      val day2 = customer(s, d).filter(ck % 13 === 0)
         .select((ck + 3000000).cast("string").as("universal_id"),
           concat(lit("NEW "), col("c_name")).as("project_name"),
           ((ck % 10).cast("double") * 0.5).as("extra_score"))
-        .write.mode(SaveMode.Append).parquet(dir)
-      s.read.option("mergeSchema", "true").parquet(dir)
+      day2.write.mode(SaveMode.Append).parquet(dir)
+      s.read.schema(day2.schema).parquet(dir)
         .select("universal_id", "project_name", "extra_score")
         .orderBy(col("universal_id").cast("long"))
     }),
@@ -1131,10 +1132,9 @@ object WritePathQueries {
           getClass) { w =>
         val root = s"$w/store"
         val docs = graft.Tables.documents(s, d)
-        SnapshotStore.commit(s, root)(dir =>
-          docs.filter(col("doc_id") < 300).write.parquet(dir))
+        publishFull(root, docs.filter(col("doc_id") < 300))
         val g1 = SketchSidecar.ensureForSnapshot(s, root)
-        SnapshotStore.commit(s, root)(dir => docs.write.parquet(dir))
+        publishFull(root, docs)
         val g2 = SketchSidecar.advanceForSnapshotWithBatch(s, root,
           docs.filter(col("doc_id") >= 300))
         require(g2 != g1, "advance must publish a new generation")
@@ -1142,6 +1142,11 @@ object WritePathQueries {
       }
       SketchSidecar.ensureForSnapshot(s, s"$world/store")
     })
+
+  /** Publish `df` as the store's next full snapshot; its name. */
+  private def publishFull(root: String, df: DataFrame): String =
+    SnapshotStore.publish(df, root, Nil,
+      SnapshotStore.currentName(df.sparkSession, root))._1
 
   /** Build the snapshot-keyed TEXT index scenario once per (JVM, sfDir):
     * history (doc_id < 300) committed + indexed, growth to the full
@@ -1159,11 +1164,9 @@ object WritePathQueries {
           getClass) { w =>
         val root = s"$w/store"
         val docs = graft.Tables.documents(s, d)
-        SnapshotStore.commit(s, root)(dir =>
-          docs.filter(col("doc_id") < 300).write.parquet(dir))
+        publishFull(root, docs.filter(col("doc_id") < 300))
         val g1 = TextIndex.ensureForSnapshot(s, root)
-        val snap2 = SnapshotStore.commit(s, root)(dir =>
-          docs.write.parquet(dir))
+        val snap2 = publishFull(root, docs)
         val g2 = TextIndex.advanceWithBatch(s, s"store:$root",
           docs.filter(col("doc_id") >= 300), snap = Some(snap2))
         require(g2 != g1, "advance must publish a new generation")
@@ -1189,10 +1192,9 @@ object WritePathQueries {
         val root = s"$w/store"
         val originals = DedupExtQueries.plantedCorpus(s, d)
           .filter(col("vec_id") < DedupExtQueries.CopyIdOffset)
-        SnapshotStore.commit(s, root)(dir =>
-          originals.filter(col("vec_id") % 2 === 0).write.parquet(dir))
+        publishFull(root, originals.filter(col("vec_id") % 2 === 0))
         val g1 = CosineLshIndex.ensureForSnapshot(s, root)
-        SnapshotStore.commit(s, root)(dir => originals.write.parquet(dir))
+        publishFull(root, originals)
         val g2 = CosineLshIndex.advanceForSnapshotWithBatch(s, root,
           originals.filter(col("vec_id") % 2 =!= 0))
         require(g2 != g1, "advance must publish a new generation")
@@ -1219,11 +1221,9 @@ object WritePathQueries {
           getClass) { w =>
         val root = s"$w/store"
         val docs = graft.Tables.documents(s, d)
-        SnapshotStore.commit(s, root)(dir =>
-          docs.filter(col("doc_id") < 300).write.parquet(dir))
+        publishFull(root, docs.filter(col("doc_id") < 300))
         val g1 = LshBandIndex.ensureForSnapshot(s, root)
-        val snap2 = SnapshotStore.commit(s, root)(dir =>
-          docs.filter(col("doc_id") < 400).write.parquet(dir))
+        val snap2 = publishFull(root, docs.filter(col("doc_id") < 400))
         val g2 = LshBandIndex.advanceWithBatch(s, s"store:$root",
           docs.filter(col("doc_id") >= 300 && col("doc_id") < 400),
           snap = Some(snap2))

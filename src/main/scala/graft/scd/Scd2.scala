@@ -386,59 +386,28 @@ object Scd2 {
         .unionByName(fromBatch, allowMissingColumns = true)
       // carried-by-reference only works when the live snapshot HAS
       // partition granules to reference. After optimizeCurrentWithStats
-      // the live snapshot is a FLAT (unpartitioned, manifest-less)
-      // sorted republish: currentEntries' hive-dir glob finds nothing,
-      // and an incremental manifest built on an empty carried map would
-      // silently DROP every untouched partition's rows. That first
-      // merge must full-width republish — exactly the cost the optimize
-      // scaladoc promises — which also restores the partition dirs so
-      // later merges are O(churn) again.
-      val prev = SnapshotStore
-        .currentEntries(spark, curPath, partitionColumns.length)
-        .filter(_.nonEmpty)
-      prev match {
-        case Some(entries) =>
-          writeChurnedPartitions(spark, replacement, churned, curPath,
-            partitionColumns, entries, curBase)
-        case None =>
-          val untouched = cur.join(broadcast(dim), cond, "left_anti")
-          PointerCommit.publishFrom(
-            untouched.unionByName(replacement, allowMissingColumns = true),
-            curPath, partitionColumns, curBase)
-          ()
+      // the live snapshot is a FLAT (unpartitioned) sorted republish,
+      // whose one entry sits at depth 0, and an incremental publish on
+      // it could carry nothing forward. That first merge must full-width
+      // republish — exactly the cost the optimize scaladoc promises —
+      // which also restores the partition dirs so later merges are
+      // O(churn) again.
+      val partitioned = SnapshotStore.currentEntries(spark, curPath).exists(es =>
+        es.nonEmpty && es.keys.forall(rel =>
+          SnapshotStore.partitionValues(rel).map(_._1) == partitionColumns))
+      if (partitioned) {
+        // only the churned partitions land in the new version; the
+        // manifest carries every other partition forward by reference
+        val churnedSet = churned.toSet
+        SnapshotStore.publish(replacement, curPath, partitionColumns, curBase,
+          replaces = Some(vals => churnedSet(partitionColumns.map(vals))))
+      } else {
+        val untouched = cur.join(broadcast(dim), cond, "left_anti")
+        PointerCommit.publishFrom(
+          untouched.unionByName(replacement, allowMissingColumns = true),
+          curPath, partitionColumns, curBase)
       }
     } finally prunedCur.unpersist()
-  }
-
-  /** Publish `replacement` into ONLY the churned partitions of the
-    * current region: they land in a fresh immutable version dir, the
-    * manifest carries the untouched partitions of `prev` (the live
-    * entries) forward by reference — the [[SnapshotStore]]
-    * incremental-manifest mechanism, shared with the gold ETL and the
-    * closed-region append — and the pointer flip is atomic. */
-  private def writeChurnedPartitions(spark: SparkSession,
-                                     replacement: DataFrame,
-                                     churned: Array[Seq[String]],
-                                     curPath: String,
-                                     partitionColumns: Seq[String],
-                                     prev: Map[String, String],
-                                     curBase: Option[String]): Unit = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val churnedRel = churned.map(k =>
-      partitionColumns.zip(k).map { case (c, v) =>
-        val ev = if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-                 else ExternalCatalogUtils.escapePathName(v)
-        s"${ExternalCatalogUtils.escapePathName(c)}=$ev"
-      }.mkString("/")).toSet
-    SnapshotStore.commitFrom(spark, curPath, curBase) { dir =>
-      replacement.write.mode(SaveMode.Overwrite)
-        .partitionBy(partitionColumns: _*).parquet(dir)
-      val name = new Path(dir).getName
-      val fresh = SnapshotStore.freshEntries(spark, dir,
-        depth = partitionColumns.length)
-      val carried = prev.filterNot { case (rel, _) => churnedRel(rel) }
-      SnapshotStore.writeManifest(spark, curPath, name, carried ++ fresh)
-    }
   }
 
   /** Append the day's close-outs to the closed region, partitioned by
@@ -520,16 +489,9 @@ object Scd2 {
         "left_anti")
       case None => newlyClosed
     }
-    val prev = SnapshotStore.currentEntries(spark, closedPath, 2)
-      .getOrElse(Map.empty)
-    SnapshotStore.commitFrom(spark, closedPath, closedBase) { dir =>
-      val name = new Path(dir).getName
-      deduped.withColumn("close_batch", lit(name))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("valid_to", "close_batch").parquet(dir)
-      val fresh = SnapshotStore.freshEntries(spark, dir, depth = 2)
-      SnapshotStore.writeManifest(spark, closedPath, name, prev ++ fresh)
-    }
+    SnapshotStore.publish(
+      deduped.withColumn("close_batch", lit(SnapshotStore.nextVersion(closedBase))),
+      closedPath, ClosedPartitions, closedBase, replaces = Some(_ => false))
     // AFTER the append commits: a crash before this line leaves the
     // started-marker, routing the retry through the payload-dedup arm
     fs.create(doneMark, true).close()
@@ -575,50 +537,44 @@ object Scd2 {
     val closedPath = closedRoot(root)
     if (!PointerCommit.exists(spark, closedPath)) return 0
     val closedBase = SnapshotStore.currentName(spark, closedPath)
-    val entries = SnapshotStore.currentEntries(spark, closedPath, 2)
+    val entries = SnapshotStore.currentEntries(spark, closedPath)
       .getOrElse(Map.empty)
-    val snaps = new Path(closedPath, SnapshotStore.SnapshotsDir)
-    val fs = snaps.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(closedPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def parquetFiles(dir: Path): Int =
       if (!fs.exists(dir)) 0
       else fs.listStatus(dir).count(f =>
         f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val byDate = entries.toSeq.groupBy(_._1.split('/').head)
+    val byDate = entries.toSeq.groupBy { case (rel, _) =>
+      SnapshotStore.partitionValues(rel).head._2 }
     // a date needs compaction when its rows are spread over several
     // close_batch dirs, or one batch dir itself has too many files
     val oversized = byDate.filter { case (_, es) =>
       es.size > 1 || es.exists { case (rel, ver) =>
-        parquetFiles(new Path(new Path(snaps, ver), rel)) > maxFilesPerPartition
+        parquetFiles(SnapshotStore.entryDir(closedPath, rel, ver)) > maxFilesPerPartition
       }
-    }
+    }.keySet
     if (oversized.isEmpty) return 0
-    val dates = oversized.keySet.map(_.stripPrefix("valid_to="))
-    SnapshotStore.commitFrom(spark, closedPath, closedBase) { dir =>
-      val name = new Path(dir).getName
-      SnapshotStore.readPartitioned(spark, closedPath,
-        Seq("valid_to", "close_batch"))
-        .filter(col("valid_to").isin(dates.toSeq: _*))
+    SnapshotStore.publish(
+      SnapshotStore.readAt(spark, closedPath, closedBase.get)
+        .filter(col("valid_to").isin(oversized.toSeq: _*))
         .drop("close_batch")
         .coalesce(maxFilesPerPartition)
-        .withColumn("close_batch", lit(name))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("valid_to", "close_batch").parquet(dir)
-      val fresh = SnapshotStore.freshEntries(spark, dir, depth = 2)
-      val carried = entries.filterNot { case (rel, _) =>
-        oversized.contains(rel.split('/').head)
-      }
-      SnapshotStore.writeManifest(spark, closedPath, name, carried ++ fresh)
-    }
+        .withColumn("close_batch", lit(SnapshotStore.nextVersion(closedBase))),
+      closedPath, ClosedPartitions, closedBase,
+      replaces = Some(vals => oversized(vals("valid_to"))))
     oversized.size
   }
+
+  /** The closed region's partition columns: each merge's close-outs land
+    * under their close date and a per-batch key. */
+  private val ClosedPartitions = Seq("valid_to", "close_batch")
 
   /** The closed region, if any close-out has ever been written.
     * `valid_to` comes back as a (string) partition column. */
   private def readClosedRegion(spark: SparkSession,
                                closedPath: String): Option[DataFrame] =
     if (!PointerCommit.exists(spark, closedPath)) None
-    else Some(SnapshotStore
-      .readPartitioned(spark, closedPath, Seq("valid_to", "close_batch"))
+    else Some(SnapshotStore.readPartitioned(spark, closedPath, ClosedPartitions)
       .drop("close_batch"))
 
   /** Full history of a regioned table: current ∪ closed. `commit` has

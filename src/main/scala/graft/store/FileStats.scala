@@ -68,20 +68,18 @@ object FileStats {
     * should drop fpp (size grows only logarithmically in 1/fpp). */
   val DefaultBloomFpp: Double = 0.01
 
-  /** Per-file (file, rows, min_<c>, max_<c>..., bloom_<c>...) over the
-    * parquet files under `dataDir`, one row per physical file. Min/max
-    * (`statCols`) answer range predicates on clustered layouts;
-    * per-file blooms (`bloomCols`, functions.BloomAgg over xxhash64)
-    * answer EQUALITY probes on columns the layout is NOT sorted by —
-    * where every file's [min,max] spans the whole domain and range
-    * stats can never skip anything. */
-  def collectStats(spark: SparkSession, dataDir: String,
-                   statCols: Seq[String], bloomCols: Seq[String] = Nil,
-                   bloomItems: Long = 0L,
-                   bloomFpp: Double = DefaultBloomFpp,
-                   sumCols: Seq[String] = Nil): DataFrame =
-    collectStatsDirs(spark, Seq(dataDir), statCols, bloomCols,
-      bloomItems, bloomFpp, sumCols)
+  /** The stat families a publish keeps in its sidecar: min/max
+    * intervals (`range`) answer range predicates on clustered layouts;
+    * per-file blooms (`bloom`, functions.BloomAgg over xxhash64, at
+    * false-positive rate `bloomFpp`) answer EQUALITY probes on columns
+    * the layout is NOT sorted by — where every file's [min,max] spans the
+    * whole domain and range stats can never skip anything; per-file
+    * exact sums (`sum`) answer [[sumRange]]. */
+  final case class StatCols(range: Seq[String], bloom: Seq[String] = Nil,
+                            sum: Seq[String] = Nil,
+                            bloomFpp: Double = DefaultBloomFpp) {
+    require(range.nonEmpty, "file stats need at least one column")
+  }
 
   /** Per-row decimal shape of the `sum_<c>` sidecar stats: scale 6
     * covers money-ish and measurement columns exactly, and the cast
@@ -92,45 +90,36 @@ object FileStats {
     * partitioning). */
   private val SumDecimal = org.apache.spark.sql.types.DecimalType(27, 6)
 
-  /** collectStats over several directories in one scan — the shape the
-    * incremental sidecar uses to stat only a publish's FRESH partition
-    * dirs. */
-  def collectStatsDirs(spark: SparkSession, dirs: Seq[String],
-                       statCols: Seq[String], bloomCols: Seq[String] = Nil,
-                       bloomItems: Long = 0L,
-                       bloomFpp: Double = DefaultBloomFpp,
-                       sumCols: Seq[String] = Nil): DataFrame = {
-    require(statCols.nonEmpty, "file stats need at least one column")
-    require(dirs.nonEmpty, "file stats need at least one directory")
+  /** Per-file (file, rows, min_<c>, max_<c>..., bloom_<c>..., sum_<c>...)
+    * over the scan `data`, one row per physical file. */
+  private def collectStats(data: DataFrame, cols: StatCols): DataFrame = {
     // bloom geometry must hold the file's ACTUAL key count: an
     // overloaded bloom quietly saturates (a 50k-row file in a 20k-item
     // bloom measured fpp ≈ 0.3 — 62/200 files "maybe" for a 1-file key).
-    // bloomItems = 0 auto-sizes from the LARGEST file's row count with
-    // 25% headroom — mean-based sizing silently under-provisions the big
+    // Items auto-size from the LARGEST file's row count with 25%
+    // headroom — mean-based sizing silently under-provisions the big
     // file of a skewed layout (its bloom saturates, its fpp balloons,
     // and skipping quietly degrades with no error anywhere). Bloom size
     // is linear in items, so a skewed layout pays a uniformly bigger
     // sidecar rather than a silently broken one. The per-file count is
     // one count-only pass (no data columns decoded).
     val sizedItems: Long =
-      if (bloomCols.isEmpty || bloomItems > 0L) bloomItems
+      if (cols.bloom.isEmpty) 0L
       else {
-        val maxPerFile = spark.read.parquet(dirs: _*)
-          .groupBy(input_file_name()).count()
-          .agg(max("count")).head().getLong(0)
-        math.max(1000L, maxPerFile * 5 / 4)
+        val maxPerFile = data.groupBy(input_file_name()).count()
+          .agg(max("count")).head()
+        math.max(1000L, (if (maxPerFile.isNullAt(0)) 0L else maxPerFile.getLong(0)) * 5 / 4)
       }
-    val cols = (statCols ++ bloomCols ++ sumCols).distinct
-    val data = spark.read.parquet(dirs: _*).select(cols.map(col): _*)
     val aggs = count(lit(1)).as("rows") +:
-      (statCols.flatMap(c =>
+      (cols.range.flatMap(c =>
         Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"))) ++
-        bloomCols.map(c => graft.functions.BloomAgg
-          .bloomAgg(xxhash64(col(c)), sizedItems, bloomFpp)
+        cols.bloom.map(c => graft.functions.BloomAgg
+          .bloomAgg(xxhash64(col(c)), sizedItems, cols.bloomFpp)
           .as(s"bloom_$c")) ++
-        sumCols.map(c =>
+        cols.sum.map(c =>
           sum(col(c).cast(SumDecimal)).as(s"sum_$c")))
-    data.groupBy(input_file_name().as("file"))
+    data.select((cols.range ++ cols.bloom ++ cols.sum).distinct.map(col): _*)
+      .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
   }
 
@@ -138,9 +127,9 @@ object FileStats {
     * `root`, range-partitioned and sorted on `sortCol` into `numFiles`
     * files (contiguous key spans per file — the layout that makes
     * min/max intervals disjoint and skipping maximally effective), with
-    * the stats sidecar written INSIDE the snapshot dir before the
-    * pointer flip — stats become visible atomically with their data.
-    * Returns the published snapshot name. */
+    * the stats sidecar written before the pointer flip — stats become
+    * visible atomically with their data. Returns the published snapshot
+    * name. */
   def publishSorted(spark: SparkSession, root: String, df: DataFrame,
                     sortCol: String, numFiles: Int, statCols: Seq[String],
                     bloomCols: Seq[String] = Nil,
@@ -150,7 +139,7 @@ object FileStats {
       statCols, bloomCols, sumCols)
 
   /** [[publishSorted]] FENCED on the version the caller read (the
-    * [[SnapshotStore.commitFrom]] optimistic-concurrency contract): a
+    * [[SnapshotStore.publish]] optimistic-concurrency contract): a
     * read-modify-write rewrite like Scd2.optimizeCurrentWithStats must
     * capture `base` BEFORE reading the rows it re-sorts — otherwise a
     * merge landing between its read and its commit is silently
@@ -161,12 +150,9 @@ object FileStats {
                         statCols: Seq[String],
                         bloomCols: Seq[String] = Nil,
                         sumCols: Seq[String] = Nil): String =
-    SnapshotStore.commitFrom(spark, root, base) { dir =>
-      df.repartitionByRange(numFiles, col(sortCol))
-        .sortWithinPartitions(sortCol)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir)
-      writeSidecar(spark, dir, statCols, bloomCols, sumCols)
-    }
+    SnapshotStore.publish(
+      df.repartitionByRange(numFiles, col(sortCol)).sortWithinPartitions(sortCol),
+      root, Nil, base, stats = Some(StatCols(statCols, bloomCols, sumCols)))._1
 
   /** Publish Z-order-clustered (operators.ZOrder) with the stats
     * sidecar: EVERY z-column gets tight per-file intervals, so range
@@ -178,15 +164,10 @@ object FileStats {
                       zCols: Seq[String], numFiles: Int,
                       statCols: Seq[String],
                       bloomCols: Seq[String] = Nil): String =
-    SnapshotStore.commit(spark, root) { dir =>
-      graft.operators.ZOrder.cluster(df, zCols.map(col), numFiles)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir)
-      writeSidecar(spark, dir, statCols, bloomCols)
-    }
+    SnapshotStore.publish(graft.operators.ZOrder.cluster(df, zCols.map(col), numFiles),
+      root, Nil, SnapshotStore.currentName(spark, root),
+      stats = Some(StatCols(statCols, bloomCols)))._1
 
-  /** Collect stats over an already-written snapshot dir and write the
-    * sibling sidecar for it. Exposed for writers that lay out files
-    * themselves (e.g. ZOrder output). */
   /** Hash-of-file bucket column of the sidecar layout. The sidecar used
     * to be ONE parquet file, which made every distributed bloom probe a
     * single task scanning all |files| × bloom-bytes rows serially —
@@ -197,57 +178,32 @@ object FileStats {
     * buckets — an eq-probe still consults every file's bloom (it must:
     * any file may hold the key), but as 32 concurrent slices instead of
     * one serial read. Readers are layout-agnostic: they select (file,
-    * stat...) columns and never the bucket, so pre-bucket sidecars keep
-    * reading fine. */
+    * stat...) columns and never the bucket. */
   private[graft] val FbCol = "fb"
   private[graft] val FbBuckets = 32
 
-  private def writeSideBucketed(side: DataFrame, path: String,
-                                mode: org.apache.spark.sql.SaveMode): Unit =
-    side.withColumn(FbCol,
-        pmod(xxhash64(col("file")), lit(FbBuckets.toLong)).cast("int"))
-      .repartition(FbBuckets, col(FbCol))
-      .write.mode(mode).partitionBy(FbCol).parquet(path)
-
-  def writeSidecar(spark: SparkSession, dataDir: String,
-                   statCols: Seq[String], bloomCols: Seq[String] = Nil,
-                   sumCols: Seq[String] = Nil): Unit =
-    // Overwrite: a crashed earlier claimant of this version slot may
-    // have left its sidecar behind (the commit protocol clears dir
-    // debris and the sidecar sibling, but belt-and-braces here makes
-    // the write idempotent regardless)
-    writeSideBucketed(
-      collectStats(spark, dataDir, statCols, bloomCols, sumCols = sumCols),
-      dataDir.stripSuffix("/") + StatsSuffix,
-      org.apache.spark.sql.SaveMode.Overwrite)
-
-  /** Sidecar for a MANIFEST snapshot (an incremental publish that
-    * carries unchanged partitions forward by reference —
-    * `SnapshotStore.writeManifest`), collected O(churn): only the
-    * partition dirs version `name` wrote FRESH are scanned; entries for
-    * carried-forward partitions are copied verbatim from `prevName`'s
-    * sidecar — their files are immutable and keep their paths, so their
-    * stats cannot have changed. This is what keeps stats maintenance
-    * proportional to the day's churn instead of the table: a 100 TB
-    * table whose publish touched 3 partitions stats 3 partitions.
-    * Call inside the publishing commit, after `writeManifest`, so the
-    * sidecar lands before the pointer flip like everything else. */
-  def writeSidecarIncremental(spark: SparkSession, root: String,
-                              name: String, prevName: Option[String],
-                              statCols: Seq[String],
-                              bloomCols: Seq[String] = Nil,
-                              bloomFpp: Double = DefaultBloomFpp,
-                              sumCols: Seq[String] = Nil): Unit = {
-    val entries = SnapshotStore.readManifest(spark, root, name).getOrElse(
-      throw new IllegalArgumentException(
-        s"writeSidecarIncremental: snapshot $name has no manifest"))
+  /** The one sidecar writer, called by [[SnapshotStore.publish]] for
+    * version `name` (manifest `m`) before the pointer flip. Entries
+    * `name` carries from older versions copy their rows verbatim from
+    * the `prev` version's sidecar when it has one — their files are
+    * immutable and keep their paths, so their stats cannot have changed;
+    * every other entry is scanned, in one column-pruned scan. This keeps
+    * stats maintenance proportional to a publish's churn instead of the
+    * table: a 100 TB table whose publish touched 3 partitions stats 3
+    * partitions. A previous version without a sidecar (a full publish
+    * without stats, e.g. gold's full run) is scanned whole once; every
+    * later publish carries from it. */
+  private[store] def writeSidecar(spark: SparkSession, root: String, name: String,
+                                  m: SnapshotStore.Manifest, prev: Option[String],
+                                  cols: StatCols): Unit = {
     val snaps = new Path(root, SnapshotStore.SnapshotsDir)
-    val freshDirs = entries.collect { case (rel, ver) if ver == name =>
-      new Path(new Path(snaps, ver), rel).toString }.toSeq
+    val fs = snaps.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val prevSide = prev.map(p => new Path(snaps, p + StatsSuffix)).filter(fs.exists)
+    val (carried, scanned) = m.entries.partition { case (_, ver) =>
+      ver != name && prevSide.isDefined }
     val fresh =
-      if (freshDirs.isEmpty) None
-      else Some(collectStatsDirs(spark, freshDirs, statCols, bloomCols,
-        bloomFpp = bloomFpp, sumCols = sumCols))
+      if (scanned.isEmpty && carried.nonEmpty) None
+      else Some(collectStats(SnapshotStore.readEntries(spark, root, name, m, scanned), cols))
     // carried rows: prev-sidecar entries whose file sits under a
     // partition dir this manifest still references from an OLDER
     // version. Matched as a DISTRIBUTED filter (flat isin over
@@ -266,24 +222,20 @@ object FileStats {
     // the comparison below go through Path.toUri.getRawPath, so they
     // cannot drift.
     val snapsRaw = snaps.toUri.getRawPath.stripSuffix("/") + "/"
-    val carriedKeys = entries.collect { case (rel, ver) if ver != name =>
-      new Path(new Path(snaps, ver), rel).toUri.getRawPath
-        .stripPrefix(snapsRaw.stripSuffix("/")).stripPrefix("/") + "/"
-    }.toSeq
-    require(carriedKeys.isEmpty || prevName.nonEmpty,
-      s"$name carries partitions forward but no prevName sidecar was given" +
-        " — their stats would silently vanish")
-    val carried = prevName.filter(_ => carriedKeys.nonEmpty).map { p =>
+    val carriedKeys = carried.map { case (rel, ver) =>
+      SnapshotStore.entryDir(root, rel, ver).toUri.getRawPath
+        .stripPrefix(snapsRaw) + "/"
+    }.toSeq.distinct
+    val copied = prevSide.filter(_ => carriedKeys.nonEmpty).map { p =>
       // drop the bucket partition column: carried rows are re-bucketed
-      // at this publish's own write (and a pre-bucket sidecar has none)
-      val prevRaw = spark.read.parquet(
-        new Path(snaps, p + StatsSuffix).toString)
-      val prev = if (prevRaw.columns.contains(FbCol)) prevRaw.drop(FbCol)
-                 else prevRaw
+      // at this publish's own write
+      val prevRaw = spark.read.parquet(p.toString)
+      val prevRows = if (prevRaw.columns.contains(FbCol)) prevRaw.drop(FbCol)
+                     else prevRaw
       // flat set-membership on the extracted "vX/rel/" tail — a reduce
       // of per-suffix contains() terms builds an OR tree deep enough to
       // overflow Catalyst analysis at a few hundred partitions
-      val hit = prev
+      val hit = prevRows
         .withColumn("__dir", regexp_replace(col("file"), "/[^/]+$", "/"))
         .withColumn("__key", col("__dir").substr(
           locate(snapsRaw, col("__dir")) + lit(snapsRaw.length),
@@ -294,14 +246,14 @@ object FileStats {
       // omit that file's DATA forever after. One tiny agg over the
       // sidecar (|files| rows) buys fail-loud.
       val gotDirs = hit.select(countDistinct(col("__key"))).head().getLong(0)
-      require(gotDirs == carriedKeys.distinct.size.toLong,
-        s"writeSidecarIncremental: only $gotDirs of " +
-          s"${carriedKeys.distinct.size} carried partitions matched rows " +
-          s"in $p's sidecar — refusing to publish a sidecar that would " +
-          "silently hide files from pruned reads")
+      require(gotDirs == carriedKeys.size.toLong,
+        s"FileStats.writeSidecar: only $gotDirs of ${carriedKeys.size} " +
+          s"carried partitions matched rows in ${prev.get}'s sidecar — " +
+          "refusing to publish a sidecar that would silently hide files " +
+          "from pruned reads")
       hit.drop("__dir", "__key")
     }
-    val side = (fresh, carried) match {
+    val side = (fresh, copied) match {
       case (Some(f), Some(c)) =>
         // align by name: both carry (file, rows, stats...) but fresh may
         // order columns differently from an older-config sidecar.
@@ -311,54 +263,33 @@ object FileStats {
         // sumRange call with no signal at publish time.
         val dropped = c.columns.toSet -- f.columns.toSet
         require(dropped.isEmpty,
-          s"writeSidecarIncremental: the carried sidecar has stat " +
-            s"columns [${dropped.mkString(", ")}] the fresh stats were " +
-            "not collected with — pass the statCols/bloomCols/sumCols " +
-            "the table was published with (or rebootstrap via " +
-            "writeSidecarFull)")
+          s"FileStats.writeSidecar: the carried sidecar has stat columns " +
+            s"[${dropped.mkString(", ")}] the fresh stats were not " +
+            "collected with — pass the StatCols the table was published with")
         f.unionByName(c.select(f.columns.map(col): _*))
-      case (Some(f), None) => f
-      case (None, Some(c)) => c
-      case (None, None) => throw new IllegalArgumentException(
-        s"writeSidecarIncremental: $name references no files")
+      case (f, c) => f.orElse(c).get
     }
-    writeSideBucketed(side, new Path(snaps, name + StatsSuffix).toString,
-      org.apache.spark.sql.SaveMode.ErrorIfExists)
-  }
-
-  /** FULL sidecar for a MANIFEST snapshot — the BOOTSTRAP for tables
-    * whose previous versions predate stats (e.g. a gold table's first
-    * incremental publish on top of a full-run snapshot): stats every
-    * partition dir version `name` references, wherever it physically
-    * lives, in one narrow scan, and places the sidecar exactly where
-    * [[writeSidecarIncremental]] would — so every LATER publish carries
-    * from it O(churn). */
-  def writeSidecarFull(spark: SparkSession, root: String, name: String,
-                       statCols: Seq[String], bloomCols: Seq[String] = Nil,
-                       bloomFpp: Double = DefaultBloomFpp): Unit = {
-    val entries = SnapshotStore.readManifest(spark, root, name).getOrElse(
-      throw new IllegalArgumentException(
-        s"writeSidecarFull: snapshot $name has no manifest"))
-    val snaps = new Path(root, SnapshotStore.SnapshotsDir)
-    val dirs = entries.map { case (rel, ver) =>
-      new Path(new Path(snaps, ver), rel).toString }.toSeq
-    writeSideBucketed(
-      collectStatsDirs(spark, dirs, statCols, bloomCols, bloomFpp = bloomFpp),
-      new Path(snaps, name + StatsSuffix).toString,
-      org.apache.spark.sql.SaveMode.Overwrite)
+    // Overwrite: a crashed earlier claimant of this version slot may
+    // have left its sidecar behind (the commit protocol clears it, but
+    // this keeps the write idempotent regardless)
+    side.withColumn(FbCol,
+        pmod(xxhash64(col("file")), lit(FbBuckets.toLong)).cast("int"))
+      .repartition(FbBuckets, col(FbCol))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).partitionBy(FbCol)
+      .parquet(new Path(snaps, name + StatsSuffix).toString)
   }
 
   /** The file lists a range predicate `lo <= c <= hi` decides between:
     * (selected files, all files). Bounded driver-side data — one row per
     * file of the CURRENT snapshot, the same order of magnitude the
     * driver already holds to plan any scan. */
-  private def sidecar(spark: SparkSession, root: String): DataFrame = {
-    val name = SnapshotStore.currentName(spark, root).getOrElse(
+  private def sidecar(spark: SparkSession, root: String): DataFrame =
+    sidecarAt(spark, root, current(spark, root))
+
+  private def current(spark: SparkSession, root: String): String =
+    SnapshotStore.currentName(spark, root).getOrElse(
       throw new java.io.FileNotFoundException(
         s"no ${SnapshotStore.PointerFile} under $root — table never committed"))
-    spark.read.parquet(new Path(new Path(root, SnapshotStore.SnapshotsDir),
-      name + StatsSuffix).toString)
-  }
 
   /** A PAST version's sidecar — every publish wrote its sidecar beside
     * its version dir before the pointer flip, so stats time-travel for
@@ -398,8 +329,7 @@ object FileStats {
     * the file list, rows are always filtered precisely. */
   def readRange(spark: SparkSession, root: String, c: String,
                 lo: Any, hi: Any): DataFrame =
-    readPruned(spark, root, pruneFiles(spark, root, c, lo, hi)._1,
-      col(c).between(lit(lo), lit(hi)))
+    readRangeAt(spark, root, current(spark, root), c, lo, hi)
 
   /** [[readRange]] AT a past version: time travel composed with file
     * skipping — the pruned file list comes from THAT version's sidecar,
@@ -407,8 +337,9 @@ object FileStats {
     * predicate can match. */
   def readRangeAt(spark: SparkSession, root: String, name: String,
                   c: String, lo: Any, hi: Any): DataFrame =
-    readPruned(spark, root, pruneFilesAt(spark, root, name, c, lo, hi)._1,
-      col(c).between(lit(lo), lit(hi)))
+    SnapshotStore.readFiles(spark, root, name,
+      pruneFilesAt(spark, root, name, c, lo, hi)._1)
+      .filter(col(c).between(lit(lo), lit(hi)))
 
   /** The file lists an equality probe `c = value` decides between,
     * using the per-file bloom (`bloom_<c>` in the sidecar — see
@@ -462,7 +393,7 @@ object FileStats {
     * `c = value`, then apply the exact predicate. */
   def readEq(spark: SparkSession, root: String, c: String,
              value: Any): DataFrame =
-    readPruned(spark, root, pruneFilesEq(spark, root, c, value)._1,
+    readSelected(spark, root, pruneFilesEq(spark, root, c, value)._1,
       col(c) === lit(value))
 
   /** Read an already-pruned file list with the exact predicate applied.
@@ -472,7 +403,8 @@ object FileStats {
   def readSelected(spark: SparkSession, root: String,
                    selected: Seq[String],
                    pred: org.apache.spark.sql.Column): DataFrame =
-    readPruned(spark, root, selected, pred)
+    SnapshotStore.readFiles(spark, root, current(spark, root), selected)
+      .filter(pred)
 
   /** SET-probe anti-join against a store column — "which rows of `batch`
     * carry a `keyCol` value the table at `root` has NEVER seen in column
@@ -641,53 +573,13 @@ object FileStats {
       else -1
     if (maybeFiles.isEmpty) (batch, 0, total)
     else {
-      val sliver = readPruned(spark, root, maybeFiles, lit(true))
-        .select(col(c).as(keyCol)).distinct()
+      val sliver = SnapshotStore.readFiles(spark, root, current(spark, root),
+          maybeFiles).select(col(c).as(keyCol)).distinct()
       // a USING join resurfaces the key column first — restore the
       // batch's own column order so both branches (and the plain
       // anti-join this replaces) agree on shape
       (batch.join(sliver, Seq(keyCol), "left_anti")
         .select(batch.columns.map(col): _*), maybeFiles.size, total)
-    }
-  }
-
-  /** Extracts the snapshot version dir a selected file lives under, so
-    * reads can re-attach hive partition values via basePath. */
-  private val VersionDirRe =
-    (".*/" + SnapshotStore.SnapshotsDir + "/v\\d{9}").r
-
-  /** Sidecar `file` values are input_file_name URIs — %-encoded on top
-    * of the (already hive-escaped) on-disk names. spark.read treats a
-    * path STRING literally, so the URI layer must be undone exactly once
-    * before a file string goes back into a reader, or any partition
-    * value hive-escapes (':' → %3A on disk → %253A in the URI) resolves
-    * to a nonexistent double-encoded path. */
-  private def toReadablePath(f: String): String =
-    new Path(new java.net.URI(f)).toString
-
-  private def readPruned(spark: SparkSession, root: String,
-                         selectedRaw: Seq[String],
-                         pred: org.apache.spark.sql.Column): DataFrame = {
-    val selected = selectedRaw.map(toReadablePath)
-    if (selected.isEmpty) SnapshotStore.read(spark, root).filter(lit(false))
-    else {
-      // re-attach hive partition values: group files by their version
-      // dir and read each group with that basePath (the
-      // SnapshotStore.readEntries shape — a manifest table's files span
-      // several version dirs). Without basePath a leaf-file read drops
-      // the partition columns, so the schema would differ between a
-      // partitioned and a flat snapshot AND between the empty and
-      // non-empty branches here.
-      // prefix-match on the full URI string so the basePath keeps the
-      // file's own scheme/authority (hdfs://, s3a://)
-      val byVer = selected.groupBy(f => VersionDirRe.findPrefixOf(f))
-      val parts = byVer.toSeq.sortBy(_._1.getOrElse("")).map {
-        case (Some(base), files) =>
-          spark.read.option("basePath", base).parquet(files.sorted: _*)
-        case (None, files) => spark.read.parquet(files.sorted: _*)
-      }
-      parts.reduceLeft(_.unionByName(_, allowMissingColumns = true))
-        .filter(pred)
     }
   }
 
@@ -707,7 +599,8 @@ object FileStats {
     * Returns (count, files scanned, files answered from metadata). */
   def countRange(spark: SparkSession, root: String, c: String,
                  lo: Any, hi: Any): (Long, Int, Int) = {
-    val stats = sidecar(spark, root)
+    val name = current(spark, root)
+    val stats = sidecarAt(spark, root, name)
     val overlap = coalesce(
       col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi), lit(false))
     val contained = coalesce(
@@ -717,11 +610,11 @@ object FileStats {
       .collect()
     val fromMeta = rows.filter(_.getBoolean(3))
     val toScan = rows.filter(r => r.getBoolean(2) && !r.getBoolean(3))
-      .map(r => toReadablePath(r.getString(0))).toSeq
+      .map(_.getString(0)).toSeq
     val metaCount = fromMeta.map(_.getLong(1)).sum
     val scanned =
       if (toScan.isEmpty) 0L
-      else spark.read.parquet(toScan: _*)
+      else SnapshotStore.readFiles(spark, root, name, toScan)
         .filter(col(c).between(lit(lo), lit(hi))).count()
     (metaCount + scanned, toScan.length, fromMeta.length)
   }
@@ -749,7 +642,8 @@ object FileStats {
   def sumRange(spark: SparkSession, root: String, c: String,
                lo: Any, hi: Any, aggCol: String)
       : (java.math.BigDecimal, Long, Int, Int) = {
-    val stats = sidecar(spark, root)
+    val name = current(spark, root)
+    val stats = sidecarAt(spark, root, name)
     require(stats.columns.contains(s"sum_$aggCol"),
       s"sidecar has no sum for '$aggCol' — publish with sumCols = " +
         s"""Seq("$aggCol")""")
@@ -767,14 +661,14 @@ object FileStats {
       .collect()
     val fromMeta = rows.filter(_.getBoolean(4))
     val toScan = rows.filter(r => r.getBoolean(3) && !r.getBoolean(4))
-      .map(r => toReadablePath(r.getString(0))).toSeq
+      .map(_.getString(0)).toSeq
     val metaCount = fromMeta.map(_.getLong(1)).sum
     val metaSum = fromMeta.flatMap(r => Option(r.getDecimal(2)))
       .foldLeft(java.math.BigDecimal.ZERO)(_.add(_))
     val (scanSum, scanCount) =
       if (toScan.isEmpty) (java.math.BigDecimal.ZERO, 0L)
       else {
-        val r = spark.read.parquet(toScan: _*)
+        val r = SnapshotStore.readFiles(spark, root, name, toScan)
           .filter(col(c).between(lit(lo), lit(hi)))
           .agg(sum(col(aggCol).cast(SumDecimal)), count(lit(1))).head()
         (Option(r.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO),
@@ -791,11 +685,8 @@ object FileStats {
   def publishPartitioned(spark: SparkSession, root: String, df: DataFrame,
                          pcol: String, statCols: Seq[String],
                          bloomCols: Seq[String] = Nil): String =
-    SnapshotStore.commit(spark, root) { dir =>
-      df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy(pcol).parquet(dir)
-      writeSidecar(spark, dir, statCols, bloomCols)
-    }
+    SnapshotStore.publish(df, root, Seq(pcol), SnapshotStore.currentName(spark, root),
+      stats = Some(StatCols(statCols, bloomCols)))._1
 
   /** TARGETED delete — the right-to-be-forgotten shape: remove every row
     * with `c` in `keys` from a [[publishPartitioned]] table, rewriting
@@ -807,7 +698,7 @@ object FileStats {
     *  2. Affected partitions are re-read minus the keys and written
     *     fresh; every other partition carries forward BY REFERENCE in
     *     the manifest, its sidecar rows copied verbatim
-    *     ([[writeSidecarIncremental]]) — write amplification is
+    *     ([[writeSidecar]]) — write amplification is
     *     O(affected partitions), not O(table).
     *  3. Keys absent everywhere → NO commit at all (returns the current
     *     snapshot name with 0 rewrites — a no-op delete must not churn
@@ -823,10 +714,9 @@ object FileStats {
                  bloomCols: Seq[String],
                  bloomFpp: Double = DefaultBloomFpp): (String, Int, Int) = {
     require(keys.nonEmpty, "deleteKeys: empty key list")
-    val cur = SnapshotStore.currentName(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"no snapshot at $root"))
-    val entries = SnapshotStore.currentEntries(spark, root, depth = 1)
-      .getOrElse(Map.empty)
+    val cur = current(spark, root)
+    val m = SnapshotStore.readManifest(spark, root, cur).get
+    val entries = m.entries
     require(entries.nonEmpty, s"deleteKeys: no $pcol=* partitions at $root")
     // typed key hashes, one job (the pruneFilesEq cast rule)
     val colType = SnapshotStore.read(spark, root).schema
@@ -836,7 +726,7 @@ object FileStats {
     val hashes = spark.range(1)
       .select(keys.map(k => xxhash64(lit(k).cast(colType))): _*)
       .head().toSeq.map(_.asInstanceOf[Long])
-    val stats = sidecar(spark, root)
+    val stats = sidecarAt(spark, root, cur)
     require(stats.columns.contains(s"bloom_$c"),
       s"sidecar has no bloom for '$c' — publish with bloomCols = Seq(\"$c\")")
     // one bloom deserialize per file, all hashes probed against it
@@ -846,41 +736,32 @@ object FileStats {
     val maybeFiles = stats
       .select(col("file"), (col(s"bloom_$c").isNull || anyKey).as("keep"))
       .collect().filter(_.getBoolean(1)).map(_.getString(0))
-    // file path → its pcol=... rel dir (the manifest granule). URI
-    // decoding matters: input_file_name %-encodes the on-disk name
-    // (itself hive-escaped), and the manifest entries carry the ON-DISK
-    // spelling — java.net.URI.getPath undoes exactly the URI layer
-    val partRe = (java.util.regex.Pattern.quote(pcol) + "=[^/]+").r
-    val affected = maybeFiles.flatMap(f =>
-      partRe.findFirstIn(new java.net.URI(f).getPath)).toSet
+    // each maybe-file's partition is the entry whose dir holds it
+    // (input_file_name is a URI: its path is the on-disk spelling)
+    val maybeDirs = maybeFiles.map(f =>
+      new Path(new java.net.URI(f)).getParent.toUri.getPath).toSet
+    val relOf = entries.map { case (rel, ver) =>
+      SnapshotStore.entryDir(root, rel, ver).toUri.getPath -> rel }
+    val stray = maybeDirs -- relOf.keySet
+    require(stray.isEmpty, s"deleteKeys: sidecar names files outside the " +
+      s"manifest of $root: ${stray.mkString(", ")}")
+    val hit = maybeDirs.map(relOf)
+    val affected = entries.filter { case (rel, _) => hit(rel) }
     if (affected.isEmpty) return (cur, 0, entries.size)
-    // the affected partitions are re-read BY PATH through their manifest
-    // entries — never by value equality against the hive dir spelling: a
-    // hive-escaped or type-reformatted value (timestamps, '%'/'#' in
-    // strings) fails a cast-to-string isin, which would drop the
-    // partition from the rewrite while the manifest simultaneously drops
-    // it from the carry-forward — silent loss of every surviving row.
-    val affectedEntries = entries.filter { case (rel, _) => affected(rel) }
-    require(affectedEntries.size == affected.size,
-      s"deleteKeys: sidecar names partitions absent from the manifest: " +
-        (affected -- affectedEntries.keySet).mkString(", "))
-    val name = SnapshotStore.commit(spark, root) { dir =>
-      SnapshotStore.readEntries(spark, root, affectedEntries)
-        // keep under SQL three-valued logic: NOT isin(keys) is NULL —
-        // i.e. dropped — for null-key rows; a targeted delete must
-        // never destroy rows it was not asked about
-        .filter(col(c).isNull || !col(c).isin(keys: _*))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy(pcol).parquet(dir)
-      val dirPath = new Path(dir)
-      val vName = dirPath.getName
-      val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val fresh = SnapshotStore.freshEntries(spark, dir, depth = 1)
-      val carried = entries.filterNot { case (rel, _) => affected(rel) }
-      SnapshotStore.writeManifest(spark, root, vName, carried ++ fresh)
-      writeSidecarIncremental(spark, root, vName, Some(cur),
-        statCols, bloomCols, bloomFpp)
-    }
+    // the affected partitions are re-read BY ENTRY, never by value
+    // equality against a cast: a type-reformatted value (timestamps)
+    // fails a cast-to-string isin, which would drop the partition from
+    // the rewrite while the manifest drops it from the carry-forward —
+    // silent loss of every surviving row.
+    val replaced = affected.keySet.map(SnapshotStore.partitionValues(_).toMap)
+    val rewritten = SnapshotStore.readEntries(spark, root, cur, m, affected)
+      // keep under SQL three-valued logic: NOT isin(keys) is NULL —
+      // i.e. dropped — for null-key rows; a targeted delete must
+      // never destroy rows it was not asked about
+      .filter(col(c).isNull || !col(c).isin(keys: _*))
+    val (name, _) = SnapshotStore.publish(rewritten, root, Seq(pcol), Some(cur),
+      replaces = Some(replaced), stats = Some(StatCols(statCols, bloomCols,
+        bloomFpp = bloomFpp)))
     (name, affected.size, entries.size)
   }
 }

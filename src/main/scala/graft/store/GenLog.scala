@@ -81,18 +81,20 @@ object GenLog {
     * the flip, so the checksummed reader never pairs new bytes with an
     * old checksum. Other filesystems keep FileContext's
     * rename-with-overwrite (atomic on HDFS); an object-store deployment
-    * substitutes a single-object PUT, atomic per key. */
+    * substitutes a single-object PUT, atomic per key. A failed write or
+    * replace deletes its temp file; one left by a JVM that died between
+    * the two is collected by [[sweepPointerTemps]]. */
   private[store] def writePointer(spark: SparkSession, ptr: Path,
                                   name: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = ptr.getFileSystem(conf)
     val tmp = new Path(ptr.getParent,
-      s"${ptr.getName}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+      s"${ptr.getName}$TempInfix${java.util.UUID.randomUUID().toString.take(8)}")
     def writeTo(target: FileSystem): Unit = {
       val out = target.create(tmp, true)
       try out.write(name.getBytes("UTF-8")) finally out.close()
     }
-    fs match {
+    try fs match {
       case local: LocalFileSystem =>
         val raw = local.getRawFileSystem.asInstanceOf[RawLocalFileSystem]
         writeTo(raw)
@@ -103,7 +105,24 @@ object GenLog {
         writeTo(fs)
         FileContext.getFileContext(ptr.toUri, conf)
           .rename(tmp, ptr, Options.Rename.OVERWRITE)
+    } catch {
+      case e: Throwable =>
+        scala.util.Try(fs.delete(tmp, false))
+        throw e
     }
+  }
+
+  private val TempInfix = ".tmp-"
+
+  /** Delete the pointer temp files under `dir` older than the claim TTL
+    * ([[SnapshotStore.DefaultClaimTtlMs]]): each is what a JVM that died
+    * inside [[writePointer]] left; a younger one may be a live write. */
+  private[store] def sweepPointerTemps(fs: FileSystem, dir: Path): Unit = {
+    val cutoff = System.currentTimeMillis() - SnapshotStore.DefaultClaimTtlMs
+    if (fs.exists(dir)) fs.listStatus(dir)
+      .filter(st => st.isFile && st.getPath.getName.startsWith(PointerFile + TempInfix) &&
+        st.getModificationTime < cutoff)
+      .foreach(st => fs.delete(st.getPath, false))
   }
 
   /** The live generation dir named by the pointer, if published and
@@ -265,5 +284,6 @@ object GenLog {
         young && (!hasMeta || spareYoungPublished)
       }
       .foreach(p => fs.delete(p, true))
+    sweepPointerTemps(fs, rootPath)
   }
 }

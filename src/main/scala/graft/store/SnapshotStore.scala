@@ -2,24 +2,38 @@ package graft.store
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 
-/** The one table commit protocol: versioned immutable snapshot
-  * directories plus an atomically-replaced single-file pointer.
+/** The one table commit protocol and the one snapshot format: versioned
+  * immutable snapshot directories, one manifest per version, and an
+  * atomically-replaced single-file pointer.
   *
   * Layout:
   * {{{
-  *   <root>/_snapshots/v000000001/   immutable parquet snapshot dirs
+  *   <root>/_snapshots/v000000001/            immutable parquet snapshot dirs
+  *   <root>/_snapshots/v000000001.manifest    its entries and schema
   *   <root>/_snapshots/v000000002/
-  *   <root>/_CURRENT                 one small file naming the live dir
+  *   <root>/_snapshots/v000000002.manifest
+  *   <root>/_CURRENT                          one small file naming the live version
   * }}}
   *
+  * Every version, full, incremental or empty, has a manifest: its
+  * partition entries (relative hive partition path → the version dir
+  * holding that partition's files; "" names a whole unpartitioned dir),
+  * the schema each referenced version was written with, and the schema
+  * the version reads with. Readers take both from the manifest, so no
+  * read infers a schema with a Spark job, and a version with no entries
+  * reads as a typed empty table. The manifest plays the part of Delta's
+  * log entry and of Iceberg's manifest list.
+  *
   * Every table graft writes (silver flat or regioned, gold, the gold
-  * imputation stats) publishes here; the reference got the same
-  * guarantee from Delta's transaction log (silver_etl_script.py:922-961).
-  * A publish writes a brand-new snapshot directory that nothing names,
-  * then makes it visible by replacing ONE tiny pointer ([[GenLog]] holds
+  * imputation stats, the curated corpus) publishes through [[publish]];
+  * the reference got the same guarantee from Delta's transaction log
+  * (silver_etl_script.py:922-961). A publish writes a brand-new
+  * snapshot directory and its manifest, which nothing names yet, then
+  * makes them visible by replacing ONE tiny pointer ([[GenLog]] holds
   * the single rename). No live byte is deleted or moved before the flip,
   * so a writer crash at any step leaves readers on the old snapshot and
   * a racing reader sees the old or the new one, never a mix. The flip is
@@ -115,11 +129,8 @@ object SnapshotStore {
   def currentPath(spark: SparkSession, root: String): Option[Path] =
     currentName(spark, root).map(n => new Path(new Path(root, SnapshotsDir), n))
 
-  /** Read the live snapshot. Resolves through the version's manifest when
-    * it has one (an incremental publish carries untouched partitions
-    * forward by reference — plain-reading its version dir would see only
-    * the freshly-written partitions), else reads the version dir as plain
-    * parquet. Throws if the table has never been committed. */
+  /** Read the live snapshot through its manifest. Throws if the table
+    * has never been committed. */
   def read(spark: SparkSession, root: String): DataFrame =
     currentName(spark, root) match {
       case Some(n) => readAt(spark, root, n)
@@ -143,28 +154,16 @@ object SnapshotStore {
   }
 
   /** Version-pinned read: the table exactly as snapshot `name` published
-    * it, regardless of how many commits have happened since. Works for
-    * both full snapshots (plain parquet dir) and manifest snapshots
-    * (partitions resolved through that version's OWN manifest — including
-    * partitions it carried forward by reference from older versions).
+    * it, regardless of how many commits have happened since — its
+    * entries (including partitions it carried forward by reference from
+    * older versions) read with its stored schema, and no Spark job.
     * Throws FileNotFoundException once [[vacuum]] has collected the
     * version; retention is the `keepLast` window plus anything a kept
-    * manifest still references. A manifest with no entries (every
-    * partition emptied out) has no files to take a schema from, so
-    * reading it throws an IllegalStateException naming the version. */
-  def readAt(spark: SparkSession, root: String, name: String): DataFrame =
-    readManifest(spark, root, name) match {
-      case Some(entries) if entries.isEmpty =>
-        throw new IllegalStateException(
-          s"snapshot $name under $root has an empty manifest — no partition to read")
-      case Some(entries) => readEntries(spark, root, entries)
-      case None =>
-        val dir = new Path(new Path(root, SnapshotsDir), name)
-        val fs = fsOf(dir, spark)
-        if (!fs.exists(dir)) throw new java.io.FileNotFoundException(
-          s"snapshot $name not found under $root — never published or vacuumed")
-        spark.read.parquet(dir.toString)
-    }
+    * manifest still references. */
+  def readAt(spark: SparkSession, root: String, name: String): DataFrame = {
+    val m = manifest(spark, root, name)
+    readEntries(spark, root, name, m, m.entries)
+  }
 
   /** Change data feed between two pinned versions — Delta CDF's sibling
     * to [[readAt]] time travel, recovered from plain snapshots: rows are
@@ -177,18 +176,14 @@ object SnapshotStore {
     *   - in vFrom only, key survives   → `update_preimage`
     *   - in vFrom only, key gone       → `delete`
     *
-    * Cost is O(unshared entries) plus key-column scans. Each version's
-    * partition entries come from its manifest, or, for a plain full
-    * snapshot, from its hive dirs at the manifest's depth. An entry with
+    * Cost is O(unshared entries) plus key-column scans. An entry with
     * the same relative path and the same immutable version dir on both
     * sides is the same files, so it holds the same rows and can add no
     * change: only the from-only and to-only entries are content-diffed,
-    * and a shared entry is read for its key column alone. When nothing
-    * can be shared — two plain snapshots, a flat republish, an
-    * unpartitioned table, a plain snapshot with a data file outside its
-    * hive dirs — the unshared sets are the whole versions and this is
-    * the full diff. Key survival is decided over the WHOLE version
-    * (unshared and shared keys alike), with key-column-only scans.
+    * and a shared entry is read for its key column alone. Two full
+    * publishes share nothing, and then this is the full diff. Key
+    * survival is decided over the WHOLE version (unshared and shared
+    * keys alike), with key-column-only scans.
     *
     * Unchanged rows hash-match and drop out of the feed, so the feed's
     * size scales with the churn between the versions. Duplicate rows are
@@ -207,27 +202,17 @@ object SnapshotStore {
   def changesBetween(spark: SparkSession, root: String,
                      vFrom: String, vTo: String,
                      keyCols: Seq[String]): DataFrame = {
-    val fromM = readManifest(spark, root, vFrom)
-    val toM = readManifest(spark, root, vTo)
-    // the whole versions: their schemas type every side read below
-    def whole(name: String, m: Option[Map[String, String]]): DataFrame =
-      if (m.exists(_.isEmpty)) spark.emptyDataFrame else readAt(spark, root, name)
-    val from = whole(vFrom, fromM)
-    val to = whole(vTo, toM)
-    val split = splitEntries(spark, root, vFrom, fromM, vTo, toM)
-    def side(es: Map[String, String], typed: DataFrame): DataFrame =
-      readEntries(spark, root, es, Some(typed.schema))
-    split match {
-      case Some(s) if s.fromOnly.isEmpty && s.toOnly.isEmpty =>
-        // no entry differs: an empty feed, typed by analysis alone
-        val feed = diffFeed(side(Map.empty, from), side(Map.empty, to),
-          None, keyCols)
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), feed.schema)
-      case Some(s) =>
-        diffFeed(side(s.fromOnly, from), side(s.toOnly, to),
-          Some(side(s.shared, from)), keyCols)
-      case None => diffFeed(from, to, None, keyCols)
-    }
+    val (from, to) = (manifest(spark, root, vFrom), manifest(spark, root, vTo))
+    val s = splitEntries(from.entries, to.entries)
+    // every side read is typed by its whole version's schema
+    def fromSide(es: Map[String, String]) = readEntries(spark, root, vFrom, from, es)
+    def toSide(es: Map[String, String]) = readEntries(spark, root, vTo, to, es)
+    if (s.fromOnly.isEmpty && s.toOnly.isEmpty) {
+      // no entry differs: an empty feed, typed by analysis alone
+      val feed = diffFeed(fromSide(Map.empty), toSide(Map.empty), None, keyCols)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), feed.schema)
+    } else diffFeed(fromSide(s.fromOnly), toSide(s.toOnly),
+      Some(s.shared).filter(_.nonEmpty).map(fromSide), keyCols)
   }
 
   /** One version pair's partition entries, split by whether both sides
@@ -237,45 +222,12 @@ object SnapshotStore {
                                       toOnly: Map[String, String])
 
   /** Split two versions' entries into shared (same relative path, same
-    * version dir), from-only and to-only. None — nothing can be shared —
-    * when neither side has a manifest (two plain snapshots never share a
-    * version dir), when the manifests disagree on depth, or when a plain
-    * side has a data file outside its hive dirs at that depth. */
-  private[graft] def splitEntries(spark: SparkSession, root: String,
-                                  vFrom: String, fromM: Option[Map[String, String]],
-                                  vTo: String, toM: Option[Map[String, String]]
-                                 ): Option[EntrySplit] = {
-    val depths = (fromM.toSeq ++ toM).flatMap(_.keys).map(_.split('/').length).distinct
-    for {
-      depth <- depths match { case Seq(d) => Some(d); case _ => None }
-      fe <- fromM.orElse(hiveEntries(spark, root, vFrom, depth))
-      te <- toM.orElse(hiveEntries(spark, root, vTo, depth))
-    } yield {
-      val shared = fe.filter { case (rel, v) => te.get(rel).contains(v) }
-      EntrySplit(shared, fe -- shared.keys, te -- shared.keys)
-    }
-  }
-
-  /** A plain snapshot's hive partition dirs at `depth`, as entries — only
-    * if every visible data file sits directly in one of them (Spark's
-    * reader skips `.`-names and `_`-names without `=`), so the entries
-    * read exactly the rows the version dir does. Walks with plain
-    * `listStatus`: a recursive `listFiles` builds located statuses, which
-    * on the local filesystem load permissions one shell call per file. */
-  private def hiveEntries(spark: SparkSession, root: String, name: String,
-                          depth: Int): Option[Map[String, String]] = {
-    val base = new Path(new Path(root, SnapshotsDir), name)
-    val entries = freshEntries(spark, base.toString, depth)
-    val fs = fsOf(base, spark)
-    def covered(dir: Path, segs: Vector[String]): Boolean =
-      fs.listStatus(dir).forall { st =>
-        val n = st.getPath.getName
-        val under = segs :+ n
-        if (n.startsWith(".") || (n.startsWith("_") && !n.contains("="))) true
-        else if (st.isDirectory) under.length <= depth && covered(st.getPath, under)
-        else segs.length == depth && entries.contains(segs.mkString("/"))
-      }
-    if (covered(base, Vector.empty)) Some(entries) else None
+    * version dir), from-only and to-only. Entries at different depths
+    * never share a path, so a flat republish shares nothing. */
+  private[graft] def splitEntries(from: Map[String, String],
+                                  to: Map[String, String]): EntrySplit = {
+    val shared = from.filter { case (rel, v) => to.get(rel).contains(v) }
+    EntrySplit(shared, from -- shared.keys, to -- shared.keys)
   }
 
   /** The content diff and classification of [[changesBetween]] over the
@@ -325,27 +277,115 @@ object SnapshotStore {
         .map(col): _*)
   }
 
-  /** Write a new snapshot via `write(dir)` then publish it by atomically
-    * replacing the pointer. The write happens entirely inside a fresh
-    * version dir invisible to readers; only the final single-file pointer
-    * replacement changes what they see. Returns the new snapshot name.
+  /** THE table publish. Writes `df` into a fresh version dir,
+    * hive-partitioned on `partitionColumns`; then the version's manifest:
+    * the fresh partition entries, plus every entry of `base` that
+    * `replaces` does not claim, carried forward by reference; then, with
+    * `stats`, the file-stats sidecar ([[FileStats]]); then flips the
+    * pointer, fenced on `base` ([[commitFrom]]).
     *
-    * Concurrency: last-writer-wins between commits that did not read the
-    * table (each bases itself on whatever is current when it starts), but
-    * two commits RACING from the same current version conflict — exactly
-    * one wins its version slot, the other raises
-    * [[ConcurrentCommitException]] (see [[commitFrom]]). */
-  def commit(spark: SparkSession, root: String)(write: String => Unit): String =
-    commitFrom(spark, root, currentName(spark, root))(write)
+    * `replaces` names partitions of `base` by their values (column →
+    * value, null for a null partition). None is a full publish: nothing
+    * is carried. A carrying publish requires the base's entries to be
+    * partitioned by the same columns, so it can never silently drop a
+    * flat base's rows.
+    *
+    * Returns the version name and the rows written, counted by
+    * `Dataset.observe` during the write job itself, not by a read-back. */
+  def publish(df: DataFrame, root: String, partitionColumns: Seq[String],
+              base: Option[String],
+              replaces: Option[Map[String, String] => Boolean] = None,
+              stats: Option[FileStats.StatCols] = None): (String, Long) = {
+    val spark = df.sparkSession
+    val carried = replaces.fold(Manifest.Empty) { claims =>
+      val prev = base.fold(Manifest.Empty)(manifest(spark, root, _))
+      val layouts = prev.entries.keys.map(partitionValues(_).map(_._1)).toSet
+      require(layouts.forall(_ == partitionColumns),
+        s"cannot carry the partitions of $root forward: they are laid out " +
+          s"by [${layouts.map(_.mkString(",")).mkString("; ")}], this " +
+          s"publish by [${partitionColumns.mkString(",")}]")
+      prev.copy(entries = prev.entries.filterNot { case (rel, _) =>
+        claims(partitionValues(rel).toMap) })
+    }
+    var rows = 0L
+    val name = commitFrom(spark, root, base) { dir =>
+      val (m, n) = writeVersion(df, dir, partitionColumns, carried)
+      rows = n
+      stats.foreach(FileStats.writeSidecar(spark, root, new Path(dir).getName,
+        m, base, _))
+      m
+    }
+    (name, rows)
+  }
 
-  /** [[commit]] with an optimistic-concurrency fence: the commit is valid
-    * only against `base` — the version the caller READ when it computed
-    * what it is about to write (None for a first load). A read-modify-
-    * write cycle (SCD2 merge, compaction, incremental gold) passes the
-    * version it read; if any other writer publishes in between, this
-    * commit fails with [[ConcurrentCommitException]] instead of silently
-    * dropping the interloper's snapshot — the lost-update guard the
-    * reference inherited from Delta's optimistic transaction protocol
+  /** The version a commit fenced on `base` claims. */
+  def nextVersion(base: Option[String]): String = {
+    val seq = base
+      .flatMap(n => "^v(\\d+)".r.findFirstMatchIn(n).map(_.group(1).toLong))
+      .getOrElse(0L)
+    f"v${seq + 1}%09d"
+  }
+
+  /** Write `df` into version dir `dir` and build its manifest: `carried`
+    * plus the fresh entries, each version's own schema (its data
+    * columns, then its partition columns as strings, all nullable: what
+    * a parquet read of it returns), and the read schema. The write step
+    * of [[publish]]; the row count is observed during the write. */
+  private[graft] def writeVersion(df: DataFrame, dir: String,
+                                  partitionColumns: Seq[String],
+                                  carried: Manifest = Manifest.Empty): (Manifest, Long) = {
+    val obs = org.apache.spark.sql.Observation()
+    val w = df.observe(obs, count(lit(1)).as("rows")).write.mode(SaveMode.Overwrite)
+    (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*) else w)
+      .parquet(dir)
+    val name = new Path(dir).getName
+    val fresh =
+      if (partitionColumns.isEmpty) Map("" -> name)
+      else freshEntries(df.sparkSession, dir, partitionColumns.length)
+    val own = nullable(StructType(
+      df.schema.fields.filterNot(f => partitionColumns.contains(f.name)) ++
+        partitionColumns.map(StructField(_, StringType)))).asInstanceOf[StructType]
+    val entries = carried.entries ++ fresh
+    val refs = entries.values.toSet
+    val schemas = carried.schemas.filter { case (v, _) => refs(v) } ++
+      (if (fresh.nonEmpty) Map(name -> own) else Map.empty)
+    val read = schemas.toSeq.sortBy(_._1).map(_._2).distinct match {
+      case Seq() => own
+      case Seq(one) => one
+      // what a union of the versions' scans types to, taken from the
+      // analyzer over empty frames: no data is touched
+      case many => many.map(emptyFrame(df.sparkSession, _))
+        .reduceLeft(_.unionByName(_, allowMissingColumns = true)).schema
+    }
+    (Manifest(entries, schemas, read), obs.get("rows").asInstanceOf[Long])
+  }
+
+  /** The schema a parquet scan reports for files written with `t`. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
+
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+  /** The version-publish primitive under [[publish]]: claim version
+    * slot `base+1`, let `write` fill its dir and return its manifest,
+    * write the manifest, then flip the pointer. No pointer is ever
+    * flipped without a manifest. Returns the new snapshot name.
+    *
+    * The commit is valid only against `base` — the version the caller
+    * READ when it computed what it is about to write (None for a first
+    * load). A read-modify-write cycle (SCD2 merge, compaction,
+    * incremental gold) passes the version it read; if any other writer
+    * publishes in between, this commit fails with
+    * [[ConcurrentCommitException]] instead of silently dropping the
+    * interloper's snapshot — the lost-update guard the reference
+    * inherited from Delta's optimistic transaction protocol
     * (silver_etl_script.py:922-951 merges are transactional under racing
     * writers; graft rebuilds the guard over plain parquet).
     *
@@ -363,7 +403,8 @@ object SnapshotStore {
     *     once (claimant presumed crashed); published claims are never
     *     broken — they are the commit record protecting live version
     *     dirs from being overwritten by a writer racing an old base.
-    *  3. Write the snapshot data into the claimed version dir.
+    *  3. Write the snapshot data into the claimed version dir, then its
+    *     manifest.
     *  4. Fence #2: the claim must still carry OUR token (a TTL-breaker
     *     may have taken the slot while we stalled) and current must still
     *     equal `base`. On either failure the loser deletes what it wrote
@@ -381,9 +422,10 @@ object SnapshotStore {
     * re-claims the slot at once (CrashPointSpec fails each filesystem
     * step in turn). The loser's retry re-enters with the WINNER's version as its new
     * base and lands on top — nothing is ever silently dropped. */
-  def commitFrom(spark: SparkSession, root: String, base: Option[String],
-                 claimTtlMs: Long = DefaultClaimTtlMs)
-                (write: String => Unit): String = {
+  private[graft] def commitFrom(spark: SparkSession, root: String,
+                                base: Option[String],
+                                claimTtlMs: Long = DefaultClaimTtlMs)
+                               (write: String => Manifest): String = {
     val rootPath = new Path(root)
     val fs = fsOf(rootPath, spark)
     val cur0 = currentName(spark, root)
@@ -391,10 +433,7 @@ object SnapshotStore {
       throw new ConcurrentCommitException(
         s"table $root advanced to ${cur0.getOrElse("<none>")} since this " +
           s"commit read ${base.getOrElse("<none>")} — re-read and retry")
-    val seq = base
-      .flatMap(n => "^v(\\d+)".r.findFirstMatchIn(n).map(_.group(1).toLong))
-      .getOrElse(0L)
-    val name = f"v${seq + 1}%09d"
+    val name = nextVersion(base)
     val token = java.util.UUID.randomUUID().toString
     claimSlot(spark, fs, root, name, token, claimTtlMs)
     val dir = new Path(new Path(rootPath, SnapshotsDir), name)
@@ -413,7 +452,7 @@ object SnapshotStore {
       if (fs.exists(dir)) fs.delete(dir, true)
       fs.delete(new Path(new Path(rootPath, SnapshotsDir),
         name + FileStats.StatsSuffix), true)
-      write(dir.toString)
+      writeManifest(fs, root, name, write(dir.toString))
       // fence #2: between our claim and this point a TTL-breaker may
       // have taken the slot, or (if our claim was broken) the table may
       // have moved; check ownership FIRST: once the claim is someone
@@ -424,7 +463,8 @@ object SnapshotStore {
             s"after ${claimTtlMs}ms) and the slot re-used — recompute and retry")
       if (currentName(spark, root) != base) {
         fs.delete(dir, true)
-        // the loser's sidecar sibling goes with its data
+        // the loser's manifest and sidecar siblings go with its data
+        fs.delete(manifestPath(root, name), false)
         fs.delete(new Path(new Path(rootPath, SnapshotsDir),
           name + FileStats.StatsSuffix), true)
         throw new ConcurrentCommitException(
@@ -559,7 +599,7 @@ object SnapshotStore {
     var frontier = keep
     while (frontier.nonEmpty) {
       val refs = frontier.flatMap(n =>
-        readManifest(spark, root, n).map(_.values.toSet).getOrElse(Set.empty))
+        readManifest(spark, root, n).map(_.entries.values.toSet).getOrElse(Set.empty))
       frontier = refs -- keep
       keep ++= frontier
     }
@@ -597,70 +637,108 @@ object SnapshotStore {
           dirGone(FileStats.StatsSuffix))
         fs.delete(st.getPath, true)
     }
+    GenLog.sweepPointerTemps(fs, new Path(root))
     victims.length
   }
 
-  // ------------------------------------------------- partition manifests
-  // An incremental snapshot need not rewrite the whole table: its
-  // manifest maps each hive partition path (e.g.
-  // "quality_tier=high/year=2025/month=1") to the VERSION DIR holding
-  // that partition's current data — freshly-written partitions point at
-  // the new version, unchanged ones carry the older version forward by
-  // reference. The manifest is written before the pointer flip, so it
-  // becomes visible atomically with its snapshot.
+  // ----------------------------------------------------------- manifests
+  // A version's manifest maps each of its partition entries — a hive
+  // partition path such as "quality_tier=high/year=2025/month=1", or ""
+  // for a whole unpartitioned dir — to the VERSION DIR holding that
+  // partition's data: fresh partitions point at the version itself,
+  // carried ones at the older version that wrote them. It also records
+  // the schema each referenced version was written with (each distinct
+  // schema once) and the schema the version reads with. It is written
+  // before the pointer flip, so it becomes visible atomically with its
+  // snapshot. On disk, one tab-separated record per line:
+  // {{{
+  //   schema  <json>                 the distinct schemas, numbered from 0
+  //   read    <n>                    the schema the version reads with
+  //   version <vN> <n>               each referenced version's own schema
+  //   entry   <rel> <vN>             each partition entry
+  // }}}
+
+  /** A version's manifest: `entries` (rel → version dir), `schemas`
+    * (each referenced version → the schema it was written with) and
+    * `schema`, the schema the version reads with. */
+  private[graft] final case class Manifest(entries: Map[String, String],
+                                           schemas: Map[String, StructType],
+                                           schema: StructType)
+
+  private[graft] object Manifest {
+    val Empty: Manifest = Manifest(Map.empty, Map.empty, new StructType())
+  }
 
   private[graft] def manifestPath(root: String, name: String): Path =
     new Path(new Path(root, SnapshotsDir), s"$name.manifest")
 
-  /** entries for `name`, if that version has a manifest. */
-  def readManifest(spark: SparkSession, root: String,
-                   name: String): Option[Map[String, String]] = {
+  /** The manifest of `name`, if that version has one. */
+  private[graft] def readManifest(spark: SparkSession, root: String,
+                                  name: String): Option[Manifest] = {
     val p = manifestPath(root, name)
     val fs = fsOf(p, spark)
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty)
-        .map { line =>
-          val i = line.lastIndexOf('\t')
-          line.substring(0, i) -> line.substring(i + 1)
-        }.toMap)
-      finally in.close()
+      val recs = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .filter(_.nonEmpty).map(_.split("\t", -1).toSeq).toVector
+        finally in.close()
+      val schemas = recs.collect { case Seq("schema", json) =>
+        DataType.fromJson(json).asInstanceOf[StructType] }
+      Some(Manifest(
+        recs.collect { case Seq("entry", rel, v) => rel -> v }.toMap,
+        recs.collect { case Seq("version", v, i) => v -> schemas(i.toInt) }.toMap,
+        recs.collectFirst { case Seq("read", i) => schemas(i.toInt) }.get))
     }
   }
 
-  private[graft] def writeManifest(spark: SparkSession, root: String,
-                                   name: String,
-                                   entries: Map[String, String]): Unit = {
-    val p = manifestPath(root, name)
-    val fs = fsOf(p, spark)
-    val out = fs.create(p, true)
-    try out.write(entries.toSeq.sorted.map { case (rel, ver) => s"$rel\t$ver" }
-      .mkString("\n").getBytes("UTF-8"))
+  /** [[readManifest]], or FileNotFoundException for a version that was
+    * never published or has been vacuumed. */
+  private def manifest(spark: SparkSession, root: String, name: String): Manifest =
+    readManifest(spark, root, name).getOrElse(throw new java.io.FileNotFoundException(
+      s"snapshot $name not found under $root — never published or vacuumed"))
+
+  private[graft] def writeManifest(fs: FileSystem, root: String, name: String,
+                                   m: Manifest): Unit = {
+    val distinct = (m.schema +: m.schemas.toSeq.sortBy(_._1).map(_._2)).distinct
+    val num = distinct.zipWithIndex.toMap
+    val recs = distinct.map(s => Seq("schema", s.json)) ++
+      Seq(Seq("read", num(m.schema).toString)) ++
+      m.schemas.toSeq.sortBy(_._1).map { case (v, s) => Seq("version", v, num(s).toString) } ++
+      m.entries.toSeq.sorted.map { case (rel, v) => Seq("entry", rel, v) }
+    val out = fs.create(manifestPath(root, name), true)
+    try out.write(recs.map(_.mkString("\t")).mkString("\n").getBytes("UTF-8"))
     finally out.close()
   }
 
-  /** Current entries regardless of how the snapshot was produced: a
-    * manifest if one exists, else every hive partition dir of the plain
-    * snapshot (a full publish), keyed by relative partition path. */
-  def currentEntries(spark: SparkSession, root: String,
-                     depth: Int): Option[Map[String, String]] =
-    currentName(spark, root).map { name =>
-      readManifest(spark, root, name).getOrElse(freshEntries(spark,
-        new Path(new Path(root, SnapshotsDir), name).toString, depth))
+  /** The live version's entries. */
+  def currentEntries(spark: SparkSession, root: String): Option[Map[String, String]] =
+    currentName(spark, root).map(manifest(spark, root, _).entries)
+
+  /** The (column, value) pairs a partition entry names, in path order,
+    * unescaped; a null partition's value is null. "" names none. The
+    * one decoder of hive partition paths; [[freshEntries]] takes the
+    * paths as the writer spelled them on disk. */
+  def partitionValues(rel: String): Seq[(String, String)] =
+    if (rel.isEmpty) Nil
+    else rel.split('/').toSeq.map { seg =>
+      val Array(k, v) = seg.split("=", 2)
+      ExternalCatalogUtils.unescapePathName(k) ->
+        (if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+         else ExternalCatalogUtils.unescapePathName(v))
     }
 
-  /** rel-dir → version map of the hive partition dirs a publishing
-    * commit just wrote under version dir `dir` — the FRESH half of
-    * every incremental manifest (the carried half comes from
-    * [[currentEntries]] of the previous version). ONE copy of the
-    * path-decoding argument: both sides of the rel key go through
-    * `Path.toUri.getPath`, so hive escaping and %-encoding can never
-    * drift between the glob and the manifest spelling (the bug class
-    * six hand-rolled copies of this snippet each had to re-argue). */
-  def freshEntries(spark: SparkSession, dir: String,
-                   depth: Int): Map[String, String] = {
+  /** The directory of entry `rel` written by version `ver`. */
+  private[graft] def entryDir(root: String, rel: String, ver: String): Path = {
+    val base = new Path(new Path(root, SnapshotsDir), ver)
+    if (rel.isEmpty) base else new Path(base, rel)
+  }
+
+  /** rel-dir → version map of the hive partition dirs a publish just
+    * wrote under version dir `dir`: both sides of the rel key go through
+    * `Path.toUri.getPath`, so the manifest holds the on-disk spelling. */
+  private def freshEntries(spark: SparkSession, dir: String,
+                           depth: Int): Map[String, String] = {
     val dirPath = new Path(dir)
     val name = dirPath.getName
     val fs = fsOf(dirPath, spark)
@@ -671,45 +749,62 @@ object SnapshotStore {
       .toMap
   }
 
-  /** Read a partition-manifest table: union of each referenced partition
-    * dir with its partition-column values re-attached from the path
-    * segments (stringly-typed, matching partition-type inference off). */
+  /** [[read]] of a table partitioned by `partitionColumns`: the
+    * partition values come back as string columns. */
   def readPartitioned(spark: SparkSession, root: String,
-                      partitionColumns: Seq[String]): org.apache.spark.sql.DataFrame = {
-    val entries = currentEntries(spark, root, partitionColumns.length)
-      .getOrElse(throw new java.io.FileNotFoundException(
-        s"no $PointerFile pointer under $root — table never committed"))
-    readEntries(spark, root, entries)
+                      partitionColumns: Seq[String]): DataFrame = {
+    val df = read(spark, root)
+    require(partitionColumns.forall(df.columns.contains),
+      s"$root has no partition column among ${partitionColumns.mkString(", ")}")
+    df
   }
 
-  /** Union of manifest entries. ONE scan relation per referenced
-    * VERSION dir (`basePath` re-attaches the partition values from the
-    * dir names — stringly, matching partition-type inference off), not
-    * one per partition: a manifest naming 100k partitions must not
-    * become a 100k-way union plan (Catalyst analysis goes quadratic
-    * long before that), and the union width here is bounded by the
-    * retention window instead. `mergeSchema` keeps per-partition schema
-    * drift readable, as the per-partition union form did. A given
-    * `schema` replaces the inference (no footer job) and types an empty
-    * entry map as an empty frame; without one, no entries is an error —
-    * there is no file to take a schema from. */
-  private[graft] def readEntries(spark: SparkSession, root: String,
-                                 entries: Map[String, String],
-                                 schema: Option[StructType] = None): DataFrame = {
-    if (entries.isEmpty) return schema
-      .map(spark.createDataFrame(java.util.Collections.emptyList[Row](), _))
-      .getOrElse(throw new IllegalArgumentException(
-        s"no partition entries to read under $root"))
-    val byVersion = entries.toSeq.groupBy(_._2)
-    val parts = byVersion.toSeq.sortBy(_._1).map { case (ver, es) =>
-      val base = new Path(new Path(root, SnapshotsDir), ver)
-      val dirs = es.map { case (rel, _) => new Path(base, rel).toString }.sorted
-      val reader = spark.read.option("basePath", base.toString)
-      schema.fold(reader.option("mergeSchema", "true"))(reader.schema)
-        .parquet(dirs: _*)
-    }
-    parts.reduceLeft(_.unionByName(_, allowMissingColumns = true))
+  /** The one reader: entries `es` of version `name`'s manifest `m`,
+    * typed by its stored schema. ONE scan relation per
+    * referenced VERSION dir (`basePath` re-attaches the partition values
+    * from the dir names, as strings), not one per partition: a manifest
+    * naming 100k partitions must not become a 100k-way union plan
+    * (Catalyst analysis goes quadratic long before that), and the union
+    * width here is bounded by the retention window instead. When `es`
+    * is the whole manifest, the entries `name` wrote itself are its whole
+    * dir, read as one path, as a plain parquet read of it would be. */
+  private[graft] def readEntries(spark: SparkSession, root: String, name: String,
+                                 m: Manifest, es: Map[String, String]): DataFrame = {
+    val whole = es == m.entries
+    scan(spark, root, m.schema, es.toSeq.groupBy(_._2).toSeq.map {
+      case (ver, _) if whole && ver == name => ver -> Seq(entryDir(root, "", ver))
+      case (ver, part) => ver -> part.map { case (rel, _) => entryDir(root, rel, ver) }
+    })
   }
+
+  /** Data files of version `name` (as a stats sidecar names them:
+    * `input_file_name` URIs), read like [[readEntries]]. */
+  private[graft] def readFiles(spark: SparkSession, root: String, name: String,
+                               files: Seq[String]): DataFrame = {
+    // a URI is %-encoded on top of the (already hive-escaped) on-disk
+    // name; spark.read takes a path string literally, so the URI layer is
+    // undone exactly once
+    val paths = files.map(f => new Path(new java.net.URI(f)))
+    def version(p: Path): String =
+      Iterator.iterate(p)(_.getParent).takeWhile(_ != null)
+        .find(q => q.getParent != null && q.getParent.getName == SnapshotsDir)
+        .map(_.getName).getOrElse(throw new IllegalArgumentException(
+          s"$p is not a snapshot data file under $root"))
+    scan(spark, root, manifest(spark, root, name).schema, paths.groupBy(version).toSeq)
+  }
+
+  private def scan(spark: SparkSession, root: String, schema: StructType,
+                   parts: Seq[(String, Seq[Path])]): DataFrame =
+    if (parts.isEmpty) emptyFrame(spark, schema)
+    else {
+      val df = parts.sortBy(_._1).map { case (ver, paths) =>
+        spark.read.option("basePath", entryDir(root, "", ver).toString)
+          .schema(schema).parquet(paths.map(_.toString).sorted: _*)
+      }.reduceLeft(_.unionByName(_))
+      // a scan puts the partition columns last; the stored order may not
+      if (df.columns.sameElements(schema.fieldNames)) df
+      else df.select(schema.fieldNames.map(c => df.col(s"`$c`")).toIndexedSeq: _*)
+    }
 }
 
 /** Full-table publishes and reads over [[SnapshotStore]]: readers go
@@ -739,25 +834,6 @@ object PointerCommit {
     * if another writer published since `base` was captured, instead of
     * silently overwriting their commit. */
   def publishFrom(df: DataFrame, path: String, partitionColumns: Seq[String],
-                  base: Option[String]): Long = {
-    var written = 0L
-    SnapshotStore.commitFrom(df.sparkSession, path, base) { dir =>
-      written = writeCounted(df, dir, partitionColumns)
-    }
-    written
-  }
-
-  /** Write `df` as (optionally partitioned) parquet and return the row
-    * count OBSERVED during the write job itself (`Dataset.observe` +
-    * `Observation`): one metric accumulator instead of a read-back that
-    * would re-list and footer-scan everything just written. */
-  private def writeCounted(df: DataFrame, path: String,
-                           partitionColumns: Seq[String]): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    val counted = df.observe(obs, count(lit(1)).as("rows"))
-    val w = counted.write.mode(SaveMode.Overwrite)
-    (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*) else w)
-      .parquet(path)
-    obs.get("rows").asInstanceOf[Long]
-  }
+                  base: Option[String]): Long =
+    SnapshotStore.publish(df, path, partitionColumns, base)._2
 }

@@ -36,7 +36,7 @@ class ConcurrencySpec extends SparkSuite {
     // conflict: both want slot v2, the claim CAS admits exactly one
     def attempt(tag: String): Try[String] = Try {
       SnapshotStore.commitFrom(spark, root, base) { dir =>
-        Seq((1, tag)).toDF("id", "v").write.parquet(dir)
+        SnapshotStore.writeVersion(Seq((1, tag)).toDF("id", "v"), dir, Nil)._1
       }
     }
     val (a, b) = (Future(attempt("A")), Future(attempt("B")))
@@ -56,7 +56,7 @@ class ConcurrencySpec extends SparkSuite {
     // the loser retries against the NEW current and lands on top
     val retryBase = SnapshotStore.currentName(spark, root)
     val v3 = SnapshotStore.commitFrom(spark, root, retryBase) { dir =>
-      Seq((1, "retry")).toDF("id", "v").write.parquet(dir)
+      SnapshotStore.writeVersion(Seq((1, "retry")).toDF("id", "v"), dir, Nil)._1
     }
     assert(v3 === "v000000003")
     assert(PointerCommit.read(spark, root).collect()(0).getString(1) === "retry")
@@ -72,7 +72,7 @@ class ConcurrencySpec extends SparkSuite {
     val e = intercept[ConcurrentCommitException] {
       SnapshotStore.commitFrom(spark, root, stale) { dir =>
         wrote = true
-        Seq((1, "lost")).toDF("id", "v").write.parquet(dir)
+        SnapshotStore.writeVersion(Seq((1, "lost")).toDF("id", "v"), dir, Nil)._1
       }
     }
     assert(e.getMessage.contains("advanced"))
@@ -94,7 +94,7 @@ class ConcurrencySpec extends SparkSuite {
     out.close()
     intercept[ConcurrentCommitException] {
       SnapshotStore.commitFrom(spark, root, base) { dir =>
-        Seq((1, "x")).toDF("id", "v").write.parquet(dir)
+        SnapshotStore.writeVersion(Seq((1, "x")).toDF("id", "v"), dir, Nil)._1
       }
     }
     assert(SnapshotStore.currentName(spark, root) === base, "pointer untouched")
@@ -106,7 +106,7 @@ class ConcurrencySpec extends SparkSuite {
     out2.write(s"other-writer\t${System.currentTimeMillis() - 60000}".getBytes("UTF-8"))
     out2.close()
     val name = SnapshotStore.commitFrom(spark, root, base, claimTtlMs = 1000L) { dir =>
-      Seq((1, "broke-through")).toDF("id", "v").write.parquet(dir)
+      SnapshotStore.writeVersion(Seq((1, "broke-through")).toDF("id", "v"), dir, Nil)._1
     }
     assert(name === "v000000002")
     assert(PointerCommit.read(spark, root).collect()(0).getString(1) === "broke-through")
@@ -122,13 +122,14 @@ class ConcurrencySpec extends SparkSuite {
 
     intercept[ConcurrentCommitException] {
       SnapshotStore.commitFrom(spark, root, base) { dir =>
-        Seq((1, "slow-writer")).toDF("id", "v").write.parquet(dir)
+        val m = SnapshotStore.writeVersion(Seq((1, "slow-writer")).toDF("id", "v"), dir, Nil)._1
         // a TTL-breaker takes the slot while we stall: claim rewritten
         // with ITS token (and, in real life, the dir with its data)
         fs.delete(claim, false)
         val o = fs.create(claim, false)
         o.write(s"breaker\t${System.currentTimeMillis()}".getBytes("UTF-8"))
         o.close()
+        m
       }
     }
     // the slow writer must not have flipped the pointer, and must not
@@ -152,7 +153,7 @@ class ConcurrencySpec extends SparkSuite {
     }
     // no TTL wait: the claim was released on the way out
     val name = SnapshotStore.commitFrom(spark, root, base) { dir =>
-      Seq((1, "retry")).toDF("id", "v").write.parquet(dir)
+      SnapshotStore.writeVersion(Seq((1, "retry")).toDF("id", "v"), dir, Nil)._1
     }
     assert(name === "v000000002")
     assert(PointerCommit.read(spark, root).collect()(0).getString(1) === "retry")
@@ -337,13 +338,13 @@ class ConcurrencySpec extends SparkSuite {
       SnapshotStore.testHookBeforePublish = None // one-shot: breaker must not recurse
       breakerResult = Some(
         SnapshotStore.commitFrom(spark, r, base, claimTtlMs = 0L) { dir =>
-          Seq((1, "breaker")).toDF("id", "v").write.parquet(dir)
+          SnapshotStore.writeVersion(Seq((1, "breaker")).toDF("id", "v"), dir, Nil)._1
         })
     }
     try {
       val e = intercept[ConcurrentCommitException] {
         SnapshotStore.commitFrom(spark, root, base) { dir =>
-          Seq((1, "writer")).toDF("id", "v").write.parquet(dir)
+          SnapshotStore.writeVersion(Seq((1, "writer")).toDF("id", "v"), dir, Nil)._1
         }
       }
       assert(e.getMessage.contains("broken"),
@@ -370,8 +371,8 @@ class ConcurrencySpec extends SparkSuite {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val c = fs.create(SnapshotStore.claimPath(root, name), false)
     c.write("slow-writer\t0".getBytes("UTF-8")); c.close()
-    Seq((1, "writer")).toDF("id", "v")
-      .write.parquet(s"$root/${SnapshotStore.SnapshotsDir}/$name")
+    SnapshotStore.writeManifest(fs, root, name, SnapshotStore.writeVersion(
+      Seq((1, "writer")).toDF("id", "v"), s"$root/${SnapshotStore.SnapshotsDir}/$name", Nil)._1)
     // the writer's pointer flip lands BETWEEN the breaker's pre-lock
     // staleness read and its locked break — the formerly-fatal order
     SnapshotStore.testHookBeforeBreak = Some { () =>
@@ -381,7 +382,7 @@ class ConcurrencySpec extends SparkSuite {
     try {
       val e = intercept[ConcurrentCommitException] {
         SnapshotStore.commitFrom(spark, root, base, claimTtlMs = 0L) { dir =>
-          Seq((1, "breaker")).toDF("id", "v").write.parquet(dir)
+          SnapshotStore.writeVersion(Seq((1, "breaker")).toDF("id", "v"), dir, Nil)._1
         }
       }
       assert(e.getMessage.contains("claimed"),

@@ -110,12 +110,12 @@ class CosineLshIndexSpec extends SparkSuite {
 
   test("snapshot-keyed revalidation is metadata-only (no corpus scan); " +
     "a count-verified batch advances as a delta") {
-    import graft.store.SnapshotStore
+    import graft.store.PointerCommit
     val root = java.nio.file.Files
       .createTempDirectory("cos_snap").toString + "/t"
     val all = mkVecs(0 until 60)
-    SnapshotStore.commit(spark, root)(dir =>
-      all.filter(col("vec_id") % 2 === 0).write.parquet(dir))
+    PointerCommit.publish(
+      all.filter(col("vec_id") % 2 === 0), root, Nil)
     val g1 = CosineLshIndex.ensureForSnapshot(spark, root)
     CosineLshIndex.resetValidationMemo()
     val scans0 = CosineLshIndex.fingerprintScans.get()
@@ -123,7 +123,7 @@ class CosineLshIndexSpec extends SparkSuite {
     assert(g1b == g1, "same snapshot must resolve the same generation")
     assert(CosineLshIndex.fingerprintScans.get() == scans0,
       "snapshot-keyed revalidation must not fingerprint the corpus")
-    SnapshotStore.commit(spark, root)(dir => all.write.parquet(dir))
+    PointerCommit.publish(all, root, Nil)
     val g2 = CosineLshIndex.advanceForSnapshotWithBatch(spark, root,
       all.filter(col("vec_id") % 2 =!= 0))
     assert(g2 != g1)
@@ -134,8 +134,8 @@ class CosineLshIndexSpec extends SparkSuite {
       "snapshot-advanced chain must equal the from-scratch index")
     // a WRONG caller-asserted batch (count identity fails) must fall
     // back to a rebuild against the snapshot, not record a bad chain
-    SnapshotStore.commit(spark, root)(dir =>
-      mkVecs(0 until 70).write.parquet(dir))
+    PointerCommit.publish(
+      mkVecs(0 until 70), root, Nil)
     val g3 = CosineLshIndex.advanceForSnapshotWithBatch(spark, root,
       mkVecs(60 until 65)) // claims 5 new rows; the store grew by 10
     assert(CosineLshIndex.vecsOf(spark, g3).count() == 70,
@@ -241,11 +241,11 @@ class CosineLshIndexSpec extends SparkSuite {
 
   test("a retried snapshot advance (index already keyed to the current " +
     "snapshot, fresh JVM memo) reuses the live generation — no rebuild") {
-    import graft.store.SnapshotStore
+    import graft.store.PointerCommit
     val root = java.nio.file.Files
       .createTempDirectory("cos_retry").toString + "/t"
-    SnapshotStore.commit(spark, root)(dir =>
-      mkVecs(0 until 40).write.parquet(dir))
+    PointerCommit.publish(
+      mkVecs(0 until 40), root, Nil)
     val g1 = CosineLshIndex.ensureForSnapshot(spark, root)
     // crash-after-advance replay: memo gone, snapshot unchanged
     CosineLshIndex.resetValidationMemo()
@@ -258,16 +258,16 @@ class CosineLshIndexSpec extends SparkSuite {
 
   test("purgeForStore: deleted rows' vectors leave every generation on " +
     "disk with the rows, and a probe no longer matches them") {
-    import graft.store.SnapshotStore
+    import graft.store.PointerCommit
     val root = java.nio.file.Files
       .createTempDirectory("cos_purge").toString + "/t"
     val all = mkVecs(0 until 60, planted = true)
-    SnapshotStore.commit(spark, root)(dir =>
-      all.filter(col("vec_id") < 1000).write.parquet(dir))
+    PointerCommit.publish(
+      all.filter(col("vec_id") < 1000), root, Nil)
     CosineLshIndex.ensureForSnapshot(spark, root)
-    SnapshotStore.commit(spark, root)(dir =>
+    PointerCommit.publish(
       all.filter(col("vec_id") < 1000)
-        .filter(col("vec_id") =!= 40L).write.parquet(dir))
+        .filter(col("vec_id") =!= 40L), root, Nil)
     CosineLshIndex.advanceForSnapshotWithBatch(spark, root,
       mkVecs(0 until 0)) // count net fails (store SHRANK) → rebuild...
     // ...but old generations may linger for in-flight readers: a purge
@@ -290,8 +290,8 @@ class CosineLshIndexSpec extends SparkSuite {
     assert(probe.filter(col("cs") >= 0.999)
       .filter(col("src") === 40L || col("dst") === 40L).count() == 0)
     // emptied store → the index is deleted outright
-    SnapshotStore.commit(spark, root)(dir =>
-      all.filter(lit(false)).write.parquet(dir))
+    PointerCommit.publish(
+      all.filter(lit(false)), root, Nil)
     CosineLshIndex.purgeForStore(spark, root)
     assert(!new java.io.File(root40).exists(),
       "an emptied store cannot keep an index")

@@ -23,12 +23,14 @@ import graft.store.{GenLog, PointerCommit, SnapshotStore}
   *  2. a plain retry of the path converges to the crash-free rows;
   *  3. vacuum then deletes nothing a live snapshot references: the rows
   *     are unchanged and every version a kept manifest names is on disk;
-  *     and it leaves no manifest whose version dir is gone.
+  *     and it leaves no manifest whose version dir is gone, and no
+  *     pointer temp file.
   *
   * Index generations ([[GenLog.publish]]) get the same treatment:
   * the pointer names the old or the new head and its whole chain
   * reads, a plain retry converges, and a later publish's prune keeps
-  * every generation the pointer's chain names.
+  * every generation the pointer's chain names and leaves no pointer
+  * temp file.
   *
   * Fixtures stay at 100 rows or fewer. The k count and the calls per
   * type of each path are printed. */
@@ -73,7 +75,7 @@ class CrashPointSpec extends SparkSuite {
     val kept = SnapshotStore.versions(spark, root)
     val named = SnapshotStore.currentName(spark, root).toSeq ++
       kept.flatMap(v => SnapshotStore.readManifest(spark, root, v)
-        .map(_.values).getOrElse(Nil))
+        .map(_.entries.values).getOrElse(Nil))
     named.distinct.foreach(v =>
       assert(fs.exists(new Path(snaps, v)), s"$ctx: vacuum deleted referenced $v"))
   }
@@ -87,6 +89,14 @@ class CrashPointSpec extends SparkSuite {
       .filterNot(m => fs.exists(new Path(snaps, m.stripSuffix(".manifest"))))
     assert(orphans.isEmpty,
       s"$ctx: manifests without a version dir: ${orphans.sorted.mkString(", ")}")
+  }
+
+  /** No pointer temp file (`_CURRENT.tmp-*`) is left under `root`. */
+  private def assertNoPointerTemps(root: String, ctx: String): Unit = {
+    val dir = new Path(root)
+    val temps = dir.getFileSystem(conf).listStatus(dir).map(_.getPath.getName)
+      .filter(_.startsWith(s"${GenLog.PointerFile}.tmp-"))
+    assert(temps.isEmpty, s"$ctx: pointer temp files left: ${temps.sorted.mkString(", ")}")
   }
 
   /** Run `check` for every k in 1..n, a few crash points at a time
@@ -138,6 +148,7 @@ class CrashPointSpec extends SparkSuite {
       assert(states(p, base) == after, s"$ctx: retry + vacuum did not converge")
       p.tables(base).foreach(assertReferencesKept(_, ctx))
       p.tables(base).foreach(assertNoOrphanManifests(_, ctx))
+      p.tables(base).foreach(assertNoPointerTemps(_, ctx))
     }
     forEachCrashPoint(n)(check)
     println(f"[crash-points] ${p.name}: $n crash points checked in ${(System.nanoTime() - t0) / 1e9}%.1f s")
@@ -348,6 +359,7 @@ class CrashPointSpec extends SparkSuite {
         assert(genState(root) == after.map { case (m, rows) =>
           (m + 5, rows ++ (1000L until 1005L)) },
           s"$ctx: the later head's chain does not read")
+        assertNoPointerTemps(root, ctx)
       }
     } finally GenLog.pruneGraceMs = grace
     println(f"[crash-points] $name: checked in ${(System.nanoTime() - t0) / 1e9}%.1f s")

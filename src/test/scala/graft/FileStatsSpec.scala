@@ -222,42 +222,24 @@ class FileStatsSpec extends SparkSuite {
   test("incremental sidecar preserves sum columns when passed, and " +
     "refuses LOUDLY to drop them when not") {
     val root = freshRoot("incrsum")
-    SnapshotStore.commit(spark, root) { dir =>
+    SnapshotStore.publish(
       spark.range(0, 400).select((col("id") % 4).cast("int").as("p"),
-          col("id").as("k"))
-        .write.partitionBy("p").parquet(dir)
-      val name = new org.apache.hadoop.fs.Path(dir).getName
-      SnapshotStore.writeManifest(spark, root, name,
-        (0 to 3).map(i => s"p=$i" -> name).toMap)
-      FileStats.writeSidecar(spark, dir, Seq("k"), sumCols = Seq("k"))
-    }
+        col("id").as("k")),
+      root, Seq("p"), None, stats = Some(FileStats.StatCols(Seq("k"), sum = Seq("k"))))
+    def rewriteP3(cols: FileStats.StatCols) = SnapshotStore.publish(
+      spark.range(300, 400).select(lit(3).cast("int").as("p"),
+        (col("id") + 10000).as("k")),
+      root, Seq("p"), Some("v000000001"), replaces = Some(_("p") == "3"),
+      stats = Some(cols))
     // an incremental publish that FORGETS sumCols must fail loudly —
     // silently projecting sum_k away would break sumRange at its next
     // call with no signal at publish time
     intercept[IllegalArgumentException] {
-      SnapshotStore.commit(spark, root) { dir =>
-        spark.range(300, 400).select(lit(3).cast("int").as("p"),
-            (col("id") + 10000).as("k"))
-          .write.partitionBy("p").parquet(dir)
-        val name = new org.apache.hadoop.fs.Path(dir).getName
-        SnapshotStore.writeManifest(spark, root, name,
-          (0 to 2).map(i => s"p=$i" -> "v000000001").toMap + ("p=3" -> name))
-        FileStats.writeSidecarIncremental(spark, root, name,
-          Some("v000000001"), Seq("k"))
-      }
+      rewriteP3(FileStats.StatCols(Seq("k")))
     }
     // with sumCols threaded through, the publish succeeds and sumRange
     // still answers from metadata + edges over BOTH fresh and carried
-    SnapshotStore.commit(spark, root) { dir =>
-      spark.range(300, 400).select(lit(3).cast("int").as("p"),
-          (col("id") + 10000).as("k"))
-        .write.partitionBy("p").parquet(dir)
-      val name = new org.apache.hadoop.fs.Path(dir).getName
-      SnapshotStore.writeManifest(spark, root, name,
-        (0 to 2).map(i => s"p=$i" -> "v000000001").toMap + ("p=3" -> name))
-      FileStats.writeSidecarIncremental(spark, root, name,
-        Some("v000000001"), Seq("k"), sumCols = Seq("k"))
-    }
+    rewriteP3(FileStats.StatCols(Seq("k"), sum = Seq("k")))
     val direct = SnapshotStore.read(spark, root)
       .filter(col("k").between(0L, 10500L))
       .agg(sum(col("k")), count(lit(1))).head()
@@ -271,27 +253,16 @@ class FileStatsSpec extends SparkSuite {
     "copied verbatim, pruning spans both") {
     val root = freshRoot("incr")
     // v1: full publish of partitions p=0..3 with a manifest + sidecar
-    SnapshotStore.commit(spark, root) { dir =>
+    SnapshotStore.publish(
       spark.range(0, 400).select((col("id") % 4).cast("int").as("p"),
-          col("id").as("k"))
-        .write.partitionBy("p").parquet(dir)
-      val name = new org.apache.hadoop.fs.Path(dir).getName
-      val rels = (0 to 3).map(i => s"p=$i" -> name).toMap
-      SnapshotStore.writeManifest(spark, root, name, rels)
-      FileStats.writeSidecar(spark, dir, Seq("k"))
-    }
+        col("id").as("k")),
+      root, Seq("p"), None, stats = Some(FileStats.StatCols(Seq("k"))))
     // v2: rewrite ONLY p=3 (values shifted), carry p=0..2 forward
-    SnapshotStore.commit(spark, root) { dir =>
+    SnapshotStore.publish(
       spark.range(300, 400).select(lit(3).cast("int").as("p"),
-          (col("id") + 10000).as("k"))
-        .write.partitionBy("p").parquet(dir)
-      val name = new org.apache.hadoop.fs.Path(dir).getName
-      val manifest = (0 to 2).map(i => s"p=$i" -> "v000000001").toMap +
-        ("p=3" -> name)
-      SnapshotStore.writeManifest(spark, root, name, manifest)
-      FileStats.writeSidecarIncremental(spark, root, name,
-        Some("v000000001"), Seq("k"))
-    }
+        (col("id") + 10000).as("k")),
+      root, Seq("p"), Some("v000000001"), replaces = Some(_("p") == "3"),
+      stats = Some(FileStats.StatCols(Seq("k"))))
     val v2Side = spark.read.parquet(
       s"$root/${SnapshotStore.SnapshotsDir}/v000000002${FileStats.StatsSuffix}")
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
@@ -358,16 +329,13 @@ class FileStatsSpec extends SparkSuite {
     // sizing (24k/5 · 1.25 = 6k items) would overload the big file's
     // bloom (measured fpp ≈ 0.3 when overloaded); max-based sizing
     // (25k items) keeps the target fpp for every file
-    SnapshotStore.commit(spark, root) { dir =>
-      spark.range(0, 20000).select(col("id").as("k"), col("id").as("u"))
-        .coalesce(1).write.mode("append").parquet(dir)
-      (1 to 4).foreach { i =>
-        spark.range(100000L * i, 100000L * i + 1000)
-          .select(col("id").as("k"), col("id").as("u"))
-          .coalesce(1).write.mode("append").parquet(dir)
-      }
-      FileStats.writeSidecar(spark, dir, Seq("k"), Seq("u"))
-    }
+    // (a union keeps each single-partition input's partition: 5 files)
+    SnapshotStore.publish(
+      (spark.range(0, 20000) +: (1 to 4).map(i =>
+          spark.range(100000L * i, 100000L * i + 1000)))
+        .map(_.select(col("id").as("k"), col("id").as("u")).coalesce(1))
+        .reduce(_ union _),
+      root, Nil, None, stats = Some(FileStats.StatCols(Seq("k"), Seq("u"))))
     // 50 absent probes over 5 files = 250 bloom answers; at the target
     // fpp (1%) ~2-3 false "maybe"s are expected — a saturated big-file
     // bloom would answer "maybe" for ~30% of probes on its own
@@ -459,7 +427,7 @@ class FileStatsSpec extends SparkSuite {
       .collect().map(_.getLong(0)).sorted
     assert(got.toSeq == (0L until 400L).filterNot(Set(9L, 17L)).toSeq)
     // untouched partitions carried BY REFERENCE: manifest points at v1
-    val entries = SnapshotStore.currentEntries(spark, root, 1).get
+    val entries = SnapshotStore.currentEntries(spark, root).get
     val carried = entries.filter(_._2 == v1)
     assert(carried.size == total - rewritten, s"entries: $entries")
     // the sidecar still serves the new snapshot: the deleted key's
@@ -541,7 +509,7 @@ class FileStatsSpec extends SparkSuite {
       (col("id") % 4).cast("int").as("pb"), lit(1.0).as("v"))
     FileStats.publishPartitioned(spark, root, df, "pb",
       statCols = Seq("k"), bloomCols = Seq("k"))
-    // the delete path runs writeSidecarIncremental for the 3 carried
+    // the delete path runs writeSidecar for the 3 carried
     // partitions; the integrity guard raises if any carried row is lost
     val (_, rewritten, total) =
       FileStats.deleteKeys(spark, root, "k", Seq(9L), "pb",
@@ -566,7 +534,7 @@ class FileStatsSpec extends SparkSuite {
       FileStats.deleteKeys(spark, root, "k", targets, "pb",
         statCols = Seq("k"), bloomCols = Seq("k"))
     assert(total == 4 && rewritten >= 1)
-    val entries = SnapshotStore.currentEntries(spark, root, 1).get
+    val entries = SnapshotStore.currentEntries(spark, root).get
     assert(!entries.keySet.exists(_.startsWith("pb=2")),
       s"emptied partition must vanish from the manifest: $entries")
     assert(SnapshotStore.read(spark, root).count() == 30L)

@@ -173,7 +173,7 @@ class IncrementalCurateSpec extends SparkSuite {
     assert(v2Parts == Set(s"batch_id=$v2"),
       s"the new version writes only its own batch partition: $v2Parts")
     // the manifest carries day 1 by reference and names the fresh batch
-    val entries = SnapshotStore.currentEntries(spark, curRoot, 1).get
+    val entries = SnapshotStore.currentEntries(spark, curRoot).get
     assert(entries(s"batch_id=$snapBefore") == snapBefore)
     assert(entries(s"batch_id=$v2") == v2)
     val indexed = LshBandIndex.bandsOf(spark, g2)
@@ -195,7 +195,7 @@ class IncrementalCurateSpec extends SparkSuite {
     val before = SnapshotStore.read(spark, curRoot)
       .select("doc_id", "is_canonical", "split").collect()
       .map(r => (r.getLong(0), r.getBoolean(1), r.getString(2))).toSet
-    def fanout = SnapshotStore.currentEntries(spark, curRoot, 1)
+    def fanout = SnapshotStore.currentEntries(spark, curRoot)
       .get.values.toSet.size
     assert(fanout >= 2, "the two-batch store must span two versions")
     // below the valve: no-op

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.IvfIndex
-import graft.store.SnapshotStore
+import graft.store.PointerCommit
 
 /** IvfIndex lifecycle: training-plan shape (the Lloyd argmax must be a
   * hash aggregate, not a window sort-shuffle — round-9 verdict item 2),
@@ -74,7 +74,7 @@ class IvfIndexSpec extends SparkSuite {
   test("ensureForSnapshot: metadata-only revalidation, retrain on republish") {
     val root = tmpDir("graft_ivf_store")
     val c1 = mkCorpus(64, 16)
-    SnapshotStore.commit(spark, root)(dir => c1.write.parquet(dir))
+    PointerCommit.publish(c1, root, Nil)
     val g1 = IvfIndex.ensureForSnapshot(spark, root, embCol = "emb")
     val scansAfterBuild = IvfIndex.fingerprintScans.get()
 
@@ -89,7 +89,7 @@ class IvfIndexSpec extends SparkSuite {
     // a new published snapshot changes the key -> retrain to a NEW
     // generation; the previous one is retained for one build cycle
     val c2 = mkCorpus(80, 16, shift = 0.5)
-    SnapshotStore.commit(spark, root)(dir => c2.write.parquet(dir))
+    PointerCommit.publish(c2, root, Nil)
     val g2 = IvfIndex.ensureForSnapshot(spark, root, embCol = "emb")
     assert(g2 != g1, "republished corpus must retrain")
     assert(IvfIndex.fingerprintScans.get() == scansAfterBuild,
@@ -117,14 +117,14 @@ class IvfIndexSpec extends SparkSuite {
     "growth: no retrain, batch-sized work, chain reads whole corpus") {
     val root = tmpDir("graft_ivf_adv")
     val c1 = mkCorpus(64, 16)
-    SnapshotStore.commit(spark, root)(dir => c1.write.parquet(dir))
+    PointerCommit.publish(c1, root, Nil)
     val g1 = IvfIndex.ensureForSnapshot(spark, root, embCol = "emb")
     val cb1 = IvfIndex.codebook(spark, g1).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
 
     // append 32 rows (ids 64..95; existing rows byte-identical)
     val c2 = mkCorpus(96, 16)
-    SnapshotStore.commit(spark, root)(dir => c2.write.parquet(dir))
+    PointerCommit.publish(c2, root, Nil)
     val g2 = IvfIndex.advanceForSnapshot(spark, root, embCol = "emb")
     assert(g2 !== g1)
     // delta generation: chained to g1, codebooks untouched (no retrain)
@@ -151,11 +151,11 @@ class IvfIndexSpec extends SparkSuite {
   test("advanceWithBatch: caller-asserted delta chains without the " +
     "content diff; a wrong batch falls back and still lands correct") {
     val root = tmpDir("graft_ivf_advb")
-    SnapshotStore.commit(spark, root)(dir =>
-      mkCorpus(64, 16).write.parquet(dir))
+    PointerCommit.publish(
+      mkCorpus(64, 16), root, Nil)
     val g1 = IvfIndex.ensureForSnapshot(spark, root, embCol = "emb")
-    SnapshotStore.commit(spark, root)(dir =>
-      mkCorpus(96, 16).write.parquet(dir))
+    PointerCommit.publish(
+      mkCorpus(96, 16), root, Nil)
     val batch = mkCorpus(96, 16).filter(col("vec_id") >= 64)
     val g2 = IvfIndex.advanceWithBatch(spark, root, batch, embCol = "emb")
     assert(spark.read.parquet(s"$g2/meta").head().getAs[String]("parent")
@@ -165,8 +165,8 @@ class IvfIndexSpec extends SparkSuite {
     // grow again but hand over only HALF the delta: the count identity
     // fails, so the call must fall back (content diff) and still serve
     // the full corpus
-    SnapshotStore.commit(spark, root)(dir =>
-      mkCorpus(128, 16).write.parquet(dir))
+    PointerCommit.publish(
+      mkCorpus(128, 16), root, Nil)
     val half = mkCorpus(128, 16).filter(col("vec_id") >= 112)
     val g3 = IvfIndex.advanceWithBatch(spark, root, half, embCol = "emb")
     assert(IvfIndex.cells(spark, g3).count() === 128,
@@ -177,9 +177,9 @@ class IvfIndexSpec extends SparkSuite {
     "generation — no retrain, no corpus rewrite") {
     val root = tmpDir("graft_ivf_rekey")
     val c1 = mkCorpus(64, 16)
-    SnapshotStore.commit(spark, root)(dir => c1.write.parquet(dir))
+    PointerCommit.publish(c1, root, Nil)
     val g1 = IvfIndex.ensureForSnapshot(spark, root, embCol = "emb")
-    SnapshotStore.commit(spark, root)(dir => c1.write.parquet(dir))
+    PointerCommit.publish(c1, root, Nil)
     val g2 = IvfIndex.advanceForSnapshot(spark, root, embCol = "emb")
     assert(g2 !== g1)
     assert(spark.read.parquet(s"$g2/meta").head().getAs[String]("parent")
@@ -194,11 +194,11 @@ class IvfIndexSpec extends SparkSuite {
   test("re-handing an already-indexed batch trips the id-overlap guard " +
     "and falls back to the content diff — no duplicate ids served") {
     val root = tmpDir("graft_ivf_dupb")
-    SnapshotStore.commit(spark, root)(dir =>
-      mkCorpus(64, 16).write.parquet(dir))
+    PointerCommit.publish(
+      mkCorpus(64, 16), root, Nil)
     IvfIndex.ensureForSnapshot(spark, root, embCol = "emb")
-    SnapshotStore.commit(spark, root)(dir =>
-      mkCorpus(96, 16).write.parquet(dir))
+    PointerCommit.publish(
+      mkCorpus(96, 16), root, Nil)
     // wrong batch, right SIZE (32 rows): already-indexed ids 0..31 —
     // the count identity passes, the overlap probe must catch it
     val wrong = mkCorpus(96, 16).filter(col("vec_id") < 32)
@@ -215,16 +215,16 @@ class IvfIndexSpec extends SparkSuite {
     val old = IvfIndex.maxChain
     IvfIndex.maxChain = 2
     try {
-      SnapshotStore.commit(spark, root)(dir =>
-        mkCorpus(64, 16).write.parquet(dir))
+      PointerCommit.publish(
+        mkCorpus(64, 16), root, Nil)
       IvfIndex.ensureForSnapshot(spark, root, embCol = "emb")
-      SnapshotStore.commit(spark, root)(dir =>
-        mkCorpus(80, 16).write.parquet(dir))
+      PointerCommit.publish(
+        mkCorpus(80, 16), root, Nil)
       val g2 = IvfIndex.advanceForSnapshot(spark, root, embCol = "emb")
       assert(spark.read.parquet(s"$g2/meta").head()
         .getAs[String]("parent") !== null, "second gen should chain")
-      SnapshotStore.commit(spark, root)(dir =>
-        mkCorpus(96, 16).write.parquet(dir))
+      PointerCommit.publish(
+        mkCorpus(96, 16), root, Nil)
       val g3 = IvfIndex.advanceForSnapshot(spark, root, embCol = "emb")
       assert(spark.read.parquet(s"$g3/meta").head()
         .getAs[String]("parent") === null,
@@ -252,12 +252,12 @@ class IvfIndexSpec extends SparkSuite {
 
   test("advanceForSnapshot retrains when the corpus churned (updates)") {
     val root = tmpDir("graft_ivf_churn")
-    SnapshotStore.commit(spark, root)(dir =>
-      mkCorpus(64, 16).write.parquet(dir))
+    PointerCommit.publish(
+      mkCorpus(64, 16), root, Nil)
     val g1 = IvfIndex.ensureForSnapshot(spark, root, embCol = "emb")
     // same ids, shifted vectors: update_pre/postimages in the feed
-    SnapshotStore.commit(spark, root)(dir =>
-      mkCorpus(64, 16, shift = 0.5).write.parquet(dir))
+    PointerCommit.publish(
+      mkCorpus(64, 16, shift = 0.5), root, Nil)
     val g2 = IvfIndex.advanceForSnapshot(spark, root, embCol = "emb")
     assert(g2 !== g1)
     assert(spark.read.parquet(s"$g2/meta").head().getAs[String]("parent")

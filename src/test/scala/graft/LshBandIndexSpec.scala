@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{LshBandIndex, MinHashLSH}
-import graft.store.SnapshotStore
+import graft.store.PointerCommit
 
 /** LshBandIndex lifecycle — the MinHash band index as a managed
   * generation-log artifact: bare-path fingerprint staleness,
@@ -97,12 +97,12 @@ class LshBandIndexSpec extends SparkSuite {
     "rebuilds; identical republish re-keys meta-only") {
     val root = java.nio.file.Files
       .createTempDirectory("graft_lsh_advsnap").toString
-    SnapshotStore.commit(spark, root)(dir =>
-      mkDocs(0 until 40).write.parquet(dir))
+    PointerCommit.publish(
+      mkDocs(0 until 40), root, Nil)
     val g1 = LshBandIndex.ensureForSnapshot(spark, root)
     // pure-insert growth -> delta chained to g1, no fingerprint scan
-    SnapshotStore.commit(spark, root)(dir =>
-      mkDocs(0 until 60).write.parquet(dir))
+    PointerCommit.publish(
+      mkDocs(0 until 60), root, Nil)
     val scans0 = LshBandIndex.fingerprintScans.get()
     val g2 = LshBandIndex.advanceForSnapshot(spark, root)
     assert(spark.read.parquet(s"$g2/meta").head().getAs[String]("parent")
@@ -112,8 +112,8 @@ class LshBandIndexSpec extends SparkSuite {
     assert(bandSet(LshBandIndex.bandsOf(spark, g2)) ==
       bandSet(MinHashLSH.bandRows(mkDocs(0 until 60))))
     // identical republish -> META-ONLY re-key (no bands dir of its own)
-    SnapshotStore.commit(spark, root)(dir =>
-      mkDocs(0 until 60).write.parquet(dir))
+    PointerCommit.publish(
+      mkDocs(0 until 60), root, Nil)
     val g3 = LshBandIndex.advanceForSnapshot(spark, root)
     assert(g3 != g2)
     val fs = new Path(g3).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -129,7 +129,7 @@ class LshBandIndexSpec extends SparkSuite {
         (i.toLong, (0 until 30).map(j => s"x${(i / 2) * 7 + j}").mkString(" "))
       }.toDF("doc_id", "text")
     }
-    SnapshotStore.commit(spark, root)(dir => churned.write.parquet(dir))
+    PointerCommit.publish(churned, root, Nil)
     val g4 = LshBandIndex.advanceForSnapshot(spark, root)
     assert(spark.read.parquet(s"$g4/meta").head().getAs[String]("parent")
       == null, "churn must rebuild from scratch, not chain")
@@ -159,8 +159,8 @@ class LshBandIndexSpec extends SparkSuite {
     "republish") {
     val root = java.nio.file.Files
       .createTempDirectory("graft_lsh_store").toString
-    SnapshotStore.commit(spark, root)(dir =>
-      mkDocs(0 until 40).write.parquet(dir))
+    PointerCommit.publish(
+      mkDocs(0 until 40), root, Nil)
     val g1 = LshBandIndex.ensureForSnapshot(spark, root)
     val scans0 = LshBandIndex.fingerprintScans.get()
     LshBandIndex.resetValidationMemo()
@@ -168,8 +168,8 @@ class LshBandIndexSpec extends SparkSuite {
     assert(g1b == g1)
     assert(LshBandIndex.fingerprintScans.get() == scans0,
       "snapshot-keyed revalidation must be metadata-only (no corpus scan)")
-    SnapshotStore.commit(spark, root)(dir =>
-      mkDocs(0 until 50).write.parquet(dir))
+    PointerCommit.publish(
+      mkDocs(0 until 50), root, Nil)
     val g2 = LshBandIndex.ensureForSnapshot(spark, root)
     assert(g2 != g1, "republished corpus must rebuild")
     assert(LshBandIndex.fingerprintScans.get() == scans0,
@@ -184,14 +184,14 @@ class LshBandIndexSpec extends SparkSuite {
     val old = LshBandIndex.maxChain
     LshBandIndex.maxChain = 2
     try {
-      SnapshotStore.commit(spark, root)(dir =>
-        mkDocs(0 until 30).write.parquet(dir))
+      PointerCommit.publish(
+        mkDocs(0 until 30), root, Nil)
       LshBandIndex.ensureForSnapshot(spark, root)
       // identical republishes: meta-only re-keys chain until the cap,
       // then collapse into a base — depth stays bounded forever
       (1 to 4).foreach { _ =>
-        SnapshotStore.commit(spark, root)(dir =>
-          mkDocs(0 until 30).write.parquet(dir))
+        PointerCommit.publish(
+          mkDocs(0 until 30), root, Nil)
         val g = LshBandIndex.advanceForSnapshot(spark, root)
         val depth = Iterator.iterate(Option(g)) { cur =>
           cur.flatMap(p => Option(spark.read.parquet(s"$p/meta")
@@ -210,19 +210,19 @@ class LshBandIndexSpec extends SparkSuite {
     "batch trips the count net and falls back to the content diff") {
     val root = java.nio.file.Files
       .createTempDirectory("graft_lsh_advbatch").toString
-    SnapshotStore.commit(spark, root)(dir =>
-      mkDocs(0 until 40).write.parquet(dir))
+    PointerCommit.publish(
+      mkDocs(0 until 40), root, Nil)
     val g1 = LshBandIndex.ensureForSnapshot(spark, root)
-    SnapshotStore.commit(spark, root)(dir =>
-      mkDocs(0 until 60).write.parquet(dir))
+    PointerCommit.publish(
+      mkDocs(0 until 60), root, Nil)
     val g2 = LshBandIndex.advanceForSnapshotWithBatch(spark, root,
       mkDocs(40 until 60))
     assert(spark.read.parquet(s"$g2/meta").head().getAs[String]("parent")
       == new Path(g1).getName, "a correct caller-asserted batch must chain")
     // grow again but hand only HALF the delta: the count identity fails
     // and the feed path must still index every row
-    SnapshotStore.commit(spark, root)(dir =>
-      mkDocs(0 until 80).write.parquet(dir))
+    PointerCommit.publish(
+      mkDocs(0 until 80), root, Nil)
     val g3 = LshBandIndex.advanceForSnapshotWithBatch(spark, root,
       mkDocs(60 until 70))
     assert(bandSet(LshBandIndex.bandsOf(spark, g3)) ==

@@ -402,7 +402,7 @@ class Scd2RegionedSpec extends SparkSuite {
     // across every close_batch entry its manifest names
     val closed = Scd2.closedRoot(root)
     def files(date: String): Int =
-      SnapshotStore.currentEntries(spark, closed, 2).get.toSeq
+      SnapshotStore.currentEntries(spark, closed).get.toSeq
         .filter(_._1.startsWith(s"valid_to=$date/"))
         .map { case (rel, ver) =>
           inventory(s"$closed/${SnapshotStore.SnapshotsDir}/$ver/$rel").size }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{CountMin, SketchSidecar}
-import graft.store.SnapshotStore
+import graft.store.PointerCommit
 
 /** Count-min sketch sidecar: advance-chained cells ≡ a from-scratch
   * build (exact linearity), replayed/churned batches fall back to
@@ -38,10 +38,10 @@ class SketchSidecarSpec extends SparkSuite {
   test("advance chains a delta whose summed cells equal a from-scratch build") {
     val root = tmpRoot()
     val all = docs(120)
-    SnapshotStore.commit(spark, root)(dir =>
-      all.filter(col("doc_id") < 80).write.parquet(dir))
+    PointerCommit.publish(
+      all.filter(col("doc_id") < 80), root, Nil)
     val g1 = SketchSidecar.ensureForSnapshot(spark, root)
-    SnapshotStore.commit(spark, root)(dir => all.write.parquet(dir))
+    PointerCommit.publish(all, root, Nil)
     val g2 = SketchSidecar.advanceForSnapshotWithBatch(spark, root,
       all.filter(col("doc_id") >= 80))
     assert(g2 != g1)
@@ -56,14 +56,14 @@ class SketchSidecarSpec extends SparkSuite {
   test("a replayed (already-committed) batch fails the count net and rebuilds — no double count") {
     val root = tmpRoot()
     val all = docs(100)
-    SnapshotStore.commit(spark, root)(dir =>
-      all.filter(col("doc_id") < 60).write.parquet(dir))
+    PointerCommit.publish(
+      all.filter(col("doc_id") < 60), root, Nil)
     SketchSidecar.ensureForSnapshot(spark, root)
-    SnapshotStore.commit(spark, root)(dir => all.write.parquet(dir))
+    PointerCommit.publish(all, root, Nil)
     SketchSidecar.advanceForSnapshotWithBatch(spark, root,
       all.filter(col("doc_id") >= 60))
     // replay: republish the SAME corpus, hand the same batch again
-    SnapshotStore.commit(spark, root)(dir => all.write.parquet(dir))
+    PointerCommit.publish(all, root, Nil)
     val g3 = SketchSidecar.advanceForSnapshotWithBatch(spark, root,
       all.filter(col("doc_id") >= 60))
     assert(cellsOf(g3) == batchCells(all), "replay double-counted")
@@ -72,10 +72,10 @@ class SketchSidecarSpec extends SparkSuite {
   test("churn (an updated doc) fails the count net and rebuilds with fresh text") {
     val root = tmpRoot()
     val v1 = docs(50)
-    SnapshotStore.commit(spark, root)(dir => v1.write.parquet(dir))
+    PointerCommit.publish(v1, root, Nil)
     SketchSidecar.ensureForSnapshot(spark, root)
     val v2 = docs(50, tag = "X") // same ids, different text
-    SnapshotStore.commit(spark, root)(dir => v2.write.parquet(dir))
+    PointerCommit.publish(v2, root, Nil)
     val g2 = SketchSidecar.advanceForSnapshotWithBatch(spark, root, v2.limit(0))
     assert(cellsOf(g2) == batchCells(v2), "stale cells served after churn")
   }
@@ -83,14 +83,14 @@ class SketchSidecarSpec extends SparkSuite {
   test("compaction valve: chain collapses to a single base, cells unchanged") {
     val root = tmpRoot()
     val all = docs(90)
-    SnapshotStore.commit(spark, root)(dir =>
-      all.filter(col("doc_id") < 30).write.parquet(dir))
+    PointerCommit.publish(
+      all.filter(col("doc_id") < 30), root, Nil)
     SketchSidecar.ensureForSnapshot(spark, root)
     val saved = SketchSidecar.maxChain
     try {
       SketchSidecar.maxChain = 1
-      SnapshotStore.commit(spark, root)(dir =>
-        all.filter(col("doc_id") < 60).write.parquet(dir))
+      PointerCommit.publish(
+        all.filter(col("doc_id") < 60), root, Nil)
       val g2 = SketchSidecar.advanceForSnapshotWithBatch(spark, root,
         all.filter(col("doc_id") >= 30 && col("doc_id") < 60))
       assert(graft.store.GenLog.chain(spark,
@@ -103,10 +103,10 @@ class SketchSidecarSpec extends SparkSuite {
   test("estimates over the chain: never-under for every token") {
     val root = tmpRoot()
     val all = docs(80)
-    SnapshotStore.commit(spark, root)(dir =>
-      all.filter(col("doc_id") < 40).write.parquet(dir))
+    PointerCommit.publish(
+      all.filter(col("doc_id") < 40), root, Nil)
     SketchSidecar.ensureForSnapshot(spark, root)
-    SnapshotStore.commit(spark, root)(dir => all.write.parquet(dir))
+    PointerCommit.publish(all, root, Nil)
     val g = SketchSidecar.advanceForSnapshotWithBatch(spark, root,
       all.filter(col("doc_id") >= 40))
     val toks = all

@@ -31,7 +31,7 @@ class SnapshotStoreSpec extends SparkSuite {
     // writer crash AFTER fully writing the new snapshot dir but BEFORE
     // the pointer flip: readers still see v1, the orphan dir is invisible
     val crash = intercept[RuntimeException] {
-      SnapshotStore.commit(spark, root) { dir =>
+      SnapshotStore.commitFrom(spark, root, SnapshotStore.currentName(spark, root)) { dir =>
         Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v")
           .write.parquet(dir)
         throw new RuntimeException("simulated writer death before publish")
@@ -56,7 +56,7 @@ class SnapshotStoreSpec extends SparkSuite {
     }
     // orphan from a crashed writer
     intercept[RuntimeException] {
-      SnapshotStore.commit(spark, root) { dir =>
+      SnapshotStore.commitFrom(spark, root, SnapshotStore.currentName(spark, root)) { dir =>
         Seq(99).toDF("id").write.parquet(dir)
         throw new RuntimeException("boom")
       }
@@ -136,7 +136,7 @@ class SnapshotStoreSpec extends SparkSuite {
     // v2: only month 2 recomputed (p2 replaced by p3); month 1 untouched
     GoldEtl.publishIncrementalManifest(spark, root,
       frame(Seq(("p3", "low", 2025, 2))), Array((2025, 2)))
-    val entries = SnapshotStore.currentEntries(spark, root, 3).get
+    val entries = SnapshotStore.currentEntries(spark, root).get
     assert(entries("quality_tier=high/year=2025/month=1") === v1,
       "unchanged partition must be carried from v1 by reference")
     assert(entries("quality_tier=low/year=2025/month=2") !== v1)
@@ -150,7 +150,7 @@ class SnapshotStoreSpec extends SparkSuite {
 
     // crash after data write, before manifest+pointer: readers unchanged
     intercept[RuntimeException] {
-      SnapshotStore.commit(spark, root) { dir =>
+      SnapshotStore.commitFrom(spark, root, SnapshotStore.currentName(spark, root)) { dir =>
         frame(Seq(("p9", "high", 2025, 1))).write.parquet(dir)
         throw new RuntimeException("boom")
       }
@@ -392,9 +392,8 @@ class SnapshotStoreSpec extends SparkSuite {
   }
 
   private def splitOf(root: String, vFrom: String, vTo: String) =
-    SnapshotStore.splitEntries(spark, root,
-      vFrom, SnapshotStore.readManifest(spark, root, vFrom),
-      vTo, SnapshotStore.readManifest(spark, root, vTo))
+    SnapshotStore.splitEntries(SnapshotStore.readManifest(spark, root, vFrom).get.entries,
+      SnapshotStore.readManifest(spark, root, vTo).get.entries)
 
   private def changeTypes(feed: DataFrame): Map[String, Long] =
     feed.groupBy("change_type").count().collect()
@@ -437,7 +436,7 @@ class SnapshotStoreSpec extends SparkSuite {
   test("change feed over manifests equals the full diff: dropped tier, " +
     "moved key, shared-partition key, null key, one-side column, pure insert") {
     val (root, v1, v2, v3) = goldLake()
-    val s12 = splitOf(root, v1, v2).get
+    val s12 = splitOf(root, v1, v2)
     assert(s12.shared.keySet === Set("quality_tier=high/year=2025/month=2",
       "quality_tier=low/year=2025/month=2"))
     assert(s12.fromOnly.keySet.contains("quality_tier=low/year=2025/month=1") &&
@@ -461,7 +460,7 @@ class SnapshotStoreSpec extends SparkSuite {
     // backwards, the note column is on the from side's unshared entries
     assertFeedEqualsFullDiff(root, v2, v1, keys)
     // pure insert: v3 only adds an entry
-    val s23 = splitOf(root, v2, v3).get
+    val s23 = splitOf(root, v2, v3)
     assert(s23.fromOnly.isEmpty && s23.toOnly.size === 1)
     assert(changeTypes(assertFeedEqualsFullDiff(root, v2, v3, keys)) ===
       Map("insert" -> 1L))
@@ -486,19 +485,19 @@ class SnapshotStoreSpec extends SparkSuite {
       root, asOfDate = lit("2025-01-16"))
     val cur = Scd2.currentRoot(root)
     val Seq(v1, v2) = SnapshotStore.versions(spark, cur)
-    // v1 is a plain full publish, split by its hive dirs at v2's depth
-    assert(SnapshotStore.readManifest(spark, cur, v1).isEmpty)
-    assert(splitOf(cur, v1, v2).get.shared.keySet ===
+    // v1 is a full publish: every entry is its own
+    assert(SnapshotStore.readManifest(spark, cur, v1).get.entries.values.toSet === Set(v1))
+    assert(splitOf(cur, v1, v2).shared.keySet ===
       Set("spider_name=spB/ingestion_year=2025/ingestion_month=01"))
     val feed = assertFeedEqualsFullDiff(cur, v1, v2, Seq("universal_id"))
     assert(changeTypes(feed) ===
       Map("update_preimage" -> 2L, "update_postimage" -> 2L))
-    // a flat sorted republish has files outside any hive dir: nothing is
-    // shared and the feed is the full diff
+    // a flat sorted republish is one depth-0 entry: nothing is shared
+    // and the feed is the full diff
     Scd2.optimizeCurrentWithStats(spark, root, sortCol = "universal_id",
       numFiles = 2, statCols = Seq("universal_id"))
     val v3 = SnapshotStore.currentName(spark, cur).get
-    assert(splitOf(cur, v2, v3).isEmpty)
+    assert(splitOf(cur, v2, v3).shared.isEmpty)
     assert(assertFeedEqualsFullDiff(cur, v2, v3, Seq("universal_id")).count() === 0)
   }
 
@@ -512,7 +511,7 @@ class SnapshotStoreSpec extends SparkSuite {
   test("change feed reads wide columns only from unshared entries; " +
     "identical entries give an empty typed feed with no scan") {
     val (root, v1, v2, v3) = goldLake()
-    val split = splitOf(root, v1, v2).get
+    val split = splitOf(root, v1, v2)
     def dirs(es: Map[String, String]) = es.map { case (rel, ver) =>
       new org.apache.hadoop.fs.Path(s"$root/${SnapshotStore.SnapshotsDir}/$ver/$rel")
         .toUri.getPath }.toSet
@@ -562,13 +561,15 @@ class SnapshotStoreSpec extends SparkSuite {
     // every row of the only affected group empties out: zero entries
     GoldEtl.publishIncrementalManifest(spark, root, goldFrame(Nil), Array((2025, 1)))
     val v2 = SnapshotStore.currentName(spark, root).get
-    assert(SnapshotStore.readManifest(spark, root, v2).contains(Map.empty))
-    val e = intercept[IllegalStateException](SnapshotStore.readAt(spark, root, v2))
-    assert(e.getMessage.contains(v2))
+    assert(SnapshotStore.readManifest(spark, root, v2).map(_.entries).contains(Map.empty))
     val schema = SnapshotStore.readAt(spark, root, v1).schema
-    val none = SnapshotStore.readEntries(spark, root, Map.empty, Some(schema))
+    val empty = SnapshotStore.readAt(spark, root, v2)
+    assert(empty.schema === schema && empty.count() === 0)
+    val m1 = SnapshotStore.readManifest(spark, root, v1).get
+    val none = SnapshotStore.readEntries(spark, root, v1, m1, Map.empty)
     assert(none.schema === schema && none.count() === 0)
-    intercept[IllegalArgumentException](SnapshotStore.readEntries(spark, root, Map.empty))
+    val live = PointerCommit.read(spark, root)
+    assert(live.schema === schema && live.count() === 0)
     // pure delete, then pure insert across the empty version
     assert(changeTypes(SnapshotStore.changesBetween(spark, root, v1, v2,
       Seq("project_id"))) === Map("delete" -> 2L))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextIndex
-import graft.store.{GenLog, SnapshotStore}
+import graft.store.{GenLog, PointerCommit}
 
 /** The persisted inverted index: probe ≡ direct tx15 spelling, chained
   * advance ≡ from-scratch build, overlap replacement (re-crawl wins),
@@ -140,8 +140,8 @@ class TextIndexSpec extends SparkSuite {
   test("ensureForSnapshot: metadata-only revalidation, rebuild on republish") {
     val root = java.nio.file.Files
       .createTempDirectory("graft_text_store").toString
-    SnapshotStore.commit(spark, root)(dir =>
-      mkDocs(0 until 40).write.parquet(dir))
+    PointerCommit.publish(
+      mkDocs(0 until 40), root, Nil)
     val g1 = TextIndex.ensureForSnapshot(spark, root)
     val scans0 = TextIndex.fingerprintScans.get()
     TextIndex.resetValidationMemo()
@@ -149,8 +149,8 @@ class TextIndexSpec extends SparkSuite {
     assert(g1b == g1)
     assert(TextIndex.fingerprintScans.get() == scans0,
       "snapshot-keyed revalidation must be metadata-only (no corpus scan)")
-    SnapshotStore.commit(spark, root)(dir =>
-      mkDocs(0 until 55).write.parquet(dir))
+    PointerCommit.publish(
+      mkDocs(0 until 55), root, Nil)
     val g2 = TextIndex.ensureForSnapshot(spark, root)
     assert(g2 != g1, "republished corpus must rebuild")
     assert(TextIndex.fingerprintScans.get() == scans0,
@@ -165,11 +165,11 @@ class TextIndexSpec extends SparkSuite {
     "rebuilds") {
     val root = java.nio.file.Files
       .createTempDirectory("graft_text_advsnap").toString
-    SnapshotStore.commit(spark, root)(dir =>
-      mkDocs(0 until 40).write.parquet(dir))
+    PointerCommit.publish(
+      mkDocs(0 until 40), root, Nil)
     val g1 = TextIndex.ensureForSnapshot(spark, root)
-    SnapshotStore.commit(spark, root)(dir =>
-      mkDocs(0 until 60).write.parquet(dir))
+    PointerCommit.publish(
+      mkDocs(0 until 60), root, Nil)
     val g2 = TextIndex.advanceForSnapshot(spark, root)
     assert(GenLog.readMeta(spark, new Path(g2), TextIndex.FormatVersion)
       .get.parent.contains(new Path(g1).getName),
@@ -182,12 +182,10 @@ class TextIndexSpec extends SparkSuite {
     // churn (doc 3's text changes): the feed is not pure inserts → the
     // advance must fall back to a rebuild and still serve the truth
     import spark.implicits._
-    SnapshotStore.commit(spark, root) { dir =>
+    PointerCommit.publish(
       mkDocs(0 until 60).filter(col("doc_id") =!= 3L)
         .unionByName(Seq((3L, "rewritten text entirely"))
-          .toDF("doc_id", "text"))
-        .write.parquet(dir)
-    }
+          .toDF("doc_id", "text")), root, Nil)
     val g3 = TextIndex.advanceForSnapshot(spark, root)
     assert(GenLog.readMeta(spark, new Path(g3), TextIndex.FormatVersion)
       .get.parent.isEmpty, "churn must rebuild into a fresh base")
@@ -201,11 +199,11 @@ class TextIndexSpec extends SparkSuite {
     "batch trips the count net and falls back to the content diff") {
     val root = java.nio.file.Files
       .createTempDirectory("graft_text_advbatch").toString
-    SnapshotStore.commit(spark, root)(dir =>
-      mkDocs(0 until 40).write.parquet(dir))
+    PointerCommit.publish(
+      mkDocs(0 until 40), root, Nil)
     val g1 = TextIndex.ensureForSnapshot(spark, root)
-    SnapshotStore.commit(spark, root)(dir =>
-      mkDocs(0 until 60).write.parquet(dir))
+    PointerCommit.publish(
+      mkDocs(0 until 60), root, Nil)
     val g2 = TextIndex.advanceForSnapshotWithBatch(spark, root,
       mkDocs(40 until 60))
     assert(GenLog.readMeta(spark, new Path(g2), TextIndex.FormatVersion)
@@ -213,8 +211,8 @@ class TextIndexSpec extends SparkSuite {
       "a correct caller-asserted batch must chain")
     // grow again but hand only HALF the delta: the count identity fails
     // and the feed path must still index every row
-    SnapshotStore.commit(spark, root)(dir =>
-      mkDocs(0 until 80).write.parquet(dir))
+    PointerCommit.publish(
+      mkDocs(0 until 80), root, Nil)
     val g3 = TextIndex.advanceForSnapshotWithBatch(spark, root,
       mkDocs(60 until 70))
     val scratch = TextIndex.ensure(spark, mkDocs(0 until 80),
@@ -225,8 +223,8 @@ class TextIndexSpec extends SparkSuite {
     // a REDELIVERED batch (overlaps indexed ids, counts happen to
     // disagree too) also falls back rather than replacing postings
     // under the wrong snapshot key
-    SnapshotStore.commit(spark, root)(dir =>
-      mkDocs(0 until 90).write.parquet(dir))
+    PointerCommit.publish(
+      mkDocs(0 until 90), root, Nil)
     val g4 = TextIndex.advanceForSnapshotWithBatch(spark, root,
       mkDocs(70 until 90).unionByName(mkDocs(60 until 70)))
     val scratch2 = TextIndex.ensure(spark, mkDocs(0 until 90),
